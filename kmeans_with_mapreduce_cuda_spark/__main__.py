@@ -22,12 +22,28 @@ import time
 from pyspark.sql import SparkSession
 
 
+def _int_at_least(lo: int):
+    """argparse ``type``: an int >= ``lo``; argparse names the flag in
+    the error it prints."""
+
+    def parse(text: str) -> int:
+        try:
+            v = int(text)
+        except ValueError:
+            raise argparse.ArgumentTypeError(f"invalid int value: {text!r}") from None
+        if v < lo:
+            raise argparse.ArgumentTypeError(f"must be >= {lo}, got {v}")
+        return v
+
+    return parse
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="kmeans_with_mapreduce_cuda_spark")
     p.add_argument("input", help="whitespace-separated 2-column integer text file")
-    p.add_argument("--k", type=int, default=15)  # NUM_OUTPUT, config.cuh:14
-    p.add_argument("--limit", type=int, default=10_000)  # NUM_INPUT, config.cuh:12
-    p.add_argument("--iters", type=int, default=999)  # ITERATIONS, config.cuh:11
+    p.add_argument("--k", type=_int_at_least(1), default=15)  # NUM_OUTPUT, config.cuh:14
+    p.add_argument("--limit", type=_int_at_least(1), default=10_000)  # NUM_INPUT, config.cuh:12
+    p.add_argument("--iters", type=_int_at_least(0), default=999)  # ITERATIONS, config.cuh:11
     p.add_argument("--tol", type=float, default=0.0)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--save", action="store_true", help="append to <input>.output")

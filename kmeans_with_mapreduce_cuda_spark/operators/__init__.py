@@ -2,7 +2,6 @@ from .kmeans import (  # noqa: F401
     Centroids2D,
     assign_2d,
     assign_nd,
-    kmeans_step_2d,
     lloyd_2d,
     lloyd_nd,
     seed_centroids_2d,

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.distance import cosine_similarity
-from .kmeans import CentroidsND, assign_nd, lloyd_nd, seed_centroids_nd
+from .kmeans import CentroidsND, _argmin_sql, assign_nd, lloyd_nd, seed_centroids_nd
 
 
 def brute_force_topk(
@@ -648,10 +648,7 @@ def pq_encode(
                 for j in range(k)
             )
         )
-        cols.append(
-            f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)"
-            f" AS {code_prefix}{s}"
-        )
+        cols.append(f"{_argmin_sql(arr)} AS {code_prefix}{s}")
     out = df.selectExpr(*cols)
     packed: Column | None = None
     for s in range(m):

@@ -554,16 +554,14 @@ def o14_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is a float sum, so it rounds to 6.",
 )
 def o14_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.kmeans import _dists_sql_2d
+    from ..operators.kmeans import _argmin_sql, _dists_sql_2d
 
     p = _points(spark, sf_dir)
     d = p.withColumn(
         "_d2", F.expr(_dists_sql_2d(INIT_CENTROIDS_2D, "x", "y"))
     )
     d = d.select(
-        (F.array_position("_d2", F.array_min("_d2")) - 1)
-        .cast("int")
-        .alias("cluster_id"),
+        F.expr(_argmin_sql("_d2")).alias("cluster_id"),
         F.sqrt(F.array_sort("_d2")[0]).alias("a"),
         F.sqrt(F.array_sort("_d2")[1]).alias("b"),
     )
@@ -826,7 +824,7 @@ def _db_oracle() -> str:
     "emitted UNROUNDED.",
 )
 def o14_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.kmeans import _dists_sql_2d
+    from ..operators.kmeans import _argmin_sql, _dists_sql_2d
 
     k = len(INIT_CENTROIDS_2D)
     p = _points(spark, sf_dir)
@@ -834,9 +832,7 @@ def o14_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_d2", F.expr(_dists_sql_2d(INIT_CENTROIDS_2D, "x", "y"))
     )
     a = d.select(
-        (F.array_position("_d2", F.array_min("_d2")) - 1)
-        .cast("int")
-        .alias("cluster_id"),
+        F.expr(_argmin_sql("_d2")).alias("cluster_id"),
         F.sqrt(F.array_min("_d2")).alias("dist"),
     )
     s = a.groupBy("cluster_id").agg(

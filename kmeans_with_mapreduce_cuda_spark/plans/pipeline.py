@@ -2979,7 +2979,7 @@ def _semantic_recursive_build_uncached(
     per-vector argmin shuffle.  The sub-cap exclusion reuses the
     broadcast anti-join shape (the hot-key list is tiny at any scale).
     """
-    from ..operators.kmeans import _dists_sql_nd
+    from ..operators.kmeans import _argmin_sql, _dists_sql_nd
     from ..operators.similarity import within_cell_cosine_pairs
 
     pairs, capped, assigned = _semantic_dedup_build(
@@ -3027,10 +3027,7 @@ def _semantic_recursive_build_uncached(
     )
     subassigned = (
         hot.withColumn("_sd", F.expr(dists_case))
-        .withColumn(
-            "sub_id",
-            (F.array_position("_sd", F.array_min("_sd")) - 1).cast("int"),
-        )
+        .withColumn("sub_id", F.expr(_argmin_sql("_sd")))
         .drop("_sd")
         .withColumn(
             "blk", (F.col("cell_id") * sub_k + F.col("sub_id")).cast("int")
@@ -3386,8 +3383,9 @@ def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Candidate edges are pair-scale small (collect-bounded by the
     # stage-1/2 caps); collect them once, release the build's persisted
     # intermediates, and resolve the min-label fixpoint with a driver
-    # union-find (r11: the distributed small_graph loop spent 2.8-5.2 s
-    # of fixed job latency on a 540-edge graph; see dedup_components).
+    # union-find (r11: the distributed label-propagation loop, even
+    # under iteration_confs, spent 2.8-5.2 s of fixed job latency on a
+    # 540-edge graph; see dedup_components).
     # Only the LOSERS -- bounded by the pair graph's node count, never
     # corpus-scale -- go back out, as a broadcast anti-join, so the
     # corpus side still never shuffles.
@@ -3748,9 +3746,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _eager contract since r5); once its rows are on the driver, the
     # min-label fixpoint is a union-find, not 4+ Spark jobs per
     # propagation round over a 1294-edge graph (r11: the distributed
-    # small_graph loop cost 2.0-2.6 s of pure fixed job latency here;
-    # corpus-scale edge lists -- curate.py -- keep the distributed
-    # operator).
+    # loop, even under iteration_confs, cost 2.0-2.6 s of pure fixed
+    # job latency here; corpus-scale edge lists -- curate.py -- keep
+    # the distributed operator).
     try:
         pair_rows = res.pairs.select("doc_a", "doc_b").collect()
     finally:

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.operators.kmeans import (
     assign_2d,
-    kmeans_step_2d,
     lloyd_2d,
     lloyd_nd,
     seed_centroids_2d,
@@ -74,7 +73,7 @@ def test_sse_monotone(points):
     cents = INIT4
     prev = sse_2d(points, cents)
     for _ in range(5):
-        cents = kmeans_step_2d(points, cents)
+        cents = lloyd_2d(points, cents, max_iter=1)
         cur = sse_2d(points, cents)
         assert cur <= prev + 1e-6
         prev = cur
@@ -104,8 +103,8 @@ def test_permutation_invariance(points, spark):
     """Row order must not change the result (the reference's thrust sort
     is non-stable for the same reason)."""
     shuffled = points.orderBy(F.md5(F.col("id").cast("string")))
-    a = kmeans_step_2d(points, INIT4)
-    b = kmeans_step_2d(shuffled, INIT4)
+    a = lloyd_2d(points, INIT4, max_iter=1)
+    b = lloyd_2d(shuffled, INIT4, max_iter=1)
     assert np.allclose(np.array(a), np.array(b), rtol=1e-9)
 
 
@@ -114,7 +113,7 @@ def test_empty_cluster_keeps_previous(points):
     survive unchanged."""
     far = (1e9, 1e9)
     cents = INIT4 + [far]
-    new = kmeans_step_2d(points, cents)
+    new = lloyd_2d(points, cents, max_iter=1)
     assert new[-1] == far
 
 
@@ -189,7 +188,7 @@ def test_assign_k1_and_empty_input(spark, points):
 
     empty = points.where(F.lit(False))
     assert assign_2d(empty, INIT4).count() == 0
-    assert kmeans_step_2d(empty, INIT4) == [tuple(c) for c in INIT4]
+    assert lloyd_2d(empty, INIT4, max_iter=1) == [tuple(c) for c in INIT4]
 
 
 def test_lloyd_zero_iterations_returns_init(points):
@@ -347,14 +346,16 @@ def test_iteration_confs_nesting_and_exception_restore(spark):
 
     before_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     before_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    with iteration_confs(spark, shuffle_partitions=8):
+    with iteration_confs(spark):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        with iteration_confs(spark, shuffle_partitions=4):
-            # inner is a no-op: the outer window's values stay
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-        # inner exit must NOT have restored anything
+        # a sentinel no iteration_confs window would set: the inner
+        # enter must not overwrite it and the inner exit must not
+        # restore over it
+        spark.conf.set("spark.sql.shuffle.partitions", "5")
+        with iteration_confs(spark):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
     assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
     assert spark.conf.get("spark.sql.shuffle.partitions") == before_sp
 
