@@ -109,7 +109,12 @@ def main() -> None:
     from kmeans_with_mapreduce_cuda_spark.sources import read_points_text
 
     birch_path = "/root/reference/data/birch1.txt"
-    if os.path.exists(birch_path):
+    # keys the host cannot run, with the reason, echoed in the JSON line
+    # so a missing key is never mistaken for a dropped one
+    skipped: dict[str, str] = {}
+    if not os.path.exists(birch_path):
+        skipped["kmeans_birch10k_20iter"] = f"{birch_path} not present"
+    else:
         birch = read_points_text(spark, birch_path, limit=10_000).cache()
         birch.count()
         init_b = [
@@ -301,6 +306,7 @@ def main() -> None:
                 "load_avg_start": round(load_start, 2),
                 "load_avg_end": round(load_end, 2),
                 "noise_ratio": noise,
+                "skipped": skipped,
                 "calibration_s": round(calib_s, 3),
                 # per-key minimum / calibration minimum: the same-run
                 # contention-normalized cost.  Compare THESE round-over-

@@ -571,7 +571,6 @@ def connected_components(
     a: str = "doc_a",
     b: str = "doc_b",
     max_iter: int = 20,
-    jump: bool = True,
 ) -> "Components":
     """Resolve near-dup candidate PAIRS into duplicate CLUSTERS:
     iterative min-label propagation until fixpoint, returning
@@ -580,10 +579,10 @@ def connected_components(
     This is the missing step between LSH pair generation and actual
     dedup -- keeping "one doc per pair" over-deletes when A~B and B~C
     (A and C are the same cluster).  Each round every node takes the
-    min of its own label, its neighbors' labels, and (with ``jump``)
-    its LABEL'S label -- the pointer-jumping/path-doubling step that
-    lets labels skip along already-discovered chains.  All JVM: one
-    (two with jump) shuffle join + one grouped min per round.
+    min of its own label, its neighbors' labels, and its LABEL'S label
+    -- the pointer-jumping/path-doubling step that lets labels skip
+    along already-discovered chains.  All JVM: two shuffle joins + one
+    grouped min per round.
 
     Scale judgment: plain propagation converges in O(graph diameter)
     rounds; pointer jumping roughly halves the unresolved distance
@@ -599,7 +598,7 @@ def connected_components(
     while lengthening every round's critical path, so exactly one
     jump is taken).  Near-dup graphs are quasi-cliques (LSH bands
     link most members of a duplicate cluster directly) where either
-    converges in 2-4 rounds, but jump=True is the default because
+    converges in 2-4 rounds, but the jump is always taken because
     id-monotone adversarial chains cost almost nothing to defend
     against (the extra join is labels-with-labels, bounded by node
     count).  The alternating large-star/small-star formulation
@@ -709,13 +708,11 @@ def connected_components(
             msgs = sym.join(labels, sym.src == labels.node).select(
                 F.col("dst").alias("node"), F.col("comp")
             )
-            cand = labels.select("node", "comp").unionAll(msgs)
-            if jump:
-                l1, l2 = labels.alias("l1"), labels.alias("l2")
-                jumped = l1.join(
-                    l2, F.col("l1.comp") == F.col("l2.node")
-                ).select(F.col("l1.node").alias("node"), F.col("l2.comp"))
-                cand = cand.unionAll(jumped)
+            l1, l2 = labels.alias("l1"), labels.alias("l2")
+            jumped = l1.join(
+                l2, F.col("l1.comp") == F.col("l2.node")
+            ).select(F.col("l1.node").alias("node"), F.col("l2.comp"))
+            cand = labels.select("node", "comp").unionAll(msgs).unionAll(jumped)
             new, cur_mass = _checkpoint_with_mass(
                 cand.groupBy("node").agg(F.min("comp").alias("comp"))
             )

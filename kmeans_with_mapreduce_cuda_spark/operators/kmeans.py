@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import stable_sample_key
+from ..session import pinned_confs
 
 #: 2-D centroids: ordered list of (x, y); index == cluster_id.
 Centroids2D = Sequence[tuple[float, float]]
@@ -52,6 +53,13 @@ CentroidsND = Sequence[Sequence[float]]
 # ---------------------------------------------------------------------------
 # Map stage: nearest-centroid assignment (O3 + O4)
 # ---------------------------------------------------------------------------
+
+_ITERATION_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.codegen.wholeStage": "false",
+}
+
 
 @contextmanager
 def iteration_confs(spark):
@@ -77,24 +85,15 @@ def iteration_confs(spark):
     they were user state (the bug a naive save/restore has under
     nesting, exception paths included).
     """
-    already = getattr(spark, "_iteration_confs_active", False)
-    if already:
+    if getattr(spark, "_iteration_confs_active", False):
         yield
         return
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_ws = spark.conf.get("spark.sql.codegen.wholeStage")
     spark._iteration_confs_active = True
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try:
-        yield
+        with pinned_confs(spark, _ITERATION_CONFS):
+            yield
     finally:
         spark._iteration_confs_active = False
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.codegen.wholeStage", old_ws)
 
 
 def _argmin_sql(arr: str) -> str:

@@ -7,6 +7,9 @@ SQL-expressible; scale notes in each docstring.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from contextlib import contextmanager
 from typing import Iterator
 
 import pandas as pd
@@ -17,6 +20,7 @@ from pyspark.sql.window import Window
 from ..functions.hashing import md5_long_sql
 from ..functions.text import STOPWORDS, tokens
 from ..operators.dedup import simhash16_sql, token_hashes_sql
+from ..session import pinned_confs
 from ..sources.readers import load_table
 from . import registry
 from .registry import query
@@ -83,6 +87,40 @@ def _eager(
         for dep in deps:
             dep.unpersist()
     return spark.createDataFrame(rows, df.schema)
+
+
+def _components(edges: DataFrame, deps: list[DataFrame]) -> dict:
+    """Duplicate clusters of a PAIR-SCALE ``(doc_a, doc_b)`` edge set:
+    collect the edges, release ``deps`` (the build's persisted
+    intermediates), and return the driver union-find's
+    ``{node: min node id of its component}``.
+
+    Only for edge sets already bounded by an LSH band or cell cap:
+    once the rows are on the driver, union-find resolves the min-label
+    fixpoint in well under a millisecond, where the distributed
+    label-propagation loop costs 1-2 Spark jobs per round (r11).
+    Corpus-scale edge lists (curate.py) keep the distributed
+    operators.dedup.connected_components."""
+    from ..operators.dedup import connected_components_local
+
+    try:
+        rows = edges.select("doc_a", "doc_b").collect()
+    finally:
+        for dep in deps:
+            dep.unpersist()
+    return connected_components_local((r["doc_a"], r["doc_b"]) for r in rows)
+
+
+def _drop_losers(corpus: DataFrame, key: str, labels: dict) -> DataFrame:
+    """``corpus`` minus every non-canonical component member (node !=
+    its component's min id).  The losers -- bounded by the pair graph's
+    node count, never corpus-scale -- go out as a broadcast left-anti
+    join on ``key``, so the corpus side never shuffles."""
+    losers = corpus.sparkSession.createDataFrame(
+        sorted((int(n),) for n, c in labels.items() if n != c),
+        f"{key} bigint",
+    )
+    return corpus.join(F.broadcast(losers), key, "left_anti")
 
 
 # --- Exact deduplication -----------------------------------------------------
@@ -2249,6 +2287,9 @@ def sim_ann_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: memory-sink names must be unique per session; deterministic counter.
 _STREAM_RUNS = iter(range(1_000_000))
 
+#: State-store sizing for every gate stream (see _drain_stream_to_table).
+_STREAM_CONFS = {"spark.sql.shuffle.partitions": "2"}
+
 
 def _drain_stream_to_table(spark: SparkSession, build, prefix: str) -> DataFrame:
     """Build a streaming DataFrame (``build``: zero-arg callable) and run
@@ -2267,9 +2308,9 @@ def _drain_stream_to_table(spark: SparkSession, build, prefix: str) -> DataFrame
     confusing hash mismatch) and the query is stopped either way.
 
     Timezone: the streaming queries format event-time windows to strings
-    (tz-dependent), so UTC is pinned for the drain and restored in the
-    same finally as shuffle.partitions (round-3 advice: a bare set()
-    permanently mutated the shared gate/test session).  The DataFrame is
+    (tz-dependent), so UTC is pinned for the drain together with
+    shuffle.partitions (round-3 advice: a bare set() permanently
+    mutated the shared gate/test session).  The DataFrame is
     constructed INSIDE the pin via the ``build`` callable -- Spark
     resolves session.timeZone into TimeZoneAware expressions at analysis
     time, i.e. at DataFrame creation, so a stream built before the
@@ -2277,11 +2318,9 @@ def _drain_stream_to_table(spark: SparkSession, build, prefix: str) -> DataFrame
     and the pin would silently not apply.
     """
     name = f"{prefix}{next(_STREAM_RUNS)}"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    old_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with pinned_confs(
+        spark, {**_STREAM_CONFS, "spark.sql.session.timeZone": "UTC"}
+    ):
         df = build()
         q = (
             df.writeStream.format("memory")
@@ -2291,10 +2330,21 @@ def _drain_stream_to_table(spark: SparkSession, build, prefix: str) -> DataFrame
             .start()
         )
         _await_drain(q, f"stream {name}")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        spark.conf.set("spark.sql.session.timeZone", old_tz)
     return spark.table(name)
+
+
+@contextmanager
+def _stream_scratch(spark: SparkSession, prefix: str) -> Iterator[str]:
+    """Scratch root for a gate stream's checkpoint and sink files,
+    drained under the same 2-partition state-store sizing as
+    _drain_stream_to_table; the conf is restored and the directory
+    removed on exit, the exception path included."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        with pinned_confs(spark, _STREAM_CONFS):
+            yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 #: Batch gap-merge twin of the streaming session window, restricted to
@@ -2369,19 +2419,14 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_session_windows_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import read_events_stream, session_window_stream
-    from ..streaming.streams import use_rocksdb_state
+    from ..streaming.streams import rocksdb_state_confs
 
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf)
-    try:
-        use_rocksdb_state(spark)
+    with pinned_confs(spark, rocksdb_state_confs()):
         return _drain_stream_to_table(
             spark,
             lambda: session_window_stream(read_events_stream(spark, sf_dir)),
             "_gate_sessionwin_rocks_",
         )
-    finally:
-        spark.conf.set(conf, old)
 
 
 @query(
@@ -3054,7 +3099,10 @@ def _semantic_recursive_build_uncached(
         subcounts.join(
             F.broadcast(capped.withColumnRenamed("n", "cell_n")), "cell_id"
         )
-        .where(F.col("n") > F.floor(F.col("cell_n") / sub_k))
+        .where(
+            (F.col("n") > F.floor(F.col("cell_n") / sub_k))
+            & F.col("blk").isNotNull()
+        )
         .select("blk", "n")
         .collect()
     )
@@ -3334,15 +3382,16 @@ def _minlabel_closure_sql(rounds: int) -> str:
     "from SemDeDup: the cleaned corpus.  Edges = the recursive pass's "
     "cosine pairs ('pair' + 'subpair') PLUS keeper edges from the "
     "residual exact pass (each clone -> its group's min-vec_id "
-    "keeper), resolved into duplicate clusters by the SAME "
-    "min-label-propagation operator as dedup_components (pointer "
-    "jumping, O(log diameter) rounds), then survivors = corpus minus "
+    "keeper), resolved into duplicate clusters by the SAME driver "
+    "union-find as dedup_components (the edges are collect-bounded by "
+    "the stage-1/2 caps), then survivors = corpus minus "
     "non-canonical members via broadcast anti-join -- the corpus side "
     "never shuffles.  Composing both edge sources closes the "
     "capped-path recall hole: members of a routed sub-cell ARE "
     "deduped (exactly) rather than merely reported.  The oracle runs "
-    "the SAME min-label + pointer-jumping operator as the engine, "
-    "UNROLLED to _SURVIVOR_CLOSURE_ROUNDS rounds over the shared "
+    "min-label propagation with pointer jumping (its fixpoint is the "
+    "union-find's min-root labeling), UNROLLED to "
+    "_SURVIVOR_CLOSURE_ROUNDS rounds over the shared "
     "pair/residual CTEs (one definition, zero drift), with an "
     "error() guard that fires iff any edge still crosses two labels "
     "-- an insufficient bound is LOUD, never silently wrong.  The r8 "
@@ -3357,8 +3406,6 @@ def _minlabel_closure_sql(rounds: int) -> str:
     "family is dedup_semantic_clustered (uncapped-join contract).",
 )
 def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components_local
-
     out, deps, parts = _semantic_recursive_build(
         spark, sf_dir, consumer="survivors"
     )
@@ -3381,31 +3428,13 @@ def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         edges = edges.unionByName(clone_edges)
     # Candidate edges are pair-scale small (collect-bounded by the
-    # stage-1/2 caps); collect them once, release the build's persisted
-    # intermediates, and resolve the min-label fixpoint with a driver
-    # union-find (r11: the distributed label-propagation loop, even
-    # under iteration_confs, spent 2.8-5.2 s of fixed job latency on a
-    # 540-edge graph; see dedup_components).
-    # Only the LOSERS -- bounded by the pair graph's node count, never
-    # corpus-scale -- go back out, as a broadcast anti-join, so the
-    # corpus side still never shuffles.
-    try:
-        edge_rows = edges.collect()
-    finally:
-        for dep in deps:
-            dep.unpersist()
-    labels = connected_components_local(
-        (r["doc_a"], r["doc_b"]) for r in edge_rows
+    # stage-1/2 caps; r11: the distributed label-propagation loop spent
+    # 2.8-5.2 s of fixed job latency on this 540-edge graph).
+    labels = _components(edges, deps)
+    corpus = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("bigint").alias("vec_id")
     )
-    losers = spark.createDataFrame(
-        sorted((int(n),) for n, c in labels.items() if n != c),
-        "vec_id bigint",
-    )
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .select(F.col("vec_id").cast("bigint").alias("vec_id"))
-        .join(F.broadcast(losers), "vec_id", "left_anti")
-    )
+    return _drop_losers(corpus, "vec_id", labels)
 
 
 _RESIDUAL_SCHEMA = (
@@ -3608,17 +3637,12 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.streams import (
-        CHANGELOG_CONF,
         dedup_stream,
         read_events_stream,
-        use_rocksdb_state,
+        rocksdb_state_confs,
     )
 
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(prov)
-    old_chlog = spark.conf.get(CHANGELOG_CONF, None)
-    try:
-        use_rocksdb_state(spark, changelog=True)
+    with pinned_confs(spark, rocksdb_state_confs(changelog=True)):
         return _drain_stream_to_table(
             spark,
             lambda: dedup_stream(
@@ -3627,12 +3651,6 @@ def stream_dedup_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFram
             ).select("user_id", "event_type"),
             "_gate_dedup_chlog_",
         )
-    finally:
-        spark.conf.set(prov, old_prov)
-        if old_chlog is None:
-            spark.conf.unset(CHANGELOG_CONF)
-        else:
-            spark.conf.set(CHANGELOG_CONF, old_chlog)
 
 
 @query(
@@ -3725,38 +3743,28 @@ def sim_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM reach GROUP BY node
     """,
     doc="Duplicate-CLUSTER resolution: MinHash/LSH candidate pairs "
-    "resolved into connected components by iterative min-label "
-    "propagation (operators/dedup.py:connected_components), output "
-    "(doc_id, component_id = min doc id in the cluster).  The missing "
-    "step between pair generation and deletion: keep-min-per-PAIR "
-    "over-deletes whenever A~B and B~C.  The oracle is the transitive "
-    "closure as a recursive CTE over the same md5-portable pair SQL -- "
-    "label propagation's fixpoint IS the closure's min, so the hash "
-    "check verifies actual convergence, not just plumbing.  Converges "
-    "in O(cluster diameter) rounds; LSH clusters are quasi-cliques, so "
-    "2-4 rounds in practice (the adversarial long-chain case is the "
-    "large-star/small-star formulation, documented in the operator).",
+    "resolved into connected components, output (doc_id, component_id "
+    "= min doc id in the cluster).  The missing step between pair "
+    "generation and deletion: keep-min-per-PAIR over-deletes whenever "
+    "A~B and B~C.  The band-capped pair set is collected once and "
+    "resolved by a driver union-find (operators/dedup.py:"
+    "connected_components_local), whose roots are kept at each "
+    "component's minimum id.  The oracle is the transitive closure as "
+    "a recursive CTE over the same md5-portable pair SQL -- the "
+    "union-find's min root IS the closure's min, so the hash check "
+    "verifies the labels themselves, not just plumbing.  Corpus-scale "
+    "edge lists (curate.py) use the distributed min-label propagation "
+    "operator (operators/dedup.py:connected_components) instead.",
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components_local, minhash_lsh_pairs
+    from ..operators.dedup import minhash_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents")
     res = minhash_lsh_pairs(d, max_bucket=1000)
     # The pair set is collect-bounded by the band cap (the adjudicated
-    # _eager contract since r5); once its rows are on the driver, the
-    # min-label fixpoint is a union-find, not 4+ Spark jobs per
-    # propagation round over a 1294-edge graph (r11: the distributed
-    # loop, even under iteration_confs, cost 2.0-2.6 s of pure fixed
-    # job latency here; corpus-scale edge lists -- curate.py -- keep
-    # the distributed operator).
-    try:
-        pair_rows = res.pairs.select("doc_a", "doc_b").collect()
-    finally:
-        for dep in res.deps:
-            dep.unpersist()
-    labels = connected_components_local(
-        (r["doc_a"], r["doc_b"]) for r in pair_rows
-    )
+    # _eager contract since r5; r11: the distributed loop cost 2.0-2.6 s
+    # of pure fixed job latency on this 1294-edge graph).
+    labels = _components(res.pairs, res.deps)
     return spark.createDataFrame(
         sorted(labels.items()), "doc_id bigint, component_id bigint"
     )
@@ -3854,34 +3862,20 @@ def pipe_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="End-to-end near-dup dedup: the corpus minus every non-canonical "
     "duplicate-cluster member (canonical = min doc id per connected "
     "component of the MinHash/LSH pair graph).  Composes "
-    "minhash_lsh_pairs -> connected_components -> broadcast anti-join: "
+    "minhash_lsh_pairs -> driver union-find over the collected, "
+    "band-capped pairs -> broadcast anti-join of the losers: "
     "the duplicate set is tiny relative to the corpus (pairs only), so "
     "the corpus-side scan never shuffles -- the industrial shape for "
     "deleting near-dups from 100 TB.  Contrast dedup_exact_keep (exact "
     "twin) and dedup_components (the cluster view this consumes).",
 )
 def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import connected_components_local, minhash_lsh_pairs
+    from ..operators.dedup import minhash_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents")
     res = minhash_lsh_pairs(d, max_bucket=1000)
-    # Collect-bounded pair set -> driver union-find (see dedup_components;
-    # r11).  The corpus side still never shuffles: losers are broadcast
-    # into a left_anti join exactly as before.
-    try:
-        pair_rows = res.pairs.select("doc_a", "doc_b").collect()
-    finally:
-        for dep in res.deps:
-            dep.unpersist()
-    labels = connected_components_local(
-        (r["doc_a"], r["doc_b"]) for r in pair_rows
-    )
-    dupes = spark.createDataFrame(
-        sorted((n,) for n, c in labels.items() if n != c), "node bigint"
-    )
-    return d.join(
-        F.broadcast(dupes), d.doc_id == dupes.node, "left_anti"
-    ).select("doc_id")
+    labels = _components(res.pairs, res.deps)
+    return _drop_losers(d.select("doc_id"), "doc_id", labels)
 
 
 @query(
@@ -5028,19 +5022,13 @@ def pipe_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unrounded (no arithmetic on it in either engine).",
 )
 def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..streaming.streams import (
         read_events_stream,
         upsert_latest_foreach_batch,
     )
 
-    root = tempfile.mkdtemp(prefix="_gate_upsert_")
-    state = f"{root}/state"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with _stream_scratch(spark, "_gate_upsert_") as root:
+        state = f"{root}/state"
         ev = read_events_stream(spark, sf_dir).select(
             "user_id", "ts", "event_id", "value"
         )
@@ -5060,9 +5048,6 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").alias("last_value"),
         )
         return _eager(spark, final)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -5087,15 +5072,9 @@ def stream_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "test.",
 )
 def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..streaming.streams import read_events_stream
 
-    root = tempfile.mkdtemp(prefix="_gate_statereader_")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with _stream_scratch(spark, "_gate_statereader_") as root:
         ev = read_events_stream(spark, sf_dir).select("user_id")
         agg = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
         q = (
@@ -5126,9 +5105,6 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value.count").alias("n_events"),
         )
         return _eager(spark, out)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -5151,18 +5127,12 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     "query, never in-place mutation.",
 )
 def stream_tokenizer_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..streaming.streams import read_documents_stream
 
     d = load_table(spark, sf_dir, "documents")
     vocab_map = _tokenizer_vocab_map(d)
-    root = tempfile.mkdtemp(prefix="_gate_tok_stream_")
-    out = f"{root}/encoded"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with _stream_scratch(spark, "_gate_tok_stream_") as root:
+        out = f"{root}/encoded"
         enc = read_documents_stream(spark, sf_dir).select(
             *_tokenizer_encode_cols(vocab_map)
         )
@@ -5176,9 +5146,6 @@ def stream_tokenizer_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _await_drain(q, "tokenizer stream")
         return _eager(spark, spark.read.parquet(out))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -7517,17 +7484,12 @@ def sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_compaction_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
-    import shutil
-    import tempfile
 
     from ..sources.writers import compact_small_files
     from ..streaming.streams import read_events_stream
 
-    root = tempfile.mkdtemp(prefix="_gate_compact_")
-    out = f"{root}/ingested"
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with _stream_scratch(spark, "_gate_compact_") as root:
+        out = f"{root}/ingested"
         ev = read_events_stream(spark, sf_dir).select(
             "event_id", "event_type", "value"
         )
@@ -7589,9 +7551,6 @@ def stream_compaction_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize BEFORE the finally removes the compacted table
         return _eager(spark, agg)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # --- Targeted user erasure via dynamic partition overwrite ---------------------
@@ -7610,10 +7569,6 @@ _ERASURE_FIXTURE_MEMO: dict = {}
 
 
 def _erasure_pristine_table(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.readers import fixture_cache_key
 
     def write_pristine(dest_root: str) -> str:
@@ -7653,8 +7608,6 @@ def _erasure_pristine_table(spark: SparkSession, sf_dir: str) -> str:
 def _hardlink_clone(src: str, dst: str) -> None:
     """Clone a directory tree with hardlinks (falling back to copy
     across filesystems) -- O(files) metadata ops, zero data copied."""
-    import os
-    import shutil
 
     def link_or_copy(s: str, t: str) -> None:
         try:
@@ -7701,9 +7654,6 @@ def _hardlink_clone(src: str, dst: str) -> None:
 )
 def pipe_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
-    import os
-    import shutil
-    import tempfile
 
     from ..sources.writers import overwrite_partitions_dynamic
 

@@ -6,12 +6,11 @@ DuckDB oracle.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import pinned_confs
 from ..sources.readers import load_table
 from .registry import query
 
@@ -4539,23 +4538,12 @@ _BLOOM_CONFS = {
 }
 
 
-@contextmanager
 def bloom_confs_pinned(spark: SparkSession):
     """Pin the confs under which InjectRuntimeFilter fires locally --
     ONE definition shared by the gate query and its plan-assertion test,
     so the test always asserts the exact optimizer state the query runs
     under."""
-    old = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return pinned_confs(spark, _BLOOM_CONFS)
 
 
 def _bloom_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,6 +8,8 @@ shuffle partitions sized to the parallelism.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -82,6 +84,27 @@ def get_spark(
         .config("spark.executor.extraJavaOptions", _merged_java_options())
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def pinned_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set session confs for the ``with`` body and restore them on exit,
+    the exception path included.  Spark confs are session-global state,
+    so every temporary conf change in the package goes through here.
+    Keys that were unset before are unset again (not set to a default
+    value); restores run in reverse order."""
+    saved = []
+    try:
+        for key, value in confs.items():
+            saved.append((key, spark.conf.get(key, None)))
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, old in reversed(saved):
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 _CODEGEN_JVM_OPTS = "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m"

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import pinned_confs
+
 
 def format_centroids(
     df: DataFrame, x: str = "x", y: str = "y", parity_ints: bool = False
@@ -115,14 +117,10 @@ def overwrite_partitions_dynamic(
     drop the whole table first).  The 100 TB operational pattern: a
     daily pipeline recomputes one day and rewrites one directory, not
     the table.  Conf is set per-write and restored."""
-    spark = df.sparkSession
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "dynamic")
-    try:
+    with pinned_confs(
+        df.sparkSession, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(conf, old)
 
 
 def compact_small_files(

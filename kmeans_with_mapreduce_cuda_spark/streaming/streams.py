@@ -422,8 +422,10 @@ CHANGELOG_CONF = (
 )
 
 
-def use_rocksdb_state(spark: SparkSession, changelog: bool = False) -> None:
-    """Switch stateful streaming to the RocksDB state store provider.
+def rocksdb_state_confs(changelog: bool = False) -> dict[str, str]:
+    """Session confs that switch stateful streaming to the RocksDB state
+    store provider; pin them around a query with
+    ``session.pinned_confs(spark, rocksdb_state_confs())``.
 
     The default HDFS-backed provider keeps every key's state in executor
     HEAP with full-file checkpoint uploads -- fine for the fixture-sized
@@ -432,8 +434,8 @@ def use_rocksdb_state(spark: SparkSession, changelog: bool = False) -> None:
     incrementally, and bounds memory via block cache: it is THE provider
     choice for large-state production streams.  Results are
     provider-independent (asserted in tests/test_streaming.py); only the
-    memory/checkpoint profile changes.  Applies to queries STARTED after
-    the call.
+    memory/checkpoint profile changes.  Applies to queries STARTED
+    inside the pin.
 
     ``changelog=True`` additionally enables CHANGELOG checkpointing:
     each commit uploads only the batch's key deltas (``N.changelog``)
@@ -444,15 +446,14 @@ def use_rocksdb_state(spark: SparkSession, changelog: bool = False) -> None:
     last periodic snapshot.  Verified live in this build:
     tests/test_streaming.py asserts ``.changelog`` files (and no
     full-snapshot zips) appear in the checkpoint's state dir while the
-    drained result stays byte-identical.
+    drained result stays byte-identical.  The changelog key is pinned
+    BOTH ways: changelog=False must actively clear a changelog=True
+    setting of an enclosing scope (code-review r5 finding).
     """
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
-    # set BOTH ways: changelog=False must actively clear a prior
-    # changelog=True call on the shared session, or the signature would
-    # lie to later callers (code-review r5 finding)
-    spark.conf.set(CHANGELOG_CONF, "true" if changelog else "false")
+    return {
+        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+        CHANGELOG_CONF: "true" if changelog else "false",
+    }
 
 
 def session_window_stream(

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from kmeans_with_mapreduce_cuda_spark.session import pinned_confs
 from kmeans_with_mapreduce_cuda_spark.sources import (
     load_table,
     write_bucketed_table,
@@ -41,15 +42,11 @@ def _joined(spark):
 
 def test_bucketed_join_has_no_shuffle(spark, bucketed):
     # force the sort-merge path (a broadcast would hide the bucketing)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with pinned_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         plan = _joined(spark)._jdf.queryExecution().executedPlan().toString()
         join_part = plan.split("HashAggregate")[-1]  # below the final agg
         assert "Exchange hashpartitioning" not in join_part, plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_bucketed_join_matches_plain_join(spark, bucketed):
@@ -102,14 +99,10 @@ def test_bucket_pruning_single_key_scan(spark, bucketed):
     # the planner drops bucketed scans when nothing downstream uses the
     # clustering; force it on so pruning applies to the bare filter too
     conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "false")
-    try:
+    with pinned_confs(spark, {conf: "false"}):
         df = spark.table("b_lineitem").where(F.col("l_orderkey") == 7)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "SelectedBucketsCount: 1 out of 4" in plan, plan
-    finally:
-        spark.conf.set(conf, old)
 
 
 def test_rel_bucketed_join_registry_query_plan_and_memo(spark):

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.operators.kmeans import assign_2d, update_2d
 from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
+from kmeans_with_mapreduce_cuda_spark.session import pinned_confs
 from kmeans_with_mapreduce_cuda_spark.sources.readers import load_table, points_xy
 
 from conftest import SF_DIR
@@ -483,10 +484,7 @@ def test_runtime_bloom_filter_injection(spark):
             "100MB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with pinned_confs(spark, confs):
         o = load_table(spark, SF_DIR, "orders").where(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -497,9 +495,6 @@ def test_runtime_bloom_filter_injection(spark):
         plan = j._jdf.queryExecution().optimizedPlan().toString()
         assert "bloom_filter_agg" in plan, plan
         assert "might_contain" in plan, plan
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 def test_lloyd_runs_one_job_per_iteration(spark):

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kmeans_with_mapreduce_cuda_spark.session import pinned_confs
 from kmeans_with_mapreduce_cuda_spark.sources.readers import load_table
 
 from conftest import SF_DIR_MED
@@ -44,20 +45,11 @@ def test_aqe_splits_skewed_join_partition(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with pinned_confs(spark, confs):
         j = skewed.join(right, "k").agg(F.sum("l_extendedprice"))
         j.collect()  # AQE decides at runtime -> inspect the FINAL plan
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, plan
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_minhash_lsh_bucket_cap_bounds_hot_band(spark):

@@ -5,13 +5,16 @@ batch equivalent on the same data."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
+from kmeans_with_mapreduce_cuda_spark.session import pinned_confs
 from kmeans_with_mapreduce_cuda_spark.sources.readers import load_table
 from kmeans_with_mapreduce_cuda_spark.streaming import (
     hourly_counts_stream,
     read_events_stream,
+    rocksdb_state_confs,
     sessionize_stream,
     stream_assign_kmeans,
 )
@@ -139,15 +142,13 @@ def test_sessionize_stream_handles_out_of_order_chunks(spark, tmp_path):
         ),
         os.path.join(str(tmp_path), "events.parquet"),
     )
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
-    try:
+    with pinned_confs(
+        spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "5"}
+    ):
         ev = read_events_stream(spark, str(tmp_path))
         got = _run_to_memory(
             sessionize_stream(ev), "t_sessions_ooo", spark
         ).toPandas()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert len(got) == n - 1, f"expected {n - 1} closed sessions, got {len(got)}"
     assert (got["n_events"] == 1).all()
     assert (got["session_end"] >= got["session_start"]).all()
@@ -216,20 +217,11 @@ def test_running_user_totals_matches_batch(spark):
     pytest.importorskip("google.protobuf.descriptor")
     from kmeans_with_mapreduce_cuda_spark.streaming import running_user_totals
 
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf)
-    spark.conf.set(
-        conf,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with pinned_confs(spark, rocksdb_state_confs()):
         ev = read_events_stream(spark, SF_DIR)
         got = _run_to_memory(
             running_user_totals(ev), "t_totals", spark, output_mode="update"
         ).toPandas()
-    finally:
-        spark.conf.set(conf, old)
     # update mode re-emits per batch; keep the final row per user
     got = got.groupby("user_id").last().reset_index()
     exp = (
@@ -288,17 +280,14 @@ def test_rocksdb_state_store_matches_default(spark):
     from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
     from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
         ROCKSDB_PROVIDER,
-        use_rocksdb_state,
     )
 
     conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf)
     base = {
         tuple(r)
         for r in REGISTRY["stream_hourly_counts"].fn(spark, SF_DIR).collect()
     }
-    try:
-        use_rocksdb_state(spark)
+    with pinned_confs(spark, rocksdb_state_confs()):
         assert spark.conf.get(conf) == ROCKSDB_PROVIDER
         rocks = {
             tuple(r)
@@ -306,8 +295,6 @@ def test_rocksdb_state_store_matches_default(spark):
             .fn(spark, SF_DIR)
             .collect()
         }
-    finally:
-        spark.conf.set(conf, old)
     assert rocks == base
 
 
@@ -368,18 +355,15 @@ def test_rocksdb_state_store_matches_default_session_windows(spark):
     from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
     from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
         ROCKSDB_PROVIDER,
-        use_rocksdb_state,
     )
 
     conf = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf)
     base = {
         tuple(r)
         for r in REGISTRY["stream_session_windows"].fn(spark, SF_DIR).collect()
     }
     assert base  # non-trivial: sessions actually emitted
-    try:
-        use_rocksdb_state(spark)
+    with pinned_confs(spark, rocksdb_state_confs()):
         assert spark.conf.get(conf) == ROCKSDB_PROVIDER
         rocks = {
             tuple(r)
@@ -387,8 +371,6 @@ def test_rocksdb_state_store_matches_default_session_windows(spark):
             .fn(spark, SF_DIR)
             .collect()
         }
-    finally:
-        spark.conf.set(conf, old)
     assert rocks == base
 
 
@@ -403,13 +385,11 @@ def test_streaming_gate_queries_pin_utc_regardless_of_session_tz(spark):
     from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
 
     conf = "spark.sql.session.timeZone"
-    old = spark.conf.get(conf)
     base = {
         tuple(r)
         for r in REGISTRY["stream_hourly_counts"].fn(spark, SF_DIR).collect()
     }
-    try:
-        spark.conf.set(conf, "America/New_York")
+    with pinned_confs(spark, {conf: "America/New_York"}):
         skewed = {
             tuple(r)
             for r in REGISTRY["stream_hourly_counts"]
@@ -417,8 +397,6 @@ def test_streaming_gate_queries_pin_utc_regardless_of_session_tz(spark):
             .collect()
         }
         assert spark.conf.get(conf) == "America/New_York"  # restored, not leaked
-    finally:
-        spark.conf.set(conf, old)
     assert skewed == base
 
 
@@ -725,18 +703,16 @@ def test_rocksdb_changelog_checkpointing_writes_deltas(spark):
     from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
         CHANGELOG_CONF,
         dedup_stream,
-        use_rocksdb_state,
     )
 
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(prov)
-    old_chlog = spark.conf.get(CHANGELOG_CONF, None)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    ck = tempfile.mkdtemp(prefix="kmrc_ckpt_chlog_")
-    try:
-        use_rocksdb_state(spark, changelog=True)
+    confs = {
+        **rocksdb_state_confs(changelog=True),
+        "spark.sql.shuffle.partitions": "2",
+    }
+    with pinned_confs(spark, confs), tempfile.TemporaryDirectory(
+        prefix="kmrc_ckpt_chlog_", ignore_cleanup_errors=True
+    ) as ck:
         assert spark.conf.get(CHANGELOG_CONF) == "true"
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
         df = dedup_stream(
             read_events_stream(spark, SF_DIR),
             keys=["user_id", "event_type"],
@@ -775,16 +751,6 @@ def test_rocksdb_changelog_checkpointing_writes_deltas(spark):
         zips = glob.glob(os.path.join(state, "**", "*.zip"), recursive=True)
         assert chlogs, "no .changelog files written"
         assert not zips, f"full snapshot zips present: {zips[:3]}"
-    finally:
-        spark.conf.set(prov, old_prov)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if old_chlog is None:
-            spark.conf.unset(CHANGELOG_CONF)
-        else:
-            spark.conf.set(CHANGELOG_CONF, old_chlog)
-        import shutil
-
-        shutil.rmtree(ck, ignore_errors=True)
 
 
 def test_stream_tokenizer_encode_equals_batch(spark):
@@ -801,3 +767,28 @@ def test_stream_tokenizer_encode_equals_batch(spark):
         for r in REGISTRY["pipe_tokenizer_apply"].fn(spark, SF_DIR).collect()
     }
     assert got == exp
+
+
+@pytest.mark.parametrize("changelog_before", ["true", None])
+def test_rocksdb_gate_queries_leave_state_store_confs_as_found(
+    spark, changelog_before
+):
+    """Both RocksDB gate queries pin the provider AND the changelog
+    conf for their drain only.  stream_session_windows_rocksdb used to
+    restore just the provider, leaving the changelog conf at the
+    "false" the RocksDB switch sets."""
+    from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
+        CHANGELOG_CONF,
+    )
+
+    keys = ("spark.sql.streaming.stateStore.providerClass", CHANGELOG_CONF)
+    with pinned_confs(spark, {CHANGELOG_CONF: "true"}):
+        if changelog_before is None:
+            spark.conf.unset(CHANGELOG_CONF)
+        before = {k: spark.conf.get(k, None) for k in keys}
+        for name in (
+            "stream_session_windows_rocksdb",
+            "stream_dedup_rocksdb_changelog",
+        ):
+            REGISTRY[name].fn(spark, SF_DIR).collect()
+            assert {k: spark.conf.get(k, None) for k in keys} == before, name
