@@ -1,3 +1,8 @@
+import json
+import re
+from collections.abc import Iterable
+from pathlib import Path
+
 from .registry import REGISTRY, Query, query  # noqa: F401
 
 # Importing these modules populates REGISTRY.
@@ -5,287 +10,38 @@ from . import kmeans_queries  # noqa: F401,E402
 from . import relational  # noqa: F401,E402
 from . import pipeline  # noqa: F401,E402
 
-# ---------------------------------------------------------------------------
-# Gate ordering policy: the driver's correctness gate walks queries()
-# in registration order and has cut at EXACTLY 50 entries every round,
-# so _PRIORITY is a per-round ROTATION, not a stable ranking.  Each
-# round: (1) the 13-query O-series core first (always driver-verified),
-# (2) then every query with no driver-green row yet, (3) then the
-# least-recently-verified, pushing multi-round-green queries past the
-# cut.  When editing for round N+1, consult CORRECTNESS_r{N}.json for
-# what just got verified and rotate it out.  Queries not in _PRIORITY
-# follow in registration order (hash-checked before rows-only).
-# ---------------------------------------------------------------------------
 
-# Round-11 ROTATION: CORRECTNESS_r10 came back 50/50 green (the r10
-# prefix verbatim), so union coverage is 240/243 of the current
-# registry -- only the 3 r10 layout additions (rel_schema_evolution,
-# rel_bucketed_join, rel_zorder_pruning) have no driver row yet; they
-# lead this prefix, followed by the displaced r6/r7 rows in strict
-# age order.  Mechanically a pure rotation of the r10 list: entries
-# 51+ move up, the 50 rows just verified in r10 append at the very
-# back as the youngest.  Re-derive for r12 from CORRECTNESS_r11.
-_PRIORITY = [
-    # ---- r11 PREFIX: 3 never-verified r10 additions first, then the
-    # least-recently-verified rows in age order
-    "rel_schema_evolution",
-    "rel_bucketed_join",
-    "rel_zorder_pruning",
-    "udf_arrow_scalar",
-    "pipe_span_corruption",
-    "text_bigram_logprob",
-    "stream_distinct_users",
-    "mm_phash_near_dup",
-    "pipe_label_propagation",
-    "sim_sparse_cosine",
-    "pipe_pca_whiten",
-    "pipe_tokenizer_apply",
-    "rel_orc_roundtrip",
-    "pipe_dpo_pairs",
-    "sim_matryoshka_topk",
-    "pipe_pareto_frontier",
-    "pipe_importance_resample",
-    "pipe_dataset_diff",
-    "udf_sql_scalar",
-    "udf_sql_tvf",
-    "rel_session_vars",
-    "rel_decimal_money",
-    "rel_mad_robust",
-    "udf_arrow_grouped",
-    "pipe_shard_manifest",
-    "rel_spatial_radius_join",
-    "o14_davies_bouldin",
-    "text_readability",
-    "rel_sql_scripting",
-    "rel_collation_lcase",
-    "stream_approx_percentile",
-    "rel_json_corrupt_records",
-    "pipe_synthetic_qa",
-    "pipe_dedup_eval",
-    "text_url_domains",
-    "pipe_length_buckets",
-    "rel_csv_roundtrip",
-    "o02_seed_kmeanspp",
-    "rel_window_ntile",
-    "rel_grouping_id",
-    "rel_time_weighted_avg",
-    "rel_incremental_rollup",
-    "rel_chisq_independence",
-    "pipe_oversample_minority",
-    "udf_pandas_iter",
-    "rel_parameterized_sql",
-    "rel_lateral_column_alias",
-    "o12_kmeans_minibatch",
-    "rel_dpp_prune_join",
-    "rel_interval_calendar",
-    # ------------------- 50-entry cut lands here -------------------
-    "rel_dpp_semijoin_filter",
-    "stream_dedup_rocksdb_changelog",
-    "rel_collation_unicode_ci",
-    "stream_tokenizer_encode",
-    "o12_kmeans_five_steps",
-    "o14_sse_by_k",
-    "o02_seed_farthest",
-    "rel_join_outer",
-    "rel_window_lag",
-    "rel_cube",
-    "rel_grouping_sets",
-    "rel_count_distinct_multi",
-    "rel_correlated_scalar",
-    "rel_json_variant",
-    "rel_session_window",
-    "rel_conditional_agg_q14",
-    "text_token_stats",
-    "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "text_simhash",
-    "mm_payload_meta",
-    "mm_resize_meta",
-    "mm_frame_sample",
-    "sim_topk_bruteforce",
-    "pipe_stratified_sample",
-    "pipe_source_mixture",
-    "pipe_train_val_test",
-    "pipe_token_packing",
-    "udtf_shingles",
-    "stream_hourly_counts",
-    "udf_mapreduce_kmeans_step",
-    "rel_approx_distinct",
-    "rel_approx_percentile",
-    "rel_window_range_frame",
-    "rel_group_by_all",
-    "stream_session_windows",
-    "udf_group_normalize",
-    "text_bpe_token_stats",
-    "text_lang_id_ngram",
-    "sim_lsh_pairs",
-    "pipe_corpus_clean",
-    "rel_join_chain_q5",
-    "o01_scan_limit",
-    "o02_seed_sample",
-    "o03_distance_expr",
-    "o04_assign_argmin",
-    "dedup_semantic_capped",
-    "udf_cogroup_asof",
-    "rel_stat_freq_items",
-    "rel_stat_crosstab",
-    "rel_stat_sampleby",
-    "rel_asof_tolerance",
-    "udtf_polymorphic_topterms",
-    "udtf_table_arg_sessions",
-    "rel_window_count_distinct",
-    "stream_state_reader",
-    "rel_timezone_convert",
-    "rel_identifier_clause",
-    "rel_nullsafe_join",
-    "dedup_embedding_cosine",
-    "dedup_exact_groups",
-    "dedup_exact_keep",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "rel_ansi_sql_verbatim",
-    "rel_array_funcs",
-    "rel_asof_join",
-    "rel_date_funcs",
-    "rel_filter_agg",
-    "rel_histogram",
-    "rel_join_broadcast",
-    "rel_join_semi_anti",
-    "rel_join_shuffle",
-    "rel_json_funcs",
-    "rel_percentiles",
-    "rel_pivot",
-    "rel_range_join",
-    "rel_rollup",
-    "rel_sessionize_batch",
-    "rel_set_ops",
-    "rel_string_funcs",
-    "rel_subquery_scalar",
-    "rel_window_topk",
-    "stream_stream_join",
-    "dedup_components",
-    "dedup_incremental",
-    "dedup_lsh_verified",
-    "dedup_semantic_clustered",
-    "dedup_survivors",
-    "kmeans_mllib_sizes",
-    "mm_decode_features",
-    "pipe_dataset_card",
-    "dedup_semantic_recursive",
-    "rel_observe_metrics",
-    "rel_bloom_filter_join",
-    "dedup_semantic_residual_exact",
-    "dedup_semantic_survivors",
-    "rel_stat_count_min",
-    "rel_filter_clause_agg",
-    "rel_null_ordering",
-    "rel_asof_nearest",
-    "kmeans_bisecting_sizes",
-    "rel_order_by_all",
-    "o05_multi_emit",
-    "o06_sort_by_key",
-    "o07_group_counts",
-    "o08_centroid_update",
-    "o12_kmeans_two_steps",
-    "o13_sink_format",
-    "o14_sse",
-    "o04_assign_argmin_nd",
-    "o09_centroid_update_nd",
-    "rel_window_rank_funcs",
-    "rel_unpivot",
-    "rel_null_semantics",
-    "rel_stats_agg",
-    "rel_map_funcs",
-    "rel_exists_subquery",
-    "rel_recursive_cte",
-    "rel_lateral_subquery",
-    "text_ngram_freq",
-    "text_repetition_ratio",
-    "text_normalize",
-    "sim_ann_ivf",
-    "sim_ann_ivf_fixed",
-    "stream_sliding_counts",
-    "stream_static_join",
-    "text_contamination",
-    "stream_dedup",
-    "rel_salted_join",
-    "sim_int8_topk",
-    "pipe_doc_chunking",
-    "sim_ann_ivf_sq8",
-    "text_boilerplate_strip",
-    "text_pii_scrub",
-    "text_tfidf_topterms",
-    "pipe_vocab_build",
-    "pipe_quality_classifier",
-    "stream_session_windows_rocksdb",
-    "udaf_median_by_type",
-    "stream_upsert_latest",
-    "o14_silhouette",
-    # --- driver-verified r10 (CORRECTNESS_r10, youngest rows)
-    "rel_hof_lambda",
-    "sim_range_search",
-    "sim_ivf_recall_eval",
-    "stream_compaction_ingest",
-    "rel_limit_offset",
-    "rel_regr_linear",
-    "pipe_user_erasure",
-    "rel_join_hints",
-    "rel_set_ops_all",
-    "text_bm25_topk",
-    "sim_hybrid_rrf",
-    "rel_locf_impute",
-    "rel_try_parse_ingest",
-    "dedup_exact_keep_best",
-    "text_intradoc_dedup",
-    "o14_calinski",
-    "rel_hll_sketch_union",
-    "rel_bitmap_distinct",
-    "rel_retention",
-    "rel_constraints",
-    "rel_resample",
-    "rel_listagg",
-    "rel_try_arith",
-    "rel_merge_upsert",
-    "rel_scd2",
-    "rel_generators",
-    "rel_topk_salted",
-    "rel_xml_funcs",
-    "rel_approx_top_k",
-    "rel_theta_sketch_sets",
-    "rel_anomaly_zscore",
-    "rel_variant_explode",
-    "rel_topk_sketch_rollup",
-    "rel_pipe_syntax",
-    "rel_pagerank",
-    "rel_triangles",
-    "rel_graph_bfs",
-    "dedup_containment",
-    "dedup_fuzzy_blocked",
-    "dedup_cdc_chunks",
-    "dedup_minhash_mllib",
-    "sim_pq_adc",
-    "pipe_global_shuffle",
-    "text_char_entropy",
-    "rel_funnel",
-    "text_unigram_logprob",
-    "dedup_cross_corpus",
-    "text_gopher_rules",
-    "stream_topk_types",
-    "pipe_sft_format",
-]
+def _gate_order(names: Iterable[str], rounds: list[dict]) -> list[str]:
+    """Order ``names`` for the driver's correctness gate.
+
+    The gate walks ``queries()`` in registration order and cuts at
+    EXACTLY 50 entries each round, so this order decides what gets
+    checked.  Names with no green row (``hash_match`` true) in any
+    round lead, in registration order; the rest follow least recently
+    verified first -- by the newest round with a green row, then by
+    that row's position in the round's file.  ``rounds`` runs oldest to
+    newest; rows naming anything outside ``names`` are ignored.
+    """
+    newest = {}
+    for r, rows in enumerate(rounds):
+        for pos, (name, row) in enumerate(rows.items()):
+            if row.get("hash_match") is True:
+                newest[name] = (r, pos)
+    return sorted(names, key=lambda n: newest.get(n, (-1, 0)))
 
 
-def _rerank(reg: dict[str, Query]) -> dict[str, Query]:
-    missing = [n for n in _PRIORITY if n not in reg]
-    assert not missing, f"priority list names unknown queries: {missing}"
-    rest_checked = [
-        n for n in reg if n not in _PRIORITY and reg[n].oracle is not None
-    ]
-    rows_only = [n for n in reg if n not in _PRIORITY and reg[n].oracle is None]
-    return {n: reg[n] for n in [*_PRIORITY, *rest_checked, *rows_only]}
+def _rounds(root: Path) -> list[dict]:
+    """Every ``CORRECTNESS_r<N>.json`` in ``root``, by round number."""
+    found = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            found[int(m[1])] = path
+    return [json.loads(found[n].read_text()) for n in sorted(found)]
 
 
-_ranked = _rerank(REGISTRY)
-REGISTRY.clear()
-REGISTRY.update(_ranked)
+# The rounds sit next to __spark_entry__.py; with none, registration
+# order stands.
+_ROOT = Path(__file__).resolve().parents[2]
+for _name in _gate_order(REGISTRY, _rounds(_ROOT)):
+    REGISTRY[_name] = REGISTRY.pop(_name)

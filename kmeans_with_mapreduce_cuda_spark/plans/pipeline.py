@@ -13,7 +13,7 @@ from contextlib import contextmanager
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -66,6 +66,17 @@ def _await_drain(q, what: str) -> None:
         q.stop()
 
 
+def _collect_then_release(df: DataFrame, deps: list[DataFrame]) -> list[Row]:
+    """``df.collect()``, then unpersist ``deps`` -- also when the collect
+    raises: how a query that collects a small result drops the cached
+    intermediates it was computed from."""
+    try:
+        return df.collect()
+    finally:
+        for dep in deps:
+            dep.unpersist()
+
+
 def _eager(
     spark: SparkSession, df: DataFrame, deps: list[DataFrame] | None = None
 ) -> DataFrame:
@@ -80,13 +91,9 @@ def _eager(
     ``dedup.LshPairs.deps``) -- an attribute stapled to a DataFrame
     would silently vanish on any downstream transformation.
     """
-    deps = list(deps or [])
-    try:
-        rows = df.collect()
-    finally:
-        for dep in deps:
-            dep.unpersist()
-    return spark.createDataFrame(rows, df.schema)
+    return spark.createDataFrame(
+        _collect_then_release(df, deps or []), df.schema
+    )
 
 
 def _components(edges: DataFrame, deps: list[DataFrame]) -> dict:
@@ -103,11 +110,7 @@ def _components(edges: DataFrame, deps: list[DataFrame]) -> dict:
     operators.dedup.connected_components."""
     from ..operators.dedup import connected_components_local
 
-    try:
-        rows = edges.select("doc_a", "doc_b").collect()
-    finally:
-        for dep in deps:
-            dep.unpersist()
+    rows = _collect_then_release(edges.select("doc_a", "doc_b"), deps)
     return connected_components_local((r["doc_a"], r["doc_b"]) for r in rows)
 
 
@@ -3497,12 +3500,9 @@ def dedup_semantic_residual_exact(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.sum("n") - F.count(F.lit(1))).alias("n_dupes"),
         F.max("n").alias("max_clone_group"),
     )
-    try:
-        rows = report.collect()
-    finally:
-        for d in deps:
-            d.unpersist()
-    return spark.createDataFrame(rows, _RESIDUAL_SCHEMA)
+    return spark.createDataFrame(
+        _collect_then_release(report, deps), _RESIDUAL_SCHEMA
+    )
 
 
 @query(
