@@ -19,26 +19,23 @@ Headline queries:
 - json_variant   : VARIANT parse + typed extraction + agg over events.
 - token_packing  : running-sum sequence packing over documents.
 - dedup_semantic : K-Means-cell-clustered embedding cosine near-dup
-                   (added round 5; cell-routed, never all-pairs).
-- dedup_components: near-dup pairs -> connected components -> cluster ids
-                   (added round 5; pointer-jumping label propagation).
-- sim_int8       : int8-quantized cosine top-k serving path (added
-                   round 5).
+                   (cell-routed, never all-pairs).
+- dedup_components: near-dup pairs -> connected components -> cluster ids.
+- sim_int8       : int8-quantized cosine top-k serving path.
 - text_bm25      : BM25 top-10 retrieval, explode-free tf + broadcast
-                   corpus stats (added round 10).
+                   corpus stats.
 - dedup_survivors_chain: the full SemDeDup chain end-to-end -- stage-1+2
-                   build + components + survivor election (added round
-                   10; the build memo is deliberately cold each sample,
-                   so this measures the chain's true per-run cost).
+                   build + components + survivor election (the build
+                   memo is deliberately cold each sample, so this
+                   measures the chain's true per-run cost).
 - stream_upsert  : Structured Streaming availableNow drain -- per-key
-                   latest-event upsert via foreachBatch merge (added
-                   round 10).
+                   latest-event upsert via foreachBatch merge.
+- scan_hash_chain: parallel per-row compute over lineitem, the key
+                   that shows core scaling.
 
-The round-5 and round-10 keys raise the headline TOTAL by their own
-cost (r5: dedup_semantic 1.9-2.3, dedup_components 4.7-5.8 incl. its
-own LSH pair generation, sim_int8 0.5-0.6; r10 bands in BASELINE.md)
-relative to earlier rounds — read round-over-round totals per-query,
-not headline (see BASELINE.md).
+The key set grew over rounds, so the headline TOTAL is only comparable
+per key across those boundaries (BASELINE.md records when each key
+was added and its bands).
 
 calibration_s is NOT a query and is excluded from the total: a
 fixed-work, IO-free aggregate over a cached in-memory range (same
@@ -80,28 +77,6 @@ def main() -> None:
     emb = load_table(spark, SF_DIR, "embeddings").cache()
     emb.count()
 
-    def run_registry(name: str):
-        # exhaust the result without collecting rows to the driver
-        REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-    # (name, fn, samples-per-repetition): the iterative kmeans entries
-    # take 2 back-to-back samples per rep -- their 10-20 dependent jobs
-    # INTEGRATE host-load noise over several seconds instead of
-    # averaging it out, so they need more draws than the sub-second
-    # one-job queries for the minimum to reach steady state.
-    entries: list[tuple[str, object, int]] = [
-        (
-            "kmeans_df",
-            lambda: lloyd_2d(points, init15, max_iter=10, tol=0.0),
-            2,
-        ),
-        (
-            "kmeans_mllib",
-            lambda: fit_kmeans(emb, k=15, max_iter=10, tol=0.0, seed=42),
-            2,
-        ),
-    ]
-
     # BASELINE.md parity point: the reference's own workload shape
     # (birch1, first 10k rows, k=15).  20 iterations timed; the reference
     # does 999 at 1.33 ms/iter on a GPU -- Spark's fixed per-job overhead
@@ -117,85 +92,10 @@ def main() -> None:
     else:
         birch = read_points_text(spark, birch_path, limit=10_000).cache()
         birch.count()
-        init_b = [
-            (float(100_000 + 60_000 * i), float(100_000 + 55_000 * (i % 4)))
-            for i in range(15)
-        ]
-        entries.append(
-            (
-                "kmeans_birch10k_20iter",
-                lambda: lloyd_2d(birch, init_b, max_iter=20, tol=0.0),
-                2,
-            )
-        )
-
-    for bench_name, reg_name in [
-        ("tpch_q1", "rel_filter_agg"),
-        ("join_agg", "rel_join_shuffle"),
-        ("join_chain_q5", "rel_join_chain_q5"),
-        ("window_topk", "rel_window_topk"),
-        ("dedup_exact", "dedup_exact_keep"),
-        ("ngram_jaccard", "dedup_ngram_jaccard"),
-        ("minhash_lsh", "dedup_minhash_lsh"),
-        ("sim_topk", "sim_topk_bruteforce"),
-        ("json_variant", "rel_json_variant"),
-        ("token_packing", "pipe_token_packing"),
-        # Round-5 additions (NOTES.md bench-evolution proposal): the
-        # three scale-relevant paths added during round 4.  They extend
-        # the TOTAL by their own cost; cross-round total comparisons
-        # must be per-query (BASELINE.md).
-        ("dedup_semantic", "dedup_semantic_clustered"),
-        ("dedup_components", "dedup_components"),
-        ("sim_int8", "sim_int8_topk"),
-        # Round-10 additions (r9 verdict item 3): the scale-relevant
-        # r6-r9 paths the frozen r5 key set never represented.  Same
-        # rule: totals move by their own cost, compare per-query.
-        ("text_bm25", "text_bm25_topk"),
-        ("dedup_survivors_chain", "dedup_semantic_survivors"),
-        ("stream_upsert", "stream_upsert_latest"),
-    ]:
-        entries.append((bench_name, lambda n=reg_name: run_registry(n), 1))
-
-    # Round-11 addition (r10 verdict item 2): a key whose cost is
-    # DOMINATED by parallel per-row compute, so the driver's 8c-vs-32c
-    # scaling block has a key that can demonstrate core scaling at
-    # sf0.1 at all.  Every other key is fixed-job-latency-bound at this
-    # SF (sub-second jobs, k-row shuffles), so their 32c/8c ratios sit
-    # at ~1 regardless of whether the engine honors $SPARK_GRAFT_CPUS
-    # -- which made the driver's suspect_cpus_ignored heuristic misfire
-    # in r10.  This key reads the SF-scaled lineitem fixture fresh each
-    # sample (spread_scan parallelizes the single-row-group file),
-    # explodes each key 32 ways and runs a 64-deep xxhash64 chain per
-    # exploded row (2048 hashes/source row, pure long->long codegen --
-    # allocation-free so the parallel region is CPU, not GC, and the
-    # explode form reaches JIT steady state within one sample, unlike
-    # a deep md5 expression chain), then bit_xor-folds to one row
-    # map-side.  Measured on a quiet host: 1.58 s at 32c vs 3.40 s at
-    # 8c (2.15x -- at this VM's measured ceiling: the fixed-work
-    # 32-partition calibration itself only speeds up 1.96x from 8c to
-    # 32c, so ~2x is what perfectly-parallel work can show here; the
-    # residual floor is the serial single-row-group scan + its one-task
-    # spread exchange).  No caching, no state: work is recomputed from
-    # the parquet input per invocation like every key.
-    from pyspark.sql import functions as FB
-
-    def run_scan_hash_chain():
-        from kmeans_with_mapreduce_cuda_spark.sources.readers import (
-            spread_scan,
-        )
-
-        li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey")
-        base = spread_scan(li).select(FB.col("l_orderkey").alias("k"))
-        h = FB.xxhash64(FB.col("k"), FB.col("i"))
-        for _ in range(63):
-            h = FB.xxhash64(h, FB.col("k"))
-        base.select(
-            FB.explode(FB.sequence(FB.lit(0), FB.lit(31))).alias("i"), "k"
-        ).select(h.alias("h")).select(
-            FB.expr("bit_xor(h)").alias("s")
-        ).collect()
-
-    entries.append(("scan_hash_chain", run_scan_hash_chain, 1))
+    init_b = [
+        (float(100_000 + 60_000 * i), float(100_000 + 55_000 * (i % 4)))
+        for i in range(15)
+    ]
 
     # Fixed-work calibration (r9 verdict item 4): an IO-free, SF-free
     # aggregate over a cached 144M x 3-bigint in-memory relation
@@ -224,8 +124,87 @@ def main() -> None:
             F.expr("bit_xor(xxhash64(id, h1, h2))").alias("s")
         ).collect()
 
+    def run_registry(name: str):
+        # exhaust the result without collecting rows to the driver
+        REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    def registry_entry(key: str, name: str) -> tuple[str, object, int]:
+        return (key, lambda: run_registry(name), 1)
+
+    # A key whose cost is DOMINATED by parallel per-row compute, so the
+    # driver's 8c-vs-32c scaling block has a key that can demonstrate
+    # core scaling at sf0.1 at all.  Every other key is
+    # fixed-job-latency-bound at this SF (sub-second jobs, k-row
+    # shuffles), so their 32c/8c ratios sit at ~1 regardless of whether
+    # the engine honors $SPARK_GRAFT_CPUS.  This key reads the
+    # SF-scaled lineitem fixture fresh each sample (spread_scan
+    # parallelizes the single-row-group file), explodes each key 32
+    # ways and runs a 64-deep xxhash64 chain per exploded row (2048
+    # hashes/source row, pure long->long codegen -- allocation-free so
+    # the parallel region is CPU, not GC, and the explode form reaches
+    # JIT steady state within one sample, unlike a deep md5 expression
+    # chain), then bit_xor-folds to one row map-side.  No caching, no
+    # state: work is recomputed from the parquet input per invocation
+    # like every key.
+    def run_scan_hash_chain():
+        from kmeans_with_mapreduce_cuda_spark.sources.readers import (
+            spread_scan,
+        )
+
+        li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey")
+        base = spread_scan(li).select(F.col("l_orderkey").alias("k"))
+        h = F.xxhash64(F.col("k"), F.col("i"))
+        for _ in range(63):
+            h = F.xxhash64(h, F.col("k"))
+        base.select(
+            F.explode(F.sequence(F.lit(0), F.lit(31))).alias("i"), "k"
+        ).select(h.alias("h")).select(
+            F.expr("bit_xor(h)").alias("s")
+        ).collect()
+
     CALIB_KEY = "calibration"
-    entries.append((CALIB_KEY, run_calibration, 1))
+    # (bench key, runner, samples-per-repetition), in output order.  The
+    # iterative kmeans entries take 2 back-to-back samples per rep --
+    # their 10-20 dependent jobs INTEGRATE host-load noise over several
+    # seconds instead of averaging it out, so they need more draws than
+    # the sub-second one-job queries for the minimum to reach steady
+    # state.
+    entries: list[tuple[str, object, int]] = [
+        (
+            "kmeans_df",
+            lambda: lloyd_2d(points, init15, max_iter=10, tol=0.0),
+            2,
+        ),
+        (
+            "kmeans_mllib",
+            lambda: fit_kmeans(emb, k=15, max_iter=10, tol=0.0, seed=42),
+            2,
+        ),
+        (
+            "kmeans_birch10k_20iter",
+            lambda: lloyd_2d(birch, init_b, max_iter=20, tol=0.0),
+            2,
+        ),
+        registry_entry("tpch_q1", "rel_filter_agg"),
+        registry_entry("join_agg", "rel_join_shuffle"),
+        registry_entry("join_chain_q5", "rel_join_chain_q5"),
+        registry_entry("window_topk", "rel_window_topk"),
+        registry_entry("dedup_exact", "dedup_exact_keep"),
+        registry_entry("ngram_jaccard", "dedup_ngram_jaccard"),
+        registry_entry("minhash_lsh", "dedup_minhash_lsh"),
+        registry_entry("sim_topk", "sim_topk_bruteforce"),
+        registry_entry("json_variant", "rel_json_variant"),
+        registry_entry("token_packing", "pipe_token_packing"),
+        registry_entry("dedup_semantic", "dedup_semantic_clustered"),
+        registry_entry("dedup_components", "dedup_components"),
+        registry_entry("sim_int8", "sim_int8_topk"),
+        registry_entry("text_bm25", "text_bm25_topk"),
+        registry_entry("dedup_survivors_chain", "dedup_semantic_survivors"),
+        registry_entry("stream_upsert", "stream_upsert_latest"),
+        ("scan_hash_chain", run_scan_hash_chain, 1),
+        (CALIB_KEY, run_calibration, 1),
+    ]
+    entries = [e for e in entries if e[0] not in skipped]
 
     # Interleaved whole-suite repetitions, per-query minima (round-3
     # verdict item 2): a cold first run on a busy host recorded 7x noise

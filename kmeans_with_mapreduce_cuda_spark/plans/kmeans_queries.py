@@ -176,39 +176,29 @@ _ND_ASSIGN_SQL = f"""
 """
 
 
-_CENTS_ND_CACHE: dict[tuple, list[list[float]]] = {}
-
-
 def _cents_nd(spark: SparkSession, sf_dir: str, k: int = _K_ND) -> list[list[float]]:
     """Deterministic n-D seed centroids: the embeddings of vec_id < k
     (tiny driver-side collect, the seeding boundary).  Memoized so
     o04/o09/o12-nd don't each pay the same ~0.3 s seed collect in one
-    gate run.  Keyed on the shared fixture_cache_key (+ k) because
-    fixtures regenerate per round: a session spanning a regeneration
-    must re-derive seeds from the new data, or the oracle (which always
+    gate run.  Keyed on the embeddings' content because fixtures
+    regenerate per round: a session spanning a regeneration must
+    re-derive seeds from the new data, or the oracle (which always
     reads fresh) would see different centroids and report an opaque
     hash mismatch."""
-    from ..sources.readers import fixture_cache_key
+    from ..sources.readers import fixture_memo, load_table
 
-    fk = fixture_cache_key(spark, sf_dir, "embeddings")
-    key = (fk, k)
-    if fk is None or key not in _CENTS_ND_CACHE:
-        from ..sources.readers import load_table
-
+    def seeds() -> list[list[float]]:
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .where(F.col("vec_id") < k)
             .orderBy("vec_id")
             .collect()
         )
-        cents = [[float(v) for v in r["embedding"]] for r in rows]
-        if fk is None:
-            # un-stat-able fixture (r10 advice): a None key would
-            # collapse different sessions/dirs into one entry and
-            # serve stale seeds -- derive fresh, never memoize
-            return cents
-        _CENTS_ND_CACHE[key] = cents
-    return _CENTS_ND_CACHE[key]
+        return [[float(v) for v in r["embedding"]] for r in rows]
+
+    return fixture_memo(
+        spark, sf_dir, ("embeddings",), ("cents_nd", sf_dir, k), seeds
+    )
 
 
 @query(

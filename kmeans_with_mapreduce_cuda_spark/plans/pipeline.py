@@ -21,7 +21,7 @@ from ..functions.hashing import md5_long_sql
 from ..functions.text import STOPWORDS, tokens
 from ..operators.dedup import simhash16_sql, token_hashes_sql
 from ..session import pinned_confs
-from ..sources.readers import load_table
+from ..sources.readers import fixture_memo, fixture_memo_drop, load_table
 from . import registry
 from .registry import query
 
@@ -2889,27 +2889,24 @@ def dedup_semantic_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _eager(spark, both, deps=[assigned])
 
 
-# One-entry memo for the stage-1+2 SemDeDup build (r8 ADVICE item 5):
+# Session memo for the stage-1+2 SemDeDup build (r8 ADVICE item 5):
 # the gate runs dedup_semantic_recursive, dedup_semantic_residual_exact
-# and dedup_semantic_survivors back to back at the head of the r9
-# prefix, and each re-ran the full build (top-level assignment, seed
-# collect, sub-assignment) -- the most expensive shared work in the
-# sweep, tripled.  Keyed on the SHARED fixture_cache_key recipe
-# (+ sub_k) -- the mandated single invalidation definition in
-# sources/readers.py, same as the _CENTS_ND_CACHE memo -- so a
+# and dedup_semantic_survivors close together, and each re-ran the full
+# build (top-level assignment, seed collect, sub-assignment) -- the
+# most expensive shared work in the sweep, tripled.  The build lives in
+# one fixture_memo slot keyed on the embeddings' content, so a
 # different session, fixture directory, or regenerated file always
-# rebuilds.  Lifetime is bounded two ways: on a key change the
-# evicted entry's persisted deps are released (plain persist()s, so
-# unpersist is always safe), and once all three DISTINCT chain
-# consumers have read one key the entry is released eagerly -- a full
-# gate sweep does not carry the corpus-scale subassigned cache
-# through the ~185 unrelated queries that follow (review finding).
-# A premature release only costs a rebuild, never correctness.
-_SEMANTIC_BUILD_MEMO: dict = {}
-_SEMANTIC_BUILD_CONSUMERS = frozenset(
-    {"recursive", "residual_exact", "survivors"}
-)
-#: Queries whose invocation does NOT age the memo (the chain itself).
+# rebuilds, and a replaced build's persisted deps are released (plain
+# persist()s, so unpersist is always safe).  The slot is also dropped
+# once every chain query has read one build -- a full gate sweep does
+# not carry the corpus-scale subassigned cache through the ~185
+# unrelated queries that follow (review finding) -- and once it has
+# sat idle for _SEMANTIC_MEMO_TTL other queries.  A premature release
+# only costs a rebuild, never correctness.
+_SEMANTIC_SLOT = "semantic_build"
+#: The chain: the queries that read the build.  Their invocation does
+#: not age the slot, and once all of them have read one build it is
+#: released.
 _SEMANTIC_CHAIN_QUERIES = frozenset(
     {
         "dedup_semantic_recursive",
@@ -2918,7 +2915,7 @@ _SEMANTIC_CHAIN_QUERIES = frozenset(
     }
 )
 #: Non-chain registered queries tolerated between chain consumers before
-#: the memo's persisted intermediates are force-released (r10 advice:
+#: the build's persisted intermediates are force-released (r10 advice:
 #: the last-consumer release assumes all three consumers run; a partial
 #: sweep or single-query bench must not carry corpus-scale cached
 #: partitions for the rest of the session).  3 = the chain's own length,
@@ -2930,74 +2927,53 @@ _semantic_memo_idle = 0
 
 
 def _semantic_memo_tick(qname: str) -> None:
-    """registry.RUN_HOOKS callback: age the SemDeDup build memo by one
-    per non-chain query; release once it has sat idle for
+    """registry.RUN_HOOKS callback: age the SemDeDup build slot by one
+    per non-chain query; drop it once it has sat idle for
     _SEMANTIC_MEMO_TTL queries."""
     global _semantic_memo_idle
-    if not _SEMANTIC_BUILD_MEMO:
-        return
     if qname in _SEMANTIC_CHAIN_QUERIES:
         _semantic_memo_idle = 0
         return
     _semantic_memo_idle += 1
     if _semantic_memo_idle >= _SEMANTIC_MEMO_TTL:
-        _release_semantic_build_memo()
+        fixture_memo_drop(_SEMANTIC_SLOT)
 
 
 registry.RUN_HOOKS.append(_semantic_memo_tick)
 
 
+def _unpersist_build(build: tuple) -> None:
+    for dep in build[1]:
+        try:
+            dep.unpersist()
+        except Exception:
+            pass  # dead session -- nothing to release
+
+
+@contextmanager
 def _semantic_recursive_build(
-    spark: SparkSession,
-    sf_dir: str,
-    sub_k: int = 4,
-    consumer: str | None = None,
-) -> tuple[DataFrame, list[DataFrame], dict | None]:
-    """Memoizing wrapper around the stage-1+2 build (see
-    _SEMANTIC_BUILD_MEMO).  Returns (out, deps, parts) exactly like
-    the uncached builder, except deps is [] -- ownership of the
-    persisted intermediates stays with the memo.  ``consumer`` names
-    the calling chain query for the all-consumers-served eager
-    release; anonymous callers never trigger it."""
-    from ..sources.readers import fixture_cache_key
-
+    spark: SparkSession, sf_dir: str, consumer: str
+) -> Iterator[tuple[DataFrame, dict | None]]:
+    """The memoized stage-1+2 build as ``(out, parts)`` -- the uncached
+    builder's result minus its deps, which stay with the memo.
+    ``consumer`` is the calling chain query; when the ``with`` body of
+    the last distinct one exits, the slot is dropped, so the final
+    query still executes against the warm cache and nothing outlives
+    the chain."""
     global _semantic_memo_idle
-    fk = fixture_cache_key(spark, sf_dir, "embeddings")
-    if fk is None:
-        # un-stat-able fixture (r10 advice): a None component would
-        # collapse applicationId/sf_dir into one shared entry and could
-        # serve another directory's build -- don't touch the memo;
-        # caller owns the deps and releases them via _eager(deps=...)
-        return _semantic_recursive_build_uncached(spark, sf_dir, sub_k)
-    key = (fk, sub_k)
-    hit = _SEMANTIC_BUILD_MEMO.get(key)
-    if hit is None:
-        _release_semantic_build_memo()
-        hit = [_semantic_recursive_build_uncached(spark, sf_dir, sub_k),
-               set()]
-        _SEMANTIC_BUILD_MEMO[key] = hit
+    out, _deps, parts, served = fixture_memo(
+        spark,
+        sf_dir,
+        ("embeddings",),
+        _SEMANTIC_SLOT,
+        lambda: (*_semantic_recursive_build_uncached(spark, sf_dir), set()),
+        release=_unpersist_build,
+    )
     _semantic_memo_idle = 0
-    (out, deps, parts), served = hit
-    if consumer is not None:
-        served.add(consumer)
-        if served >= _SEMANTIC_BUILD_CONSUMERS:
-            # last distinct consumer: transfer dep OWNERSHIP to the
-            # caller -- its _eager(deps=...) releases them after its
-            # own collect, so the final query still executes against
-            # the warm cache and nothing outlives the chain
-            _SEMANTIC_BUILD_MEMO.pop(key, None)
-            return out, deps, parts
-    return out, [], parts
-
-
-def _release_semantic_build_memo() -> None:
-    for (build, _served) in _SEMANTIC_BUILD_MEMO.values():
-        for dep in build[1]:
-            try:
-                dep.unpersist()
-            except Exception:
-                pass  # dead session -- nothing to release
-    _SEMANTIC_BUILD_MEMO.clear()
+    yield out, parts
+    served.add(consumer)
+    if served >= _SEMANTIC_CHAIN_QUERIES:
+        fixture_memo_drop(_SEMANTIC_SLOT)
 
 
 def _semantic_recursive_build_uncached(
@@ -3270,10 +3246,10 @@ _SEMANTIC_PAIR_CTES = """kept AS (
     "(residual routed to exact dedup).",
 )
 def dedup_semantic_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, deps, _ = _semantic_recursive_build(
-        spark, sf_dir, consumer="recursive"
-    )
-    return _eager(spark, out, deps=deps)
+    with _semantic_recursive_build(
+        spark, sf_dir, "dedup_semantic_recursive"
+    ) as (out, _):
+        return _eager(spark, out)
 
 
 # The residual relation (members of sub-cells that exceeded the
@@ -3409,31 +3385,31 @@ def _minlabel_closure_sql(rounds: int) -> str:
     "family is dedup_semantic_clustered (uncapped-join contract).",
 )
 def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, deps, parts = _semantic_recursive_build(
-        spark, sf_dir, consumer="survivors"
-    )
-    pair_edges = out.where(F.col("kind") != "capped_subcell").select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    edges = pair_edges
-    if parts is not None:
-        residual = parts["subassigned"].join(
-            F.broadcast(parts["capped_sub"].select("blk")), "blk", "semi"
+    with _semantic_recursive_build(
+        spark, sf_dir, "dedup_semantic_survivors"
+    ) as (out, parts):
+        pair_edges = out.where(F.col("kind") != "capped_subcell").select(
+            F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         )
-        wk = Window.partitionBy("blk", "emb")
-        clone_edges = (
-            residual.withColumn("keeper", F.min("vec_id").over(wk))
-            .where(F.col("vec_id") != F.col("keeper"))
-            .select(
-                F.col("vec_id").alias("doc_a"),
-                F.col("keeper").alias("doc_b"),
+        edges = pair_edges
+        if parts is not None:
+            residual = parts["subassigned"].join(
+                F.broadcast(parts["capped_sub"].select("blk")), "blk", "semi"
             )
-        )
-        edges = edges.unionByName(clone_edges)
-    # Candidate edges are pair-scale small (collect-bounded by the
-    # stage-1/2 caps; r11: the distributed label-propagation loop spent
-    # 2.8-5.2 s of fixed job latency on this 540-edge graph).
-    labels = _components(edges, deps)
+            wk = Window.partitionBy("blk", "emb")
+            clone_edges = (
+                residual.withColumn("keeper", F.min("vec_id").over(wk))
+                .where(F.col("vec_id") != F.col("keeper"))
+                .select(
+                    F.col("vec_id").alias("doc_a"),
+                    F.col("keeper").alias("doc_b"),
+                )
+            )
+            edges = edges.unionByName(clone_edges)
+        # Candidate edges are pair-scale small (collect-bounded by the
+        # stage-1/2 caps; r11: the distributed label-propagation loop spent
+        # 2.8-5.2 s of fixed job latency on this 540-edge graph).
+        labels = _components(edges, [])
     corpus = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("bigint").alias("vec_id")
     )
@@ -3478,31 +3454,27 @@ _RESIDUAL_SCHEMA = (
     "_semantic_recursive_build, so the two relations cannot drift.",
 )
 def dedup_semantic_residual_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out, deps, parts = _semantic_recursive_build(
-        spark, sf_dir, consumer="residual_exact"
-    )
-    # One explicit schema for every corpus shape (empty, no-hot-cells,
-    # full): aggregate nullability would otherwise differ between the
-    # computed and short-circuit paths.
-    if parts is None:
-        for d in deps:
-            d.unpersist()
-        return spark.createDataFrame([], _RESIDUAL_SCHEMA)
-    residual = parts["subassigned"].join(
-        F.broadcast(parts["capped_sub"].select("blk")), "blk", "semi"
-    )
-    groups = residual.groupBy("blk", "emb").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    report = groups.groupBy("blk").agg(
-        F.sum("n").alias("n_members"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        (F.sum("n") - F.count(F.lit(1))).alias("n_dupes"),
-        F.max("n").alias("max_clone_group"),
-    )
-    return spark.createDataFrame(
-        _collect_then_release(report, deps), _RESIDUAL_SCHEMA
-    )
+    with _semantic_recursive_build(
+        spark, sf_dir, "dedup_semantic_residual_exact"
+    ) as (_, parts):
+        # One explicit schema for every corpus shape (empty, no-hot-cells,
+        # full): aggregate nullability would otherwise differ between the
+        # computed and short-circuit paths.
+        if parts is None:
+            return spark.createDataFrame([], _RESIDUAL_SCHEMA)
+        residual = parts["subassigned"].join(
+            F.broadcast(parts["capped_sub"].select("blk")), "blk", "semi"
+        )
+        groups = residual.groupBy("blk", "emb").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        report = groups.groupBy("blk").agg(
+            F.sum("n").alias("n_members"),
+            F.count(F.lit(1)).alias("n_distinct"),
+            (F.sum("n") - F.count(F.lit(1))).alias("n_dupes"),
+            F.max("n").alias("max_clone_group"),
+        )
+        return spark.createDataFrame(report.collect(), _RESIDUAL_SCHEMA)
 
 
 @query(
@@ -7555,24 +7527,18 @@ def stream_compaction_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Targeted user erasure via dynamic partition overwrite ---------------------
 
-# One-entry memo for the erasure query's PRISTINE partitioned events
-# table (VERDICT r9 item 5): the query must mutate a hive layout, and
-# rebuilding it was a full-table Spark write per invocation.  The
-# pristine write now happens once per (session, fixture) -- keyed on
-# the shared fixture_cache_key recipe, the mandated single
-# invalidation definition -- and each invocation works on a HARDLINK
-# clone (metadata-only, no data rewrite; the dynamic overwrite writes
-# new files and unlinks old ones, never modifies bytes in place, so
-# the pristine inodes are never touched).  A None fixture key (un-
-# stat-able dir) is uncacheable: write fresh, don't memoize.
-_ERASURE_FIXTURE_MEMO: dict = {}
-
-
+# The erasure query's PRISTINE partitioned events table (VERDICT r9
+# item 5): the query must mutate a hive layout, and rebuilding it was a
+# full-table Spark write per invocation.  The pristine write now
+# happens once per (session, fixture) -- one fixture_memo slot keyed
+# on the events' content, whose release deletes the old table -- and
+# each invocation works on a HARDLINK clone (metadata-only, no data
+# rewrite; the dynamic overwrite writes new files and unlinks old
+# ones, never modifies bytes in place, so the pristine inodes are
+# never touched).
 def _erasure_pristine_table(spark: SparkSession, sf_dir: str) -> str:
-    from ..sources.readers import fixture_cache_key
-
-    def write_pristine(dest_root: str) -> str:
-        tbl = f"{dest_root}/events_by_day"
+    def write_pristine() -> str:
+        tbl = f"{tempfile.mkdtemp(prefix='_gate_erasure_src_')}/events_by_day"
         load_table(spark, sf_dir, "events").select(
             "user_id",
             "ts",
@@ -7590,19 +7556,16 @@ def _erasure_pristine_table(spark: SparkSession, sf_dir: str) -> str:
         ).write.partitionBy("epoch_day").parquet(tbl)
         return tbl
 
-    key = fixture_cache_key(spark, sf_dir, "events")
-    if key is None:
-        root = tempfile.mkdtemp(prefix="_gate_erasure_src_")
-        return write_pristine(root), False
-    hit = _ERASURE_FIXTURE_MEMO.get(key)
-    if hit is None:
-        for old in _ERASURE_FIXTURE_MEMO.values():
-            shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-        _ERASURE_FIXTURE_MEMO.clear()
-        root = tempfile.mkdtemp(prefix="_gate_erasure_src_")
-        hit = write_pristine(root)
-        _ERASURE_FIXTURE_MEMO[key] = hit
-    return hit, True
+    return fixture_memo(
+        spark,
+        sf_dir,
+        ("events",),
+        "erasure_pristine",
+        write_pristine,
+        release=lambda tbl: shutil.rmtree(
+            os.path.dirname(tbl), ignore_errors=True
+        ),
+    )
 
 
 def _hardlink_clone(src: str, dst: str) -> None:
@@ -7672,10 +7635,7 @@ def pipe_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Pristine table written once per (session, fixture); each
         # invocation mutates a hardlink CLONE (VERDICT r9 item 5 --
         # no full-table rewrite per gate run).
-        pristine, cached = _erasure_pristine_table(spark, sf_dir)
-        _hardlink_clone(pristine, tbl)
-        if not cached:
-            shutil.rmtree(os.path.dirname(pristine), ignore_errors=True)
+        _hardlink_clone(_erasure_pristine_table(spark, sf_dir), tbl)
 
         def partition_sigs() -> dict[str, tuple]:
             def sig(d: str, f: str) -> tuple:

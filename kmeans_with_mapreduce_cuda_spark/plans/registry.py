@@ -42,9 +42,9 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 #: Callbacks invoked with the query NAME at the start of every registered
-#: query invocation.  Session-scoped memos (the SemDeDup build cache)
-#: register here to bound their lifetime by "queries since last use"
-#: instead of only by key change / last-consumer -- a partial sweep that
+#: query invocation.  A fixture_memo slot (the SemDeDup build) registers
+#: here to bound its lifetime by "queries since last use", dropping the
+#: slot, instead of only by key change / last-consumer -- a partial sweep that
 #: runs one chain consumer then moves on must not carry corpus-scale
 #: persisted intermediates through the rest of the session (r10 advice).
 RUN_HOOKS: list[Callable[[str], None]] = []

@@ -5275,65 +5275,57 @@ def rel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Bucketed (pre-shuffled) co-located join -----------------------------------
 
-# One-entry memo for the bucketed catalog tables (the erasure-fixture
-# recipe): the bucketing write IS the point of the query -- paying the
-# join shuffle once at write time -- but paying it once per SESSION,
-# not once per invocation, is exactly how a production estate uses it.
-# Keyed on the shared fixture_cache_key (applicationId + fixture file
-# signature), so a new session (fresh in-memory catalog) or a
-# regenerated fixture rewrites; a None key (un-stat-able fixture) is
-# uncacheable and rewrites every time.
-_BUCKETED_JOIN_MEMO: dict = {}
-
-
+# The bucketing write IS the point of the query -- paying the join
+# shuffle once at write time -- but paying it once per SESSION, not
+# once per invocation, is exactly how a production estate uses it.
+# The table names live in one fixture_memo slot keyed on BOTH source
+# fixtures (r10 review: a lineitem-only key would serve stale bucketed
+# orders after an in-place orders.parquet rewrite), so a new session
+# (fresh in-memory catalog) or a regenerated fixture rewrites.
 def _bucketed_join_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import hashlib
 
-    from ..sources.readers import fixture_cache_key
-    from ..sources.writers import write_bucketed_table
+    from ..sources.readers import fixture_memo
 
     sfx = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     t_orders, t_lineitem = f"kmrc_bj_orders_{sfx}", f"kmrc_bj_lineitem_{sfx}"
-    # BOTH source signatures (r10 review): the tables derive from two
-    # fixtures, and a lineitem-only key would serve stale bucketed
-    # orders after an in-place orders.parquet rewrite.
-    k_o = fixture_cache_key(spark, sf_dir, "orders")
-    k_l = fixture_cache_key(spark, sf_dir, "lineitem")
-    key = None if k_o is None or k_l is None else (k_o, k_l)
-    if key is not None and _BUCKETED_JOIN_MEMO.get(key) == (t_orders, t_lineitem):
-        return t_orders, t_lineitem
-    # The warehouse DIRECTORY outlives the in-memory catalog: a table
-    # location left by a previous session makes saveAsTable fail with
-    # LOCATION_ALREADY_EXISTS even though the catalog has no entry --
-    # drop both the entry and any stale location before writing.
-    import os
-    import shutil
-    from urllib.parse import urlparse
 
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for t in (t_orders, t_lineitem):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    write_bucketed_table(
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
-        ),
-        t_orders,
-        "o_orderkey",
-        num_buckets=8,
+    def write() -> tuple[str, str]:
+        # The warehouse DIRECTORY outlives the in-memory catalog: a
+        # table location left by a previous session makes saveAsTable
+        # fail with LOCATION_ALREADY_EXISTS even though the catalog has
+        # no entry -- drop both the entry and any stale location first.
+        import os
+        import shutil
+        from urllib.parse import urlparse
+
+        from ..sources.writers import write_bucketed_table
+
+        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+        for t in (t_orders, t_lineitem):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
+        write_bucketed_table(
+            load_table(spark, sf_dir, "orders").select(
+                "o_orderkey", "o_orderpriority"
+            ),
+            t_orders,
+            "o_orderkey",
+            num_buckets=8,
+        )
+        write_bucketed_table(
+            load_table(spark, sf_dir, "lineitem").select(
+                "l_orderkey", "l_quantity", "l_extendedprice"
+            ),
+            t_lineitem,
+            "l_orderkey",
+            num_buckets=8,
+        )
+        return t_orders, t_lineitem
+
+    return fixture_memo(
+        spark, sf_dir, ("orders", "lineitem"), "bucketed_join", write
     )
-    write_bucketed_table(
-        load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_quantity", "l_extendedprice"
-        ),
-        t_lineitem,
-        "l_orderkey",
-        num_buckets=8,
-    )
-    if key is not None:
-        _BUCKETED_JOIN_MEMO.clear()
-        _BUCKETED_JOIN_MEMO[key] = (t_orders, t_lineitem)
-    return t_orders, t_lineitem
 
 
 @query(

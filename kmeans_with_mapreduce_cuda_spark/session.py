@@ -19,7 +19,6 @@ MB = 1024 * 1024
 def get_spark(
     app_name: str = "kmeans-mapreduce-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
@@ -32,11 +31,10 @@ def get_spark(
     # "*" (all cores) is a valid local[] spec the int() path rejected
     # (code-review r10); resolve it for shuffle sizing
     n_cores = (os.cpu_count() or 8) if cpus == "*" else int(cpus)
-    shuffle = str(shuffle_partitions or max(n_cores, 8))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", str(max(n_cores, 8)))
         # Pinned, not assumed: Spark 4 defaults ANSI on, but the exact
         # integer-cents aggregates (plans/relational.py pos_cents) rely
         # on overflow being LOUD -- with ANSI off (Spark 3.x, or a user

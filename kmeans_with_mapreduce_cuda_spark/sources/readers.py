@@ -12,6 +12,9 @@ when a strict first-N is requested on a small file.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Hashable, Iterable
+from typing import Any, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -31,23 +34,15 @@ TABLES = (
 )
 
 
-#: (applicationId, sf_dir, name, file mtime_ns) -> base scan DataFrame.
-#: DataFrames are immutable lazy plans, so sharing the base scan across
-#: queries is safe; the mtime key invalidates on fixture regeneration,
-#: and the applicationId key drops entries when the session changes.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def fixture_cache_key(
     spark: SparkSession, sf_dir: str, name: str
 ) -> tuple | None:
     """THE session+fixture invalidation key: (applicationId, sf_dir,
-    name, file mtime_ns), or None when the file can't be stat'ed.
-    Every in-process memo over fixture content must key on this (the
-    fixtures regenerate between rounds, and a session can span a
-    regeneration) -- used by _TABLE_CACHE here and the seed-centroid
-    memo in plans/kmeans_queries.py.  Single definition so the recipe
-    can't drift between call sites."""
+    name, file content signature), or None when the file can't be
+    stat'ed.  The fixtures regenerate between rounds and a session can
+    span a regeneration, so every in-process memo over fixture content
+    keys on this -- through its one caller, ``fixture_memo``, so the
+    recipe can't drift between call sites."""
     import os
 
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -56,6 +51,61 @@ def fixture_cache_key(
     except OSError:
         return None
     return (spark.sparkContext.applicationId, sf_dir, name, sig)
+
+
+class _Held(NamedTuple):
+    app: str
+    key: tuple | None  # None: un-stat-able input, never served
+    value: Any
+    release: Callable[[Any], None] | None
+
+
+#: slot -> the one value memoized there.  Owned by fixture_memo and
+#: fixture_memo_drop; nothing else writes it.
+_FIXTURE_MEMO: dict[Hashable, _Held] = {}
+
+
+def fixture_memo(
+    spark: SparkSession,
+    sf_dir: str,
+    tables: Iterable[str],
+    slot: Hashable,
+    build: Callable[[], Any],
+    release: Callable[[Any], None] | None = None,
+) -> Any:
+    """The session's one memo over fixture content: the value ``build()``
+    returns for the current content of ``tables`` in ``sf_dir``, held in
+    ``slot`` (one value per slot).
+
+    The key is every table's ``fixture_cache_key``.  While the slot
+    holds that key its value is returned without calling ``build``.
+    Otherwise the slot's old value goes to its ``release``, and the new
+    one is built, stored and returned.  Every insert also releases and
+    drops the entries of other sessions (applicationIds): a
+    stop/recreate cycle would otherwise pin dead plans, and persisted
+    data, for the process lifetime.  When a table can't be stat'ed
+    (absent file, non-local URI) the value is built on every call and
+    never served; it stays in the slot only until the slot's next call
+    or ``fixture_memo_drop`` releases it, so callers need no
+    uncached branch and never own the value."""
+    app = spark.sparkContext.applicationId
+    keys = tuple(fixture_cache_key(spark, sf_dir, t) for t in tables)
+    key = None if None in keys else keys
+    held = _FIXTURE_MEMO.get(slot)
+    if key is not None and held is not None and held.key == key:
+        return held.value
+    for s in [s for s, h in _FIXTURE_MEMO.items() if s == slot or h.app != app]:
+        fixture_memo_drop(s)
+    value = build()
+    _FIXTURE_MEMO[slot] = _Held(app, key, value, release)
+    return value
+
+
+def fixture_memo_drop(slot: Hashable) -> None:
+    """Empty ``slot`` and release its value; a no-op on an empty slot."""
+    held = _FIXTURE_MEMO.pop(slot, None)
+    if held is not None and held.release is not None:
+        held.release(held.value)
 
 
 def _fixture_sig(path: str) -> tuple:
@@ -99,26 +149,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     rejects; read nanos as long (legacy conf) and rebuild a proper
     timestamp column at microsecond precision.
 
-    The base DataFrame is memoized per (session, file mtime): the
+    The base DataFrame is memoized per (session, file content): the
     driver's gate runs ~90 queries against the same immutable fixture
     dir in one session, and re-running file listing + footer/schema
     resolution per query is ~0.1-0.2 s of pure wall-clock each.
     """
-    key = fixture_cache_key(spark, sf_dir, name)
-    if key is not None and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    df = _load_table_uncached(spark, sf_dir, name)
-    if key is not None:
-        # evict entries from other sessions on insert: a stop/recreate
-        # cycle would otherwise pin one dead plan (holding a stopped
-        # session's gateway) per (table, old applicationId) forever
-        # (code-review r10); superseded-mtime entries of the CURRENT
-        # session die with it and are bounded by regeneration count
-        app = key[0]
-        for k in [k for k in _TABLE_CACHE if k[0] != app]:
-            del _TABLE_CACHE[k]
-        _TABLE_CACHE[key] = df
-    return df
+    return fixture_memo(
+        spark,
+        sf_dir,
+        (name,),
+        ("table", sf_dir, name),
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
 def adapt_events_ts(df: DataFrame) -> DataFrame:

@@ -59,7 +59,6 @@ def write_bucketed_table(
     table: str,
     key: str,
     num_buckets: int = 8,
-    sorted_by_key: bool = True,
 ) -> None:
     """Bucketed (hash-clustered) parquet table: rows land in
     ``hash(key) % num_buckets`` files per write task, registered in the
@@ -73,10 +72,7 @@ def write_bucketed_table(
     # one file per bucket: without this, each write task emits its own
     # set of bucket files and the bucket-side sort degrades to per-file
     w = df.repartition(num_buckets, F.col(key)).write.mode("overwrite")
-    w = w.bucketBy(num_buckets, key)
-    if sorted_by_key:
-        w = w.sortBy(key)
-    w.format("parquet").saveAsTable(table)
+    w.bucketBy(num_buckets, key).sortBy(key).format("parquet").saveAsTable(table)
 
 
 def write_range_clustered(

@@ -113,9 +113,13 @@ def test_rel_bucketed_join_registry_query_plan_and_memo(spark):
     a SortMergeJoin of co-located bucketed scans, with no
     BroadcastExchange anywhere (the merge hint pins it).  The bucket
     write is memoized per (session, fixture)."""
-    from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY, relational
+    from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
+    from kmeans_with_mapreduce_cuda_spark.sources.readers import (
+        _FIXTURE_MEMO,
+        fixture_memo_drop,
+    )
 
-    relational._BUCKETED_JOIN_MEMO.clear()
+    fixture_memo_drop("bucketed_join")
     df = REGISTRY["rel_bucketed_join"].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     join_part = plan.split("HashAggregate")[-1]  # below the partial agg
@@ -124,12 +128,14 @@ def test_rel_bucketed_join_registry_query_plan_and_memo(spark):
     assert "SortMergeJoin" in join_part, plan
     assert "BroadcastExchange" not in plan, plan
     assert join_part.count("Bucketed: true") == 2, plan
-    assert len(relational._BUCKETED_JOIN_MEMO) == 1
-    tables = next(iter(relational._BUCKETED_JOIN_MEMO.values()))
+    held = _FIXTURE_MEMO["bucketed_join"]
+    assert held.key is not None  # servable, not an un-stat-able build
+    tables = held.value
     # memo hit: second invocation reuses the same catalog tables
     # without clearing/rewriting them
     df2 = REGISTRY["rel_bucketed_join"].fn(spark, SF_DIR)
-    assert next(iter(relational._BUCKETED_JOIN_MEMO.values())) == tables
+    assert _FIXTURE_MEMO["bucketed_join"].value == tables
+    assert _FIXTURE_MEMO["bucketed_join"] is held  # served, not rebuilt
     assert {tuple(r) for r in df2.collect()} == {tuple(r) for r in df.collect()}
 
 

@@ -1,14 +1,17 @@
 """Session-scoped memo discipline (r10): the erasure fixture memo,
-the SemDeDup build memo's idle-TTL release, and the tree-walking
+the SemDeDup build's idle-TTL release, and the tree-walking
 fixture_cache_key signature."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY, pipeline
-from kmeans_with_mapreduce_cuda_spark.sources.readers import fixture_cache_key
+from kmeans_with_mapreduce_cuda_spark.sources.readers import (
+    _FIXTURE_MEMO,
+    fixture_cache_key,
+    fixture_memo_drop,
+)
 
 from conftest import SF_DIR
 
@@ -29,16 +32,15 @@ def test_erasure_pristine_table_memoized_across_invocations(spark):
     """Second pipe_user_erasure in one session reuses the pristine
     partitioned write (VERDICT r9 item 5): the memo dir's files are
     byte-untouched and the results agree."""
-    for old in pipeline._ERASURE_FIXTURE_MEMO.values():
-        shutil.rmtree(os.path.dirname(old), ignore_errors=True)
-    pipeline._ERASURE_FIXTURE_MEMO.clear()
+    fixture_memo_drop("erasure_pristine")
 
     fn = REGISTRY["pipe_user_erasure"].fn
     first = {
         tuple(r) for r in fn(spark, SF_DIR).collect()
     }
-    assert len(pipeline._ERASURE_FIXTURE_MEMO) == 1
-    pristine = next(iter(pipeline._ERASURE_FIXTURE_MEMO.values()))
+    held = _FIXTURE_MEMO["erasure_pristine"]
+    assert held.key is not None  # servable, not an un-stat-able build
+    pristine = held.value
     sig_before = _tree_sig(pristine)
     assert sig_before  # the pristine table really holds files
 
@@ -46,7 +48,7 @@ def test_erasure_pristine_table_memoized_across_invocations(spark):
     assert second == first
     # no rewrite happened: every pristine file identical by mtime+size
     assert _tree_sig(pristine) == sig_before
-    assert len(pipeline._ERASURE_FIXTURE_MEMO) == 1
+    assert _FIXTURE_MEMO["erasure_pristine"] is held
 
 
 def test_semantic_build_memo_released_after_idle_ttl(spark):
@@ -54,25 +56,53 @@ def test_semantic_build_memo_released_after_idle_ttl(spark):
     _SEMANTIC_MEMO_TTL non-chain queries (r10 advice): a partial sweep
     that runs one consumer then moves on releases the corpus-scale
     persisted intermediates."""
-    pipeline._release_semantic_build_memo()
+    fixture_memo_drop(pipeline._SEMANTIC_SLOT)
     REGISTRY["dedup_semantic_recursive"].fn(spark, SF_DIR).collect()
-    assert pipeline._SEMANTIC_BUILD_MEMO, "consumer should populate memo"
+    assert pipeline._SEMANTIC_SLOT in _FIXTURE_MEMO, "consumer should populate memo"
 
     cheap = REGISTRY["o03_distance_expr"].fn
     for i in range(pipeline._SEMANTIC_MEMO_TTL):
-        assert pipeline._SEMANTIC_BUILD_MEMO, f"released too early (i={i})"
+        assert pipeline._SEMANTIC_SLOT in _FIXTURE_MEMO, f"released too early (i={i})"
         cheap(spark, SF_DIR)
-    assert not pipeline._SEMANTIC_BUILD_MEMO, "idle TTL should release"
+    assert pipeline._SEMANTIC_SLOT not in _FIXTURE_MEMO, "idle TTL should release"
 
 
 def test_semantic_memo_tick_chain_query_resets_idle_age(spark):
-    pipeline._release_semantic_build_memo()
+    fixture_memo_drop(pipeline._SEMANTIC_SLOT)
     REGISTRY["dedup_semantic_recursive"].fn(spark, SF_DIR).collect()
     pipeline._semantic_memo_idle = pipeline._SEMANTIC_MEMO_TTL - 1
     pipeline._semantic_memo_tick("dedup_semantic_survivors")
     assert pipeline._semantic_memo_idle == 0
-    assert pipeline._SEMANTIC_BUILD_MEMO
-    pipeline._release_semantic_build_memo()
+    assert pipeline._SEMANTIC_SLOT in _FIXTURE_MEMO
+    fixture_memo_drop(pipeline._SEMANTIC_SLOT)
+
+
+def test_semantic_chain_builds_once_then_releases(spark, monkeypatch):
+    """The three chain queries share ONE stage-1+2 build across the
+    REGISTRY spacing the gate produces (recursive, two other queries,
+    residual_exact, survivors), and the build is released once the
+    last of them has read it."""
+    fixture_memo_drop(pipeline._SEMANTIC_SLOT)
+    builds = []
+    uncached = pipeline._semantic_recursive_build_uncached
+
+    def counting(*args, **kwargs):
+        builds.append(args)
+        return uncached(*args, **kwargs)
+
+    monkeypatch.setattr(
+        pipeline, "_semantic_recursive_build_uncached", counting
+    )
+    for q in (
+        "dedup_semantic_recursive",
+        "o03_distance_expr",
+        "o01_scan_limit",
+        "dedup_semantic_residual_exact",
+        "dedup_semantic_survivors",
+    ):
+        REGISTRY[q].fn(spark, SF_DIR).collect()
+    assert len(builds) == 1
+    assert pipeline._SEMANTIC_SLOT not in _FIXTURE_MEMO
 
 
 def test_fixture_cache_key_sees_nested_in_place_rewrite(spark, tmp_path):

@@ -427,8 +427,9 @@ def test_semantic_routing_chain_catches_injected_clone_pile(spark):
     )
     with tempfile.TemporaryDirectory() as d:
         df.repartition(4).write.parquet(f"{d}/embeddings.parquet")
-        out, deps, parts = _semantic_recursive_build(spark, d)
-        try:
+        with _semantic_recursive_build(
+            spark, d, "dedup_semantic_recursive"
+        ) as (out, parts):
             kinds = {
                 r["kind"]: r["cnt"]
                 for r in out.groupBy("kind")
@@ -440,9 +441,6 @@ def test_semantic_routing_chain_catches_injected_clone_pile(spark):
                 parts["subassigned"].select("vec_id").distinct().count()
             )
             capped = parts["capped_sub"].collect()
-        finally:
-            for dep in deps:
-                dep.unpersist()
         report = {
             r["blk"]: r
             for r in dedup_semantic_residual_exact(spark, d).collect()

@@ -669,10 +669,10 @@ def test_semantic_recursive_subassign_is_literal_projection(spark):
     per-vector argmin window would) and no cartesian anywhere; the two
     cap exclusions (top cells, sub-cells) are broadcast anti-joins."""
     from kmeans_with_mapreduce_cuda_spark.plans.pipeline import (
-        _semantic_recursive_build,
+        _semantic_recursive_build_uncached,
     )
 
-    out, deps, _ = _semantic_recursive_build(spark, SF_DIR)
+    out, deps, _ = _semantic_recursive_build_uncached(spark, SF_DIR)
     try:
         plan = plan_of(out)
         assert "Window" not in plan, plan
