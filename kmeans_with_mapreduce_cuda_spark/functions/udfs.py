@@ -10,8 +10,6 @@ suite asserts each UDF matches its pure-expression twin exactly.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
@@ -46,20 +44,6 @@ def token_count_udf(text: pd.Series) -> pd.Series:
         text.str.strip(" ").str.lower().str.split(r"\s+", regex=True).str.len()
     )
     return counts.astype("Int32")
-
-
-def quality_features_udf(text: Column | str) -> Column:
-    """Struct of UDF-computed quality features (demo composition).
-
-    Two separate pandas UDFs means the text column crosses the Arrow
-    boundary twice -- fine for a surface demo; a production version
-    would compute both in ONE struct-returning UDF to halve the
-    Python exchange."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.struct(
-        punct_ratio_udf(c).alias("punct_ratio"),
-        token_count_udf(c).alias("n_tokens"),
-    )
 
 
 @pandas_udf("double")

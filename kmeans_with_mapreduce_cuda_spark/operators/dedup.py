@@ -66,15 +66,6 @@ def exact_dedup_keep_first(
     ).drop("_rn")
 
 
-def doc_shingles(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """Distinct n-gram word shingles per document -> (id, shingles array)."""
-    return df.select(
-        id_col, F.array_distinct(word_shingles(text_col, n)).alias("shingles")
-    ).where(F.size("shingles") > 0)
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",

@@ -10,8 +10,9 @@ Reference pipeline per iteration (kmeans_mapreduce_core.cu:237-259):
 
 Each job has one implementation, shared by the 2-D and n-D names: one
 argmin (_argmin_sql), one assignment (_assign), one single-statement
-step (_step_sql), one driver loop (_lloyd) and one Forgy seeding
-(_forgy).
+step (_step_sql), one driver loop (_iterate) and one Forgy seeding
+(_forgy).  lloyd_2d has a second step for integer points (_GridStep)
+that follows the SQL step's trajectory bit for bit.
 
 Physical shape (why this scales to 100 TB):
 - Centroids are k literal values baked into a projection -- the "broadcast"
@@ -21,8 +22,35 @@ Physical shape (why this scales to 100 TB):
   does map-side partial aggregation (Spark's analog of the reference's
   shared-memory block reduction, :108-139) so the shuffle carries
   k * num_partitions rows, not N.
-- Per iteration exactly k rows cross to the driver -- same boundary as the
-  reference's per-iteration cluster_info D2H copy (:250-251).
+- Per iteration of the SQL step exactly k rows cross to the driver --
+  same boundary as the reference's per-iteration cluster_info D2H copy
+  (:250-251).
+
+Integer points (lloyd_2d over integral x/y with no NULLs and
+max|coord| * n < 2**53; Birch data is integer) take the grid step:
+Kanungo et al.'s filtering (TPAMI 2002) on a fixed 128 x 128 grid over
+the bounding box.
+- Prep, once per call, 2 jobs: a guard aggregate (count, NULLs,
+  bounding box) and a GROUP BY cell aggregate (sums, count and point
+  bounding box per cell), at most 16384 rows to the driver.
+- Selection, per iteration on the driver: a cell is owned when one
+  centroid beats every other at all 4 corners of the cell's point
+  bounding box by a 2**-40 relative margin.  d_i - d_j is affine in
+  the point, so the corners decide the whole box, and the margin
+  covers double rounding on both sides.  Owned cells add their sums
+  wholesale.  The points of the other, ambiguous cells are fetched
+  once (one toArrow job over a ``cell IN (...)`` filter, together with
+  the cells a boundary may reach next) and assigned in numpy with the
+  SQL step's operation order and first-minimum ties.
+- Exactness: below 2**53 every partial sum of integers is exact in a
+  double, so Spark's double-accumulated avg(long) equals
+  float(int_sum) / n.  Same assignments, same means: the same
+  trajectory as the SQL step.
+- Bound: the driver holds at most HELD_POINTS_MAX points.  A fetch
+  past it hands the current centroids and the remaining iterations to
+  the SQL step, which continues the same trajectory.
+Per call that is 2 jobs plus at most one fetch job per iteration, and
+the cell rows plus the fetched points to the driver.
 
 Semantics choices (SURVEY.md §2.1 fine print): float means (the documented
 algorithm, README.md:43-61, not the racy block-partial reduce), ties to the
@@ -38,8 +66,10 @@ from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 from functools import partial
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..functions.hashing import stable_sample_key
 from ..session import pinned_confs
@@ -270,27 +300,43 @@ def _step_sql_nd(
     )
 
 
-def _lloyd(
-    points: DataFrame,
-    init: CentroidsND,
-    max_iter: int,
-    tol: float,
-    step_sql: Callable[[str, list], str],
+def _null_coords(cols: Sequence[str]) -> ValueError:
+    return ValueError(
+        f"points have NULL values in column(s) {', '.join(cols)}; "
+        "drop or fill them before clustering"
+    )
+
+
+def _iterate(
+    init: CentroidsND, max_iter: int, tol: float, step: Callable[[list], dict]
 ) -> list[tuple[float, ...]]:
     """Lloyd's iterations with an actual convergence test (the reference's
     README documents one but the loop is a fixed 999 rounds,
     config.cuh:11 vs README.md:20-22 -- we expose both maxIter and tol).
 
-    ``points`` is cached by the caller (device-resident analog,
-    kmeans_mapreduce_core.cu:232-235); each iteration re-bakes the k new
-    centroid literals into the plan, so lineage stays one stage deep and
-    needs no checkpointing.  ``step_sql(view, centroids)`` renders one
-    iteration (_step_sql), whose rows are (cluster_id, coords..., n):
-    one job and k rows to the driver per iteration.  Empty clusters
-    keep their previous centroid.
+    ``step(centroids)`` maps each non-empty cluster id to its new
+    centroid; empty clusters keep their previous centroid.
     """
-    spark = points.sparkSession
     cents = [tuple(map(float, c)) for c in init]
+    for _ in range(max_iter):
+        got = step(cents)
+        new = [got.get(i, c) for i, c in enumerate(cents)]
+        shift = max(math.dist(n, c) for n, c in zip(new, cents))
+        cents = new
+        if shift <= tol:
+            break
+    return cents
+
+
+def _sql_step(
+    points: DataFrame, step_sql: Callable[[str, list], str], cols: Sequence[str]
+) -> Callable[[list], dict]:
+    """One Lloyd step as one Spark job: ``step_sql(view, centroids)``
+    renders the iteration (_step_sql), whose k rows (cluster_id,
+    coords..., n) are all that crosses to the driver.  A NULL
+    coordinate leaves its point without a nearest centroid, which shows
+    up as a NULL cluster_id row."""
+    spark = points.sparkSession
     # The view is deliberately NOT dropped afterwards: dropTempView on a
     # view over a cached DataFrame invalidates the cache's materialized
     # buffers even though the registration survives -- every subsequent
@@ -300,16 +346,237 @@ def _lloyd(
     # idempotent; the leaked catalog entry is metadata only.
     view = f"_lloyd_pts_{id(points)}"
     points.createOrReplaceTempView(view)
-    with iteration_confs(spark):
-        for _ in range(max_iter):
-            rows = spark.sql(step_sql(view, cents)).collect()
-            got = {int(r[0]): r[1:-1] for r in rows}
-            new = [got.get(i, c) for i, c in enumerate(cents)]
-            shift = max(math.dist(n, c) for n, c in zip(new, cents))
-            cents = new
-            if shift <= tol:
-                break
-    return cents
+
+    def step(cents: list) -> dict:
+        rows = spark.sql(step_sql(view, cents)).collect()
+        if any(r[0] is None for r in rows):
+            raise _null_coords(cols)
+        return {int(r[0]): r[1:-1] for r in rows}
+
+    return step
+
+
+def _lloyd(
+    points: DataFrame,
+    init: CentroidsND,
+    max_iter: int,
+    tol: float,
+    step_sql: Callable[[str, list], str],
+    cols: Sequence[str],
+) -> list[tuple[float, ...]]:
+    """Lloyd's loop (_iterate) with the SQL step (_sql_step) over the
+    point columns ``cols``: one job and k rows to the driver per
+    iteration.
+
+    ``points`` is cached by the caller (device-resident analog,
+    kmeans_mapreduce_core.cu:232-235); each iteration re-bakes the k new
+    centroid literals into the plan, so lineage stays one stage deep and
+    needs no checkpointing.
+    """
+    with iteration_confs(points.sparkSession):
+        return _iterate(init, max_iter, tol, _sql_step(points, step_sql, cols))
+
+
+# ---------------------------------------------------------------------------
+# Exact grid-filtered step for integer 2-D points (O12 fast path)
+# ---------------------------------------------------------------------------
+
+#: 2**GRID_BITS cells per axis over the bounding box.  On 1M
+#: Birch-shaped points (kmbench seeds 1-4, 10 iterations) 128 x 128 has
+#: 7.3-8.8k occupied cells, 4-6 fetch jobs, 47-63 % of the points held
+#: and ~0.25 s of driver numpy; 64 x 64 holds 74-80 % to save one or two
+#: fetches; 256 x 256 has 24-30k cells, up to 9 fetches and ~0.7 s of
+#: driver numpy.
+GRID_BITS = 7
+_GRID = 1 << GRID_BITS
+#: A cell is owned when its owner wins at every corner by more than this
+#: fraction of the competitor's largest corner distance.  A computed
+#: squared distance is within 2**-51 of the exact one, relatively, so
+#: 2**-40 covers the rounding at the corners and at every point inside
+#: with a factor of ~2**9 to spare.
+_OWN_MARGIN = 2.0**-40
+#: How far from a boundary a fetch reaches, in cell diagonals, once the
+#: first fetch (1 diagonal) is held.  Each fetch scans the whole cache
+#: (~0.1 s for 1M points), so fetching ahead of the moving boundaries
+#: pays.  On 1M Birch-shaped points, 10 iterations, seeds 1-10: 4 gives
+#: 3-6 fetch jobs and 39-66 % of the points held; 2 gives 4-9 jobs and
+#: up to 57 %; the 8 neighbours of each new ambiguous cell took a fetch
+#: every iteration.
+_REACH_CELLS = 4.0
+#: Most points the driver holds (x, y and cell: 24 bytes each, so
+#: 48 MB).  A fetch that would pass the bound hands the loop to the SQL
+#: step instead.
+HELD_POINTS_MAX = 1 << 21
+#: Integer sums below 2**53 are exact in a double, so Spark's
+#: double-accumulated avg(long) equals float(int_sum) / n.
+_EXACT = 1 << 53
+
+
+class _GridStep:
+    """One exact Lloyd step for integer 2-D points from per-cell
+    aggregates, plus the points of the cells it cannot decide.
+
+    ``cells`` maps ``cell``, ``sx``, ``sy``, ``n``, ``x0``, ``x1``,
+    ``y0``, ``y1`` to arrays: per occupied grid cell, its id, sums,
+    count and point bounding box.  ``rows`` is the points relation with
+    a ``cell`` column, from which ambiguous cells are fetched; ``diag``
+    is a cell's diagonal; ``fallback()`` makes the SQL step.
+    """
+
+    def __init__(
+        self,
+        rows: DataFrame,
+        cells: dict,
+        diag: float,
+        fallback: Callable[[], Callable],
+    ):
+        self._rows = rows
+        self._diag = diag
+        self._fallback = fallback
+        self._sql = None
+        self._ids = cells["cell"]
+        self._sx, self._sy, self._n = (
+            cells[c].astype(np.float64) for c in ("sx", "sy", "n")
+        )
+        # the 4 corners of each cell's point bounding box, shape (cells, 4)
+        x0, x1, y0, y1 = (
+            cells[c].astype(np.float64) for c in ("x0", "x1", "y0", "y1")
+        )
+        self._cx = np.stack([x0, x0, x1, x1], axis=1)
+        self._cy = np.stack([y0, y1, y0, y1], axis=1)
+        self._slot = np.full(_GRID * _GRID, -1, dtype=np.int64)
+        self._slot[self._ids] = np.arange(len(self._ids))
+        self._held = np.zeros(len(self._ids), dtype=bool)
+        self._hx = self._hy = np.empty(0)
+        self._hcell = np.empty(0, dtype=np.int64)
+
+    def __call__(self, cents: list) -> dict:
+        if self._sql is not None:
+            return self._sql(cents)
+        c = np.asarray(cents, dtype=np.float64)
+        dx = self._cx[:, :, None] - c[:, 0]
+        dy = self._cy[:, :, None] - c[:, 1]
+        d = dx * dx + dy * dy  # (cells, 4 corners, k)
+        owner = d[:, 0, :].argmin(axis=1)
+        d_own = np.take_along_axis(d, owner[:, None, None], axis=2)
+        beats = d - d_own > _OWN_MARGIN * d.max(axis=1, keepdims=True)
+        beats[np.arange(len(owner)), :, owner] = True
+        owned = beats.all(axis=(1, 2))
+        missing = ~owned & ~self._held
+        if missing.any() and not self._fetch(missing, self._near(d, owner)):
+            self._sql = self._fallback()
+            self._hx = self._hy = self._hcell = None
+            return self._sql(cents)
+        k = len(c)
+        o = owner[owned]
+        sx = np.bincount(o, self._sx[owned], k)
+        sy = np.bincount(o, self._sy[owned], k)
+        n = np.bincount(o, self._n[owned], k)
+        pick = ~owned[self._hcell]
+        lab = _nearest(self._hx[pick], self._hy[pick], c)
+        sx += np.bincount(lab, self._hx[pick], k)
+        sy += np.bincount(lab, self._hy[pick], k)
+        n += np.bincount(lab, minlength=k)
+        return {
+            i: (float(sx[i] / n[i]), float(sy[i] / n[i]))
+            for i in np.flatnonzero(n).tolist()
+        }
+
+    def _near(self, d, owner):
+        """Cells within ``reach`` of a boundary: where some competitor i
+        is less than ``reach`` farther than the owner o, as a lower bound
+        of |p - c_i| - |p - c_o| over the cell's corners.  ``reach`` is
+        one cell diagonal on the first fetch, _REACH_CELLS after."""
+        rows = np.arange(len(owner))
+        root = np.sqrt(d.max(axis=1))  # (cells, k)
+        gap = (d - d[rows, :, owner][:, :, None]).min(axis=1)
+        with np.errstate(invalid="ignore"):  # 0/0: a centroid on a 1-point cell
+            gap /= root + root[rows, owner][:, None]
+        gap[rows, owner] = np.inf
+        reach = self._diag * (_REACH_CELLS if self._held.any() else 1.0)
+        return (gap <= reach).any(axis=1)
+
+    def _fetch(self, missing, near) -> bool:
+        """Fetch the ambiguous cells not held yet, plus the ``near`` ones
+        while that fits under HELD_POINTS_MAX.  False when even the
+        ambiguous cells would pass the bound."""
+        room = HELD_POINTS_MAX - len(self._hcell)
+        want = (missing | near) & ~self._held
+        if self._n[want].sum() > room:
+            want = missing
+        need = int(self._n[want].sum())
+        if need > room:
+            return False
+        ids = ",".join(map(str, self._ids[want].tolist()))
+        got = self._rows.where(f"cell IN ({ids})").toArrow()
+        if got.num_rows != need:  # the input changed under the aggregate
+            return False
+        self._hx = np.concatenate([self._hx, got["x"].to_numpy().astype(np.float64)])
+        self._hy = np.concatenate([self._hy, got["y"].to_numpy().astype(np.float64)])
+        slots = self._slot[got["cell"].to_numpy()]
+        self._hcell = np.concatenate([self._hcell, slots])
+        self._held |= want
+        return True
+
+
+def _nearest(px, py, c):
+    """Nearest centroid per point with _dists_sql_2d's operation order
+    and _argmin_sql's first-minimum ties: bit for bit Spark's choice."""
+    best = np.full(len(px), np.inf)
+    lab = np.zeros(len(px), dtype=np.int64)
+    for i, (cx, cy) in enumerate(c):
+        dx = px - cx
+        dy = py - cy
+        d = dx * dx + dy * dy
+        np.putmask(lab, d < best, i)
+        np.minimum(best, d, out=best)
+    return lab
+
+
+def _grid_step(
+    points: DataFrame, x: str, y: str, fallback: Callable[[], Callable]
+) -> Callable[[list], dict] | None:
+    """The prep of the grid step: two jobs over ``points``.  None when
+    the input does not qualify (a coordinate bound times n reaches
+    2**53, so sums could round)."""
+    n, nulls, x0, x1, y0, y1 = points.selectExpr(
+        "count(1)",
+        f"count_if(`{x}` IS NULL OR `{y}` IS NULL)",
+        f"min(`{x}`)",
+        f"max(`{x}`)",
+        f"min(`{y}`)",
+        f"max(`{y}`)",
+    ).collect()[0]
+    if nulls:
+        raise _null_coords((x, y))
+    if n == 0:
+        return lambda cents: {}
+    if max(abs(x0), abs(x1), abs(y0), abs(y1)) * n >= _EXACT:
+        return None
+    wx, wy = (x1 - x0) // _GRID + 1, (y1 - y0) // _GRID + 1
+    rows = points.selectExpr(
+        f"CAST(`{x}` AS BIGINT) AS x",
+        f"CAST(`{y}` AS BIGINT) AS y",
+    ).selectExpr(
+        "x",
+        "y",
+        f"((x - ({x0}L)) DIV {wx}L) * {_GRID} + (y - ({y0}L)) DIV {wy}L AS cell",
+    )
+    cells = rows.groupBy("cell").agg(
+        *(
+            F.expr(e)
+            for e in (
+                "sum(x) AS sx", "sum(y) AS sy", "count(1) AS n",
+                "min(x) AS x0", "max(x) AS x1", "min(y) AS y0", "max(y) AS y1",
+            )
+        )
+    ).toArrow()
+    return _GridStep(
+        rows,
+        {c: cells[c].to_numpy() for c in cells.column_names},
+        math.hypot(wx, wy),
+        fallback,
+    )
 
 
 def lloyd_2d(
@@ -320,8 +587,22 @@ def lloyd_2d(
     x: str = "x",
     y: str = "y",
 ) -> list[tuple[float, float]]:
-    """2-D Lloyd loop over columns ``x``, ``y`` (see _lloyd)."""
-    return _lloyd(points, init, max_iter, tol, partial(_step_sql_2d, x=x, y=y))
+    """2-D Lloyd loop over columns ``x``, ``y`` (see _lloyd).
+
+    Integral ``x``/``y`` with ``max|coord| * n < 2**53`` take the exact
+    grid-filtered step (_GridStep) instead of the SQL step: same
+    trajectory bit for bit, a fraction of the per-point work.
+    """
+    step_sql = partial(_step_sql_2d, x=x, y=y)
+    types = {f.name: f.dataType for f in points.schema.fields}
+    if max_iter > 0 and all(isinstance(types.get(c), IntegralType) for c in (x, y)):
+        with iteration_confs(points.sparkSession):
+            step = _grid_step(
+                points, x, y, partial(_sql_step, points, step_sql, (x, y))
+            )
+            if step is not None:
+                return _iterate(init, max_iter, tol, step)
+    return _lloyd(points, init, max_iter, tol, step_sql, (x, y))
 
 
 def lloyd_nd(
@@ -333,7 +614,7 @@ def lloyd_nd(
 ) -> list[list[float]]:
     """n-D Lloyd loop over an array column (see _lloyd)."""
     step = partial(_step_sql_nd, dim=len(init[0]), features=features)
-    return [list(c) for c in _lloyd(points, init, max_iter, tol, step)]
+    return [list(c) for c in _lloyd(points, init, max_iter, tol, step, (features,))]
 
 
 def sse_2d(
