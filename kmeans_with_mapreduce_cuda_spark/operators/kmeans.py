@@ -39,9 +39,13 @@ the bounding box.
   the point, so the corners decide the whole box, and the margin
   covers double rounding on both sides.  Owned cells add their sums
   wholesale.  The points of the other, ambiguous cells are fetched
-  once (one toArrow job over a ``cell IN (...)`` filter, together with
-  the cells a boundary may reach next) and assigned in numpy with the
-  SQL step's operation order and first-minimum ties.
+  once and assigned in numpy with the SQL step's operation order and
+  first-minimum ties.
+- Fetch: one toArrow job whose filter tests each row's cell in a
+  literal bitmap.  It takes the ambiguous cells together with every
+  cell that a cell-level run of the remaining iterations (each cell
+  wholesale to the centroid nearest its mean) brings near a boundary,
+  so one fetch usually serves the whole loop.
 - Exactness: below 2**53 every partial sum of integers is exact in a
   double, so Spark's double-accumulated avg(long) equals
   float(int_sum) / n.  Same assignments, same means: the same
@@ -49,7 +53,8 @@ the bounding box.
 - Bound: the driver holds at most HELD_POINTS_MAX points.  A fetch
   past it hands the current centroids and the remaining iterations to
   the SQL step, which continues the same trajectory.
-Per call that is 2 jobs plus at most one fetch job per iteration, and
+Per call that is 2 jobs plus at most one fetch job per iteration (on
+kmbench's 1M Birch-shaped points, 10 iterations: 1 or 2 fetches), and
 the cell rows plus the fetched points to the driver.
 
 Semantics choices (SURVEY.md §2.1 fine print): float means (the documented
@@ -382,11 +387,11 @@ def _lloyd(
 # ---------------------------------------------------------------------------
 
 #: 2**GRID_BITS cells per axis over the bounding box.  On 1M
-#: Birch-shaped points (kmbench seeds 1-4, 10 iterations) 128 x 128 has
-#: 7.3-8.8k occupied cells, 4-6 fetch jobs, 47-63 % of the points held
-#: and ~0.25 s of driver numpy; 64 x 64 holds 74-80 % to save one or two
-#: fetches; 256 x 256 has 24-30k cells, up to 9 fetches and ~0.7 s of
-#: driver numpy.
+#: Birch-shaped points (kmbench seeds 1-8, 10 iterations, one fetch
+#: each) 128 x 128 has 7.3-8.8k occupied cells and holds 35-56 % of the
+#: points, with ~0.2 s of driver numpy; 64 x 64 holds 54-68 %; 256 x
+#: 256 holds 21-45 % but its 4x the cells cost ~0.3 s more driver numpy
+#: (lloyd_large op_p50_s 1.20 against 0.80 s).
 GRID_BITS = 7
 _GRID = 1 << GRID_BITS
 #: A cell is owned when its owner wins at every corner by more than this
@@ -395,16 +400,18 @@ _GRID = 1 << GRID_BITS
 #: 2**-40 covers the rounding at the corners and at every point inside
 #: with a factor of ~2**9 to spare.
 _OWN_MARGIN = 2.0**-40
-#: How far from a boundary a fetch reaches, in cell diagonals, once the
-#: first fetch (1 diagonal) is held.  Each fetch scans the whole cache
-#: (~0.1 s for 1M points), so fetching ahead of the moving boundaries
-#: pays.  On 1M Birch-shaped points, 10 iterations, seeds 1-10: 4 gives
-#: 3-6 fetch jobs and 39-66 % of the points held; 2 gives 4-9 jobs and
-#: up to 57 %; the 8 neighbours of each new ambiguous cell took a fetch
-#: every iteration.
-_REACH_CELLS = 4.0
-#: Most points the driver holds (x, y and cell: 24 bytes each, so
-#: 48 MB).  A fetch that would pass the bound hands the loop to the SQL
+#: How close a boundary may pass to a cell, in cell diagonals beyond the
+#: cell's own extent, for the look-ahead (_GridStep._ahead) to fetch it.
+#: Each fetch scans the whole cache, and the look-ahead guesses the
+#: boundaries of every remaining iteration, so one fetch usually serves
+#: the loop.  On 1M Birch-shaped points, 10 iterations, seeds 1-40: 1
+#: gives one fetch for 31 seeds (all of 1-10) and two for 9, with 33-60 %
+#: of the points held; 0.5 holds 37 % at the median but 14 seeds take 2
+#: or 3 fetches; 2 takes one fetch for 37 seeds and holds 57 % at the
+#: median.  Fetching only around the current boundaries took 3-6 fetches.
+_REACH_CELLS = 1.0
+#: Most points the driver holds (x and y as doubles: 16 bytes each, so
+#: 32 MB).  A fetch that would pass the bound hands the loop to the SQL
 #: step instead.
 HELD_POINTS_MAX = 1 << 21
 #: Integer sums below 2**53 are exact in a double, so Spark's
@@ -420,7 +427,8 @@ class _GridStep:
     ``y0``, ``y1`` to arrays: per occupied grid cell, its id, sums,
     count and point bounding box.  ``rows`` is the points relation with
     a ``cell`` column, from which ambiguous cells are fetched; ``diag``
-    is a cell's diagonal; ``fallback()`` makes the SQL step.
+    is a cell's diagonal; ``fallback()`` makes the SQL step;
+    ``max_iter`` and ``tol`` are the loop's, for the look-ahead.
     """
 
     def __init__(
@@ -429,10 +437,13 @@ class _GridStep:
         cells: dict,
         diag: float,
         fallback: Callable[[], Callable],
+        max_iter: int,
+        tol: float,
     ):
         self._rows = rows
-        self._diag = diag
         self._fallback = fallback
+        self._left = max_iter
+        self._tol = tol
         self._sql = None
         self._ids = cells["cell"]
         self._sx, self._sy, self._n = (
@@ -444,11 +455,22 @@ class _GridStep:
         )
         self._cx = np.stack([x0, x0, x1, x1], axis=1)
         self._cy = np.stack([y0, y1, y0, y1], axis=1)
+        # each cell's mean, and how close to it a boundary counts as near
+        # in the look-ahead: its farthest corner plus the reach
+        self._mx, self._my = self._sx / self._n, self._sy / self._n
+        self._reach = (
+            np.hypot(
+                np.maximum(self._mx - x0, x1 - self._mx),
+                np.maximum(self._my - y0, y1 - self._my),
+            )
+            + _REACH_CELLS * diag
+        )
         self._slot = np.full(_GRID * _GRID, -1, dtype=np.int64)
         self._slot[self._ids] = np.arange(len(self._ids))
         self._held = np.zeros(len(self._ids), dtype=bool)
+        # held points by cell: slot i's are the n[i] from _first[i] on
         self._hx = self._hy = np.empty(0)
-        self._hcell = np.empty(0, dtype=np.int64)
+        self._first = np.zeros(len(self._ids), dtype=np.int64)
 
     def __call__(self, cents: list) -> dict:
         if self._sql is not None:
@@ -463,60 +485,109 @@ class _GridStep:
         beats[np.arange(len(owner)), :, owner] = True
         owned = beats.all(axis=(1, 2))
         missing = ~owned & ~self._held
-        if missing.any() and not self._fetch(missing, self._near(d, owner)):
+        if missing.any() and not self._fetch(missing, self._ahead(c)):
             self._sql = self._fallback()
-            self._hx = self._hy = self._hcell = None
+            self._hx = self._hy = None
             return self._sql(cents)
+        self._left -= 1
         k = len(c)
         o = owner[owned]
         sx = np.bincount(o, self._sx[owned], k)
         sy = np.bincount(o, self._sy[owned], k)
         n = np.bincount(o, self._n[owned], k)
-        pick = ~owned[self._hcell]
-        lab = _nearest(self._hx[pick], self._hy[pick], c)
-        sx += np.bincount(lab, self._hx[pick], k)
-        sy += np.bincount(lab, self._hy[pick], k)
+        px, py = self._points(~owned)
+        lab = _nearest(px, py, c)
+        sx += np.bincount(lab, px, k)
+        sy += np.bincount(lab, py, k)
         n += np.bincount(lab, minlength=k)
         return {
             i: (float(sx[i] / n[i]), float(sy[i] / n[i]))
             for i in np.flatnonzero(n).tolist()
         }
 
-    def _near(self, d, owner):
-        """Cells within ``reach`` of a boundary: where some competitor i
-        is less than ``reach`` farther than the owner o, as a lower bound
-        of |p - c_i| - |p - c_o| over the cell's corners.  ``reach`` is
-        one cell diagonal on the first fetch, _REACH_CELLS after."""
-        rows = np.arange(len(owner))
-        root = np.sqrt(d.max(axis=1))  # (cells, k)
-        gap = (d - d[rows, :, owner][:, :, None]).min(axis=1)
-        with np.errstate(invalid="ignore"):  # 0/0: a centroid on a 1-point cell
-            gap /= root + root[rows, owner][:, None]
-        gap[rows, owner] = np.inf
-        reach = self._diag * (_REACH_CELLS if self._held.any() else 1.0)
-        return (gap <= reach).any(axis=1)
+    def _points(self, cells):
+        """x and y of the held points of the cells in mask ``cells``."""
+        size = self._n[cells].astype(np.int64)
+        end = np.cumsum(size)
+        at = np.arange(end[-1] if len(end) else 0) + np.repeat(
+            self._first[cells] - (end - size), size
+        )
+        return self._hx[at], self._hy[at]
+
+    def _ahead(self, c):
+        """The cells near a boundary at some step of a cell-level run of
+        the remaining iterations from ``c``: every cell goes wholesale to
+        the centroid nearest its mean, and a cell is near when the
+        bisector of that centroid and another passes within its
+        ``_reach`` of the mean.  Only a guess at what to fetch: the exact
+        step still checks every cell."""
+        k = len(c)
+        rows = np.arange(len(self._ids))
+        near = np.zeros(len(self._ids), dtype=bool)
+        for _ in range(self._left):
+            dx = self._mx[:, None] - c[:, 0]
+            dy = self._my[:, None] - c[:, 1]
+            d = dx * dx + dy * dy  # (cells, k)
+            lab = d.argmin(axis=1)
+            sep = np.hypot(*(c[:, None, :] - c).T)  # (k, k)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                gap = (d - d[rows, lab][:, None]) / (2 * sep[lab])
+            gap[rows, lab] = np.inf
+            near |= ~(gap > self._reach[:, None]).all(axis=1)  # NaN: coincident
+            n = np.bincount(lab, self._n, k)
+            new = c.copy()
+            has = n > 0
+            new[has, 0] = np.bincount(lab, self._sx, k)[has] / n[has]
+            new[has, 1] = np.bincount(lab, self._sy, k)[has] / n[has]
+            shift = np.hypot(*(new - c).T).max()
+            c = new
+            if shift <= max(self._tol, 0.0):  # 0: a fixed point
+                break
+        return near
 
     def _fetch(self, missing, near) -> bool:
         """Fetch the ambiguous cells not held yet, plus the ``near`` ones
-        while that fits under HELD_POINTS_MAX.  False when even the
-        ambiguous cells would pass the bound."""
-        room = HELD_POINTS_MAX - len(self._hcell)
+        while that fits under HELD_POINTS_MAX, in one job.  False when
+        even the ambiguous cells would pass the bound."""
+        room = HELD_POINTS_MAX - len(self._hx)
         want = (missing | near) & ~self._held
         if self._n[want].sum() > room:
             want = missing
-        need = int(self._n[want].sum())
-        if need > room:
+        if self._n[want].sum() > room:
             return False
-        ids = ",".join(map(str, self._ids[want].tolist()))
-        got = self._rows.where(f"cell IN ({ids})").toArrow()
-        if got.num_rows != need:  # the input changed under the aggregate
-            return False
-        self._hx = np.concatenate([self._hx, got["x"].to_numpy().astype(np.float64)])
-        self._hy = np.concatenate([self._hy, got["y"].to_numpy().astype(np.float64)])
+        got = self._rows.where(_cell_filter(self._ids[want])).toArrow()
         slots = self._slot[got["cell"].to_numpy()]
-        self._hcell = np.concatenate([self._hcell, slots])
+        if (slots < 0).any() or not np.array_equal(
+            np.bincount(slots, minlength=len(self._ids)), np.where(want, self._n, 0)
+        ):  # the input changed under the aggregate
+            return False
+        # slots fit 16 bits (GRID_BITS <= 8), where numpy's stable sort is
+        # a radix sort
+        order = np.argsort(slots.astype(np.uint16), kind="stable")
+        self._first[want] = len(self._hx) + np.searchsorted(
+            slots[order], np.flatnonzero(want)
+        )
+        for name, col in (("_hx", "x"), ("_hy", "y")):
+            held = got[col].to_numpy()[order].astype(np.float64)
+            setattr(self, name, np.concatenate([getattr(self, name), held]))
         self._held |= want
         return True
+
+
+def _cell_filter(ids) -> str:
+    """SQL predicate: ``cell`` is one of ``ids``.  It tests the cell's
+    bit in a literal bitmap of every cell, _GRID**2 / 64 longs: bit b of
+    word j is cell 64 j + b.  A ``cell IN (...)`` list of the same
+    thousands of ids spent ~95 ms of parsing and optimizing per fetch,
+    the bitmap ~25 ms."""
+    bits = np.zeros(_GRID * _GRID, dtype=bool)
+    bits[ids] = True
+    words = np.packbits(bits.reshape(-1, 64)[:, ::-1], axis=1).view(">i8")
+    lits = ",".join(f"{w}L" for w in words.ravel().tolist())
+    return (
+        f"bit_get(element_at(array({lits}), CAST(cell DIV 64 AS INT) + 1),"
+        " CAST(cell % 64 AS INT)) = 1"
+    )
 
 
 def _nearest(px, py, c):
@@ -534,7 +605,12 @@ def _nearest(px, py, c):
 
 
 def _grid_step(
-    points: DataFrame, x: str, y: str, fallback: Callable[[], Callable]
+    points: DataFrame,
+    x: str,
+    y: str,
+    fallback: Callable[[], Callable],
+    max_iter: int,
+    tol: float,
 ) -> Callable[[list], dict] | None:
     """The prep of the grid step: two jobs over ``points``.  None when
     the input does not qualify (a coordinate bound times n reaches
@@ -576,6 +652,8 @@ def _grid_step(
         {c: cells[c].to_numpy() for c in cells.column_names},
         math.hypot(wx, wy),
         fallback,
+        max_iter,
+        tol,
     )
 
 
@@ -598,7 +676,12 @@ def lloyd_2d(
     if max_iter > 0 and all(isinstance(types.get(c), IntegralType) for c in (x, y)):
         with iteration_confs(points.sparkSession):
             step = _grid_step(
-                points, x, y, partial(_sql_step, points, step_sql, (x, y))
+                points,
+                x,
+                y,
+                partial(_sql_step, points, step_sql, (x, y)),
+                max_iter,
+                tol,
             )
             if step is not None:
                 return _iterate(init, max_iter, tol, step)

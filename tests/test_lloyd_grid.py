@@ -215,3 +215,36 @@ def test_jobs_and_held_bound_contract(birch_points, spark, monkeypatch, sql_step
         sql_steps.clear()
         assert lloyd_2d(birch_points, init, max_iter=10, tol=-1.0) == want
         assert len(sql_steps) == 1, bound
+
+
+@pytest.mark.parametrize(
+    "ids",
+    [
+        [63, 64, 200, kmeans._GRID**2 - 1],  # words holding bit 63 alone
+        list(range(kmeans._GRID**2)),  # every word all ones
+    ],
+)
+def test_cell_filter_selects_exactly_its_cells(spark, ids):
+    cells = spark.range(kmeans._GRID**2).selectExpr("id AS cell")
+    got = [r[0] for r in cells.where(kmeans._cell_filter(np.array(ids))).collect()]
+    assert sorted(got) == ids
+
+
+def test_look_ahead_fetches_once(birch_points, monkeypatch, sql_steps):
+    """The look-ahead fetches the cells that later boundaries will reach
+    together with the ambiguous ones, so on the Birch-like blobs one
+    fetch serves every iteration."""
+    held = []  # points held after each fetch
+    real_fetch = kmeans._GridStep._fetch
+
+    def spy(self, missing, near):
+        ok = real_fetch(self, missing, near)
+        held.append(len(self._hx))
+        return ok
+
+    monkeypatch.setattr(kmeans._GridStep, "_fetch", spy)
+    init = seed_centroids_2d(birch_points, k=K, seed=5)
+    got = lloyd_2d(birch_points, init, max_iter=10, tol=-1.0)
+    assert not sql_steps
+    assert got == sql_lloyd(birch_points, init, 10, -1.0)
+    assert len(held) == 1, held
