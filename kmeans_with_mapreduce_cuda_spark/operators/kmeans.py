@@ -26,36 +26,29 @@ Physical shape (why this scales to 100 TB):
   same boundary as the reference's per-iteration cluster_info D2H copy
   (:250-251).
 
-Integer points (lloyd_2d over integral x/y with no NULLs and
-max|coord| * n < 2**53; Birch data is integer) take the grid step:
-Kanungo et al.'s filtering (TPAMI 2002) on a fixed 128 x 128 grid over
-the bounding box.
-- Prep, once per call, 2 jobs: a guard aggregate (count, NULLs,
-  bounding box) and a GROUP BY cell aggregate (sums, count and point
-  bounding box per cell), at most 16384 rows to the driver.
+Integer points (lloyd_2d over integral x/y with no NULLs, at most
+HELD_POINTS_MAX points and max|coord| * n < 2**53; Birch data is
+integer) take the grid step: Kanungo et al.'s filtering (TPAMI 2002) on
+a fixed 128 x 128 grid over the bounding box, with every point held on
+the driver (the analog of the reference's device-resident points,
+kmeans_mapreduce_core.cu:232-235).
+- Prep, once per call, 2 jobs and no shuffle: a guard aggregate
+  (count, NULLs, bounding box) and one toArrow fetch of every point.
+  Per-cell sums, counts and point bounding boxes are numpy (a stable
+  sort by cell, then reduceat).
 - Selection, per iteration on the driver: a cell is owned when one
   centroid beats every other at all 4 corners of the cell's point
   bounding box by a 2**-40 relative margin.  d_i - d_j is affine in
   the point, so the corners decide the whole box, and the margin
   covers double rounding on both sides.  Owned cells add their sums
-  wholesale.  The points of the other, ambiguous cells are fetched
-  once and assigned in numpy with the SQL step's operation order and
-  first-minimum ties.
-- Fetch: one toArrow job whose filter tests each row's cell in a
-  literal bitmap.  It takes the ambiguous cells together with every
-  cell that a cell-level run of the remaining iterations (each cell
-  wholesale to the centroid nearest its mean) brings near a boundary,
-  so one fetch usually serves the whole loop.
+  wholesale.  The points of the other, ambiguous cells are assigned in
+  numpy with the SQL step's operation order and first-minimum ties.
 - Exactness: below 2**53 every partial sum of integers is exact in a
   double, so Spark's double-accumulated avg(long) equals
   float(int_sum) / n.  Same assignments, same means: the same
   trajectory as the SQL step.
-- Bound: the driver holds at most HELD_POINTS_MAX points.  A fetch
-  past it hands the current centroids and the remaining iterations to
-  the SQL step, which continues the same trajectory.
-Per call that is 2 jobs plus at most one fetch job per iteration (on
-kmbench's 1M Birch-shaped points, 10 iterations: 1 or 2 fetches), and
-the cell rows plus the fetched points to the driver.
+- Bound: larger inputs, and a fetch that does not match the guard's
+  count and bounding box, take the SQL step for the whole fit.
 
 Semantics choices (SURVEY.md §2.1 fine print): float means (the documented
 algorithm, README.md:43-61, not the racy block-partial reduce), ties to the
@@ -387,11 +380,12 @@ def _lloyd(
 # ---------------------------------------------------------------------------
 
 #: 2**GRID_BITS cells per axis over the bounding box.  On 1M
-#: Birch-shaped points (kmbench seeds 1-8, 10 iterations, one fetch
-#: each) 128 x 128 has 7.3-8.8k occupied cells and holds 35-56 % of the
-#: points, with ~0.2 s of driver numpy; 64 x 64 holds 54-68 %; 256 x
-#: 256 holds 21-45 % but its 4x the cells cost ~0.3 s more driver numpy
-#: (lloyd_large op_p50_s 1.20 against 0.80 s).
+#: Birch-shaped points (kmbench seeds 1-10, 10 iterations) 128 x 128 has
+#: 5.9-8.8k occupied cells, 3.0-9.7 % of the points sit in ambiguous
+#: cells per iteration, and the driver spends 56-90 ms on the cell
+#: aggregate and 115-176 ms on the 10 steps.  64 x 64: 6.0-18.8 %
+#: ambiguous, 115-197 ms; 256 x 256: 1.4-4.8 %, but its 4x the cells
+#: take 299-571 ms.
 GRID_BITS = 7
 _GRID = 1 << GRID_BITS
 #: A cell is owned when its owner wins at every corner by more than this
@@ -400,19 +394,9 @@ _GRID = 1 << GRID_BITS
 #: 2**-40 covers the rounding at the corners and at every point inside
 #: with a factor of ~2**9 to spare.
 _OWN_MARGIN = 2.0**-40
-#: How close a boundary may pass to a cell, in cell diagonals beyond the
-#: cell's own extent, for the look-ahead (_GridStep._ahead) to fetch it.
-#: Each fetch scans the whole cache, and the look-ahead guesses the
-#: boundaries of every remaining iteration, so one fetch usually serves
-#: the loop.  On 1M Birch-shaped points, 10 iterations, seeds 1-40: 1
-#: gives one fetch for 31 seeds (all of 1-10) and two for 9, with 33-60 %
-#: of the points held; 0.5 holds 37 % at the median but 14 seeds take 2
-#: or 3 fetches; 2 takes one fetch for 37 seeds and holds 57 % at the
-#: median.  Fetching only around the current boundaries took 3-6 fetches.
-_REACH_CELLS = 1.0
-#: Most points the driver holds (x and y as doubles: 16 bytes each, so
-#: 32 MB).  A fetch that would pass the bound hands the loop to the SQL
-#: step instead.
+#: Most points the grid step holds on the driver: x and y as doubles,
+#: 16 bytes each, so 32 MB (the prep peaks at ~57 bytes a point besides
+#: the fetched Arrow table).  Larger inputs take the SQL step.
 HELD_POINTS_MAX = 1 << 21
 #: Integer sums below 2**53 are exact in a double, so Spark's
 #: double-accumulated avg(long) equals float(int_sum) / n.
@@ -420,61 +404,36 @@ _EXACT = 1 << 53
 
 
 class _GridStep:
-    """One exact Lloyd step for integer 2-D points from per-cell
-    aggregates, plus the points of the cells it cannot decide.
+    """One exact Lloyd step for integer 2-D points from per-cell sums,
+    plus the points of the cells it cannot decide.
 
-    ``cells`` maps ``cell``, ``sx``, ``sy``, ``n``, ``x0``, ``x1``,
-    ``y0``, ``y1`` to arrays: per occupied grid cell, its id, sums,
-    count and point bounding box.  ``rows`` is the points relation with
-    a ``cell`` column, from which ambiguous cells are fetched; ``diag``
-    is a cell's diagonal; ``fallback()`` makes the SQL step;
-    ``max_iter`` and ``tol`` are the loop's, for the look-ahead.
+    ``px``, ``py`` are every point's int64 coordinates and ``cell`` its
+    grid cell id.
     """
 
-    def __init__(
-        self,
-        rows: DataFrame,
-        cells: dict,
-        diag: float,
-        fallback: Callable[[], Callable],
-        max_iter: int,
-        tol: float,
-    ):
-        self._rows = rows
-        self._fallback = fallback
-        self._left = max_iter
-        self._tol = tol
-        self._sql = None
-        self._ids = cells["cell"]
-        self._sx, self._sy, self._n = (
-            cells[c].astype(np.float64) for c in ("sx", "sy", "n")
+    def __init__(self, px, py, cell):
+        # cell ids fit 16 bits (GRID_BITS <= 8), where numpy's stable sort
+        # is a radix sort
+        order = np.argsort(cell.astype(np.uint16), kind="stable")
+        px, py, cell = px[order], py[order], cell[order]
+        # points by cell: occupied cell i's are the n[i] from _first[i] on
+        self._first = np.flatnonzero(np.diff(cell, prepend=-1))
+        self._n = np.diff(self._first, append=len(cell)).astype(np.float64)
+        # int64 sums, below 2**53 (the guard), so exact as doubles too
+        self._sx, self._sy = (
+            np.add.reduceat(v, self._first).astype(np.float64) for v in (px, py)
         )
         # the 4 corners of each cell's point bounding box, shape (cells, 4)
         x0, x1, y0, y1 = (
-            cells[c].astype(np.float64) for c in ("x0", "x1", "y0", "y1")
+            f.reduceat(v, self._first).astype(np.float64)
+            for v in (px, py)
+            for f in (np.minimum, np.maximum)
         )
         self._cx = np.stack([x0, x0, x1, x1], axis=1)
         self._cy = np.stack([y0, y1, y0, y1], axis=1)
-        # each cell's mean, and how close to it a boundary counts as near
-        # in the look-ahead: its farthest corner plus the reach
-        self._mx, self._my = self._sx / self._n, self._sy / self._n
-        self._reach = (
-            np.hypot(
-                np.maximum(self._mx - x0, x1 - self._mx),
-                np.maximum(self._my - y0, y1 - self._my),
-            )
-            + _REACH_CELLS * diag
-        )
-        self._slot = np.full(_GRID * _GRID, -1, dtype=np.int64)
-        self._slot[self._ids] = np.arange(len(self._ids))
-        self._held = np.zeros(len(self._ids), dtype=bool)
-        # held points by cell: slot i's are the n[i] from _first[i] on
-        self._hx = self._hy = np.empty(0)
-        self._first = np.zeros(len(self._ids), dtype=np.int64)
+        self._hx, self._hy = px.astype(np.float64), py.astype(np.float64)
 
     def __call__(self, cents: list) -> dict:
-        if self._sql is not None:
-            return self._sql(cents)
         c = np.asarray(cents, dtype=np.float64)
         dx = self._cx[:, :, None] - c[:, 0]
         dy = self._cy[:, :, None] - c[:, 1]
@@ -484,12 +443,6 @@ class _GridStep:
         beats = d - d_own > _OWN_MARGIN * d.max(axis=1, keepdims=True)
         beats[np.arange(len(owner)), :, owner] = True
         owned = beats.all(axis=(1, 2))
-        missing = ~owned & ~self._held
-        if missing.any() and not self._fetch(missing, self._ahead(c)):
-            self._sql = self._fallback()
-            self._hx = self._hy = None
-            return self._sql(cents)
-        self._left -= 1
         k = len(c)
         o = owner[owned]
         sx = np.bincount(o, self._sx[owned], k)
@@ -514,81 +467,6 @@ class _GridStep:
         )
         return self._hx[at], self._hy[at]
 
-    def _ahead(self, c):
-        """The cells near a boundary at some step of a cell-level run of
-        the remaining iterations from ``c``: every cell goes wholesale to
-        the centroid nearest its mean, and a cell is near when the
-        bisector of that centroid and another passes within its
-        ``_reach`` of the mean.  Only a guess at what to fetch: the exact
-        step still checks every cell."""
-        k = len(c)
-        rows = np.arange(len(self._ids))
-        near = np.zeros(len(self._ids), dtype=bool)
-        for _ in range(self._left):
-            dx = self._mx[:, None] - c[:, 0]
-            dy = self._my[:, None] - c[:, 1]
-            d = dx * dx + dy * dy  # (cells, k)
-            lab = d.argmin(axis=1)
-            sep = np.hypot(*(c[:, None, :] - c).T)  # (k, k)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                gap = (d - d[rows, lab][:, None]) / (2 * sep[lab])
-            gap[rows, lab] = np.inf
-            near |= ~(gap > self._reach[:, None]).all(axis=1)  # NaN: coincident
-            n = np.bincount(lab, self._n, k)
-            new = c.copy()
-            has = n > 0
-            new[has, 0] = np.bincount(lab, self._sx, k)[has] / n[has]
-            new[has, 1] = np.bincount(lab, self._sy, k)[has] / n[has]
-            shift = np.hypot(*(new - c).T).max()
-            c = new
-            if shift <= max(self._tol, 0.0):  # 0: a fixed point
-                break
-        return near
-
-    def _fetch(self, missing, near) -> bool:
-        """Fetch the ambiguous cells not held yet, plus the ``near`` ones
-        while that fits under HELD_POINTS_MAX, in one job.  False when
-        even the ambiguous cells would pass the bound."""
-        room = HELD_POINTS_MAX - len(self._hx)
-        want = (missing | near) & ~self._held
-        if self._n[want].sum() > room:
-            want = missing
-        if self._n[want].sum() > room:
-            return False
-        got = self._rows.where(_cell_filter(self._ids[want])).toArrow()
-        slots = self._slot[got["cell"].to_numpy()]
-        if (slots < 0).any() or not np.array_equal(
-            np.bincount(slots, minlength=len(self._ids)), np.where(want, self._n, 0)
-        ):  # the input changed under the aggregate
-            return False
-        # slots fit 16 bits (GRID_BITS <= 8), where numpy's stable sort is
-        # a radix sort
-        order = np.argsort(slots.astype(np.uint16), kind="stable")
-        self._first[want] = len(self._hx) + np.searchsorted(
-            slots[order], np.flatnonzero(want)
-        )
-        for name, col in (("_hx", "x"), ("_hy", "y")):
-            held = got[col].to_numpy()[order].astype(np.float64)
-            setattr(self, name, np.concatenate([getattr(self, name), held]))
-        self._held |= want
-        return True
-
-
-def _cell_filter(ids) -> str:
-    """SQL predicate: ``cell`` is one of ``ids``.  It tests the cell's
-    bit in a literal bitmap of every cell, _GRID**2 / 64 longs: bit b of
-    word j is cell 64 j + b.  A ``cell IN (...)`` list of the same
-    thousands of ids spent ~95 ms of parsing and optimizing per fetch,
-    the bitmap ~25 ms."""
-    bits = np.zeros(_GRID * _GRID, dtype=bool)
-    bits[ids] = True
-    words = np.packbits(bits.reshape(-1, 64)[:, ::-1], axis=1).view(">i8")
-    lits = ",".join(f"{w}L" for w in words.ravel().tolist())
-    return (
-        f"bit_get(element_at(array({lits}), CAST(cell DIV 64 AS INT) + 1),"
-        " CAST(cell % 64 AS INT)) = 1"
-    )
-
 
 def _nearest(px, py, c):
     """Nearest centroid per point with _dists_sql_2d's operation order
@@ -604,17 +482,12 @@ def _nearest(px, py, c):
     return lab
 
 
-def _grid_step(
-    points: DataFrame,
-    x: str,
-    y: str,
-    fallback: Callable[[], Callable],
-    max_iter: int,
-    tol: float,
-) -> Callable[[list], dict] | None:
-    """The prep of the grid step: two jobs over ``points``.  None when
-    the input does not qualify (a coordinate bound times n reaches
-    2**53, so sums could round)."""
+def _grid_step(points: DataFrame, x: str, y: str) -> Callable[[list], dict] | None:
+    """The prep of the grid step: two jobs over ``points``, a guard
+    aggregate and one fetch of every point.  None when the input does
+    not qualify (more than HELD_POINTS_MAX points, or a coordinate bound
+    times n reaches 2**53, so sums could round) or the fetched rows do
+    not match the guard (the input changed between the two jobs)."""
     n, nulls, x0, x1, y0, y1 = points.selectExpr(
         "count(1)",
         f"count_if(`{x}` IS NULL OR `{y}` IS NULL)",
@@ -627,34 +500,17 @@ def _grid_step(
         raise _null_coords((x, y))
     if n == 0:
         return lambda cents: {}
-    if max(abs(x0), abs(x1), abs(y0), abs(y1)) * n >= _EXACT:
+    if n > HELD_POINTS_MAX or max(abs(x0), abs(x1), abs(y0), abs(y1)) * n >= _EXACT:
+        return None
+    got = points.selectExpr(
+        f"CAST(`{x}` AS BIGINT) AS x", f"CAST(`{y}` AS BIGINT) AS y"
+    ).toArrow()
+    px, py = got["x"].to_numpy(), got["y"].to_numpy()
+    # a NULL reads as NaN, which fails the bounding box test
+    if len(px) != n or (px.min(), px.max(), py.min(), py.max()) != (x0, x1, y0, y1):
         return None
     wx, wy = (x1 - x0) // _GRID + 1, (y1 - y0) // _GRID + 1
-    rows = points.selectExpr(
-        f"CAST(`{x}` AS BIGINT) AS x",
-        f"CAST(`{y}` AS BIGINT) AS y",
-    ).selectExpr(
-        "x",
-        "y",
-        f"((x - ({x0}L)) DIV {wx}L) * {_GRID} + (y - ({y0}L)) DIV {wy}L AS cell",
-    )
-    cells = rows.groupBy("cell").agg(
-        *(
-            F.expr(e)
-            for e in (
-                "sum(x) AS sx", "sum(y) AS sy", "count(1) AS n",
-                "min(x) AS x0", "max(x) AS x1", "min(y) AS y0", "max(y) AS y1",
-            )
-        )
-    ).toArrow()
-    return _GridStep(
-        rows,
-        {c: cells[c].to_numpy() for c in cells.column_names},
-        math.hypot(wx, wy),
-        fallback,
-        max_iter,
-        tol,
-    )
+    return _GridStep(px, py, (px - x0) // wx * _GRID + (py - y0) // wy)
 
 
 def lloyd_2d(
@@ -667,25 +523,18 @@ def lloyd_2d(
 ) -> list[tuple[float, float]]:
     """2-D Lloyd loop over columns ``x``, ``y`` (see _lloyd).
 
-    Integral ``x``/``y`` with ``max|coord| * n < 2**53`` take the exact
-    grid-filtered step (_GridStep) instead of the SQL step: same
-    trajectory bit for bit, a fraction of the per-point work.
+    Integral ``x``/``y`` with at most HELD_POINTS_MAX points and
+    ``max|coord| * n < 2**53`` take the exact grid-filtered step
+    (_GridStep) instead of the SQL step: same trajectory bit for bit,
+    a fraction of the per-point work.
     """
-    step_sql = partial(_step_sql_2d, x=x, y=y)
     types = {f.name: f.dataType for f in points.schema.fields}
     if max_iter > 0 and all(isinstance(types.get(c), IntegralType) for c in (x, y)):
         with iteration_confs(points.sparkSession):
-            step = _grid_step(
-                points,
-                x,
-                y,
-                partial(_sql_step, points, step_sql, (x, y)),
-                max_iter,
-                tol,
-            )
-            if step is not None:
-                return _iterate(init, max_iter, tol, step)
-    return _lloyd(points, init, max_iter, tol, step_sql, (x, y))
+            step = _grid_step(points, x, y)
+        if step is not None:
+            return _iterate(init, max_iter, tol, step)
+    return _lloyd(points, init, max_iter, tol, partial(_step_sql_2d, x=x, y=y), (x, y))
 
 
 def lloyd_nd(

@@ -7,12 +7,13 @@ lineitem (quantity, extendedprice) projection (FIXTURES.md §1 analog).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long, md5_long_sql
 from ..operators.kmeans import assign_2d, update_2d
 from ..sources.readers import points_from_lineitem_cached
+from ..sources.writers import format_centroids
 from .registry import (
     INIT_CENTROIDS_2D,
     K2D,
@@ -429,16 +430,21 @@ def o12_kmeans_five_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def o13_sink_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = o08_centroid_update(spark, sf_dir)
-    return u.select(
-        F.format_string(
-            "Point: (%d,%d)",
-            F.floor("cx").cast("bigint"),
-            F.floor("cy").cast("bigint"),
-        ).alias("line")
-    )
+    return format_centroids(u, "cx", "cy", parity_ints=True)
 
 
 # --- Elbow: SSE by k (model-selection instrumentation) ---------------------
+
+def _sse_millions(points: DataFrame, cents, *lead: Column) -> DataFrame:
+    """One row: the ``lead`` columns, then the SSE of ``points`` to their
+    nearest of ``cents`` in millions, so cross-engine float-summation
+    order cannot move the hash."""
+    a = assign_2d(points, cents, keep_dist=True)
+    return a.agg(
+        *lead,
+        F.round(F.sum("_mindist") / 1000000.0).cast("bigint").alias("sse_millions"),
+    )
+
 
 def _sse_sql_for(cents) -> str:
     return f"""
@@ -464,20 +470,11 @@ def _sse_sql_for(cents) -> str:
     "only lower SSE; the property is implied by the values.",
 )
 def o14_sse_by_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.kmeans import assign_2d
-
     p = _points(spark, sf_dir)
-
-    def sse_df(k: int) -> DataFrame:
-        a = assign_2d(p, INIT_CENTROIDS_2D[:k], keep_dist=True)
-        return a.agg(
-            F.lit(k).alias("k"),
-            F.round(F.sum("_mindist") / 1000000.0).cast("bigint").alias(
-                "sse_millions"
-            ),
-        )
-
-    return sse_df(4).unionAll(sse_df(8))
+    k4, k8 = (
+        _sse_millions(p, INIT_CENTROIDS_2D[:k], F.lit(k).alias("k")) for k in (4, 8)
+    )
+    return k4.unionAll(k8)
 
 
 # --- O3/O14: SSE objective (timing/quality instrumentation) ----------------
@@ -495,10 +492,7 @@ def o14_sse_by_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     "millions so cross-engine float-summation order cannot move the hash.",
 )
 def o14_sse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = assign_2d(_points(spark, sf_dir), INIT_CENTROIDS_2D, keep_dist=True)
-    return a.agg(
-        F.round(F.sum("_mindist") / 1000000.0).cast("bigint").alias("sse_millions")
-    )
+    return _sse_millions(_points(spark, sf_dir), INIT_CENTROIDS_2D)
 
 
 @query(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from functools import partial
 
 import numpy as np
+import pyarrow.compute as pc
 import pytest
 
 from kmeans_with_mapreduce_cuda_spark.operators import kmeans
@@ -102,6 +103,17 @@ def test_points_equidistant_from_two_centroids(spark, sql_steps):
     assert got[0] != init[0] and got[1] != init[1]
 
 
+def test_boundary_through_cell_corners(spark, sql_steps):
+    """Cells 2 wide: the bisector x = 1 of (3, 1) and (-1, 1) runs
+    through two corners of the cell at the origin, whose other corners
+    the higher id wins.  The points on it tie and go to the lower id,
+    so no centroid owns the cell."""
+    xy = [(0, 0), (1, 0), (0, 1), (1, 1), (255, 255)]
+    init = [(3.0, 1.0), (-1.0, 1.0), (255.0, 255.0)]
+    got = assert_identical(frame(spark, xy), init, sql_steps, max_iter=1)
+    assert got[:2] == [(1.0, 0.5), (0.0, 0.5)]
+
+
 def test_coincident_centroids(spark, sql_steps):
     xy = blobs(2_000, seed=9, k=3)
     c = tuple(map(float, xy[0]))
@@ -182,69 +194,54 @@ def test_null_coordinate_raises_value_error(spark, types):
 
 
 def test_jobs_and_held_bound_contract(birch_points, spark, monkeypatch, sql_steps):
-    """Prep is 2 jobs, every further job is one fetch, and there are
-    no more fetches than iterations.  With the held-point bound cut
-    down, the loop hands over to the SQL step with the same result."""
-    fetches = []
-    real_fetch = kmeans._GridStep._fetch
-
-    def spy(self, missing, near):
-        fetches.append(int(self._n[missing].sum()))
-        return real_fetch(self, missing, near)
-
-    monkeypatch.setattr(kmeans._GridStep, "_fetch", spy)
-    init = seed_centroids_2d(birch_points, k=K, seed=5)
-    lloyd_2d(birch_points, init, max_iter=1)  # warm
-
+    """A warm call is 2 jobs, the guard aggregate and one fetch of every
+    point, whatever the seed: 3 stages, the guard's partial and final
+    aggregate and the fetch.  Up to HELD_POINTS_MAX points take the grid
+    step; one point more takes the SQL step, with the same result."""
+    n = birch_points.count()
     sc = spark.sparkContext
-    fetches.clear()
-    sc.setJobGroup("lloyd-grid-audit", "count grid jobs")
-    try:
-        got = lloyd_2d(birch_points, init, max_iter=10, tol=-1.0)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = sc.statusTracker().getJobIdsForGroup("lloyd-grid-audit")
-    assert 1 <= len(fetches) <= 10
-    assert len(jobs) == 2 + len(fetches), (jobs, fetches)
-    assert not sql_steps
-
-    want = sql_lloyd(birch_points, init, 10, -1.0)
-    assert got == want
-    for bound in (0, fetches[0] + 1):
-        monkeypatch.setattr(kmeans, "HELD_POINTS_MAX", bound)
+    for seed in (5, 6):
+        init = seed_centroids_2d(birch_points, k=K, seed=seed)
+        lloyd_2d(birch_points, init, max_iter=1)  # warm
+        group = f"lloyd-grid-audit-{seed}"
+        sc.setJobGroup(group, "count grid jobs")
+        try:
+            got = lloyd_2d(birch_points, init, max_iter=10, tol=-1.0)
+        finally:
+            sc.setJobGroup(None, None)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+        assert (len(jobs), len(stages)) == (2, 3), (seed, jobs, stages)
+        assert not sql_steps
+        assert got == sql_lloyd(birch_points, init, 10, -1.0)
         sql_steps.clear()
-        assert lloyd_2d(birch_points, init, max_iter=10, tol=-1.0) == want
-        assert len(sql_steps) == 1, bound
+
+    monkeypatch.setattr(kmeans, "HELD_POINTS_MAX", n)
+    assert lloyd_2d(birch_points, init, max_iter=10, tol=-1.0) == got
+    assert not sql_steps
+    monkeypatch.setattr(kmeans, "HELD_POINTS_MAX", n - 1)
+    assert lloyd_2d(birch_points, init, max_iter=10, tol=-1.0) == got
+    assert len(sql_steps) == 1
 
 
 @pytest.mark.parametrize(
-    "ids",
+    "change",
     [
-        [63, 64, 200, kmeans._GRID**2 - 1],  # words holding bit 63 alone
-        list(range(kmeans._GRID**2)),  # every word all ones
+        lambda t: t.slice(1),  # one row fewer than the guard counted
+        lambda t: t.set_column(0, "x", pc.add(t["x"], 1)),  # another bounding box
     ],
+    ids=["count", "bbox"],
 )
-def test_cell_filter_selects_exactly_its_cells(spark, ids):
-    cells = spark.range(kmeans._GRID**2).selectExpr("id AS cell")
-    got = [r[0] for r in cells.where(kmeans._cell_filter(np.array(ids))).collect()]
-    assert sorted(got) == ids
-
-
-def test_look_ahead_fetches_once(birch_points, monkeypatch, sql_steps):
-    """The look-ahead fetches the cells that later boundaries will reach
-    together with the ambiguous ones, so on the Birch-like blobs one
-    fetch serves every iteration."""
-    held = []  # points held after each fetch
-    real_fetch = kmeans._GridStep._fetch
-
-    def spy(self, missing, near):
-        ok = real_fetch(self, missing, near)
-        held.append(len(self._hx))
-        return ok
-
-    monkeypatch.setattr(kmeans._GridStep, "_fetch", spy)
+def test_fetch_that_disagrees_with_the_guard_takes_the_sql_step(
+    birch_points, monkeypatch, sql_steps, change
+):
+    """The input changed between the guard and the fetch: the SQL step
+    runs the whole fit."""
+    frame_type = type(birch_points)
+    real = frame_type.toArrow
+    monkeypatch.setattr(frame_type, "toArrow", lambda self: change(real(self)))
     init = seed_centroids_2d(birch_points, k=K, seed=5)
     got = lloyd_2d(birch_points, init, max_iter=10, tol=-1.0)
-    assert not sql_steps
+    assert len(sql_steps) == 1
     assert got == sql_lloyd(birch_points, init, 10, -1.0)
-    assert len(held) == 1, held
