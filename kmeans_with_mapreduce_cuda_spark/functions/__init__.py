@@ -2,12 +2,10 @@ from .distance import (  # noqa: F401
     cosine_similarity,
     dot_product,
     l2_norm,
-    sq_dist_2d,
     sq_dist_arrays,
 )
 from .hashing import md5_long, minhash_signature, stable_sample_key  # noqa: F401
 from .text import (  # noqa: F401
-    char_ngrams,
     punct_ratio,
     stopword_ratio,
     token_count,

@@ -20,17 +20,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def sq_dist_2d(
-    x1: Column | str, y1: Column | str, x2: Column | float, y2: Column | float
-) -> Column:
-    """(x1-x2)^2 + (y1-y2)^2 -- kmeans_mapreduce_core.cu:8-17, float semantics."""
-    x1, y1 = _c(x1), _c(y1)
-    x2 = F.lit(x2) if isinstance(x2, (int, float)) else x2
-    y2 = F.lit(y2) if isinstance(y2, (int, float)) else y2
-    dx, dy = x1 - x2, y1 - y2
-    return dx * dx + dy * dy
-
-
 def sq_dist_arrays(a: Column | str, b: Column | str) -> Column:
     """Squared Euclidean distance between two array<double> columns."""
     a, b = _c(a), _c(b)

@@ -56,16 +56,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return F.regexp_extract_all(norm, F.lit(pat), 1)
 
 
-def char_ngrams(text: Column | str, n: int = 3) -> Column:
-    """Character n-grams of the lower-cased text (for language ID /
-    SimHash shingling)."""
-    s = F.lower(_c(text))
-    idx = F.sequence(F.lit(1), F.length(s) - (n - 1))
-    return F.when(F.length(s) >= n, F.transform(
-        idx, lambda i: F.substr(s, i, F.lit(n))
-    )).otherwise(F.array().cast("array<string>"))
-
-
 def punct_ratio(text: Column | str) -> Column:
     """Fraction of characters that are punctuation."""
     t = _c(text)

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import tokens, word_shingles
+from .skew import cap_hot_keys
 
 #: default MinHash geometry: 16 hashes in 8 bands of 2 rows.
 NUM_HASHES = 16
@@ -122,6 +123,35 @@ def minhash_signatures(
     )
 
 
+def _minhash_banded(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    seed: int,
+) -> DataFrame:
+    """(id, sig, bk) per (doc, band): each doc's MinHash signature
+    exploded into ``bands`` band keys bk = (band, h0..h{r-1}), r =
+    num_hashes / bands -- the one shuffle key of both LSH joins."""
+    assert num_hashes % bands == 0
+    r = num_hashes // bands
+    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, seed)
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                *[F.col("sig")[b * r + j].alias(f"h{j}") for j in range(r)],
+            )
+            for b in range(bands)
+        ]
+    )
+    return sig.select(
+        F.col(id_col).alias("id"), F.col("sig"), F.explode(band_structs).alias("bk")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -155,19 +185,6 @@ def minhash_lsh_pairs(
     materializing (the banded signatures are persisted because both
     self-join sides consume them).
     """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, seed)
-
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                *[F.col("sig")[b * r + j].alias(f"h{j}") for j in range(r)],
-            )
-            for b in range(bands)
-        ]
-    )
     # materialize signatures ONCE: the sizes aggregate and the pair
     # expansion would otherwise re-run the full shingle+hash pipeline
     # (the expensive part).  r10 additionally needed an eager count()
@@ -179,19 +196,10 @@ def minhash_lsh_pairs(
     # grouped pair expansion cannot start before that broadcast -- so
     # the dedicated fill job is a pure extra pass now and is removed
     # (measured r11: ~0.2-0.4 s off every minhash-family key).
-    banded = sig.select(
-        F.col(id_col).alias("id"), F.col("sig"), F.explode(band_structs).alias("bk")
+    banded = _minhash_banded(
+        df, text_col, id_col, num_hashes, bands, shingle_n, seed
     ).persist()
-
-    sizes = banded.groupBy("bk").agg(F.count(F.lit(1)).alias("n_docs"))
-    if max_bucket is not None:
-        capped = sizes.where(F.col("n_docs") > max_bucket)
-        joinable = banded.join(
-            F.broadcast(capped.select("bk")), "bk", "left_anti"
-        )
-    else:
-        capped = sizes.where(F.lit(False))
-        joinable = banded
+    joinable, capped = cap_hot_keys(banded, "bk", max_bucket, "n_docs")
 
     # Per-bucket pair expansion instead of the banded SELF-JOIN (r11):
     # one groupBy exchange replaces the join's two cache reads + two
@@ -269,27 +277,8 @@ def minhash_cross_pairs(
     Returns :class:`LshPairs` with ``pairs`` = (new_doc, ref_doc,
     est_jaccard); ``deps`` must be unpersisted after materializing.
     """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-
-    def banded(df: DataFrame) -> DataFrame:
-        sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, seed)
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    *[F.col("sig")[b * r + j].alias(f"h{j}") for j in range(r)],
-                )
-                for b in range(bands)
-            ]
-        )
-        return sig.select(
-            F.col(id_col).alias("id"),
-            F.col("sig"),
-            F.explode(band_structs).alias("bk"),
-        )
-
-    banded_ref = banded(ref_df).persist()
+    geometry = (text_col, id_col, num_hashes, bands, shingle_n, seed)
+    banded_ref = _minhash_banded(ref_df, *geometry).persist()
     # No eager fill needed (r11, the minhash_lsh_pairs rationale): the
     # reference side of the pair join is gated on broadcast(capped),
     # whose build runs sizes over the cold cache first -- one pass,
@@ -299,19 +288,8 @@ def minhash_cross_pairs(
     # materializes ``capped_buckets`` runs the ungated sizes branch
     # against the cold cache: a recompute, never a wrong answer).
     # Every current caller passes max_bucket and reads only pairs.
-    banded_new = banded(new_df)
-
-    if max_bucket is not None:
-        sizes = banded_ref.groupBy("bk").agg(F.count(F.lit(1)).alias("n_docs"))
-        capped = sizes.where(F.col("n_docs") > max_bucket)
-        joinable_ref = banded_ref.join(
-            F.broadcast(capped.select("bk")), "bk", "left_anti"
-        )
-    else:
-        capped = banded_ref.groupBy("bk").agg(
-            F.count(F.lit(1)).alias("n_docs")
-        ).where(F.lit(False))
-        joinable_ref = banded_ref
+    banded_new = _minhash_banded(new_df, *geometry)
+    joinable_ref, capped = cap_hot_keys(banded_ref, "bk", max_bucket, "n_docs")
 
     n, x = banded_new.alias("n"), joinable_ref.alias("x")
     pairs = (
@@ -444,15 +422,7 @@ def simhash_near_pairs(
     # minhash_lsh_pairs; r10)
     banded.count()
 
-    sizes = banded.groupBy("bk").agg(F.count(F.lit(1)).alias("n_docs"))
-    if max_bucket is not None:
-        capped = sizes.where(F.col("n_docs") > max_bucket)
-        joinable = banded.join(
-            F.broadcast(capped.select("bk")), "bk", "left_anti"
-        )
-    else:
-        capped = sizes.where(F.lit(False))
-        joinable = banded
+    joinable, capped = cap_hot_keys(banded, "bk", max_bucket, "n_docs")
     a, b = joinable.alias("a"), joinable.alias("b")
     ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
     pairs = (

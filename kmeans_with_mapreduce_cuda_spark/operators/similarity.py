@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from ..functions.distance import cosine_similarity
 from .kmeans import CentroidsND, _argmin_sql, assign_nd, lloyd_nd, seed_centroids_nd
+from .skew import cap_hot_keys
 
 
 def brute_force_topk(
@@ -193,14 +194,7 @@ def lsh_bucket_pairs(
         F.col(id_col).alias("id"),
         F.col(features).cast("array<double>").alias("_emb"),
     ).withColumn("bucket", F.expr(lsh_bucket_sql("_emb", planes, one_based=False)))
-    if max_bucket is not None:
-        hot = (
-            e.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > max_bucket)
-            .select("bucket")
-        )
-        e = e.join(F.broadcast(hot), "bucket", "left_anti")
+    e, _ = cap_hot_keys(e, "bucket", max_bucket)
     a, b = e.alias("a"), e.alias("b")
     sim = cosine_similarity(F.col("a._emb"), F.col("b._emb"))
     return (
@@ -280,14 +274,7 @@ def within_cell_cosine_pairs(
     Arrow boundary -- candidate PAIRS never do; output is the
     surviving pairs only.
     """
-    counts = assigned.groupBy(cell_col).agg(F.count(F.lit(1)).alias("n"))
-    if max_cell is not None:
-        capped = counts.where(F.col("n") > max_cell)
-        assigned = assigned.join(
-            F.broadcast(capped.select(cell_col)), cell_col, "left_anti"
-        )
-    else:
-        capped = counts.where(F.lit(False))
+    assigned, capped = cap_hot_keys(assigned, cell_col, max_cell)
     id_t = assigned.schema[id_col].dataType.simpleString()
     # Null semantics of the old join, preserved: a NULL cell never
     # equi-joined (dropped); NULL emb/nrm/id made the join condition
@@ -330,10 +317,13 @@ def _cell_pairs_kernel(threshold: float, block: int):
         import numpy as np
         import pandas as pd
 
+        # ids keep the input's dtype: the declared output schema uses
+        # the input id type (a string id must not come back as int64)
+        no_ids = pdf["_pid"].iloc[:0]
         empty = pd.DataFrame(
             {
-                "vec_a": pd.Series([], dtype="int64"),
-                "vec_b": pd.Series([], dtype="int64"),
+                "vec_a": no_ids,
+                "vec_b": no_ids,
                 "cos_sim": pd.Series([], dtype="float64"),
             }
         )

@@ -185,3 +185,32 @@ def skyline_2d(
     )
     local = frontier(salted, ["__kmrc_salt"]).drop("__kmrc_salt")
     return frontier(local, [])
+
+
+def cap_hot_keys(
+    df: DataFrame, key: str, max_n: int | None, n_col: str = "n"
+) -> tuple[DataFrame, DataFrame]:
+    """Drop the keys too hot to pair: ``(kept, capped)``, where
+    ``kept`` is ``df`` without the rows of every ``key`` value held by
+    more than ``max_n`` rows, and ``capped`` lists those values as
+    ``(key, n_col)`` rows with their counts.
+
+    This is the candidate-bounding step of every within-key pairing
+    (LSH bands, blocking keys, k-means cells): pair output is quadratic
+    in a key's size, so one degenerate key would pin the whole pair
+    stage on one task, and AQE can split an oversized join INPUT but
+    not an oversized join OUTPUT.  The hot-key list is tiny at any
+    scale, so it is removed by a broadcast left-anti join.  ``capped``
+    is data, never a silent drop: callers report it or route its keys
+    to a strategy that fits them.  ``max_n=None`` keeps every row and
+    ``capped`` is then empty.
+
+    ``broadcast(capped)`` is built from ``df`` before the pair stage
+    can start, so when ``df`` is a cold cache the count is the one pass
+    that fills it (the ordering ``dedup.minhash_lsh_pairs`` relies
+    on)."""
+    sizes = df.groupBy(key).agg(F.count(F.lit(1)).alias(n_col))
+    if max_n is None:
+        return df, sizes.where(F.lit(False))
+    capped = sizes.where(F.col(n_col) > max_n)
+    return df.join(F.broadcast(capped.select(key)), key, "left_anti"), capped

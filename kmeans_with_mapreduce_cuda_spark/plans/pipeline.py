@@ -20,8 +20,14 @@ from pyspark.sql.window import Window
 from ..functions.hashing import md5_long_sql
 from ..functions.text import STOPWORDS, tokens
 from ..operators.dedup import simhash16_sql, token_hashes_sql
+from ..operators.skew import cap_hot_keys
 from ..session import pinned_confs
-from ..sources.readers import fixture_memo, fixture_memo_drop, load_table
+from ..sources.readers import (
+    fixture_artifact,
+    fixture_memo,
+    fixture_memo_drop,
+    load_table,
+)
 from . import registry
 from .registry import query
 
@@ -374,13 +380,7 @@ def dedup_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(s, 1, 64).alias("s64"),
         F.substring(s, 1, 16).alias("blk"),
     )
-    hot = (
-        docs.groupBy("blk")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 64)
-        .select("blk")
-    )
-    blocked = docs.join(F.broadcast(hot), "blk", "left_anti")
+    blocked, _ = cap_hot_keys(docs, "blk", 64)
     a, b = blocked.alias("a"), blocked.alias("b")
     lev = F.levenshtein(F.col("a.s64"), F.col("b.s64"), 8)
     return (
@@ -7529,16 +7529,14 @@ def stream_compaction_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The erasure query's PRISTINE partitioned events table (VERDICT r9
 # item 5): the query must mutate a hive layout, and rebuilding it was a
-# full-table Spark write per invocation.  The pristine write now
-# happens once per (session, fixture) -- one fixture_memo slot keyed
-# on the events' content, whose release deletes the old table -- and
-# each invocation works on a HARDLINK clone (metadata-only, no data
-# rewrite; the dynamic overwrite writes new files and unlinks old
-# ones, never modifies bytes in place, so the pristine inodes are
-# never touched).
+# full-table Spark write per invocation.  The pristine table is a
+# fixture_artifact -- written once per events content and reused across
+# invocations and sessions, like the DPP layout -- and each invocation
+# works on a HARDLINK clone (metadata-only, no data rewrite; the
+# dynamic overwrite writes new files and unlinks old ones, never
+# modifies bytes in place, so the pristine inodes are never touched).
 def _erasure_pristine_table(spark: SparkSession, sf_dir: str) -> str:
-    def write_pristine() -> str:
-        tbl = f"{tempfile.mkdtemp(prefix='_gate_erasure_src_')}/events_by_day"
+    def write_pristine(tmp: str) -> None:
         load_table(spark, sf_dir, "events").select(
             "user_id",
             "ts",
@@ -7553,19 +7551,9 @@ def _erasure_pristine_table(spark: SparkSession, sf_dir: str) -> str:
             F.expr(
                 "CAST(floor(unix_micros(ts) / 86400000000.0) AS BIGINT)"
             ).alias("epoch_day"),
-        ).write.partitionBy("epoch_day").parquet(tbl)
-        return tbl
+        ).write.partitionBy("epoch_day").parquet(tmp)
 
-    return fixture_memo(
-        spark,
-        sf_dir,
-        ("events",),
-        "erasure_pristine",
-        write_pristine,
-        release=lambda tbl: shutil.rmtree(
-            os.path.dirname(tbl), ignore_errors=True
-        ),
-    )
+    return fixture_artifact(sf_dir, "events", "kmrc_erasure", write_pristine)
 
 
 def _hardlink_clone(src: str, dst: str) -> None:
@@ -7632,7 +7620,7 @@ def pipe_user_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(floor(unix_micros(ts) / 86400000000.0) AS BIGINT)"
             ).alias("epoch_day"),
         )
-        # Pristine table written once per (session, fixture); each
+        # Pristine table written once per fixture content; each
         # invocation mutates a hardlink CLONE (VERDICT r9 item 5 --
         # no full-table rewrite per gate run).
         _hardlink_clone(_erasure_pristine_table(spark, sf_dir), tbl)

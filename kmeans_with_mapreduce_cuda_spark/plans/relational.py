@@ -3058,8 +3058,10 @@ def rel_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "columnar scan supports the same predicate pushdown and column "
     "pruning as parquet (plan-asserted in tests/test_orc.py).  Dest "
     "path is keyed by the fixture's (size, mtime) under the system "
-    "temp dir (the kmrc_points cache idiom) so repeated invocations "
-    "overwrite in place instead of accreting directories.",
+    "temp dir, so repeated invocations reuse one directory instead of "
+    "accreting them; every invocation rewrites it and commits by "
+    "rename (sources.readers.committed_write), because the write is "
+    "what the query tests.",
 )
 def rel_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import committed_write, fixture_keyed_tmpdir
@@ -3865,8 +3867,8 @@ def rel_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "boundaries can't be found mid-file), so large corpora should land "
     "as many medium files -- this writer produces one file per "
     "partition, which is exactly that layout.  Dest path is keyed by "
-    "the fixture's (size, mtime) (the rel_orc_roundtrip idiom) so "
-    "repeated runs overwrite in place.",
+    "the fixture's (size, mtime) and every run rewrites it and "
+    "commits by rename (the rel_orc_roundtrip idiom).",
 )
 def rel_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import committed_write, fixture_keyed_tmpdir
@@ -4076,7 +4078,8 @@ def rel_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Incremental rollup maintenance: per-(type, day) PARTIAL "
     "aggregates (count / cents-sum / min / max -- all mergeable) for "
-    "every closed day are persisted to parquet once; when the newest "
+    "every closed day are persisted to parquet once per fixture "
+    "content (sources.readers.fixture_artifact); when the newest "
     "day arrives, the final per-type rollup is the persisted partials "
     "UNION the delta-day partials, re-aggregated -- the raw history is "
     "NEVER re-scanned.  That is how a warehouse keeps a 100 TB "
@@ -4087,14 +4090,10 @@ def rel_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(the mergeability law; the same contract rel_hll_sketch_union "
     "checks for sketches, here for exact measures).  n_days rides "
     "along as a distinct-count over the partials' own key.  All "
-    "measures are exact bigints until one final /100 emission.  Dest "
-    "path keyed by fixture (size, mtime) (the rel_orc_roundtrip "
-    "idiom).",
+    "measures are exact bigints until one final /100 emission.",
 )
 def rel_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.readers import committed_write, fixture_keyed_tmpdir
-
-    dest = fixture_keyed_tmpdir(sf_dir, "events", "kmrc_rollup")
+    from ..sources.readers import fixture_artifact
 
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -4109,9 +4108,12 @@ def rel_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("v_cents").alias("pmin"),
         F.max("v_cents").alias("pmax"),
     )
-    # closed days: persisted once (the incremental state)
-    committed_write(
-        dest,
+    # closed days: persisted once (the incremental state); they depend
+    # only on the events content, maxday included
+    dest = fixture_artifact(
+        sf_dir,
+        "events",
+        "kmrc_rollup",
         lambda tmp: partials(e.where(F.col("day") < maxday))
         .write.mode("overwrite")
         .parquet(tmp),
@@ -4234,8 +4236,8 @@ def rel_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dpp_customer_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-once hive-partitioned customer layout shared by both DPP
-    queries (partitionBy(c_nationkey), fixture-keyed dest, committed
-    via the rename protocol); returns the read-back DataFrame.
+    queries (partitionBy(c_nationkey), a fixture_artifact); returns
+    the read-back DataFrame.
 
     The read supplies the source schema EXPLICITLY: a zero-row
     partitioned write leaves only _SUCCESS behind (no data files, no
@@ -4245,19 +4247,17 @@ def _dpp_customer_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     an error.  Partition discovery still runs off the directory names,
     so dynamic pruning / PartitionFilters are unaffected
     (plan-asserted in test_plans.py)."""
-    import os
-
-    from ..sources.readers import committed_write, fixture_keyed_tmpdir
+    from ..sources.readers import fixture_artifact
 
     src = load_table(spark, sf_dir, "customer")
-    dest = fixture_keyed_tmpdir(sf_dir, "customer", "kmrc_dpp")
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        committed_write(
-            dest,
-            lambda tmp: src.write.mode("overwrite")
-            .partitionBy("c_nationkey")
-            .parquet(tmp),
-        )
+    dest = fixture_artifact(
+        sf_dir,
+        "customer",
+        "kmrc_dpp",
+        lambda tmp: src.write.mode("overwrite")
+        .partitionBy("c_nationkey")
+        .parquet(tmp),
+    )
     return spark.read.schema(src.schema).parquet(dest)
 
 
@@ -5236,15 +5236,12 @@ def rel_try_parse_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distributed (Spark schedules footer reading as a job), and "
     "evolve additively only (added nullable columns), never type "
     "changes -- the contract this query pins.  Both generations are "
-    "key-bounded so output is O(1) in scale factor; the dest dir is "
-    "fixture-keyed + committed (rel_orc_roundtrip idiom).",
+    "key-bounded so output is O(1) in scale factor; the two "
+    "generations are written once per fixture content "
+    "(sources.readers.fixture_artifact).",
 )
 def rel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..sources.readers import committed_write, fixture_keyed_tmpdir
-
-    dest = fixture_keyed_tmpdir(sf_dir, "orders", "kmrc_schevo")
+    from ..sources.readers import fixture_artifact
 
     def write_generations(tmp: str) -> None:
         o = load_table(spark, sf_dir, "orders")
@@ -5257,12 +5254,7 @@ def rel_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", "o_totalprice", "o_orderpriority"
         ).write.parquet(f"{tmp}/gen2")
 
-    # fixture-keyed dest: skip the rewrite when a committed copy exists
-    # (the rel_dpp_prune_join idiom; gen2 is written last, so its
-    # _SUCCESS implies a complete pair under committed_write's
-    # whole-directory rename)
-    if not os.path.exists(os.path.join(dest, "gen2", "_SUCCESS")):
-        committed_write(dest, write_generations)
+    dest = fixture_artifact(sf_dir, "orders", "kmrc_schevo", write_generations)
     merged = spark.read.option("mergeSchema", "true").parquet(
         f"{dest}/gen1", f"{dest}/gen2"
     )
@@ -5402,8 +5394,8 @@ def rel_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "multi-column file-skipping lever: Delta OPTIMIZE ZORDER BY / "
     "liquid clustering): lineitem is rewritten tiled by the Morton "
     "interleave of (l_orderkey, l_partkey) "
-    "(functions.layout.write_zorder_clustered, 16 files, fixture-"
-    "keyed + _SUCCESS-guarded so the layout is paid once per "
+    "(functions.layout.write_zorder_clustered, 16 files, a "
+    "sources.readers.fixture_artifact so the layout is paid once per "
     "fixture), then a 2-D box predicate (the middle quarter of BOTH "
     "key domains) runs against the clustered copy.  The hash checks "
     "content parity with the plain-source oracle (clustering is a "
@@ -5432,7 +5424,7 @@ def rel_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..functions.layout import write_zorder_clustered
-    from ..sources.readers import committed_write, fixture_keyed_tmpdir
+    from ..sources.readers import fixture_artifact
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_returnflag", "l_quantity",
@@ -5472,18 +5464,18 @@ def rel_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     klo, khi, plo, phi = (float(v) for v in bounds)
-    dest = fixture_keyed_tmpdir(sf_dir, "lineitem", "kmrc_zorder")
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        committed_write(
-            dest,
-            # reuse the bounds just collected -- write_zorder_clustered
-            # would otherwise re-scan the source for the same min/max
-            # (r10 second review)
-            lambda tmp: write_zorder_clustered(
-                li, tmp, "l_orderkey", "l_partkey", num_files=16,
-                ranges=[(klo, khi), (plo, phi)],
-            ),
-        )
+    dest = fixture_artifact(
+        sf_dir,
+        "lineitem",
+        "kmrc_zorder",
+        # reuse the bounds just collected -- write_zorder_clustered
+        # would otherwise re-scan the source for the same min/max
+        # (r10 second review)
+        lambda tmp: write_zorder_clustered(
+            li, tmp, "l_orderkey", "l_partkey", num_files=16,
+            ranges=[(klo, khi), (plo, phi)],
+        ),
+    )
     clustered = spark.read.parquet(dest)
     # integer bounds (ceil of the exact quarter-fraction doubles):
     # bigint-vs-bigint comparisons stay pushdown-eligible, where a

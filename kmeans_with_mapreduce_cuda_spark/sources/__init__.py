@@ -1,7 +1,6 @@
 from .readers import (  # noqa: F401
     TABLES,
     load_table,
-    load_tables,
     points_from_lineitem,
     points_from_lineitem_cached,
     points_xy,

@@ -223,21 +223,6 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All fixture tables present in ``sf_dir`` -- absent files are
-    SKIPPED, matching register_views' partial-fixture contract (a
-    scale-probe dir carries only the tables its queries read;
-    code-review r10: this used to crash eagerly on the first missing
-    table)."""
-    import os
-
-    return {
-        t: load_table(spark, sf_dir, t)
-        for t in TABLES
-        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
-    }
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all fixture tables as temp views for ``spark.sql``.
 
@@ -318,15 +303,16 @@ def points_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def fixture_keyed_tmpdir(sf_dir: str, table: str, prefix: str) -> str:
     """Deterministic per-fixture scratch path, keyed on the source
     parquet's (size, mtime): a regenerated fixture invalidates
-    naturally and repeated invocations reuse one directory.  Shared by
-    the format round-trip and incremental-rollup queries and the
-    points cache (the kmrc cache idiom).
+    naturally and repeated invocations reuse one directory.  Its
+    consumers are :func:`fixture_artifact` (every write-once layout)
+    and the ORC and CSV round-trip queries, which rewrite on every call
+    because the write is what they test.
 
     Paths live under a per-user 0700 root (``kmrc_u<uid>``) inside the
     system temp dir, and the root's ownership is verified on every
     call: the bare tempdir is world-writable, so a predictable shared
     path there could be pre-planted by another local user and any
-    ``_SUCCESS``-trusting consumer would serve attacker-controlled
+    existence-trusting consumer would serve attacker-controlled
     rows (ADVICE r4).  A pre-existing root owned by someone else
     raises OSError -- consumers either fall back to the uncached path
     (points cache) or fail loudly rather than read foreign data.
@@ -372,13 +358,17 @@ def committed_write(dest: str, write) -> None:
     discarded; if it fails for a NON-race reason the stale aside copy
     is restored and the error RE-RAISED -- the caller must see the
     real failure, not a later missing-path crash (code-review r10).
-    A restored stale dir that was itself half-written lacks _SUCCESS,
-    so the next invocation's guard rebuilds it."""
+    A ``write`` that raises leaves neither ``dest`` nor its sibling
+    behind."""
     import os
     import shutil
 
     tmp = f"{dest}.tmp.{os.getpid()}"
-    write(tmp)
+    try:
+        write(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     doomed: str | None = f"{dest}.old.{os.getpid()}"
     try:
         os.rename(dest, doomed)
@@ -410,33 +400,52 @@ def committed_write(dest: str, write) -> None:
         shutil.rmtree(doomed, ignore_errors=True)
 
 
+def fixture_artifact(sf_dir: str, table: str, prefix: str, write) -> str:
+    """The on-disk twin of :func:`fixture_memo`: the directory
+    ``write(path)`` produces from the current content of ``table`` in
+    ``sf_dir``, written once per fixture content and reused by every
+    later call, in this session or another.
+
+    The path is :func:`fixture_keyed_tmpdir`'s; when it does not exist
+    it is first produced by :func:`committed_write`.  Existing means
+    complete: the commit's rename is the only way the directory
+    appears, so a crashed or failed write leaves nothing to serve.
+    Raises ``OSError`` where :func:`fixture_keyed_tmpdir` does, and
+    whatever ``write`` or the commit raises."""
+    import os
+
+    dest = fixture_keyed_tmpdir(sf_dir, table, prefix)
+    if not os.path.exists(dest):
+        committed_write(dest, write)
+    return dest
+
+
 def points_from_lineitem_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized twin of :func:`points_from_lineitem`.
 
     The id'd points projection carries a global row_number window (a
     single-partition sort) that every parity query would otherwise
-    re-run.  Write it ONCE per fixture dir to a local parquet cache and
-    serve all subsequent reads as a plain parallel scan -- same rows,
-    same ids (the window's total order makes content deterministic), a
-    fraction of the cost.  Cache key includes the lineitem file's
-    (size, mtime) so a regenerated fixture invalidates naturally.
+    re-run.  Write it ONCE per fixture content to a local parquet
+    artifact and serve all subsequent reads as a plain parallel scan --
+    same rows, same ids (the window's total order makes content
+    deterministic), a fraction of the cost.  When the artifact can't
+    be placed or committed (``OSError``), the uncached projection is
+    served instead.
     """
-    import os
-
     try:
-        dest = fixture_keyed_tmpdir(sf_dir, "lineitem", "kmrc_points")
-    except OSError:
-        return points_from_lineitem(spark, sf_dir)
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        # round-robin to a handful of files so the cached scan reads in
-        # parallel (the window's output is one partition)
-        committed_write(
-            dest,
+        dest = fixture_artifact(
+            sf_dir,
+            "lineitem",
+            "kmrc_points",
+            # round-robin to a handful of files so the cached scan reads
+            # in parallel (the window's output is one partition)
             lambda tmp: points_from_lineitem(spark, sf_dir)
             .repartition(8)
             .write.mode("overwrite")
             .parquet(tmp),
         )
+    except OSError:
+        return points_from_lineitem(spark, sf_dir)
     return spark.read.parquet(dest)
 
 

@@ -1,5 +1,5 @@
-"""Session-scoped memo discipline (r10): the erasure fixture memo,
-the SemDeDup build's idle-TTL release, and the tree-walking
+"""Memo discipline (r10): the erasure query's pristine fixture
+artifact, the SemDeDup build's idle-TTL release, and the tree-walking
 fixture_cache_key signature."""
 
 from __future__ import annotations
@@ -10,6 +10,7 @@ from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY, pipeline
 from kmeans_with_mapreduce_cuda_spark.sources.readers import (
     _FIXTURE_MEMO,
     fixture_cache_key,
+    fixture_keyed_tmpdir,
     fixture_memo_drop,
 )
 
@@ -29,18 +30,15 @@ def _tree_sig(root: str) -> dict:
 
 
 def test_erasure_pristine_table_memoized_across_invocations(spark):
-    """Second pipe_user_erasure in one session reuses the pristine
-    partitioned write (VERDICT r9 item 5): the memo dir's files are
+    """Second pipe_user_erasure reuses the pristine partitioned write
+    (VERDICT r9 item 5), a fixture_artifact: the artifact's files are
     byte-untouched and the results agree."""
-    fixture_memo_drop("erasure_pristine")
+    pristine = fixture_keyed_tmpdir(SF_DIR, "events", "kmrc_erasure")
 
     fn = REGISTRY["pipe_user_erasure"].fn
     first = {
         tuple(r) for r in fn(spark, SF_DIR).collect()
     }
-    held = _FIXTURE_MEMO["erasure_pristine"]
-    assert held.key is not None  # servable, not an un-stat-able build
-    pristine = held.value
     sig_before = _tree_sig(pristine)
     assert sig_before  # the pristine table really holds files
 
@@ -48,7 +46,6 @@ def test_erasure_pristine_table_memoized_across_invocations(spark):
     assert second == first
     # no rewrite happened: every pristine file identical by mtime+size
     assert _tree_sig(pristine) == sig_before
-    assert _FIXTURE_MEMO["erasure_pristine"] is held
 
 
 def test_semantic_build_memo_released_after_idle_ttl(spark):

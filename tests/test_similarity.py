@@ -3,6 +3,7 @@ LSH candidate quality)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.operators.dedup import minhash_lsh_pairs
@@ -502,6 +503,32 @@ def test_within_cell_pairs_cap_returns_capped_cells_as_data(spark):
     )
     assert un_pairs.count() == 41 * 40 // 2 + 1
     assert un_capped.count() == 0
+
+
+@pytest.mark.parametrize("id_type", ["string", "bigint"])
+def test_within_cell_pairs_singleton_cell_keeps_id_type(spark, id_type):
+    """A singleton cell's empty kernel output carries the input id
+    type: string ids used to come back as int64 and fail the Arrow
+    conversion.  Only the pairing cell's pair is returned."""
+    from kmeans_with_mapreduce_cuda_spark.operators.similarity import (
+        within_cell_cosine_pairs,
+    )
+
+    vid = str if id_type == "string" else int
+    rows = [
+        (vid(7), [1.0, 0.0, 0.0, 0.0], 1.0, 0),
+        (vid(500), [0.0, 1.0, 0.0, 0.0], 1.0, 1),
+        (vid(501), [0.0, 0.9, 0.1, 0.0], (0.9**2 + 0.1**2) ** 0.5, 1),
+    ]
+    assigned = spark.createDataFrame(
+        rows, f"vec_id {id_type}, emb array<double>, nrm double, cell_id int"
+    )
+    pairs, _ = within_cell_cosine_pairs(
+        assigned, dim=4, threshold=0.35, max_cell=None
+    )
+    assert [(r["vec_a"], r["vec_b"]) for r in pairs.collect()] == [
+        (vid(500), vid(501))
+    ]
 
 
 def test_within_cell_pairs_matches_sql_join(spark):

@@ -52,6 +52,32 @@ def test_aqe_splits_skewed_join_partition(spark):
         assert "skew=true" in plan, plan
 
 
+def test_cap_hot_keys_boundary_report_and_plan(spark):
+    """A key with exactly max_n rows is kept; one with max_n + 1 is
+    dropped and reported with its count; the drop is a broadcast
+    left-anti join; max_n=None keeps every row and reports nothing,
+    with the same (key, n_col) columns."""
+    from kmeans_with_mapreduce_cuda_spark.operators.skew import cap_hot_keys
+
+    rows = [("edge", i) for i in range(3)] + [("hot", i) for i in range(4)]
+    df = spark.createDataFrame(rows + [("cold", 0)], "k string, v int")
+
+    kept, capped = cap_hot_keys(df, "k", 3)
+    # planned before any action, with auto-broadcast off: only the
+    # helper's own hint can broadcast
+    with pinned_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert sorted(r["k"] for r in kept.collect()) == ["cold"] + ["edge"] * 3
+    assert capped.columns == ["k", "n"]
+    assert [tuple(r) for r in capped.collect()] == [("hot", 4)]
+
+    kept, capped = cap_hot_keys(df, "k", None, n_col="n_docs")
+    assert sorted(map(tuple, kept.collect())) == sorted(map(tuple, df.collect()))
+    assert capped.columns == ["k", "n_docs"]
+    assert capped.count() == 0
+
+
 def test_minhash_lsh_bucket_cap_bounds_hot_band(spark):
     """Synthetic hot band: 60 identical boilerplate docs collide on
     every band key.  Uncapped, they alone emit 60*59/2 = 1770 pairs;

@@ -628,3 +628,108 @@ def test_points_sink_refuses_null_coordinates(spark, tmp_path):
         df.write.format("points_text").option("path", dest).mode(
             "append"
         ).save()
+
+
+def _artifact_scratch(tmp_path, monkeypatch):
+    """A private temp dir for fixture artifacts, and a one-table
+    fixture dir whose ``t.parquet`` stands in for a source table."""
+    import tempfile
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "t.parquet").write_bytes(b"source bytes")
+    return str(scratch), str(sf)
+
+
+def test_fixture_artifact_writes_once_per_fixture_content(tmp_path, monkeypatch):
+    """A second call serves the committed directory without calling
+    ``write``; touching the source keys a new directory and a new
+    write."""
+    from kmeans_with_mapreduce_cuda_spark.sources.readers import fixture_artifact
+
+    _scratch, sf = _artifact_scratch(tmp_path, monkeypatch)
+    calls = []
+
+    def write(path: str) -> None:
+        calls.append(path)
+        os.makedirs(path)
+        with open(os.path.join(path, "part-0"), "w") as f:
+            f.write("rows")
+
+    a = fixture_artifact(sf, "t", "kmrc_test", write)
+    assert os.listdir(a) == ["part-0"] and len(calls) == 1
+    assert fixture_artifact(sf, "t", "kmrc_test", write) == a
+    assert len(calls) == 1
+
+    os.utime(os.path.join(sf, "t.parquet"), ns=(1, 1))
+    b = fixture_artifact(sf, "t", "kmrc_test", write)
+    assert b != a and len(calls) == 2
+    assert os.listdir(b) == ["part-0"]
+
+
+def test_fixture_artifact_failed_write_leaves_nothing(tmp_path, monkeypatch):
+    """A ``write`` that raises leaves no directory behind, neither the
+    artifact nor its temporary sibling, so the next call writes."""
+    import pytest
+
+    from kmeans_with_mapreduce_cuda_spark.sources.readers import (
+        fixture_artifact,
+        fixture_keyed_tmpdir,
+    )
+
+    _scratch, sf = _artifact_scratch(tmp_path, monkeypatch)
+
+    def half_then_fail(path: str) -> None:
+        os.makedirs(path)
+        with open(os.path.join(path, "part-0"), "w") as f:
+            f.write("half")
+        raise RuntimeError("disk full")
+
+    with pytest.raises(RuntimeError, match="disk full"):
+        fixture_artifact(sf, "t", "kmrc_test", half_then_fail)
+    dest = fixture_keyed_tmpdir(sf, "t", "kmrc_test")
+    assert os.listdir(os.path.dirname(dest)) == []
+
+    calls = []
+
+    def write(path: str) -> None:
+        calls.append(path)
+        os.makedirs(path)
+
+    assert fixture_artifact(sf, "t", "kmrc_test", write) == dest
+    assert len(calls) == 1 and os.path.isdir(dest)
+
+
+def test_points_cache_falls_back_when_scratch_root_is_a_symlink(
+    spark, tmp_path, monkeypatch
+):
+    """A pre-planted symlink at the per-user scratch root makes
+    fixture_artifact raise OSError before anything is written, and
+    points_from_lineitem_cached then serves the uncached projection:
+    the same rows, with nothing written behind the link."""
+    import pytest
+
+    from kmeans_with_mapreduce_cuda_spark.sources.readers import (
+        fixture_artifact,
+        points_from_lineitem,
+        points_from_lineitem_cached,
+    )
+
+    scratch, _sf = _artifact_scratch(tmp_path, monkeypatch)
+    planted = tmp_path / "planted"
+    planted.mkdir()
+    uid = os.getuid() if hasattr(os, "getuid") else 0
+    os.symlink(planted, os.path.join(scratch, f"kmrc_u{uid}"))
+
+    def never(path: str) -> None:
+        raise AssertionError("write must not run")
+
+    with pytest.raises(OSError, match="not a real directory"):
+        fixture_artifact(SF_DIR, "lineitem", "kmrc_points", never)
+    got = points_from_lineitem_cached(spark, SF_DIR)
+    want = points_from_lineitem(spark, SF_DIR)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert os.listdir(planted) == []
