@@ -2,9 +2,8 @@ from .distance import (  # noqa: F401
     cosine_similarity,
     dot_product,
     l2_norm,
-    sq_dist_arrays,
 )
-from .hashing import md5_long, minhash_signature, stable_sample_key  # noqa: F401
+from .hashing import md5_long, stable_sample_key  # noqa: F401
 from .text import (  # noqa: F401
     punct_ratio,
     stopword_ratio,

@@ -20,16 +20,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def sq_dist_arrays(a: Column | str, b: Column | str) -> Column:
-    """Squared Euclidean distance between two array<double> columns."""
-    a, b = _c(a), _c(b)
-    return F.aggregate(
-        F.zip_with(a, b, lambda p, q: (p - q) * (p - q)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def dot_product(a: Column | str, b: Column | str) -> Column:
     a, b = _c(a), _c(b)
     return F.aggregate(

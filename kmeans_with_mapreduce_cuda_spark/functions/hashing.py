@@ -50,65 +50,25 @@ def stable_sample_key(col: Column | str, seed: int = 42) -> Column:
 #: modulus of the universal hash family: smallest prime > 2^32.
 MINHASH_P = 4294967311
 
+#: MinHash/LSH geometry, read by the dedup operators and their DuckDB
+#: oracles alike -- the banding split decides which candidate pairs
+#: exist, so an operator and its oracle must never hold separate copies:
+#: 16 hashes in 8 bands of 2 rows over word 3-gram shingles, md5 salted
+#: with the seed.
+MINHASH_NUM_HASHES = 16
+MINHASH_BANDS = 8
+MINHASH_SHINGLE_N = 3
+MINHASH_SEED = 42
 
-def minhash_params(num_hashes: int = 16, seed: int = 42) -> list[tuple[int, int]]:
+
+def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     """Seeded (a_i, b_i) coefficients for the affine family
     ``h_i(x) = (a_i * x + b_i) mod P``.  a_i < 2^20 keeps
     ``a_i * x`` under 2^52 -- no bigint overflow in any engine."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(MINHASH_SEED)
     return [
         (rng.randrange(1, 1 << 20), rng.randrange(0, MINHASH_P))
         for _ in range(num_hashes)
     ]
-
-
-def minhash_base(shingles: Column | str, seed: int = 42) -> Column:
-    """ONE md5 per shingle -> array<bigint> of base hash values in
-    [0, 2^32).  Project this to its own column before deriving the
-    signature: inlined into all num_hashes signature rows it bloats the
-    generated code (and its Janino compile time) ~16x."""
-    return F.transform(
-        _c(shingles),
-        lambda s: F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"mh{seed}:"), s)), 1, 8), 16, 10
-        ).cast("bigint"),
-    )
-
-
-def minhash_sig_from_base(
-    base: Column | str, num_hashes: int = 16, seed: int = 42
-) -> Column:
-    """Signature from the projected base array: row i is
-    ``min_x (a_i * x + b_i) mod P`` -- num_hashes cheap integer
-    transforms, no further string hashing (the textbook universal-hash
-    MinHash construction)."""
-    arr = _c(base)
-
-    def affine(a: int, b: int):
-        # a factory, not a default-arg lambda -- PySpark treats 2+-param
-        # lambdas as (element, index), which would clobber the coefficients
-        return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P)
-
-    sig = [
-        F.array_min(F.transform(arr, affine(a, b)))
-        for a, b in minhash_params(num_hashes, seed)
-    ]
-    return F.array(*sig)
-
-
-def minhash_signature(
-    shingles: Column | str, num_hashes: int = 16, seed: int = 42
-) -> Column:
-    """Single-Column convenience wrapper; prefer the two-step
-    minhash_base -> minhash_sig_from_base projection, which hashes and
-    compiles the md5 pass once.
-
-    Short-doc contract: over an EMPTY shingle array this yields a
-    null-element signature (array_min of empty is null) -- the row is
-    kept.  The explode/groupBy path ``operators.dedup.minhash_signatures``
-    instead DROPS such docs entirely (no rows to aggregate).  Both mean
-    "no dedup candidate"; pick per call site and left-join ids back if
-    every doc must be represented."""
-    return minhash_sig_from_base(minhash_base(shingles, seed), num_hashes, seed)

@@ -88,7 +88,6 @@ def write_zorder_clustered(
     path: str,
     *cols: str,
     num_files: int = 16,
-    bits: int = 8,
     ranges: list[tuple[float, float]] | None = None,
 ) -> None:
     """Write parquet tiled by the Z-order key of ``cols`` (2+ columns):
@@ -116,7 +115,7 @@ def write_zorder_clustered(
             for j in range(len(cols))
         ]
     assert len(ranges) == len(cols)
-    key = zorder_key(list(cols), ranges, bits)
+    key = zorder_key(list(cols), ranges)
     (
         df.withColumn("_zkey", key)
         .repartitionByRange(num_files, "_zkey")

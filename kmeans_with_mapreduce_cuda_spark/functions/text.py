@@ -63,10 +63,10 @@ def punct_ratio(text: Column | str) -> Column:
     return (F.length(t) - F.length(stripped)) / F.greatest(F.length(t), F.lit(1))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang``."""
+def stopword_ratio(text: Column | str) -> Column:
+    """Fraction of tokens that are English stopwords."""
     toks = tokens(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
+    sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return hits / F.greatest(F.size(toks), F.lit(1))
 
@@ -77,27 +77,27 @@ def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
 #: order-free in every engine.
 QC_WEIGHTS = [((b * 2654435761 + 12345) % 997) - 498 for b in range(16)]
 
+#: md5 salt of the classifier's token hashes, shared with the DuckDB
+#: oracles of every query that scores with it.
+QC_SALT = "qc:"
 
-def hashed_linear_margin(
-    text: Column | str,
-    weights: list[int] = QC_WEIGHTS,
-    salt: str = "qc:",
-) -> Column:
+
+def hashed_linear_margin(text: Column | str) -> Column:
     """Integer margin of a hashed linear classifier: each token hashes
-    (md5, engine-portable) into one of ``len(weights)`` buckets and the
+    (md5, engine-portable) into one of the ``QC_WEIGHTS`` buckets and the
     bucket's milli-weight is summed -- an exact bigint fold, so the
     value is reproducible regardless of evaluation order.  Normalize
     with ``margin / (1000.0 * size(tokens(text)))`` for a mean score;
     the division is a single IEEE op and stays bit-identical across
     engines (see pipe_quality_classifier).
     """
-    n = len(weights)
-    warr = F.array(*[F.lit(w) for w in weights])
+    n = len(QC_WEIGHTS)
+    warr = F.array(*[F.lit(w) for w in QC_WEIGHTS])
 
     def bucket_weight(tok: Column) -> Column:
         b = (
             F.conv(
-                F.substring(F.md5(F.concat(F.lit(salt), tok)), 1, 8), 16, 10
+                F.substring(F.md5(F.concat(F.lit(QC_SALT), tok)), 1, 8), 16, 10
             ).cast("bigint")
             % n
         )

@@ -8,7 +8,8 @@ Scale design:
 - MinHash/LSH: per-doc signature is a narrow projection (md5 + ARRAY_MIN
   higher-order exprs, fully codegen'd); the only shuffle is the band-key
   self-join, whose fan-out is bounded by band collisions -- the standard
-  LSH trade: recall vs candidate count via (num_hashes, bands).
+  LSH trade: recall vs candidate count via the hash and band counts
+  (``functions.hashing.MINHASH_NUM_HASHES`` / ``MINHASH_BANDS``).
 - All hashes are md5-derived so results are engine-portable and
   oracle-checkable (functions/hashing.py).
 """
@@ -21,12 +22,9 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import hashing
 from ..functions.text import tokens, word_shingles
 from .skew import cap_hot_keys
-
-#: default MinHash geometry: 16 hashes in 8 bands of 2 rows.
-NUM_HASHES = 16
-NUM_BANDS = 8
 
 #: default per-band bucket cap: a band key shared by more than this many
 #: docs is treated as degenerate (boilerplate collision) and excluded
@@ -71,11 +69,11 @@ def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = NUM_HASHES,
-    shingle_n: int = 3,
-    seed: int = 42,
+    num_hashes: int = hashing.MINHASH_NUM_HASHES,
 ) -> DataFrame:
-    """Per-doc MinHash signature -> (id, sig: array<bigint>[num_hashes]).
+    """Per-doc MinHash signature -> (id, sig: array<bigint>[num_hashes])
+    over word ``MINHASH_SHINGLE_N``-gram shingles, md5 salted with
+    ``MINHASH_SEED`` (``functions/hashing.py``).
 
     Explode -> scalar md5 -> groupBy(min x num_hashes): every expression
     is a plain codegen'd scalar (no higher-order lambdas, which evaluate
@@ -84,16 +82,13 @@ def minhash_signatures(
     16-long partial row per (doc, partition).  Shingle dedup is skipped
     on purpose: duplicates cannot change a min.
 
-    Short-doc contract: a document with fewer than ``shingle_n`` tokens
-    has no shingles, so explode emits no rows and the doc is ABSENT from
-    the output -- it has no signature and is never an LSH dedup
-    candidate.  (The array-column wrapper
-    ``functions.hashing.minhash_signature`` differs: over an empty
-    shingle array it yields a null-element signature row.  Callers that
-    need every doc represented should left-join doc ids back onto this
-    output and treat missing as "no candidate".)
+    Short-doc contract: a document with fewer than ``MINHASH_SHINGLE_N``
+    tokens has no shingles, so explode emits no rows and the doc is
+    ABSENT from the output -- it has no signature and is never an LSH
+    dedup candidate.  Callers that need every doc represented should
+    left-join doc ids back onto this output and treat missing as "no
+    candidate".
     """
-    from ..functions.hashing import MINHASH_P, minhash_params
     from ..sources.readers import spread_scan
 
     # Shingle explode + per-shingle md5 is the expensive narrow stage of
@@ -102,16 +97,20 @@ def minhash_signatures(
     # the session's cores first.  No-op whenever the source already
     # offers >= defaultParallelism splits (any real corpus).
     ex = spread_scan(df).select(
-        id_col, F.explode(word_shingles(text_col, shingle_n)).alias("_s")
+        id_col,
+        F.explode(word_shingles(text_col, hashing.MINHASH_SHINGLE_N)).alias("_s"),
     )
+    salt = f"mh{hashing.MINHASH_SEED}:"
     x = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"mh{seed}:"), F.col("_s"))), 1, 8),
+        F.substring(F.md5(F.concat(F.lit(salt), F.col("_s"))), 1, 8),
         16,
         10,
     ).cast("bigint")
     aggs = [
-        F.min((F.lit(a) * F.col("_x") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"_h{j}")
-        for j, (a, b) in enumerate(minhash_params(num_hashes, seed))
+        F.min(
+            (F.lit(a) * F.col("_x") + F.lit(b)) % F.lit(hashing.MINHASH_P)
+        ).alias(f"_h{j}")
+        for j, (a, b) in enumerate(hashing.minhash_params(num_hashes))
     ]
     return (
         ex.select(id_col, x.alias("_x"))
@@ -123,21 +122,15 @@ def minhash_signatures(
     )
 
 
-def _minhash_banded(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    seed: int,
-) -> DataFrame:
+def _minhash_banded(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, sig, bk) per (doc, band): each doc's MinHash signature
-    exploded into ``bands`` band keys bk = (band, h0..h{r-1}), r =
-    num_hashes / bands -- the one shuffle key of both LSH joins."""
+    exploded into ``MINHASH_BANDS`` band keys bk = (band, h0..h{r-1}),
+    r = MINHASH_NUM_HASHES / MINHASH_BANDS -- the one shuffle key of
+    both LSH joins."""
+    num_hashes, bands = hashing.MINHASH_NUM_HASHES, hashing.MINHASH_BANDS
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, seed)
+    sig = minhash_signatures(df, text_col, id_col, num_hashes)
     band_structs = F.array(
         *[
             F.struct(
@@ -156,18 +149,16 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = NUM_HASHES,
-    bands: int = NUM_BANDS,
-    shingle_n: int = 3,
-    seed: int = 42,
     max_bucket: int | None = MAX_BAND_BUCKET,
 ) -> LshPairs:
     """LSH candidate pairs + signature-estimated Jaccard.
 
-    Banding: signature split into ``bands`` bands of r = num_hashes/bands
-    rows; docs colliding on any full band become a candidate pair.  The
-    self-join key is (band_idx, band values) so each band is one shuffle
-    key -- no all-pairs comparison anywhere.
+    Banding: signature split into ``MINHASH_BANDS`` bands of
+    r = MINHASH_NUM_HASHES / MINHASH_BANDS rows (``functions/hashing.py``,
+    shared with the DuckDB oracles); docs colliding on any full band
+    become a candidate pair.  The self-join key is (band_idx, band
+    values) so each band is one shuffle key -- no all-pairs comparison
+    anywhere.
 
     Skew guard: within-bucket pair output is quadratic in bucket size,
     so a single boilerplate-heavy band key (every page sharing a footer)
@@ -196,9 +187,7 @@ def minhash_lsh_pairs(
     # grouped pair expansion cannot start before that broadcast -- so
     # the dedicated fill job is a pure extra pass now and is removed
     # (measured r11: ~0.2-0.4 s off every minhash-family key).
-    banded = _minhash_banded(
-        df, text_col, id_col, num_hashes, bands, shingle_n, seed
-    ).persist()
+    banded = _minhash_banded(df, text_col, id_col).persist()
     joinable, capped = cap_hot_keys(banded, "bk", max_bucket, "n_docs")
 
     # Per-bucket pair expansion instead of the banded SELF-JOIN (r11):
@@ -240,7 +229,9 @@ def minhash_lsh_pairs(
     out = pairs.select(
         "doc_a",
         "doc_b",
-        F.round(agree.cast("double") / num_hashes, 6).alias("est_jaccard"),
+        F.round(
+            agree.cast("double") / hashing.MINHASH_NUM_HASHES, 6
+        ).alias("est_jaccard"),
     )
     return LshPairs(pairs=out, deps=[banded], capped_buckets=capped)
 
@@ -250,10 +241,6 @@ def minhash_cross_pairs(
     ref_df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = NUM_HASHES,
-    bands: int = NUM_BANDS,
-    shingle_n: int = 3,
-    seed: int = 42,
     max_bucket: int | None = MAX_BAND_BUCKET,
 ) -> LshPairs:
     """Cross-corpus LSH near-dup candidates: every ``new_df`` document
@@ -277,8 +264,7 @@ def minhash_cross_pairs(
     Returns :class:`LshPairs` with ``pairs`` = (new_doc, ref_doc,
     est_jaccard); ``deps`` must be unpersisted after materializing.
     """
-    geometry = (text_col, id_col, num_hashes, bands, shingle_n, seed)
-    banded_ref = _minhash_banded(ref_df, *geometry).persist()
+    banded_ref = _minhash_banded(ref_df, text_col, id_col).persist()
     # No eager fill needed (r11, the minhash_lsh_pairs rationale): the
     # reference side of the pair join is gated on broadcast(capped),
     # whose build runs sizes over the cold cache first -- one pass,
@@ -288,7 +274,7 @@ def minhash_cross_pairs(
     # materializes ``capped_buckets`` runs the ungated sizes branch
     # against the cold cache: a recompute, never a wrong answer).
     # Every current caller passes max_bucket and reads only pairs.
-    banded_new = _minhash_banded(new_df, *geometry)
+    banded_new = _minhash_banded(new_df, text_col, id_col)
     joinable_ref, capped = cap_hot_keys(banded_ref, "bk", max_bucket, "n_docs")
 
     n, x = banded_new.alias("n"), joinable_ref.alias("x")
@@ -314,12 +300,17 @@ def minhash_cross_pairs(
         "ref_doc",
         # exact rational (<=num_hashes integer / constant): emitted
         # unrounded per the registry float discipline
-        (agree.cast("double") / num_hashes).alias("est_jaccard"),
+        (agree.cast("double") / hashing.MINHASH_NUM_HASHES).alias("est_jaccard"),
     )
     return LshPairs(pairs=out, deps=[banded_ref], capped_buckets=capped)
 
 
-def token_hashes(text_col: str = "text", salt: str = "sh:") -> Column:
+#: md5 salt of the SimHash token hashes, shared by the Spark and DuckDB
+#: recipes below.
+SIMHASH_SALT = "sh:"
+
+
+def token_hashes(text_col: str = "text") -> Column:
     """md5-derived 32-bit hash per whitespace token -> array<bigint>.
     Project this ONCE, then derive SimHash bits from the array (hashing is
     the expensive part; the 16 bit-sums reuse the projected array).
@@ -327,7 +318,7 @@ def token_hashes(text_col: str = "text", salt: str = "sh:") -> Column:
     return F.transform(
         tokens(text_col),
         lambda t: F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt), t)), 1, 8), 16, 10
+            F.substring(F.md5(F.concat(F.lit(SIMHASH_SALT), t)), 1, 8), 16, 10
         ).cast("bigint"),
     )
 
@@ -364,10 +355,10 @@ def simhash16_sql(hashes_expr: str) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-def token_hashes_sql(text_expr: str = "text", salt: str = "sh:") -> str:
+def token_hashes_sql(text_expr: str = "text") -> str:
     """DuckDB twin of :func:`token_hashes`."""
     toks = f"regexp_split_to_array(trim(lower({text_expr})), '\\s+')"
-    h = f"CAST(('0x' || substr(md5('{salt}' || t), 1, 8)) AS BIGINT)"
+    h = f"CAST(('0x' || substr(md5('{SIMHASH_SALT}' || t), 1, 8)) AS BIGINT)"
     return f"[ {h} FOR t IN {toks} ]"
 
 
@@ -742,16 +733,14 @@ def cdc_chunk_stats(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    boundary_mod: int = 8,
-    salt: str = "cdc:",
 ) -> DataFrame:
     """Passage-level exact dedup via CONTENT-DEFINED chunking (the CCNet/
-    rsync idea): a token starts a new chunk when its md5 bucket
-    ``% boundary_mod == 0``, so chunk boundaries are a function of the
+    rsync idea): a token starts a new chunk when its md5('cdc:' || token)
+    bucket ``% 8 == 0``, so chunk boundaries are a function of the
     CONTENT, not of position -- inserting one word near the top of a
     document re-chunks only the chunk it lands in, unlike fixed-width
     windows where every downstream passage shifts.  Expected chunk
-    length = ``boundary_mod`` words.
+    length = 8 words.
 
     Returns one row per document: (id, n_chunks, dup_chunks, dup_ratio)
     where a chunk counts as duplicated when its exact text occurs in at
@@ -776,9 +765,9 @@ def cdc_chunk_stats(
     )
     bucket = (
         F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt), F.col("w"))), 1, 8), 16, 10
+            F.substring(F.md5(F.concat(F.lit("cdc:"), F.col("w"))), 1, 8), 16, 10
         ).cast("bigint")
-        % boundary_mod
+        % 8
     )
     flagged = words.withColumn("b", (bucket == 0).cast("int"))
     run = (

@@ -13,11 +13,11 @@ DataFrames, with the per-round D2H boundary being nothing at all
 (ranks stay distributed; only the final top-k crosses to the driver).
 
 Determinism contract: every quantity is an exact BIGINT.  Rank mass
-is scaled by ``scale`` (default 1e12) and every division is integer
+is scaled by ``SCALE`` (1e12) and every division is integer
 floor division in a fixed documented order, so two independent
 engines (Spark and the DuckDB oracle) produce bit-identical ranks --
 no float summation-order hazard, ever.  The probability
-interpretation is ``rank_scaled / scale``; truncation loses < 1e-12
+interpretation is ``rank_scaled / SCALE``; truncation loses < 1e-12
 of mass per division, irrelevant for ranking and worth it for exact
 cross-engine checkability (same trade as the cents-based money
 aggregates, see plans/registry.py float policy).
@@ -32,14 +32,22 @@ from pyspark.sql import functions as F
 
 from .dedup import _CheckpointHandle, _release_local_checkpoint
 
-#: default rank-mass scale: 1.0 of probability mass == 10**12.
+#: rank-mass scale: 1.0 of probability mass == 10**12.
 SCALE = 10**12
+
+#: PageRank damping in percent and default round count; the rel_pagerank
+#: query and its DuckDB oracle read both from here.
+DAMPING_PCT = 85
+PAGERANK_ITERS = 3
+
+#: bounded-BFS rounds of the rel_graph_bfs query and its oracle.
+BFS_ROUNDS = 3
 
 
 class PageRanks(NamedTuple):
     """Result of :func:`pagerank_int`.
 
-    ranks   (node, rank_scaled) DataFrame; ``rank_scaled / scale`` is
+    ranks   (node, rank_scaled) DataFrame; ``rank_scaled / SCALE`` is
             the PageRank probability
     deps    release handles the caller must ``unpersist()`` after
             materializing ``ranks`` (same contract as
@@ -54,9 +62,7 @@ def pagerank_int(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    iters: int = 3,
-    scale: int = SCALE,
-    damping_pct: int = 85,
+    iters: int = PAGERANK_ITERS,
 ) -> PageRanks:
     """Fixed-iteration PageRank with exact integer arithmetic.
 
@@ -66,8 +72,8 @@ def pagerank_int(
     job, and what the gate query does).  Per iteration::
 
         contrib(u)  = rank(u) DIV outdeg(u)
-        rank'(v)    = base + (damping_pct * SUM contrib over in-edges) DIV 100
-        base        = ((100 - damping_pct) * (scale DIV n_nodes)) DIV 100
+        rank'(v)    = base + (DAMPING_PCT * SUM contrib over in-edges) DIV 100
+        base        = ((100 - DAMPING_PCT) * (SCALE DIV n_nodes)) DIV 100
 
     All operations are BIGINT; the division order above IS the
     cross-engine contract (the DuckDB oracle states the same
@@ -96,8 +102,8 @@ def pagerank_int(
     if n == 0:
         ed.unpersist()
         raise ValueError("pagerank_int: edge list is empty (no nodes)")
-    spn = scale // n
-    base = (100 - damping_pct) * spn // 100
+    spn = SCALE // n
+    base = (100 - DAMPING_PCT) * spn // 100
 
     ranks = deg.select(
         F.col("src").alias("node"),
@@ -122,7 +128,7 @@ def pagerank_int(
                     "node",
                     (
                         F.lit(base).cast("bigint")
-                        + F.expr(f"({damping_pct} * coalesce(s, 0L)) DIV 100")
+                        + F.expr(f"({DAMPING_PCT} * coalesce(s, 0L)) DIV 100")
                     ).alias("rank_scaled"),
                 )
                 .localCheckpoint(eager=True)
@@ -148,10 +154,9 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    rounds: int = 3,
 ) -> PageRanks:
     """Bounded-hop BFS: minimum hop count from the ``seeds`` node set,
-    expanded for exactly ``rounds`` rounds (nodes further than that
+    expanded for exactly ``BFS_ROUNDS`` rounds (nodes further than that
     stay absent -- the frontier semantics a crawl scheduler or
     blast-radius query wants).  Per round one shuffle join (edges x
     current distances) + one min-aggregate -- the same Pregel envelope
@@ -171,7 +176,7 @@ def bfs_hops(
         .localCheckpoint(eager=True)
     )
     try:
-        for r in range(rounds):
+        for r in range(BFS_ROUNDS):
             # Expand only the FRONTIER (nodes first reached last round:
             # hops == r), not the whole reached set: a node with
             # hops < r already sent its (hops+1) messages in an earlier

@@ -176,8 +176,8 @@ def _dists_sql_nd(centroids: CentroidsND, feats: str) -> str:
     """n-D literal distance-array as ONE SQL string over a pre-cast
     array<double> column ``feats``.
 
-    Same zip_with/aggregate fold as functions.distance.sq_dist_arrays
-    (identical float addition order -> bit-identical results), but
+    A zip_with/aggregate fold of the squared differences in dimension
+    order (the float addition order every n-D distance here uses), but
     rendered as SQL text: the Column-API formulation costs ~k*dim py4j
     round trips per plan build (~0.8 s for k=8, dim=64 before a single
     row moves); one parse is JVM-side and ~free.  Measured: build
@@ -541,12 +541,12 @@ def lloyd_nd(
     points: DataFrame,
     init: CentroidsND,
     max_iter: int = 20,
-    tol: float = 1e-6,
     features: str = "embedding",
 ) -> list[list[float]]:
-    """n-D Lloyd loop over an array column (see _lloyd)."""
+    """n-D Lloyd loop over an array column (see _lloyd), stopping early
+    once no centroid moves more than 1e-6."""
     step = partial(_step_sql_nd, dim=len(init[0]), features=features)
-    return [list(c) for c in _lloyd(points, init, max_iter, tol, step, (features,))]
+    return [list(c) for c in _lloyd(points, init, max_iter, 1e-6, step, (features,))]
 
 
 def sse_2d(

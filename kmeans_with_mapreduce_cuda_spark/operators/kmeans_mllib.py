@@ -34,9 +34,8 @@ def fit_kmeans(
     max_iter: int = 20,
     tol: float = 1e-4,
     seed: int = 42,
-    init_mode: str = "k-means||",
 ) -> KMeansResult:
-    """Fit MLlib KMeans on an array<float/double> column.
+    """Fit MLlib KMeans (k-means|| init) on an array<float/double> column.
 
     ``array_to_vector`` is a JVM expression (not a UDF), so the
     array->Vector bridge adds no Python round-trip.
@@ -45,7 +44,7 @@ def fit_kmeans(
         array_to_vector(F.col(features).cast("array<double>")).alias("features")
     )
     km = KMeans(
-        k=k, maxIter=max_iter, tol=tol, seed=seed, initMode=init_mode,
+        k=k, maxIter=max_iter, tol=tol, seed=seed, initMode="k-means||",
         featuresCol="features",
     )
     model = km.fit(vecs)

@@ -1,11 +1,9 @@
 """Multimodal columns: image/audio/video payloads as opaque ``binary``
 columns with typed metadata, plus Arrow-batched feature extraction.
 
-The DECODE step is a deterministic stub by default (the supported,
-oracle-checked path regardless of installed codecs); the real-codec
-path is an explicit ``use_real_codec=True`` opt-in that raises
-``NotImplementedError`` at call time.  Everything Spark-side is real
-and tested: schema, partitioning, the mapInPandas batch shape, and the
+The DECODE step is a deterministic stub (the oracle-checked path,
+independent of installed codecs).  Everything Spark-side is real and
+tested: schema, partitioning, the mapInPandas batch shape, and the
 JVM-side metadata/magic-byte path.
 
 Scale notes: payload bytes never enter a shuffle -- metadata extraction
@@ -32,31 +30,6 @@ from pyspark.sql.types import (
 )
 
 FEATURE_DIM = 16
-
-try:  # the real decoder would be PIL/libvips; absent in this container
-    from PIL import Image  # noqa: F401
-
-    HAS_IMAGE_CODEC = True
-except ImportError:
-    HAS_IMAGE_CODEC = False
-
-
-def _require_real_codec(op: str) -> None:
-    """Gate for the (unimplemented) real-codec path.
-
-    The stub path is always available and always deterministic -- it is
-    the oracle-checked contract, independent of whether PIL happens to
-    be installed.  Callers opt into the real path explicitly with
-    ``use_real_codec=True``; that path is not implemented yet, so the
-    failure is loud and at call time (driver side), never inside an
-    Arrow batch on a worker."""
-    raise NotImplementedError(
-        f"{op}: use_real_codec=True requested but the real codec path is "
-        "not implemented (codec "
-        + ("present" if HAS_IMAGE_CODEC else "absent")
-        + " in this environment); the deterministic stub is the supported "
-        "path -- call with use_real_codec=False"
-    )
 
 
 def sniff_media_type(payload: Column | str) -> Column:
@@ -112,26 +85,20 @@ DECODE_SCHEMA = StructType(
 def decode_and_featurize(
     df: DataFrame,
     payload_col: str = "payload",
-    use_real_codec: bool = False,
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow batches).
 
-    Default path is a DETERMINISTIC STUB: width/height derived from the
+    The decode is a DETERMINISTIC STUB: width/height derived from the
     byte length, features = a rolling-hash byte histogram.  A real codec
-    (PIL/libvips) would slot in behind ``use_real_codec=True`` -- that
-    path is not implemented, and requesting it raises at call time (see
-    ``_require_real_codec``).  The Spark-side contract (schema, batching,
-    partition-parallelism) is identical either way.
+    (PIL/libvips) would keep the same Spark-side contract (schema,
+    batching, partition-parallelism).
 
     ``id_col`` names the passthrough identifier column -- payload tables
     key on whatever the ingest produced (doc_id, asset path from the
     binaryFile source, ...); the output schema renames it to ``doc_id``
     with the id's own type preserved.
     """
-    if use_real_codec:
-        _require_real_codec("decode_and_featurize")
-
     id_type = df.schema[id_col].dataType
     out_schema = StructType(
         [StructField("doc_id", id_type), *DECODE_SCHEMA.fields[1:]]
@@ -185,16 +152,13 @@ RESIZE_SCHEMA = StructType(
 
 def resize_images(
     df: DataFrame, max_side: int = 256, payload_col: str = "payload",
-    use_real_codec: bool = False,
 ) -> DataFrame:
-    """Resize via mapInPandas.  Default STUB codec: emits a payload of
+    """Resize via mapInPandas.  STUB codec: emits a payload of
     exactly ``greatest(1, floor(n * scale^2))`` bytes (truncated, then
     null-padded -- so an empty/None input still yields the 1 byte the
-    metadata promises), deterministic.  The contract a real codec slots
-    into (``use_real_codec=True``, unimplemented) -- binary in, binary
-    out, metadata columns updated, Arrow batches, no shuffle."""
-    if use_real_codec:
-        _require_real_codec("resize_images")
+    metadata promises), deterministic.  The contract a real codec would
+    keep -- binary in, binary out, metadata columns updated, Arrow
+    batches, no shuffle."""
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -237,7 +201,7 @@ FRAME_SCHEMA = StructType(
 
 def sample_frames(
     df: DataFrame, every_n_bytes: int = 64, max_frames: int = 8,
-    payload_col: str = "payload", use_real_codec: bool = False,
+    payload_col: str = "payload",
 ) -> DataFrame:
     """Frame sampling via mapInPandas: one input row (a 'video' payload)
     -> up to max_frames output rows.  STUB codec: deterministic
@@ -245,8 +209,6 @@ def sample_frames(
     multi-emit contract (1 row in, N rows out through Arrow) is the
     real thing -- the reference mapper's NUM_PAIRS slots (config.cuh:13)
     generalized to a data-dependent count."""
-    if use_real_codec:
-        _require_real_codec("sample_frames")
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -272,7 +234,7 @@ def sample_frames(
 
 
 def decode_and_featurize_arrow(
-    df: DataFrame, payload_col: str = "payload", use_real_codec: bool = False
+    df: DataFrame, payload_col: str = "payload"
 ) -> DataFrame:
     """Arrow-native twin of :func:`decode_and_featurize` via
     ``mapInArrow``: consumes/produces ``pyarrow.RecordBatch`` directly,
@@ -286,8 +248,6 @@ def decode_and_featurize_arrow(
     the pandas path (asserted in tests/test_multimodal.py); the same
     deterministic stub codec applies.
     """
-    if use_real_codec:
-        _require_real_codec("decode_and_featurize_arrow")
 
     def batches(it: Iterator) -> Iterator:
         import numpy as np

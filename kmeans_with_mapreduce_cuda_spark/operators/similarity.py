@@ -27,22 +27,18 @@ def brute_force_topk(
     q_features: str = "q_emb",
     id_col: str = "vec_id",
     q_id_col: str = "q_id",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query side, JVM-side dot
     products, window top-k with (similarity desc, id) tie order.
 
-    ``exclude_self`` (default True) drops candidates whose ``id_col``
-    equals the query's ``q_id_col`` -- correct when queries ARE corpus
-    rows (the gate fixtures: a vector's trivial self-match is noise).
-    Pass False when the query id space is unrelated to the corpus id
-    space, where the filter would silently drop a true neighbor that
-    merely shares an id value (code-review r10)."""
+    Candidates whose ``id_col`` equals the query's ``q_id_col`` are
+    dropped: queries ARE corpus rows (a vector's trivial self-match is
+    noise), so the query ids must share the corpus id space."""
     sim = cosine_similarity(q_features, features)
     w = Window.partitionBy(q_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
-    out = candidates.crossJoin(F.broadcast(queries))
-    if exclude_self:
-        out = out.where(F.col(q_id_col) != F.col(id_col))
+    out = candidates.crossJoin(F.broadcast(queries)).where(
+        F.col(q_id_col) != F.col(id_col)
+    )
     return (
         out.withColumn("_sim", sim)
         .withColumn("rank", F.row_number().over(w))
@@ -58,7 +54,6 @@ def brute_force_range(
     q_features: str = "q_emb",
     id_col: str = "vec_id",
     q_id_col: str = "q_id",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact cosine RANGE search (radius query, FAISS range_search): every
     candidate with cos >= threshold per query, unranked.  Same broadcast
@@ -66,15 +61,12 @@ def brute_force_range(
     needs no per-query ordering, so the plan is a single narrow
     filter-projection pass over the corpus -- at 100 TB the scan
     parallelizes embarrassingly with zero shuffle (top-k at least heaps
-    per partition; range search doesn't even do that).
-
-    ``exclude_self`` as in :func:`brute_force_topk`: True when queries
-    are corpus rows (the gate semantics), False for an external query id
-    space."""
+    per partition; range search doesn't even do that).  Self-matches
+    are dropped as in :func:`brute_force_topk`."""
     sim = cosine_similarity(q_features, features)
-    out = candidates.crossJoin(F.broadcast(queries))
-    if exclude_self:
-        out = out.where(F.col(q_id_col) != F.col(id_col))
+    out = candidates.crossJoin(F.broadcast(queries)).where(
+        F.col(q_id_col) != F.col(id_col)
+    )
     return out.withColumn("_sim", sim).where(F.col("_sim") >= threshold)
 
 
@@ -123,9 +115,9 @@ def lsh_bucket_sql(
     return "CAST(" + " + ".join(terms) + " AS INTEGER)"
 
 
-def n_planes_for(n_vectors: int, target_bucket: int = 256) -> int:
+def n_planes_for(n_vectors: int) -> int:
     """Plane count sized to the corpus: 2^planes buckets put an EXPECTED
-    ``target_bucket`` vectors in each, so within-bucket join output stays
+    256 vectors in each, so within-bucket join output stays
     ~n_vectors * target_bucket regardless of corpus size.  A FIXED plane
     count is quadratic ruin at scale (4 planes = 16 buckets over 20M
     vectors -> ~1.25e6 per bucket -> ~1.25e13 candidate pairs); planes
@@ -133,14 +125,14 @@ def n_planes_for(n_vectors: int, target_bucket: int = 256) -> int:
 
     Capped at 31: the bucket id is an INT32 with 2^j weight terms, so
     32+ planes would wrap (lsh_bucket_sql asserts the same bound).  The
-    cap binds only above ~5.5e11 vectors x 256/bucket; past it, grow
-    ``target_bucket`` instead of planes.
+    cap binds only above ~5.5e11 vectors x 256/bucket; past it, buckets
+    grow instead of planes.
     """
     import math
 
-    if n_vectors <= target_bucket:
+    if n_vectors <= 256:
         return 1
-    return min(31, max(1, math.ceil(math.log2(n_vectors / target_bucket))))
+    return min(31, max(1, math.ceil(math.log2(n_vectors / 256))))
 
 
 def lsh_bucket_pairs(
@@ -463,23 +455,19 @@ def ivf_topk(
     id_col: str = "vec_id",
     q_id_col: str = "q_id",
     q_features: str = "q_emb",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """ANN top-k: route each query to its ``nprobe`` nearest cells, then
     brute-force only within those cells (equi-join on cell_id -- the scan
     prunes to nprobe/n_cells of the data instead of a full cross join).
-
-    ``exclude_self`` as in :func:`brute_force_topk`: True when queries
-    are corpus rows (the gate semantics), False for an external query id
-    space.
+    Self-matches are dropped as in :func:`brute_force_topk`.
     """
     q = route_to_cells(queries, cents, nprobe, q_features=q_features)
 
     sim = cosine_similarity(q_features, F.col(features).cast("array<double>"))
     w = Window.partitionBy(q_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
-    joined = indexed.join(F.broadcast(q), "cell_id")
-    if exclude_self:
-        joined = joined.where(F.col(q_id_col) != F.col(id_col))
+    joined = indexed.join(F.broadcast(q), "cell_id").where(
+        F.col(q_id_col) != F.col(id_col)
+    )
     return (
         joined.withColumn("_sim", sim)
         .withColumn("rank", F.row_number().over(w))
@@ -546,21 +534,27 @@ def int8_cosine(
 
 # --- Product quantization (PQ) + asymmetric distance (ADC) -------------------
 
+#: PQ geometry, shared with the sim_pq_adc oracle: PQ_M subspaces of
+#: PQ_DSUB dims, PQ_K codes each (4-bit codes for PQ_K = 16).
+PQ_M = 8
+PQ_DSUB = 8
+PQ_K = 16
+
+
 def pq_codebooks(
     emb: DataFrame,
-    m: int = 8,
-    dsub: int = 8,
-    k: int = 16,
     id_col: str = "vec_id",
     features: str = "embedding",
 ) -> list[list[list[float]]]:
     """Deterministic PQ codebooks: subspace ``s`` of code ``j`` is dims
-    ``[s*dsub, (s+1)*dsub)`` of the embedding of ``id < k`` -- the same
-    data-derived seeding contract as the K-Means queries (no RNG, so a
-    DuckDB oracle can re-derive the identical codebook from the table).
-    Returns ``cb[s][j] == list of dsub floats``; the collect is k rows
-    (the driver-side model boundary, exactly like centroid literals).
+    ``[s*PQ_DSUB, (s+1)*PQ_DSUB)`` of the embedding of ``id < PQ_K`` --
+    the same data-derived seeding contract as the K-Means queries (no
+    RNG, so a DuckDB oracle can re-derive the identical codebook from
+    the table).  Returns ``cb[s][j] == list of PQ_DSUB floats``; the
+    collect is PQ_K rows (the driver-side model boundary, exactly like
+    centroid literals).
     """
+    m, dsub, k = PQ_M, PQ_DSUB, PQ_K
     rows = (
         emb.where(F.col(id_col) < k)
         .orderBy(id_col)
@@ -692,12 +686,19 @@ def pq_adc_topk(
     )
 
 
+#: default two-stage geometry, shared with the sim_matryoshka_topk oracle:
+#: distance on the first 8 dims keeps 50 candidates, re-ranked to 5.
+MATRYOSHKA_COARSE_DIMS = 8
+MATRYOSHKA_K_COARSE = 50
+MATRYOSHKA_K_FINAL = 5
+
+
 def matryoshka_topk(
     emb: DataFrame,
     q_vec: list[float],
-    coarse_dims: int = 8,
-    k_coarse: int = 50,
-    k_final: int = 5,
+    coarse_dims: int = MATRYOSHKA_COARSE_DIMS,
+    k_coarse: int = MATRYOSHKA_K_COARSE,
+    k_final: int = MATRYOSHKA_K_FINAL,
     id_col: str = "vec_id",
     features: str = "embedding",
 ) -> DataFrame:

@@ -31,11 +31,10 @@ def salted_groupby(
     key: str | list[str],
     aggs: dict[str, tuple[str, str]],
     n_salts: int = 16,
-    seed: int = 42,
 ) -> DataFrame:
     """``aggs``: out_name -> (fn, col) with fn in sum/count/min/max/avg.
 
-    Salt is ``floor(rand(seed) * n_salts)``, NOT a hash of the row
+    Salt is ``floor(rand(42) * n_salts)``, NOT a hash of the row
     (code-review r10): a row-hash salt is constant across identical
     duplicate rows, so a hot key made of repeated identical rows -- the
     common pathological shape -- would still funnel ONE reducer while
@@ -69,7 +68,7 @@ def salted_groupby(
             raise ValueError(f"non-algebraic aggregate {fn!r} cannot be salted")
 
     salted = df.withColumn(
-        "__kmrc_salt", F.floor(F.rand(seed) * n_salts).cast("int")
+        "__kmrc_salt", F.floor(F.rand(42) * n_salts).cast("int")
     )
     partial = salted.groupBy(*keys, "__kmrc_salt").agg(*partial_exprs)
     return partial.groupBy(*keys).agg(*combine_exprs)

@@ -864,17 +864,25 @@ def dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- MinHash + LSH near-dedup (md5-based, fully oracle-checkable) ------------
 
-def _minhash_sql(num_hashes: int = 16, bands: int = 8, seed: int = 42) -> str:
-    from ..functions.hashing import MINHASH_P, minhash_params
+#: exact distinct-shingle Jaccard at or above which an LSH candidate pair
+#: is a true near-duplicate: the verify stage of dedup_lsh_verified and
+#: the ground truth of pipe_dedup_eval, in the queries and their oracles.
+_VERIFY_JACCARD = 0.5
+
+
+def _minhash_sql() -> str:
+    from ..functions import hashing
     from ..operators.dedup import MAX_BAND_BUCKET
 
+    num_hashes, bands = hashing.MINHASH_NUM_HASHES, hashing.MINHASH_BANDS
     r = num_hashes // bands
-    params = minhash_params(num_hashes, seed)
+    params = hashing.minhash_params(num_hashes)
     base = (
-        f"CAST(('0x' || substr(md5('mh{seed}:' || s), 1, 8)) AS BIGINT)"
+        f"CAST(('0x' || substr(md5('mh{hashing.MINHASH_SEED}:' || s), 1, 8))"
+        " AS BIGINT)"
     )
     h_cols = ", ".join(
-        f"list_min([ ({a} * {base} + {b}) % {MINHASH_P} FOR s IN shingles ]) AS h{j}"
+        f"list_min([ ({a} * {base} + {b}) % {hashing.MINHASH_P} FOR s IN shingles ]) AS h{j}"
         for j, (a, b) in enumerate(params)
     )
     # The hot-bucket skew cap (operators/dedup.py minhash_lsh_pairs:
@@ -929,10 +937,10 @@ def _minhash_sql(num_hashes: int = 16, bands: int = 8, seed: int = 42) -> str:
     """
 
 
-def _minhash_verified_sql(threshold: float = 0.5) -> str:
+def _minhash_verified_sql() -> str:
     """Oracle for the filter-verify pattern: the LSH candidate pairs of
     :func:`_minhash_sql`, rescored with EXACT distinct-shingle Jaccard,
-    kept at ``jaccard >= threshold``.  The exact jaccard is emitted
+    kept at ``jaccard >= _VERIFY_JACCARD``.  The exact jaccard is emitted
     UNROUNDED: one division of identical integers is bit-identical
     across engines (registry float discipline).
 
@@ -966,7 +974,7 @@ def _minhash_verified_sql(threshold: float = 0.5) -> str:
     SELECT doc_a, doc_b, est_jaccard,
            CAST(i AS DOUBLE) / (na + nb - i) AS jaccard
     FROM scored
-    WHERE CAST(i AS DOUBLE) / (na + nb - i) >= {threshold}
+    WHERE CAST(i AS DOUBLE) / (na + nb - i) >= {_VERIFY_JACCARD}
     """
 
 
@@ -1252,12 +1260,19 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Product quantization ANN (fully value-checked) --------------------------
 
-def _pq_sql(m: int = 8, dsub: int = 8, k: int = 16, q_id: int = 123) -> str:
+#: vec_id of the sim_pq_adc query vector, in the query and its oracle.
+_PQ_QUERY_ID = 123
+
+
+def _pq_sql() -> str:
     """DuckDB twin of pq_encode + pq_adc_topk.  Every float expression
     is generated LEFT-ASSOCIATED in the same order as the Spark/Python
     side, and float->double casts are exact, so codes, packed codes and
     ADC distances are bit-identical -- a full value-hash oracle for a
     quantized-ANN path (vs the claim oracles the learned IVF needs)."""
+    from ..operators.similarity import PQ_DSUB, PQ_K, PQ_M
+
+    m, dsub, k = PQ_M, PQ_DSUB, PQ_K
 
     def sq(a_prefix: str, b_prefix: str, s: int) -> str:
         terms = []
@@ -1290,7 +1305,7 @@ def _pq_sql(m: int = 8, dsub: int = 8, k: int = 16, q_id: int = 123) -> str:
         SELECT CAST(vec_id AS INTEGER) AS j, embedding
         FROM embeddings WHERE vec_id < {k}
     ),
-    q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = {q_id}),
+    q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = {_PQ_QUERY_ID}),
     dd AS (
         SELECT e.vec_id, c.j, {d_cols}
         FROM embeddings e CROSS JOIN cb c
@@ -1332,7 +1347,7 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     cb = pq_codebooks(e)
-    q_rows = e.where(F.col("vec_id") == 123).select("embedding").collect()
+    q_rows = e.where(F.col("vec_id") == _PQ_QUERY_ID).select("embedding").collect()
     q_vec = [float(v) for v in q_rows[0][0]]
     encoded = pq_encode(e, cb)
     return pq_adc_topk(encoded, cb, q_vec, k_results=10)
@@ -4451,6 +4466,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Hashed linear quality classifier -----------------------------------------
 
+from ..functions.text import QC_SALT as _QC_SALT  # noqa: E402
 from ..functions.text import QC_WEIGHTS as _QC_WEIGHTS  # noqa: E402
 
 
@@ -4466,7 +4482,7 @@ from ..functions.text import QC_WEIGHTS as _QC_WEIGHTS  # noqa: E402
         SELECT doc_id, toks,
                CAST(list_sum([
                    {_QC_WEIGHTS}[
-                       (CAST(('0x' || substr(md5('qc:' || tok), 1, 8))
+                       (CAST(('0x' || substr(md5('{_QC_SALT}' || tok), 1, 8))
                              AS BIGINT) % 16) + 1]
                    FOR tok IN toks
                ]) AS BIGINT) AS m
@@ -4516,7 +4532,7 @@ def pipe_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(len(toks) AS BIGINT) AS n_tok,
                CAST(list_sum([
                    {_QC_WEIGHTS}[
-                       (CAST(('0x' || substr(md5('qc:' || tok), 1, 8))
+                       (CAST(('0x' || substr(md5('{_QC_SALT}' || tok), 1, 8))
                              AS BIGINT) % 16) + 1]
                    FOR tok IN toks
                ]) AS BIGINT) AS m
@@ -4614,9 +4630,7 @@ def udaf_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Filter-verify: LSH candidates rescored with exact Jaccard ----------------
 
-def lsh_verified_plan(
-    d: DataFrame, threshold: float = 0.5
-) -> tuple[DataFrame, list[DataFrame]]:
+def lsh_verified_plan(d: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     """(lazy verified-pairs frame, deps to unpersist after an action).
 
     Shared by the gate query and its plan audit so the audit inspects
@@ -4646,7 +4660,7 @@ def lsh_verified_plan(
     out = (
         res.pairs.join(a, "doc_a")
         .join(b, "doc_b")
-        .where(jac >= threshold)
+        .where(jac >= _VERIFY_JACCARD)
         .select("doc_a", "doc_b", "est_jaccard", jac.alias("jaccard"))
     )
     return out, [*res.deps, arrs]
@@ -4654,7 +4668,7 @@ def lsh_verified_plan(
 
 @query(
     "dedup_lsh_verified",
-    oracle=_minhash_verified_sql(0.5),
+    oracle=_minhash_verified_sql(),
     doc="The canonical two-stage near-dup pipeline composed end-to-end: "
     "MinHash/LSH banding generates candidate pairs (recall stage, "
     "never all-pairs), then ONLY those candidates are rescored with "
@@ -4674,14 +4688,9 @@ def dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Cross-corpus (incremental-ingest) near-dup --------------------------------
 
-def _minhash_cross_sql(
-    new_pred: str = "source = 'src0'",
-    num_hashes: int = 16,
-    bands: int = 8,
-    seed: int = 42,
-) -> str:
-    """Oracle for :func:`dedup_cross_corpus`: the delta partition (rows
-    matching ``new_pred``) banded-joined against the rest of the corpus.
+def _minhash_cross_sql() -> str:
+    """Oracle for :func:`dedup_cross_corpus`: the delta partition
+    (``source = 'src0'``) banded-joined against the rest of the corpus.
     Same md5-derived signature pipeline as :func:`_minhash_sql`; the
     join arms pair new x ref instead of the self-join's ``a < b``.
 
@@ -4693,14 +4702,18 @@ def _minhash_cross_sql(
     It has never fired at any probed scale (ref buckets stay far
     below 1000 even at 100x), so this mirror changed no hashes --
     verified row-identical at sf0.01/sf0.1 before the swap."""
-    from ..functions.hashing import MINHASH_P, minhash_params
+    from ..functions import hashing
     from ..operators.dedup import MAX_BAND_BUCKET
 
+    num_hashes, bands = hashing.MINHASH_NUM_HASHES, hashing.MINHASH_BANDS
     r = num_hashes // bands
-    params = minhash_params(num_hashes, seed)
-    base = f"CAST(('0x' || substr(md5('mh{seed}:' || s), 1, 8)) AS BIGINT)"
+    params = hashing.minhash_params(num_hashes)
+    base = (
+        f"CAST(('0x' || substr(md5('mh{hashing.MINHASH_SEED}:' || s), 1, 8))"
+        " AS BIGINT)"
+    )
     h_cols = ", ".join(
-        f"list_min([ ({a} * {base} + {b}) % {MINHASH_P} FOR s IN shingles ]) AS h{j}"
+        f"list_min([ ({a} * {base} + {b}) % {hashing.MINHASH_P} FOR s IN shingles ]) AS h{j}"
         for j, (a, b) in enumerate(params)
     )
 
@@ -4739,8 +4752,8 @@ def _minhash_cross_sql(
     sig AS MATERIALIZED (
         SELECT doc_id, source, {h_cols} FROM sh WHERE len(shingles) > 0
     ),
-    newsig AS (SELECT * FROM sig WHERE {new_pred}),
-    refsig AS MATERIALIZED (SELECT * FROM sig WHERE NOT ({new_pred})),
+    newsig AS (SELECT * FROM sig WHERE source = 'src0'),
+    refsig AS MATERIALIZED (SELECT * FROM sig WHERE NOT (source = 'src0')),
     {kept_ctes},
     cand AS ({band_arms}),
     pairs AS (SELECT DISTINCT new_doc, ref_doc FROM cand)
@@ -5563,7 +5576,7 @@ def stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, source, lang,
                CAST(list_sum([
                    {_QC_WEIGHTS}[
-                       (CAST(('0x' || substr(md5('qc:' || tok), 1, 8))
+                       (CAST(('0x' || substr(md5('{_QC_SALT}' || tok), 1, 8))
                              AS BIGINT) % 16) + 1]
                    FOR tok IN toks
                ]) AS BIGINT) AS m
@@ -5640,16 +5653,24 @@ def pipe_dpo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Two-stage (coarse-to-fine) retrieval --------------------------------------
 
-def _matryoshka_sql(
-    q_id: int = 77, coarse_dims: int = 8, dim: int = 64,
-    k_coarse: int = 50, k_final: int = 5,
-) -> str:
-    """DuckDB twin of operators/similarity.py:matryoshka_topk.  Both
+#: vec_id of the sim_matryoshka_topk query vector, in the query and its
+#: oracle.
+_MATRYOSHKA_QUERY_ID = 77
+
+
+def _matryoshka_sql() -> str:
+    """DuckDB twin of operators/similarity.py:matryoshka_topk over the
+    64-dim embeddings, with the operator's default geometry.  Both
     distance trees are generated LEFT-ASSOCIATED in the same dimension
     order; Spark bakes the query vector as double literals (exact
     float->double of the same stored values this CTE casts), so coarse
     AND full distances are bit-identical and the stage-1 candidate cut
     is engine-portable."""
+    from ..operators.similarity import (
+        MATRYOSHKA_COARSE_DIMS,
+        MATRYOSHKA_K_COARSE,
+        MATRYOSHKA_K_FINAL,
+    )
 
     def dist(n: int) -> str:
         return " + ".join(
@@ -5661,19 +5682,19 @@ def _matryoshka_sql(
         )
 
     return f"""
-    WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = {q_id}),
+    WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = {_MATRYOSHKA_QUERY_ID}),
     cand AS (
-        SELECT e.vec_id, e.embedding, {dist(coarse_dims)} AS coarse_dist
+        SELECT e.vec_id, e.embedding, {dist(MATRYOSHKA_COARSE_DIMS)} AS coarse_dist
         FROM embeddings e CROSS JOIN q
         ORDER BY coarse_dist, e.vec_id
-        LIMIT {k_coarse}
+        LIMIT {MATRYOSHKA_K_COARSE}
     )
     SELECT CAST(e.vec_id AS BIGINT) AS vec_id,
            e.coarse_dist,
-           {dist(dim)} AS full_dist
+           {dist(64)} AS full_dist
     FROM cand e CROSS JOIN q
     ORDER BY full_dist, e.vec_id
-    LIMIT {k_final}
+    LIMIT {MATRYOSHKA_K_FINAL}
     """
 
 
@@ -5699,9 +5720,13 @@ def sim_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import matryoshka_topk
 
     e = load_table(spark, sf_dir, "embeddings")
-    q_rows = e.where(F.col("vec_id") == 77).select("embedding").collect()
+    q_rows = (
+        e.where(F.col("vec_id") == _MATRYOSHKA_QUERY_ID)
+        .select("embedding")
+        .collect()
+    )
     q_vec = [float(v) for v in q_rows[0][0]]
-    return matryoshka_topk(e, q_vec, coarse_dims=8, k_coarse=50, k_final=5)
+    return matryoshka_topk(e, q_vec)
 
 
 # --- Pareto frontier over the curation plane ------------------------------------
@@ -5719,7 +5744,7 @@ def sim_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(len(toks) AS BIGINT) AS n_tokens,
                CAST(list_sum([
                    {_QC_WEIGHTS}[
-                       (CAST(('0x' || substr(md5('qc:' || tok), 1, 8))
+                       (CAST(('0x' || substr(md5('{_QC_SALT}' || tok), 1, 8))
                              AS BIGINT) % 16) + 1]
                    FOR tok IN toks
                ]) AS BIGINT) AS margin
@@ -5784,7 +5809,7 @@ def pipe_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, source,
                CAST(list_sum([
                    {_QC_WEIGHTS}[
-                       (CAST(('0x' || substr(md5('qc:' || tok), 1, 8))
+                       (CAST(('0x' || substr(md5('{_QC_SALT}' || tok), 1, 8))
                              AS BIGINT) % 16) + 1]
                    FOR tok IN toks
                ]) AS BIGINT) AS m
@@ -6337,14 +6362,18 @@ def stream_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Semi-supervised label propagation ------------------------------------------
 
-def _label_prop_oracle(rounds: int = 2) -> str:
+#: majority-vote rounds of pipe_label_propagation and its oracle.
+_LABEL_PROP_ROUNDS = 2
+
+
+def _label_prop_oracle() -> str:
     """Unrolled majority-vote label propagation (DuckDB twin).  Mode
     per node = most frequent neighbor label, ties to the SMALLEST
     label; seeds are clamped; unlabeled nodes keep NULL until a
     labeled neighbor appears."""
     prev = "l0"
     steps = []
-    for i in range(1, rounds + 1):
+    for i in range(1, _LABEL_PROP_ROUNDS + 1):
         steps.append(f"""
     v{i} AS (
         SELECT e.dst AS node, {prev}.lbl, count(*) AS c
@@ -6446,7 +6475,7 @@ def pipe_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = nodes.select(
         "node", F.col("seed_lbl").alias("lbl"), "seed_lbl"
     )
-    for _ in range(2):
+    for _ in range(_LABEL_PROP_ROUNDS):
         votes = (
             edges.join(
                 labels.where(F.col("lbl").isNotNull()).select(
@@ -6564,9 +6593,9 @@ def pipe_synthetic_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Dedup-pipeline evaluation (precision/recall vs exact truth) ---------------
 
-def _dedup_eval_sql(threshold: float = 0.5) -> str:
+def _dedup_eval_sql() -> str:
     """Confusion counts of the sliced LSH candidate set against exact
-    shingle-Jaccard >= threshold ground truth (both derivable in SQL;
+    shingle-Jaccard >= _VERIFY_JACCARD ground truth (both derivable in SQL;
     the slice bound makes the quadratic truth side affordable)."""
     mh = _minhash_sql()
     assert mh.count("FROM documents") == 1
@@ -6588,7 +6617,7 @@ def _dedup_eval_sql(threshold: float = 0.5) -> str:
         JOIN sizes sa ON sa.doc_id = doc_a
         JOIN sizes sb ON sb.doc_id = doc_b
         WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter)
-              >= {threshold}
+              >= {_VERIFY_JACCARD}
     ),
     j AS (
         SELECT COALESCE(l.doc_a, t.doc_a) AS doc_a,
@@ -6674,7 +6703,7 @@ def pipe_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         overlap.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .where(jac >= 0.5)
+        .where(jac >= _VERIFY_JACCARD)
         .select("doc_a", "doc_b"),
         deps=[arrs],
     )

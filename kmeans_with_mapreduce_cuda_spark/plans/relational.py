@@ -15,7 +15,7 @@ from ..sources.readers import load_table
 from .registry import query
 
 
-def pos_cents(col: str, unit: int = 100):
+def pos_cents(col: str):
     """Exact integer cents from a POSITIVE 2-decimal double column,
     BigDecimal-free.
 
@@ -35,7 +35,7 @@ def pos_cents(col: str, unit: int = 100):
     ``round(x*100)``: DuckDB's double->bigint cast rounds rather than
     truncates, so the explicit round is the portable spelling there
     (rel_filter_agg's docstring has the full cents contract)."""
-    return (F.col(col) * unit + F.lit(0.5)).cast("bigint")
+    return (F.col(col) * 100 + F.lit(0.5)).cast("bigint")
 
 
 # --- Filter + aggregate (TPC-H Q1 shape) -----------------------------------
@@ -2920,8 +2920,9 @@ def rel_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Iterative graph ranking (integer-exact PageRank) -----------------------
 
-def _pagerank_sql(iters: int = 3, scale: int = 10**12, damping_pct: int = 85) -> str:
-    """DuckDB twin of operators/graph.py:pagerank_int, unrolled.
+def _pagerank_sql() -> str:
+    """DuckDB twin of operators/graph.py:pagerank_int, unrolled, with
+    the operator's round count, scale and damping.
 
     Fixed iteration count makes recursion unnecessary: each round is a
     plain CTE pair (m{i}: contribution sums, r{i}: rank update), so the
@@ -2929,9 +2930,11 @@ def _pagerank_sql(iters: int = 3, scale: int = 10**12, damping_pct: int = 85) ->
     integer contract from the operator docstring -- `//` in DuckDB and
     `DIV` in Spark are identical on positive BIGINTs -- so ranks are
     bit-exact, not approximately equal."""
+    from ..operators.graph import DAMPING_PCT, PAGERANK_ITERS, SCALE
+
     rounds = []
     prev = "r0"
-    for i in range(1, iters + 1):
+    for i in range(1, PAGERANK_ITERS + 1):
         rounds.append(f"""
     m{i} AS (
         SELECT e.dst AS node, SUM({prev}.r // d.outdeg) AS s
@@ -2943,7 +2946,7 @@ def _pagerank_sql(iters: int = 3, scale: int = 10**12, damping_pct: int = 85) ->
     r{i} AS (
         SELECT d.node,
                (SELECT base FROM p)
-               + ({damping_pct} * CAST(COALESCE(m{i}.s, 0) AS BIGINT)) // 100
+               + ({DAMPING_PCT} * CAST(COALESCE(m{i}.s, 0) AS BIGINT)) // 100
                    AS r
         FROM deg d LEFT JOIN m{i} ON m{i}.node = d.node
     )""")
@@ -2964,8 +2967,8 @@ def _pagerank_sql(iters: int = 3, scale: int = 10**12, damping_pct: int = 85) ->
     ),
     deg AS (SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src),
     p AS (
-        SELECT {scale} // COUNT(*) AS spn,
-               ({100 - damping_pct} * ({scale} // COUNT(*))) // 100 AS base
+        SELECT {SCALE} // COUNT(*) AS spn,
+               ({100 - DAMPING_PCT} * ({SCALE} // COUNT(*))) // 100 AS base
         FROM deg
     ),
     r0 AS (SELECT node, (SELECT spn FROM p) AS r FROM deg),{",".join(rounds)}
@@ -3018,7 +3021,7 @@ def rel_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = base.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(base.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    pr = pagerank_int(edges, iters=3)
+    pr = pagerank_int(edges)
     top = (
         pr.ranks.select(
             F.col("node").cast("bigint").alias("node"),
@@ -3748,13 +3751,15 @@ def rel_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Graph analytics: bounded-hop BFS ----------------------------------------
 
-def _bfs_sql(rounds: int = 3) -> str:
+def _bfs_sql() -> str:
     """DuckDB twin of operators/graph.py:bfs_hops, unrolled (fixed
     rounds need no recursion; edges MATERIALIZED per the pagerank
     100x lesson -- DuckDB 1.0 inlines multi-referenced CTEs)."""
+    from ..operators.graph import BFS_ROUNDS
+
     prev = "d0"
     steps = []
-    for i in range(1, rounds + 1):
+    for i in range(1, BFS_ROUNDS + 1):
         steps.append(f"""
     d{i} AS (
         SELECT node, min(h) AS h FROM (
@@ -3824,7 +3829,7 @@ def rel_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = edges.where(
         (F.col("src") % 2 == 0) & (F.col("src") < 10)
     ).select(F.col("src").alias("node"))
-    res = bfs_hops(edges, seeds, rounds=3)
+    res = bfs_hops(edges, seeds)
     hist = (
         res.ranks.groupBy(F.col("hops").cast("bigint").alias("hops"))
         .agg(

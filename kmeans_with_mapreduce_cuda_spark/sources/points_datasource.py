@@ -31,7 +31,10 @@ from pyspark.sql.datasource import (
 
 
 class PointsTextDataSource(DataSource):
-    """``spark.read.format("points_text").load(path)`` -> (line_no x y).
+    """``spark.read.format("points_text").load(path)`` -> (line_no, x, y),
+    where ``line_no`` is the byte offset at which the line starts: unique,
+    ascending in file order and the same under any partitioning, but not
+    a count of lines.
 
     Options:
       path          file path (or pass to .load())

@@ -260,9 +260,10 @@ def read_points_text(
     unique and ascending-within-partition but PARTITION-ENCODED
     (monotonically_increasing_id over however many splits the file
     gets), so they vary with core count / split size -- do not treat
-    them as line numbers on the scale path; the custom
-    ``points_text`` DataSource carries a true ``line_no`` column when
-    stable identity at scale matters.
+    them as line numbers on the scale path.  When stable identity at
+    scale matters, use the custom ``points_text`` DataSource: its
+    ``line_no`` column is each line's start byte offset, ascending in
+    file order and independent of the partitioning (not a line count).
     """
     df = spark.read.text(path)
     if limit is not None:
@@ -411,12 +412,44 @@ def fixture_artifact(sf_dir: str, table: str, prefix: str, write) -> str:
     complete: the commit's rename is the only way the directory
     appears, so a crashed or failed write leaves nothing to serve.
     Raises ``OSError`` where :func:`fixture_keyed_tmpdir` does, and
-    whatever ``write`` or the commit raises."""
+    whatever ``write`` or the commit raises.
+
+    After a commit, the same prefix's artifacts that this one
+    supersedes are removed (best effort): those built from the same
+    source table file, and those whose source file no longer exists.
+    Each artifact records its source path in a ``<dir>.src`` sibling
+    written after its commit -- outside the directory, so the artifact's
+    files are exactly what ``write`` produced.  A directory without that
+    record (written before it existed, or by a crash between commit and
+    record) and every ``.tmp.<pid>`` sibling are left alone."""
     import os
+    import re
+    import shutil
 
     dest = fixture_keyed_tmpdir(sf_dir, table, prefix)
-    if not os.path.exists(dest):
-        committed_write(dest, write)
+    if os.path.exists(dest):
+        return dest
+    committed_write(dest, write)
+
+    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    record = re.compile(re.escape(prefix) + r"_[0-9a-f]{16}\.src")
+    root = os.path.dirname(dest)
+    for name in os.listdir(root):
+        path = os.path.join(root, name)
+        if not record.fullmatch(name) or path == f"{dest}.src":
+            continue
+        try:
+            with open(path) as f:
+                other = f.read()
+            if other == src or not os.path.exists(other):
+                shutil.rmtree(path[: -len(".src")], ignore_errors=True)
+                os.remove(path)
+        except OSError:
+            pass  # a concurrent prune got there first
+    tmp = f"{dest}.src.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
+        f.write(src)
+    os.replace(tmp, f"{dest}.src")
     return dest
 
 

@@ -32,6 +32,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+#: event-time watermark of every windowed/deduplicating events stream
+#: here (the stream-stream join keeps views longer, see
+#: view_purchase_attribution_stream).
+WATERMARK = "2 hours"
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file-source stream (one file = one batch here;
     in production this is a directory watched for new files, or Kafka).
@@ -56,12 +62,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return adapt_events_ts(raw)
 
 
-def hourly_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def hourly_counts_stream(events: DataFrame) -> DataFrame:
     """Event-time windowed counts with a watermark: late rows beyond the
     watermark are dropped and window state is evictable -- bounded state
     at any scale."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
@@ -73,20 +79,16 @@ def hourly_counts_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def sliding_counts_stream(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding event-time windows: each event lands in window/slide
-    overlapping windows (here 2).  Same bounded-state argument as the
-    tumbling path -- closed windows are evicted once the watermark
-    passes their end; the only scale delta is the x2 state fan-out.
+def sliding_counts_stream(events: DataFrame) -> DataFrame:
+    """Sliding event-time windows: 1-hour windows every 30 minutes, so
+    each event lands in 2 overlapping windows.  Same bounded-state
+    argument as the tumbling path -- closed windows are evicted once the
+    watermark passes their end; the only scale delta is the x2 state
+    fan-out.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("win"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -102,9 +104,7 @@ def sliding_counts_stream(
     )
 
 
-def enriched_counts_stream(
-    events: DataFrame, dim: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def enriched_counts_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static join + watermarked windowed agg: the static side
     (customer x nation, broadcast) enriches each event STATELESSLY --
     no join state, re-read per microbatch -- then the stateful hourly
@@ -115,7 +115,7 @@ def enriched_counts_stream(
     ``dim`` must have columns (user_id, n_name).
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .join(F.broadcast(dim), "user_id")
         .groupBy(F.window("ts", "1 hour").alias("win"), "n_name")
         .agg(
@@ -133,16 +133,12 @@ def enriched_counts_stream(
     )
 
 
-def view_purchase_attribution_stream(
-    events: DataFrame,
-    attribution: str = "INTERVAL 2 HOURS",
-    watermark: str = "4 hours",
-) -> DataFrame:
+def view_purchase_attribution_stream(events: DataFrame) -> DataFrame:
     """Stream-stream inner join: purchases attributed to a prior view by
-    the same user within the attribution window.  Both sides carry a
-    watermark and the join condition carries an event-time range, which
-    is what lets Spark EVICT join state -- a view older than
-    (watermark - attribution window) can never match again and is
+    the same user within a 2-hour attribution window.  Both sides carry
+    a 4-hour watermark and the join condition carries an event-time
+    range, which is what lets Spark EVICT join state -- a view older
+    than (watermark - attribution window) can never match again and is
     dropped, so state stays bounded at any scale.  The classic
     clickstream attribution shape.
     """
@@ -152,7 +148,7 @@ def view_purchase_attribution_stream(
             F.col("user_id"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", "4 hours")
     )
     buys = (
         events.where(F.col("event_type") == "purchase")
@@ -161,13 +157,13 @@ def view_purchase_attribution_stream(
             F.col("ts").alias("buy_ts"),
             F.col("value"),
         )
-        .withWatermark("buy_ts", watermark)
+        .withWatermark("buy_ts", "4 hours")
     )
     joined = views.join(
         buys,
         (F.col("user_id") == F.col("buy_user_id"))
         & (F.col("buy_ts") > F.col("view_ts"))
-        & (F.col("buy_ts") <= F.expr(f"view_ts + {attribution}")),
+        & (F.col("buy_ts") <= F.expr("view_ts + INTERVAL 2 HOURS")),
     )
     return joined.select(
         "user_id",
@@ -342,7 +338,6 @@ def dedup_stream(
     events: DataFrame,
     keys: list[str] | None = None,
     ts_col: str = "ts",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming exact dedup with bounded state:
     ``dropDuplicatesWithinWatermark`` keeps each key in state only until
@@ -353,7 +348,7 @@ def dedup_stream(
     forever).
     """
     keys = keys or ["event_id"]
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark(ts_col, WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
 # --- transformWithStateInPandas: arbitrary typed state ------------------------
@@ -456,22 +451,21 @@ def rocksdb_state_confs(changelog: bool = False) -> dict[str, str]:
     }
 
 
-def session_window_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Native streaming session windows: ``session_window(ts, gap)``
-    merges a user's events into dynamic gap-closed windows with state
-    the engine evicts once the watermark passes a session's end -- the
-    built-in path for the operator ``sessionize_stream`` implements by
-    hand with applyInPandasWithState.  Prefer THIS at scale (JVM state,
+def session_window_stream(events: DataFrame) -> DataFrame:
+    """Native streaming session windows: a 30-minute
+    ``session_window`` merges a user's events into dynamic gap-closed
+    windows with state the engine evicts once the watermark passes a
+    session's end -- the built-in path for the operator
+    ``sessionize_stream`` implements by hand with
+    applyInPandasWithState.  Prefer THIS at scale (JVM state,
     no Python workers, watermark-driven eviction for free); the custom
     one exists for semantics the built-in can't express (e.g.
     data-dependent gaps).  tests/test_streaming.py asserts it matches
     the batch rel_session_window gap-merge exactly.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("win"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("win"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -635,9 +629,7 @@ def upsert_latest_foreach_batch(
     return fn
 
 
-def hourly_distinct_users_stream(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def hourly_distinct_users_stream(events: DataFrame) -> DataFrame:
     """Streaming DISTINCT-count via a mergeable theta sketch: per-hour
     theta_sketch_agg(user_id) under a watermark, estimate read at
     emission.  The sketch state is FIXED-size per window regardless of
@@ -647,7 +639,7 @@ def hourly_distinct_users_stream(
     estimate is exact, so the drain value-hashes against batch
     count(DISTINCT) restricted to closed windows."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"))
         .agg(F.expr("theta_sketch_agg(user_id)").alias("sk"))
         .select(
@@ -661,12 +653,10 @@ def hourly_distinct_users_stream(
     )
 
 
-def hourly_quantile_stream(
-    events: DataFrame, watermark: str = "2 hours", accuracy: int = 10000
-) -> DataFrame:
+def hourly_quantile_stream(events: DataFrame) -> DataFrame:
     """Streaming windowed quantiles via approx_percentile -- the
-    Greenwald-Khanna summary is MERGEABLE with bounded size (~
-    accuracy entries per window), so per-hour quantile state stays
+    Greenwald-Khanna summary is MERGEABLE with bounded size (accuracy
+    10000, ~ that many entries per window), so per-hour quantile state stays
     fixed no matter how many events land in the hour: the quantile
     twin of the theta-sketch distinct count.  Exact per-window
     quantiles would buffer every value in state -- unbounded, the
@@ -674,11 +664,11 @@ def hourly_quantile_stream(
     (rel_percentiles).  Emits per closed window: count, approx p50.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.expr(f"approx_percentile(value, 0.5, {accuracy})").alias(
+            F.expr("approx_percentile(value, 0.5, 10000)").alias(
                 "p50_approx"
             ),
         )

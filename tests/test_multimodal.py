@@ -126,20 +126,6 @@ def test_resize_empty_and_null_payloads(spark):
         assert r["width"] >= 1 and r["height"] >= 1
 
 
-def test_real_codec_optin_raises_at_call_time(spark):
-    from kmeans_with_mapreduce_cuda_spark.operators.multimodal import (
-        decode_and_featurize,
-        resize_images,
-        sample_frames,
-    )
-    import pytest
-
-    d = documents_as_binary(load_table(spark, SF_DIR, "documents").limit(1))
-    for fn in (decode_and_featurize, resize_images, sample_frames):
-        with pytest.raises(NotImplementedError, match="use_real_codec"):
-            fn(d, use_real_codec=True)
-
-
 def test_sample_frames_multi_emit(spark):
     from pyspark.sql import functions as F
 

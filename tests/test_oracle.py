@@ -64,3 +64,34 @@ def test_rows_only_queries_run(spark):
             df = q.fn(spark, SF_DIR)
             assert df.columns, name
             assert df.count() >= 0, name
+
+
+@pytest.mark.parametrize(
+    "module, constant, value, name, builder",
+    [
+        ("functions.hashing", "MINHASH_BANDS", 4, "dedup_minhash_lsh", "pipeline._minhash_sql"),
+        ("operators.graph", "DAMPING_PCT", 70, "rel_pagerank", "relational._pagerank_sql"),
+    ],
+)
+def test_shared_constant_moves_query_and_oracle_together(
+    module, constant, value, name, builder, spark, duck, monkeypatch
+):
+    """A tuning value shared by an operator and its oracle is ONE module
+    constant: changing it changes the oracle builder's SQL and the
+    query's rows alike, and the two still agree -- neither side holds a
+    private copy that could drift."""
+    import importlib
+
+    pkg = "kmeans_with_mapreduce_cuda_spark"
+    builder_mod, builder_fn = builder.split(".")
+    build = getattr(importlib.import_module(f"{pkg}.plans.{builder_mod}"), builder_fn)
+    before_sql = build()
+    before = _canon(duck.execute(before_sql).fetchdf())
+
+    monkeypatch.setattr(importlib.import_module(f"{pkg}.{module}"), constant, value)
+    sql = build()
+    assert sql != before_sql
+    exp = _canon(duck.execute(sql).fetchdf())
+    got = _canon(REGISTRY[name].fn(spark, SF_DIR).toPandas())
+    assert not exp.equals(before), "the changed value must change the answer"
+    assert got.equals(exp)

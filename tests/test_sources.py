@@ -703,6 +703,46 @@ def test_fixture_artifact_failed_write_leaves_nothing(tmp_path, monkeypatch):
     assert len(calls) == 1 and os.path.isdir(dest)
 
 
+def test_fixture_artifact_commit_prunes_superseded_siblings(tmp_path, monkeypatch):
+    """A commit removes the same prefix's artifacts built from the same
+    source file (older content) or from a source file that is gone; an
+    artifact of another table or fixture dir, another prefix's, and a
+    ``.tmp.<pid>`` sibling stay."""
+    from kmeans_with_mapreduce_cuda_spark.sources.readers import fixture_artifact
+
+    _scratch, sf = _artifact_scratch(tmp_path, monkeypatch)
+    sf2 = tmp_path / "sf2"
+    sf2.mkdir()
+    (sf2 / "t.parquet").write_bytes(b"other fixture")
+    (tmp_path / "sf" / "u.parquet").write_bytes(b"other table")
+
+    def write(path: str) -> None:
+        os.makedirs(path)
+
+    def dirs(root: str) -> set[str]:
+        return {n for n in os.listdir(root) if os.path.isdir(os.path.join(root, n))}
+
+    a = fixture_artifact(sf, "t", "kmrc_test", write)
+    root = os.path.dirname(a)
+    other_table = fixture_artifact(sf, "u", "kmrc_test", write)
+    other_fixture = fixture_artifact(str(sf2), "t", "kmrc_test", write)
+    other_prefix = fixture_artifact(sf, "t", "kmrc_other", write)
+    in_flight = f"{a}.tmp.12345"
+    os.makedirs(in_flight)
+
+    os.utime(os.path.join(sf, "t.parquet"), ns=(1, 1))
+    b = fixture_artifact(sf, "t", "kmrc_test", write)
+    names = {os.path.basename(p) for p in (b, other_table, other_fixture, other_prefix, in_flight)}
+    assert dirs(root) == names  # ``a`` went; one directory for sf/t.parquet
+
+    os.remove(os.path.join(sf, "u.parquet"))
+    os.utime(os.path.join(sf, "t.parquet"), ns=(2, 2))
+    c = fixture_artifact(sf, "t", "kmrc_test", write)
+    names = {os.path.basename(p) for p in (c, other_fixture, other_prefix, in_flight)}
+    assert dirs(root) == names  # ``b`` and the deleted source's artifact went
+    assert not os.path.exists(f"{other_table}.src")
+
+
 def test_points_cache_falls_back_when_scratch_root_is_a_symlink(
     spark, tmp_path, monkeypatch
 ):

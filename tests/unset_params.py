@@ -1,0 +1,187 @@
+#!/usr/bin/env python
+"""Report the package's defaulted parameters that no caller sets, and its
+top-level functions that nothing references.
+
+A defaulted parameter that no call site sets is a constant written as an
+option: every caller gets the same value, yet a reader has to check each
+call to know that.  The scan parses (never imports) every ``.py`` file in
+the package, ``tests/``, ``kmbench/``, ``bench.py`` and
+``__spark_entry__.py``, and resolves calls by the callee's last name
+(``f(...)``, ``obj.f(...)``, ``partial(f, ...)``), so it is conservative
+in one direction only: a parameter of any function that shares its name
+with a caller counts as set if that caller sets it, and a call through
+``*args`` or ``**kwargs`` sets every parameter it could reach.
+
+It cannot see a call made through a variable (``fn = funcs[i]; fn(x=1)``),
+so grep a reported name before deleting it.
+
+Unset parameters whose default is a string that is a valid identifier
+(``id_col="doc_id"``, ``x="x"``) are listed apart as column-name
+parameters: they name the operator's input schema rather than tune its
+behaviour.
+
+Usage: python tests/unset_params.py [--counts]
+``--counts`` prints only the totals.
+"""
+
+from __future__ import annotations
+
+import ast
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "kmeans_with_mapreduce_cuda_spark"
+CALLERS = [PACKAGE, ROOT / "tests", ROOT / "kmbench", ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+
+
+def _py_files(paths):
+    for p in paths:
+        if p.is_dir():
+            yield from sorted(p.rglob("*.py"))
+        elif p.exists():
+            yield p
+
+
+def _callee_name(node: ast.expr) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+class _Calls(ast.NodeVisitor):
+    """Per callee name: keywords passed, the most positional arguments
+    passed, and whether some call passed ``*args`` / ``**kwargs``."""
+
+    def __init__(self):
+        self.keywords: dict[str, set[str]] = {}
+        self.max_pos: dict[str, int] = {}
+        self.star: set[str] = set()
+        self.double_star: set[str] = set()
+        self.refs: dict[str, int] = {}
+
+    def _record(self, name, args, keywords):
+        self.keywords.setdefault(name, set())
+        n = 0
+        for a in args:
+            if isinstance(a, ast.Starred):
+                self.star.add(name)
+            else:
+                n += 1
+        self.max_pos[name] = max(self.max_pos.get(name, 0), n)
+        for kw in keywords:
+            if kw.arg is None:
+                self.double_star.add(name)
+            else:
+                self.keywords[name].add(kw.arg)
+
+    def visit_Call(self, node: ast.Call):
+        name = _callee_name(node.func)
+        if name is not None:
+            self._record(name, node.args, node.keywords)
+        if name == "partial" and node.args:
+            inner = _callee_name(node.args[0])
+            if inner is not None:
+                self._record(inner, node.args[1:], node.keywords)
+        self.generic_visit(node)
+
+    def visit_Name(self, node: ast.Name):
+        if isinstance(node.ctx, ast.Load):
+            self.refs[node.id] = self.refs.get(node.id, 0) + 1
+
+    def visit_Attribute(self, node: ast.Attribute):
+        if isinstance(node.ctx, ast.Load):
+            self.refs[node.attr] = self.refs.get(node.attr, 0) + 1
+        self.generic_visit(node)
+
+
+def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
+    """Yield ``(name, positional index or None, is_method, default)`` per
+    defaulted parameter of ``fn``."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    is_method = bool(positional) and positional[0].arg in ("self", "cls")
+    first = len(positional) - len(a.defaults)
+    for i, (p, d) in enumerate(zip(positional[first:], a.defaults), start=first):
+        yield p.arg, i, is_method, d
+    for p, d in zip(a.kwonlyargs, a.kw_defaults):
+        if d is not None:
+            yield p.arg, None, is_method, d
+
+
+def _is_column_name(default: ast.expr) -> bool:
+    return (
+        isinstance(default, ast.Constant)
+        and isinstance(default.value, str)
+        and default.value.isidentifier()
+    )
+
+
+def scan():
+    calls = _Calls()
+    for path in _py_files(CALLERS):
+        calls.visit(ast.parse(path.read_text(), str(path)))
+
+    total = 0
+    unset = []
+    columns = []
+    unreferenced = []
+    for path in _py_files([PACKAGE]):
+        tree = ast.parse(path.read_text(), str(path))
+        rel = path.relative_to(PACKAGE).as_posix()
+        for node in tree.body:
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not node.decorator_list
+                and not calls.refs.get(node.name)
+            ):
+                unreferenced.append(f"{rel}:{node.lineno} {node.name}")
+        # ``C(x=1)`` sets ``x`` of ``C.__init__``.
+        init_owner = {
+            id(fn): cls.name
+            for cls in ast.walk(tree)
+            if isinstance(cls, ast.ClassDef)
+            for fn in cls.body
+            if isinstance(fn, ast.FunctionDef) and fn.name == "__init__"
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            owner = init_owner.get(id(node), node.name)
+            for pname, idx, is_method, default in _defaulted(node):
+                total += 1
+                if owner in calls.star or owner in calls.double_star:
+                    continue
+                if pname in calls.keywords.get(owner, ()):
+                    continue
+                if idx is not None:
+                    # ``obj.m(x)`` passes x as positional 1 of ``m(self, x)``.
+                    reach = calls.max_pos.get(owner, 0) + (1 if is_method else 0)
+                    if idx < reach:
+                        continue
+                site = f"{rel}:{node.lineno} {owner}({pname}=)"
+                (columns if _is_column_name(default) else unset).append(site)
+    return total, unset, columns, unreferenced
+
+
+def main() -> None:
+    total, unset, columns, unreferenced = scan()
+    if "--counts" not in sys.argv[1:]:
+        for title, sites in (
+            ("defaulted parameters that no call site sets", unset),
+            ("column-name parameters that no call site sets", columns),
+            ("top-level functions that nothing references", unreferenced),
+        ):
+            print(f"# {title}")
+            print(*sites, sep="\n")
+    print(
+        f"defaulted parameters: {total}; unset: {len(unset)}; "
+        f"unset column names: {len(columns)}; "
+        f"unreferenced top-level functions: {len(unreferenced)}"
+    )
+
+
+if __name__ == "__main__":
+    main()
