@@ -4999,9 +4999,9 @@ def pipe_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     "arrival-order-safe by construction (total order on (ts, "
     "event_id)), which is exactly what the batch oracle states: the "
     "drained view must equal a plain window argmax over all events.  "
-    "Timestamps emitted as epoch micros (tz-independent).  State "
-    "lineage is cut per batch (localCheckpoint) so the apply plan "
-    "stays constant-size over an unbounded stream; "
+    "Timestamps emitted as epoch micros (tz-independent).  Each "
+    "batch re-reads the state from parquet, never from lineage, so "
+    "the apply plan stays constant-size over an unbounded stream; "
     "streaming/streams.py:upsert_latest_foreach_batch documents the "
     "partitioned-overwrite scale path.  The passthrough double rides "
     "unrounded (no arithmetic on it in either engine).",

@@ -227,9 +227,9 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all fixture tables as temp views for ``spark.sql``.
 
     Tables whose parquet file is absent are skipped — the scale-probe
-    contract (tests/oracle_probe.py) is that a fixture directory needs
+    contract (tests/gate.py) is that a fixture directory needs
     only the tables the chosen queries actually read, and the DuckDB
-    side of the probe already skips missing files the same way.
+    side of the probe (``gate.duck``) skips missing files the same way.
     Skipping must also DROP any same-named temp view left by an earlier
     call with a different sf_dir: otherwise a query against the absent
     table silently reads the previous fixture's rows instead of failing

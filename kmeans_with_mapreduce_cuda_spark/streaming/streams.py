@@ -491,6 +491,23 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
+    """A foreachBatch sink's parquet state at ``path``, or None when no
+    state was written yet (the first batch).
+
+    ONLY an absent path means "first batch": an existing path that does
+    not read as parquet (an empty dir after a partial append, corrupt
+    files) raises, because treating it as empty would drop the state and
+    silently re-ingest duplicates.  Existence is asked of the session's
+    Hadoop FileSystem, which resolves ``file:`` and other URIs as the
+    read does (``os.path.exists`` calls a ``file:`` URI absent), and is
+    asked first so that no failed read reaches the query listeners."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+        return None
+    return spark.read.parquet(path)
+
+
 def ingest_dedup_foreach_batch(
     spark: SparkSession,
     index_path: str,
@@ -514,24 +531,13 @@ def ingest_dedup_foreach_batch(
     append here is at-least-once on retry -- production uses a
     transactional sink; the semantics under test are the dedup ones).
     """
-    from pyspark.sql.utils import AnalysisException
-
     from ..operators.dedup import incremental_dedup_keep_digests
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        try:
-            idx = spark.read.parquet(index_path)
-        except AnalysisException as e:
-            # ONLY a genuinely absent index means "first batch".  Any
-            # other analysis failure (corrupt index, empty dir after a
-            # partial append, permissions) must fail loudly: falling
-            # through would skip the anti-join and silently re-ingest
-            # duplicates.
-            cond = getattr(e, "getCondition", getattr(e, "getErrorClass", lambda: None))()
-            if cond != "PATH_NOT_FOUND":
-                raise
+        idx = _read_state(spark, index_path)
+        if idx is None:
             idx = spark.createDataFrame([], "h string")
         from ..operators.dedup import _release_local_checkpoint
 
@@ -596,29 +602,22 @@ def upsert_latest_foreach_batch(
     (dynamic partition overwrite, sources/writers.py); the semantics
     under test here are the merge ones.
     """
-    from pyspark.sql.utils import AnalysisException
-
     from ..sources.readers import committed_write
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         batch_latest = upsert_latest(batch_df.limit(0), batch_df, key)
-        try:
-            state = spark.read.parquet(state_path)
-            merged = upsert_latest(state, batch_latest, key)
-        except AnalysisException as e:
-            cond = getattr(
-                e, "getCondition", getattr(e, "getErrorClass", lambda: None)
-            )()
-            if cond != "PATH_NOT_FOUND":
-                raise
-            merged = batch_latest
+        state = _read_state(spark, state_path)
+        merged = (
+            batch_latest if state is None
+            else upsert_latest(state, batch_latest, key)
+        )
         # committed_write, not in-place overwrite: mode("overwrite")
         # deletes the state dir before writing, so a crash between
         # delete and commit destroys the accumulated SCD1 state
-        # permanently (the next restart's read is not PATH_NOT_FOUND
-        # and fails loudly, but the state is gone).  The move-aside/
+        # permanently (the next restart's read fails loudly, but the
+        # state is gone).  The move-aside/
         # rename protocol keeps the previous state readable until
         # the new one is fully committed (code-review r10).
         committed_write(

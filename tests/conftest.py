@@ -1,10 +1,9 @@
 from __future__ import annotations
 
-import duckdb
 import pytest
 
+import gate
 from kmeans_with_mapreduce_cuda_spark import get_spark
-from kmeans_with_mapreduce_cuda_spark.sources.readers import TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"
@@ -21,10 +20,6 @@ def spark():
 def duck():
     """DuckDB connection with the fixture tables registered as views,
     mirroring the driver's oracle setup."""
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = gate.duck(SF_DIR)
     yield con
     con.close()

@@ -33,6 +33,7 @@ Writes a JSON report to /tmp/plan_audit.json and prints a summary.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 import time
@@ -40,7 +41,7 @@ import traceback
 
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"

@@ -1276,19 +1276,11 @@ def test_registry_schema_policy_no_complex_output_columns():
     oracle and Spark schemas must match for the hash gate anyway, so
     the oracle side is the cheap, execution-free proxy -- streaming
     and iterative queries are covered without draining them."""
-    import duckdb
+    from gate import duck
 
     from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck(SF_DIR)
     offenders = []
     for name, q in REGISTRY.items():
         if q.oracle is None:

@@ -136,7 +136,7 @@ def test_cross_corpus_cap_agrees_with_mirrored_oracle_when_firing(spark):
 
     import duckdb
 
-    from canon_util import canon
+    from gate import compare, oracle
     from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
 
     boiler = "all rights reserved footer text common to every page"
@@ -163,10 +163,8 @@ def test_cross_corpus_cap_agrees_with_mirrored_oracle_when_firing(spark):
             f"CREATE VIEW documents AS "
             f"SELECT * FROM '{tmp}/documents.parquet/*.parquet'"
         )
-        cur = con.execute(q.oracle)
-        ocols = [c[0] for c in cur.description]
-        odata = cur.fetchall()
-    assert canon(cols, data) == canon(ocols, odata)
+        ocols, odata = oracle(con, q.oracle)
+    assert compare(cols, data, ocols, odata) is None
     pairs = {(a, b) for a, b, _ in data}
     assert (2001, 1300) in pairs
     assert not any(a == 2000 for a, _ in pairs), sorted(pairs)[:5]

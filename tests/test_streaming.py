@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
@@ -508,7 +509,10 @@ def test_streaming_ingest_dedup_matches_batch_incremental(spark, tmp_path):
     """foreachBatch digest-index ingestion must reproduce batch
     first-occurrence dedup over the concatenated batches: a doc
     repeating EARLIER-batch content is dropped, an intra-batch dup
-    keeps the min id, novel content always lands."""
+    keeps the min id, novel content always lands.  The index is named by
+    a ``file:`` URI, which the sink must still find after the first
+    batch; an existing but empty index directory raises instead of
+    reading as a first batch (either would re-ingest duplicates)."""
     import pandas as pd
 
     from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
@@ -530,7 +534,7 @@ def test_streaming_ingest_dedup_matches_batch_incremental(spark, tmp_path):
         ).to_parquet(f)
         os.utime(f, (1_000_000 + i, 1_000_000 + i))
 
-    out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
+    out, idx = str(tmp_path / "out"), (tmp_path / "idx").as_uri()
     stream = (
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
@@ -551,13 +555,20 @@ def test_streaming_ingest_dedup_matches_batch_incremental(spark, tmp_path):
     # index holds exactly one digest per distinct content
     assert spark.read.parquet(idx).distinct().count() == 4
 
+    empty = tmp_path / "empty_idx"
+    empty.mkdir()
+    batch = spark.createDataFrame([(30, "omega")], "doc_id bigint, text string")
+    with pytest.raises(AnalysisException):
+        ingest_dedup_foreach_batch(spark, str(empty), out)(batch, 0)
+
 
 def test_upsert_latest_multi_batch_out_of_order(spark, tmp_path):
     """Cross-batch SCD1 semantics, exercised batch by batch (the gate
     query drains the fixture as one microbatch): a second batch with a
     NEWER ts wins; a second batch with an OLDER ts must NOT clobber
     newer state; same-ts ties break to the higher event_id; new keys
-    insert."""
+    insert.  The first batch against an absent state path writes the
+    state; an existing but empty state directory raises."""
     import datetime as dt
 
     from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
@@ -573,6 +584,7 @@ def test_upsert_latest_multi_batch_out_of_order(spark, tmp_path):
         [(1, t(10), 100, 1.0), (2, t(20), 101, 2.0), (3, t(5), 102, 3.0),
          (3, t(5), 103, 3.5)],  # same-ts tie inside one batch
         cols), 0)
+    assert sorted(r.user_id for r in spark.read.parquet(state).collect()) == [1, 2, 3]
     fn(spark.createDataFrame(
         [(1, t(30), 200, 10.0),   # newer -> wins
          (2, t(1), 201, -2.0),    # older -> must NOT clobber
@@ -588,6 +600,13 @@ def test_upsert_latest_multi_batch_out_of_order(spark, tmp_path):
     assert got[3] == (t(5), 103, 3.5)
     assert got[4] == (t(7), 202, 4.0)
     assert len(got) == 4
+
+    empty = tmp_path / "empty_state"
+    empty.mkdir()
+    with pytest.raises(AnalysisException):
+        upsert_latest_foreach_batch(spark, str(empty))(
+            spark.createDataFrame([(5, t(1), 300, 5.0)], cols), 0
+        )
 
 
 def test_upsert_latest_batch_split_invariance(spark, tmp_path):
