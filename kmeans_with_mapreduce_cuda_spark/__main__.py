@@ -68,8 +68,8 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> list[str]:
     """Run the CLI; returns the printed centroid lines (for tests)."""
-    from .operators.kmeans import lloyd_2d, seed_centroids_2d
-    from .sources.readers import read_points_text
+    from .operators.kmeans import assign_2d, lloyd_2d, seed_centroids_2d
+    from .sources.readers import read_points_stream, read_points_text
     from .sources.writers import format_centroids
 
     args = build_parser().parse_args(argv)
@@ -108,17 +108,8 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> li
     if args.follow:
         import os
 
-        from .sources.points_datasource import register_points_source
-        from .streaming.streams import stream_assign_kmeans
-
-        register_points_source(spark)
-        stream = (
-            spark.readStream.format("points_text")
-            .option("path", args.input)
-            .load()
-        )
         q = (
-            stream_assign_kmeans(stream, cents)
+            assign_2d(read_points_stream(spark, args.input), cents)
             .select("x", "y", "cluster_id")
             .writeStream.format("parquet")
             .option("path", args.follow)

@@ -4,6 +4,7 @@ from .readers import (  # noqa: F401
     points_from_lineitem,
     points_from_lineitem_cached,
     points_xy,
+    read_points_stream,
     read_points_text,
     register_views,
 )
@@ -12,8 +13,4 @@ from .writers import (  # noqa: F401
     write_bucketed_table,
     write_centroids_text,
     write_partitioned_parquet,
-)
-from .points_datasource import (  # noqa: F401
-    PointsTextDataSource,
-    register_points_source,
 )

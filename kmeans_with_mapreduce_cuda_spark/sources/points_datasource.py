@@ -1,44 +1,35 @@
-"""A custom Python Data Source (Spark 4 ``pyspark.sql.datasource`` API)
-for the reference's whitespace-separated 2-column integer point files
-(the format of kmeans_with_mapreduce-cuda.cu:52-70 / data/birch*.txt).
+"""The ``points_text`` streaming source: tail a growing file in the
+reference's point format (kmeans_with_mapreduce-cuda.cu:52-70 /
+data/birch*.txt) exactly once, for the CLI's ``--follow``.
 
-Why a connector and not just ``spark.read.text`` + split (which
-``sources.readers.read_points_text`` already does): the reader is the
-extensibility surface a real engine exposes, and the DataSource API is
-how PySpark 4 lets you implement one in pure Python -- schema
-declaration, OPTION handling, and byte-range splitting live behind
-``spark.read.format("points_text")`` exactly like a built-in source.
-
-Scale design: the file is split into ``n_partitions`` byte ranges; each
-task seeks to its range start, skips the partial line it landed in
-(ownership rule: a line belongs to the range containing its FIRST
-byte), and reads one line past its range end to finish its last line --
-the standard splittable-text-scan contract (what Hadoop TextInputFormat
-does), so the scan parallelizes without a driver-side read.
+Why a connector: a batch read is ``spark.read.text``, but Spark's file
+stream source picks up whole new files, not lines appended to one file.
+This source checkpoints a byte offset, so each complete line ships
+exactly once across restarts and a line still being written waits for
+its newline.  It yields raw lines; ``sources.readers.read_points_stream``
+parses them with the same expression as ``read_points_text``.  Lines end
+at ``\\n`` only: a lone ``\\r`` stays inside the line as whitespace.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
-    WriterCommitMessage,
 )
 
 
 class PointsTextDataSource(DataSource):
-    """``spark.read.format("points_text").load(path)`` -> (line_no, x, y),
-    where ``line_no`` is the byte offset at which the line starts: unique,
-    ascending in file order and the same under any partitioning, but not
-    a count of lines.
+    """``spark.readStream.format("points_text").load(path)`` ->
+    (line_no, value), where ``value`` is one line without its newline
+    and ``line_no`` the byte offset at which it starts: unique,
+    ascending in file order and the same under any partitioning, but
+    not a count of lines.
 
     Options:
       path          file path (or pass to .load())
-      n_partitions  byte-range splits (default 4)
+      n_partitions  byte-range splits per microbatch (default 4)
     """
 
     @classmethod
@@ -46,29 +37,10 @@ class PointsTextDataSource(DataSource):
         return "points_text"
 
     def schema(self) -> str:
-        return "line_no bigint, x bigint, y bigint"
-
-    def reader(self, schema) -> "PointsTextReader":
-        return PointsTextReader(self.options)
-
-    def writer(self, schema, overwrite: bool) -> "PointsTextWriter":
-        if len(schema.fields) < 2:
-            raise ValueError(
-                "points_text writer needs at least two columns (x, y); "
-                f"got {schema.simpleString()}"
-            )
-        return PointsTextWriter(self.options, overwrite)
+        return "line_no bigint, value string"
 
     def streamReader(self, schema) -> "PointsStreamReader":
         return PointsStreamReader(self.options)
-
-    def streamWriter(self, schema, overwrite: bool) -> "PointsStreamWriter":
-        if len(schema.fields) < 2:
-            raise ValueError(
-                "points_text stream writer needs at least two columns "
-                f"(x, y); got {schema.simpleString()}"
-            )
-        return PointsStreamWriter(self.options)
 
 
 class _ByteRange(InputPartition):
@@ -79,35 +51,10 @@ class _ByteRange(InputPartition):
         self.index = index
 
 
-class PointsTextReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("points_text: 'path' option is required")
-        self.n_partitions = int(options.get("n_partitions", "4"))
-
-    def partitions(self):
-        import os
-
-        size = os.path.getsize(self.path)
-        n = max(1, min(self.n_partitions, size or 1))
-        step = (size + n - 1) // n
-        return [
-            _ByteRange(self.path, i * step, min((i + 1) * step, size), i)
-            for i in range(n)
-            if i * step < size or size == 0
-        ]
-
-    def read(self, partition: _ByteRange):
-        return _scan_byte_range(
-            partition.path, partition.start, partition.end
-        )
-
-
 def _scan_byte_range(path: str, start: int, end: int):
-    """Yield (line_start_offset, x, y) for every well-formed line whose
-    FIRST byte lies in [start, end) -- shared by the batch reader's
-    byte-range splits and the stream reader's per-microbatch splits.
+    """Yield (line_start_offset, line) for every line whose FIRST byte
+    lies in [start, end), decoded as UTF-8 (bad bytes replaced) without
+    its newline.  Parsing is ``readers._parse_points``'s job.
 
     Line numbers must be globally consistent across partitions for the
     reference's array-index semantics: counting lines per range would
@@ -139,113 +86,13 @@ def _scan_byte_range(path: str, start: int, end: int):
             line = f.readline()
             if not line:
                 break
-            parts = line.split()
-            if len(parts) < 2:
-                continue  # reference scanner yields garbage; we drop
-            try:
-                x, y = int(parts[0]), int(parts[1])
-            except ValueError:
-                continue
-            yield (pos, x, y)
+            yield (pos, line.rstrip(b"\n").decode("utf-8", "replace"))
 
 
 def register_points_source(spark) -> None:
-    """Idempotent registration; after this, ``spark.read.format(
+    """Idempotent registration; after this, ``spark.readStream.format(
     "points_text")`` resolves."""
     spark.dataSource.register(PointsTextDataSource)
-
-
-class _PointsCommit(WriterCommitMessage):
-    def __init__(self, tmp_file: str, n_rows: int):
-        self.tmp_file = tmp_file
-        self.n_rows = n_rows
-
-
-class PointsTextWriter(DataSourceWriter):
-    """Write side of the connector: each task writes its partition's
-    rows as the reference's whitespace text format to a private temp
-    file; the driver COMMITS by renaming them into the target directory
-    (task-temp + driver-rename is the standard write-commit protocol --
-    a failed/speculated task leaves only orphan temp files, never a
-    partially-visible output).  Mirrors the reference's ``--save`` sink
-    (kmeans_with_mapreduce-cuda.cu:105-121) at DataFrame scale.
-    """
-
-    def __init__(self, options, overwrite: bool):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("points_text: 'path' option is required")
-        self.overwrite = overwrite
-
-    def write(self, iterator) -> "_PointsCommit":
-        import os
-        import tempfile
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        os.makedirs(self.path, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(
-            prefix=f"_tmp_points_{pid}_", dir=self.path
-        )
-        n = 0
-        with os.fdopen(fd, "w") as f:
-            for row in iterator:
-                if row[0] is None or row[1] is None:
-                    # The text format has no null representation: a
-                    # stringified None would write a line the reader
-                    # silently drops on round-trip (loud-not-wrong;
-                    # code-review r10).
-                    raise ValueError(
-                        f"points_text sink: NULL coordinate in row {row!r}; "
-                        "the 'x y' line format cannot represent nulls -- "
-                        "filter or impute before writing"
-                    )
-                f.write(f"{row[0]} {row[1]}\n")
-                n += 1
-        return _PointsCommit(tmp, n)
-
-    def commit(self, messages) -> None:
-        import glob
-        import os
-        import re
-
-        existing = set(glob.glob(os.path.join(self.path, "part-*.txt")))
-        if not self.overwrite and existing:
-            # Append must not clobber: part files from prior writes keep
-            # their names, new files continue the numbering after the
-            # highest existing index.
-            taken = [
-                int(m.group(1))
-                for p in existing
-                if (m := re.search(r"part-(\d+)\.txt$", p))
-            ]
-            base = max(taken) + 1 if taken else 0
-        else:
-            base = 0
-        written = set()
-        for i, m in enumerate(messages):
-            if m is not None:
-                final = os.path.join(self.path, f"part-{base + i:05d}.txt")
-                os.rename(m.tmp_file, final)  # atomic per-file replace
-                written.add(final)
-        if self.overwrite:
-            # Honor mode("overwrite"): drop stale part files from a prior
-            # write with MORE partitions.  Deleting AFTER the renames (not
-            # before) keeps the crash window data-safe: each rename
-            # atomically replaces its target, so at every instant the
-            # directory holds a readable mix of old and new files and a
-            # rerun converges -- a delete-first protocol would leave only
-            # invisible _tmp_points_* files if the driver died mid-commit.
-            for old in existing - written:
-                os.remove(old)
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_file):
-                os.remove(m.tmp_file)
 
 
 def _last_newline_at_or_before(
@@ -284,9 +131,9 @@ class PointsStreamReader(DataSourceStreamReader):
     MID-LINE never yields a truncated-but-parseable point (e.g.
     ``123 456`` seen as ``123 45``); the partial line ships with the
     batch after its newline lands.  Each microbatch's byte range is
-    split into ``n_partitions`` executor-side tasks reusing the batch
-    reader's first-byte ownership rule -- reads happen on executors
-    (this is why DataSourceStreamReader, not the driver-side
+    split into ``n_partitions`` executor-side tasks under
+    ``_scan_byte_range``'s first-byte ownership rule -- reads happen on
+    executors (this is why DataSourceStreamReader, not the driver-side
     SimpleDataSourceStreamReader).  A shrunken file (truncation) raises
     rather than silently rewinding.
     """
@@ -347,66 +194,3 @@ class PointsStreamReader(DataSourceStreamReader):
 
     def stop(self) -> None:
         pass
-
-
-class PointsStreamWriter(DataSourceStreamWriter):
-    """Streaming sink side of the connector: each microbatch lands as
-    the reference's text format under the target directory.
-
-    Exactly-once story: task temp files + driver-rename (same commit
-    protocol as the batch writer), with BATCH-ID-DETERMINISTIC final
-    names (``part-<batchId>-<task>.txt``) -- when the engine replays a
-    microbatch after a failure, commit() re-renames over the same
-    targets instead of duplicating data, so the sink is idempotent per
-    (batchId, partition).  abort() removes only that attempt's temp
-    files; committed batches are never touched.
-    """
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("points_text: 'path' option is required")
-
-    def write(self, iterator) -> "_PointsCommit":
-        import os
-        import tempfile
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        os.makedirs(self.path, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(
-            prefix=f"_tmp_stream_points_{pid}_", dir=self.path
-        )
-        n = 0
-        with os.fdopen(fd, "w") as f:
-            for row in iterator:
-                if row[0] is None or row[1] is None:
-                    # same null contract as the batch writer above
-                    raise ValueError(
-                        f"points_text stream sink: NULL coordinate in row "
-                        f"{row!r}; the 'x y' line format cannot represent "
-                        "nulls -- filter or impute before writing"
-                    )
-                f.write(f"{row[0]} {row[1]}\n")
-                n += 1
-        return _PointsCommit(tmp, n)
-
-    def commit(self, messages, batchId: int) -> None:
-        import os
-
-        for i, m in enumerate(messages):
-            if m is not None:
-                os.rename(
-                    m.tmp_file,
-                    os.path.join(
-                        self.path, f"part-{batchId:08d}-{i:05d}.txt"
-                    ),
-                )
-
-    def abort(self, messages, batchId: int) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_file):
-                os.remove(m.tmp_file)

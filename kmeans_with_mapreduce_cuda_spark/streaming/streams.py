@@ -6,9 +6,6 @@ kept symmetrical with the batch queries so results are cross-checkable:
 
 - ``hourly_counts_stream``  : watermarked event-time window agg -- the
   streaming twin of the batch ``rel_date_funcs`` query.
-- ``stream_assign_kmeans``  : stateless nearest-centroid scoring of a
-  point stream against fixed centroids (the map stage of the reference
-  as a continuous operator).
 - ``sessionize_stream``     : custom stateful operator via
   ``applyInPandasWithState`` -- per-user session windows with a 30 min
   inactivity gap (the kind of operator Spark has no built-in for).
@@ -48,8 +45,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp passes through (see sources.readers.load_table for the
     same contract on the batch path).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    from ..sources.readers import adapt_events_ts, set_events_parquet_confs
+
+    set_events_parquet_confs(spark)
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # the file stream source wants a directory; glob-filter to the one table
     raw = (
@@ -57,8 +55,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    from ..sources.readers import adapt_events_ts
-
     return adapt_events_ts(raw)
 
 
@@ -171,20 +167,6 @@ def view_purchase_attribution_stream(events: DataFrame) -> DataFrame:
         F.date_format("buy_ts", "yyyy-MM-dd HH:mm:ss").alias("buy_ts_str"),
         F.round("value", 4).alias("purchase_value"),
     )
-
-
-def stream_assign_kmeans(
-    points_stream: DataFrame,
-    centroids: list[tuple[float, float]],
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
-    """Continuous nearest-centroid scoring: the same literal-centroid
-    argmin projection as the batch path (operators.kmeans.assign_2d) --
-    stateless, so it runs unchanged on a stream."""
-    from ..operators.kmeans import assign_2d
-
-    return assign_2d(points_stream, centroids, x=x, y=y)
 
 
 class StreamingKMeans:

@@ -1,14 +1,14 @@
 """Property test for the byte-range split protocol of the points_text
-Python Data Source (no Spark session needed: partitions() and read()
-are pure Python over a file).
+streaming source (no Spark session needed: partitions() and read() are
+pure Python over a file).
 
 The contract under test is the Hadoop LineRecordReader ownership rule:
 a line belongs to the byte range containing its FIRST byte, every line
-is read by EXACTLY one partition, for every file shape and partition
-count.  Round-2 ADVICE found a real bug here (a line starting exactly
-on a split boundary was read by neither side) that only boundary-
-aligned fixtures expose -- hypothesis generates those alignments by
-the hundreds.
+is read by EXACTLY one partition, with its start offset, for every file
+shape and partition count.  Round-2 ADVICE found a real bug here (a
+line starting exactly on a split boundary was read by neither side)
+that only boundary-aligned fixtures expose -- hypothesis generates
+those alignments by the hundreds.
 """
 
 from __future__ import annotations
@@ -20,34 +20,51 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from kmeans_with_mapreduce_cuda_spark.sources.points_datasource import (
-    PointsTextReader,
+    PointsStreamReader,
 )
 
 
-def _reference_parse(data: bytes) -> list[tuple[int, int, int]]:
-    """Single-pass oracle: (line_start_offset, x, y) per well-formed line."""
+def _reference_lines(data: bytes) -> list[tuple[int, str]]:
+    """Single-pass oracle: (line_start_offset, line) per line, the line
+    without its newline and decoded as the source decodes it."""
+    lines = data.split(b"\n")
+    if lines[-1] == b"":
+        lines.pop()  # what follows a final newline (or all of b"") is no line
     out = []
     pos = 0
-    for line in data.splitlines(keepends=True):
-        parts = line.split()
-        if len(parts) >= 2:
-            try:
-                out.append((pos, int(parts[0]), int(parts[1])))
-            except ValueError:
-                pass
-        pos += len(line)
+    for line in lines:
+        out.append((pos, line.decode("utf-8", "replace")))
+        pos += len(line) + 1
     return out
 
 
+def _read_all(data: bytes, n_partitions: int) -> list[tuple[int, str]]:
+    """Every row the stream reader ships for one microbatch covering
+    the whole file, across all of its partitions."""
+    with tempfile.NamedTemporaryFile(delete=False, suffix=".txt") as f:
+        f.write(data)
+        path = f.name
+    try:
+        reader = PointsStreamReader(
+            {"path": path, "n_partitions": str(n_partitions)}
+        )
+        got = []
+        for part in reader.partitions({"pos": 0}, {"pos": len(data)}):
+            got.extend(reader.read(part))
+        return got
+    finally:
+        os.unlink(path)
+
+
 _line = st.one_of(
-    # well-formed: two ints, variable widths and separators
+    # point-shaped: two ints, variable widths and separators
     st.tuples(
         st.integers(0, 10**6),
         st.integers(0, 10**6),
         st.sampled_from([b" ", b"\t", b"   "]),
     ).map(lambda t: str(t[0]).encode() + t[2] + str(t[1]).encode()),
-    # malformed / empty lines the scanner must skip
-    st.sampled_from([b"", b"junk", b"12", b"a b"]),
+    # any other bytes, CR and invalid UTF-8 included
+    st.binary(max_size=12).map(lambda b: b.replace(b"\n", b"")),
 )
 
 
@@ -61,22 +78,8 @@ def test_every_line_read_exactly_once(lines, trailing_newline, n_partitions):
     data = b"\n".join(lines)
     if trailing_newline and lines:
         data += b"\n"
-    with tempfile.NamedTemporaryFile(delete=False, suffix=".txt") as f:
-        f.write(data)
-        path = f.name
-    try:
-        reader = PointsTextReader(
-            {"path": path, "n_partitions": str(n_partitions)}
-        )
-        got = []
-        for part in reader.partitions():
-            got.extend(reader.read(part))
-        assert sorted(got) == _reference_parse(data), (
-            data,
-            n_partitions,
-        )
-    finally:
-        os.unlink(path)
+    got = _read_all(data, n_partitions)
+    assert sorted(got) == _reference_lines(data), (data, n_partitions)
 
 
 def test_fixed_width_lines_align_on_boundaries():
@@ -84,18 +87,8 @@ def test_fixed_width_lines_align_on_boundaries():
     n_partitions dividing the file size puts a line start exactly on
     every split boundary."""
     data = b"".join(f"{i} {i}\n".encode() for i in range(1, 10))  # 4B lines
-    with tempfile.NamedTemporaryFile(delete=False, suffix=".txt") as f:
-        f.write(data)
-        path = f.name
-    try:
-        for n in (1, 2, 3, 4, 5, 9):
-            reader = PointsTextReader({"path": path, "n_partitions": str(n)})
-            got = []
-            for part in reader.partitions():
-                got.extend(reader.read(part))
-            assert sorted(got) == _reference_parse(data), n
-    finally:
-        os.unlink(path)
+    for n in (1, 2, 3, 4, 5, 9):
+        assert sorted(_read_all(data, n)) == _reference_lines(data), n
 
 
 @settings(max_examples=300, deadline=None)

@@ -5,13 +5,18 @@
 from __future__ import annotations
 
 import glob
+import itertools
 import os
+import re
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.sources import (
     format_centroids,
     load_table,
+    read_points_stream,
     read_points_text,
     write_centroids_text,
 )
@@ -201,72 +206,98 @@ def test_read_points_text_drops_malformed_lines(spark, tmp_path):
     assert sorted((r["x"], r["y"]) for r in got) == [(1, 2), (4, 5), (6, 7)]
 
 
-def test_points_text_python_datasource(spark):
-    """Custom Python Data Source (Spark 4 API): byte-range-split scan of
-    the reference's whitespace point format, results invariant to the
-    partition count and equal to the text+split reader."""
-    import os
+_INT_TOKEN = re.compile(rb"[+-]?[0-9]+")
 
-    from kmeans_with_mapreduce_cuda_spark.sources import (
-        read_points_text,
-        register_points_source,
-    )
 
-    path = "/root/reference/data/birch1.txt"
-    if not os.path.exists(path):
-        import pytest
+def _contract_points(data: bytes) -> list[tuple[int, int]]:
+    """Pure-Python oracle of the point-line contract: ASCII-whitespace
+    tokens, the first two kept, a line dropped unless both are signed
+    decimal integers in bigint range."""
+    out = []
+    for line in data.split(b"\n"):
+        toks = line.split()[:2]  # bytes.split(): runs of ASCII whitespace
+        if len(toks) == 2 and all(_INT_TOKEN.fullmatch(t) for t in toks):
+            x, y = (int(t) for t in toks)
+            if all(-(2**63) <= v < 2**63 for v in (x, y)):
+                out.append((x, y))
+    return sorted(out)
 
-        pytest.skip("reference data not present")
-    register_points_source(spark)
 
-    def pts(n_parts):
-        return (
-            spark.read.format("points_text")
-            .option("path", path)
-            .option("n_partitions", str(n_parts))
-            .load()
+_token = st.one_of(
+    st.integers(-(2**63), 2**63 - 1).map(str),
+    st.integers(0, 10**6).map(lambda v: f"+{v}"),
+    # 19 digits straddle the bigint bounds; 20 digits are always out
+    st.integers(10**18, 10**19 - 1).map(str),
+    st.integers(-(10**19) + 1, -(10**18)).map(str),
+    st.integers(10**19, 10**20 - 1).map(str),
+    st.sampled_from(["1_000", "bad", "1.5", "0x10", "-", "+"]),
+)
+_blank = st.text(alphabet=" \t", max_size=3)
+_gap = st.text(alphabet=" \t", min_size=1, max_size=3)
+
+
+@st.composite
+def _point_line(draw) -> str:
+    toks = draw(st.lists(_token, max_size=3))
+    seps = ["", *(draw(_gap) for _ in toks[1:])]
+    body = "".join(sep + tok for sep, tok in zip(seps, toks))
+    end = draw(st.sampled_from(["\n", "\r\n"]))
+    return draw(_blank) + body + draw(_blank) + end
+
+
+def test_read_points_text_matches_contract_oracle(spark, tmp_path):
+    """Property test of the one point parser: on lines with runs of
+    spaces and tabs anywhere, CRLF endings, signs, 19- and 20-digit
+    tokens, underscores, 3 tokens, blank and junk lines,
+    read_points_text's (x, y) multiset equals the contract oracle."""
+    paths = (str(tmp_path / f"pts_{i}.txt") for i in itertools.count())
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(_point_line(), max_size=20))
+    def check(lines):
+        data = "".join(lines).encode()
+        path = next(paths)
+        with open(path, "wb") as f:
+            f.write(data)
+        got = sorted(
+            (r["x"], r["y"]) for r in read_points_text(spark, path).collect()
         )
+        assert got == _contract_points(data), data
 
-    a = sorted((r["x"], r["y"]) for r in pts(1).collect())
-    b = sorted((r["x"], r["y"]) for r in pts(7).collect())
-    assert a == b, "scan must be invariant to byte-range splitting"
-    exp = sorted(
-        (r["x"], r["y"]) for r in read_points_text(spark, path).collect()
+    check()
+
+
+_MIXED_POINTS = (
+    "\t5 6\n7 8\n  9\t10\r\n\t 11 12\n1_000 2\n"
+    "99999999999999999999 1\n13 14 15\nbad\n\n"
+)
+
+
+def test_batch_and_stream_readers_parse_alike(spark, tmp_path):
+    """read_points_text and read_points_stream share one parser: on
+    tab-led, CRLF, underscore, overflowing, 3-token and junk lines they
+    return the same points."""
+    p = tmp_path / "mixed.txt"
+    p.write_text(_MIXED_POINTS)
+    want = {(5, 6), (7, 8), (9, 10), (11, 12), (13, 14)}
+    batch = read_points_text(spark, str(p)).collect()
+    assert {(r["x"], r["y"]) for r in batch} == want
+
+    q = (
+        read_points_stream(spark, str(p))
+        .writeStream.format("memory")
+        .queryName("mixed_points")
+        .trigger(availableNow=True)
+        .start()
     )
-    assert a == exp
-    # line_no surrogate is monotone in file order within a partition and
-    # globally unique
-    rows = pts(5).collect()
-    assert len({r["line_no"] for r in rows}) == len(rows)
-
-
-def test_points_text_split_boundary_on_line_start(spark, tmp_path):
-    """Regression: fixed-width lines whose starts align EXACTLY with the
-    byte-range boundaries.  A line whose first byte is a split boundary
-    belongs to the right range (Hadoop LineRecordReader contract); the
-    old unconditional first-line skip read it in neither range, silently
-    dropping rows whenever line starts aligned with splits."""
-    from kmeans_with_mapreduce_cuda_spark.sources import register_points_source
-
-    p = tmp_path / "fixed.txt"
-    # ten 4-byte lines ("d d\n") -> 40-byte file; every divisor-of-40
-    # partitioning puts some boundary exactly on a line start
-    p.write_text("".join(f"{i} {i}\n" for i in range(10)))
-    assert p.stat().st_size == 40
-    register_points_source(spark)
-
-    def pts(n_parts):
-        return (
-            spark.read.format("points_text")
-            .option("path", str(p))
-            .option("n_partitions", str(n_parts))
-            .load()
-        )
-
-    want = [(i, i) for i in range(10)]
-    for n in (1, 2, 4, 5, 8, 10):
-        got = sorted((r["x"], r["y"]) for r in pts(n).collect())
-        assert got == want, f"n_partitions={n} dropped rows: {got}"
+    assert q.awaitTermination(120)
+    q.stop()
+    stream = spark.table("mixed_points").collect()
+    assert {(r["x"], r["y"]) for r in stream} == want
+    # line_no is each kept line's start byte offset
+    assert {r["line_no"] for r in stream} == {
+        _MIXED_POINTS.index(ln) for ln in ("\t5", "7 8", "  9", "\t 11", "13 ")
+    }
 
 
 def test_load_table_memo_invalidates_on_mtime(spark, tmp_path):
@@ -323,120 +354,6 @@ def test_compressed_formats_roundtrip(spark, tmp_path):
     assert {(r["k"], r["n"]) for r in back.collect()} == want
 
 
-def test_points_text_datasource_write_roundtrip(spark, tmp_path):
-    """Write side of the custom connector: DataFrame -> reference text
-    format via task-temp + driver-rename commit, then read back through
-    the SAME connector's byte-range reader."""
-    from kmeans_with_mapreduce_cuda_spark.sources import register_points_source
-
-    register_points_source(spark)
-    df = spark.range(0, 1000).select(
-        (F.col("id") * 37 % 4096).alias("x"),
-        (F.col("id") * 91 % 4096).alias("y"),
-    )
-    dest = str(tmp_path / "pts_out")
-    df.repartition(4).write.format("points_text").option(
-        "path", dest
-    ).mode("append").save()
-
-    import glob
-    import os
-
-    parts = glob.glob(os.path.join(dest, "part-*.txt"))
-    assert len(parts) == 4
-    assert not glob.glob(os.path.join(dest, "_tmp_points_*"))  # committed
-
-    # the reader takes one concrete file path (os.path.getsize); read
-    # the committed parts individually
-    got = set()
-    for p in sorted(parts):
-        rows = (
-            spark.read.format("points_text").option("path", p).load()
-            .select("x", "y")
-            .collect()
-        )
-        got.update((r["x"], r["y"]) for r in rows)
-    want = {(r["x"], r["y"]) for r in df.collect()}
-    assert got == want
-
-
-def test_points_text_datasource_overwrite_removes_stale_parts(spark, tmp_path):
-    """mode("overwrite") must not leave stale part files from a prior
-    write with MORE partitions mixed into the new output (round-3
-    advice: commit() previously ignored the overwrite flag)."""
-    from kmeans_with_mapreduce_cuda_spark.sources import register_points_source
-
-    register_points_source(spark)
-    dest = str(tmp_path / "pts_ovw")
-    big = spark.range(0, 400).select(
-        F.col("id").alias("x"), F.col("id").alias("y")
-    )
-    big.repartition(8).write.format("points_text").option("path", dest).mode(
-        "append"
-    ).save()
-
-    import glob
-    import os
-
-    assert len(glob.glob(os.path.join(dest, "part-*.txt"))) == 8
-
-    small = spark.range(1000, 1100).select(
-        F.col("id").alias("x"), F.col("id").alias("y")
-    )
-    small.repartition(2).write.format("points_text").option(
-        "path", dest
-    ).mode("overwrite").save()
-
-    parts = glob.glob(os.path.join(dest, "part-*.txt"))
-    assert len(parts) == 2  # stale part-00002..07 from the 8-way write gone
-    got = set()
-    for p in sorted(parts):
-        rows = (
-            spark.read.format("points_text").option("path", p).load()
-            .select("x", "y")
-            .collect()
-        )
-        got.update((r["x"], r["y"]) for r in rows)
-    assert got == {(i, i) for i in range(1000, 1100)}
-
-
-def test_points_text_datasource_append_does_not_clobber(spark, tmp_path):
-    """Append mode must extend the part numbering past existing files,
-    never rename onto them (a second append previously overwrote
-    part-00000/00001 of the first write)."""
-    from kmeans_with_mapreduce_cuda_spark.sources import register_points_source
-
-    register_points_source(spark)
-    dest = str(tmp_path / "pts_app")
-    first = spark.range(0, 100).select(
-        F.col("id").alias("x"), F.col("id").alias("y")
-    )
-    first.repartition(4).write.format("points_text").option(
-        "path", dest
-    ).mode("append").save()
-    second = spark.range(100, 150).select(
-        F.col("id").alias("x"), F.col("id").alias("y")
-    )
-    second.repartition(2).write.format("points_text").option(
-        "path", dest
-    ).mode("append").save()
-
-    import glob
-    import os
-
-    parts = glob.glob(os.path.join(dest, "part-*.txt"))
-    assert len(parts) == 6  # 4 + 2, nothing replaced
-    got = set()
-    for p in sorted(parts):
-        rows = (
-            spark.read.format("points_text").option("path", p).load()
-            .select("x", "y")
-            .collect()
-        )
-        got.update((r["x"], r["y"]) for r in rows)
-    assert got == {(i, i) for i in range(150)}
-
-
 def test_load_table_events_handles_both_ts_physical_types(spark, tmp_path):
     """The driver regenerates fixtures between rounds and the events.ts
     parquet physical type has ALREADY flipped once (TIMESTAMP(NANOS)
@@ -482,16 +399,12 @@ def test_load_table_events_handles_both_ts_physical_types(spark, tmp_path):
 
 
 def test_points_text_stream_reader_tails_file_exactly_once(spark, tmp_path):
-    """Streaming side of the connector: availableNow drains against one
-    checkpoint must (1) ship each line exactly once across restarts,
-    (2) hold back a partial trailing line until its newline lands, and
-    (3) split each catch-up range into executor-side byte-range tasks
-    (same ownership rule as the batch reader)."""
-    import os
-
-    from kmeans_with_mapreduce_cuda_spark.sources import register_points_source
-
-    register_points_source(spark)
+    """Streaming source: availableNow drains of read_points_stream
+    against one checkpoint must (1) ship each line exactly once across
+    restarts, (2) hold back a partial trailing line until its newline
+    lands, (3) split each catch-up range into executor-side byte-range
+    tasks, and (4) parse like read_points_text -- a tab-led line
+    arrives, a 20-digit token drops its line without failing the query."""
     src = str(tmp_path / "feed.txt")
     ckpt = str(tmp_path / "ckpt")
 
@@ -501,10 +414,7 @@ def test_points_text_stream_reader_tails_file_exactly_once(spark, tmp_path):
         # parquet sink: checkpoint-recoverable (the memory sink is not),
         # so each availableNow drain resumes from the committed offset
         q = (
-            spark.readStream.format("points_text")
-            .option("path", src)
-            .option("n_partitions", "3")
-            .load()
+            read_points_stream(spark, src)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -520,7 +430,10 @@ def test_points_text_stream_reader_tails_file_exactly_once(spark, tmp_path):
     with open(src, "w") as f:
         for i in range(100):
             f.write(f"{i} {i * 2}\n")
-    assert drain() == {(i, 2 * i) for i in range(100)}
+        f.write("\t1000 2000\n")
+        f.write("99999999999999999999 1\n")
+    first = {(i, 2 * i) for i in range(100)} | {(1000, 2000)}
+    assert drain() == first
 
     # append 50 complete lines + one PARTIAL line (no newline): the
     # partial "999 9" must NOT ship as a truncated-but-parseable point
@@ -528,55 +441,14 @@ def test_points_text_stream_reader_tails_file_exactly_once(spark, tmp_path):
         for i in range(100, 150):
             f.write(f"{i} {i * 2}\n")
         f.write("999 9")
-    assert drain() == {(i, 2 * i) for i in range(150)}  # exactly once, no (999, 9)
+    second = first | {(i, 2 * i) for i in range(100, 150)}
+    assert drain() == second  # exactly once, no (999, 9)
 
     # complete the partial line: exactly the finished point arrives
     with open(src, "a") as f:
         f.write("99\n")
-    assert drain() == {(i, 2 * i) for i in range(150)} | {(999, 999)}
-
-
-def test_points_text_stream_writer_roundtrip(spark, tmp_path):
-    """Full streaming round-trip THROUGH the connector: readStream
-    points_text -> writeStream points_text.  Batch-id-deterministic
-    part names make microbatch replay idempotent; content must equal
-    the source file and no temp files may survive the commit."""
-    import glob
-    import os
-
-    from kmeans_with_mapreduce_cuda_spark.sources import register_points_source
-
-    register_points_source(spark)
-    src = str(tmp_path / "in.txt")
-    with open(src, "w") as f:
-        for i in range(300):
-            f.write(f"{i} {i * 7 % 500}\n")
-    out = str(tmp_path / "out_txt")
-
-    q = (
-        spark.readStream.format("points_text")
-        .option("path", src)
-        .load()
-        .select("x", "y")
-        .writeStream.format("points_text")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    q.stop()
-
-    parts = glob.glob(os.path.join(out, "part-*.txt"))
-    assert parts and not glob.glob(os.path.join(out, "_tmp_stream_*"))
-    got = set()
-    for p in parts:
-        rows = (
-            spark.read.format("points_text").option("path", p).load()
-            .select("x", "y").collect()
-        )
-        got.update((r["x"], r["y"]) for r in rows)
-    assert got == {(i, i * 7 % 500) for i in range(300)}
+    assert drain() == second | {(999, 999)}
+    assert spark.read.parquet(out).count() == len(second) + 1
 
 
 def test_register_views_drops_stale_view_for_missing_table(spark, tmp_path):
@@ -613,21 +485,6 @@ def test_register_views_drops_stale_view_for_missing_table(spark, tmp_path):
         # Restore the full fixture even on failure -- later spark.sql
         # tests in this session-scoped fixture depend on the views.
         register_views(spark, SF_DIR)
-
-
-def test_points_sink_refuses_null_coordinates(spark, tmp_path):
-    """The 'x y' line format cannot represent NULL: the old writer
-    stringified None into a line the reader silently DROPPED on
-    round-trip -- the contract is a loud ValueError at write time
-    (code-review r10)."""
-    import pytest
-
-    df = spark.createDataFrame([(1, 2), (None, 5)], "x bigint, y bigint")
-    dest = str(tmp_path / "pts")
-    with pytest.raises(Exception, match="NULL coordinate"):
-        df.write.format("points_text").option("path", dest).mode(
-            "append"
-        ).save()
 
 
 def _artifact_scratch(tmp_path, monkeypatch):

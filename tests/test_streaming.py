@@ -17,7 +17,6 @@ from kmeans_with_mapreduce_cuda_spark.streaming import (
     read_events_stream,
     rocksdb_state_confs,
     sessionize_stream,
-    stream_assign_kmeans,
 )
 
 from conftest import SF_DIR
@@ -71,7 +70,7 @@ def test_stream_kmeans_assignment_matches_batch(spark):
         F.col("value").alias("y"),
     )
     got = _run_to_memory(
-        stream_assign_kmeans(ev, cents), "t_assign", spark
+        assign_2d(ev, cents), "t_assign", spark
     ).toPandas()
 
     batch = load_table(spark, SF_DIR, "events").select(
@@ -402,36 +401,26 @@ def test_streaming_gate_queries_pin_utc_regardless_of_session_tz(spark):
 
 
 def test_streaming_source_composes_with_kmeans_scoring(spark, tmp_path):
-    """End-to-end composition: the connector's STREAMING reader feeding
-    the stateless nearest-centroid scorer -- tail a points file, assign
+    """End-to-end composition: the streaming source feeding the
+    stateless nearest-centroid scorer -- tail a points file, assign
     each arriving point, land parquet.  The drained assignment must
     equal the batch path over the same file (same argmin projection,
-    same ownership-rule scan)."""
+    same parser)."""
     from kmeans_with_mapreduce_cuda_spark.operators.kmeans import assign_2d
     from kmeans_with_mapreduce_cuda_spark.sources import (
+        read_points_stream,
         read_points_text,
-        register_points_source,
-    )
-    from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
-        stream_assign_kmeans,
     )
 
-    register_points_source(spark)
     src = str(tmp_path / "pts.txt")
     with open(src, "w") as f:
         for i in range(500):
             f.write(f"{i * 13 % 1000} {i * 29 % 1000}\n")
     cents = [(100.0, 100.0), (500.0, 500.0), (900.0, 200.0)]
 
-    stream = (
-        spark.readStream.format("points_text")
-        .option("path", src)
-        .option("n_partitions", "3")
-        .load()
-    )
     out = str(tmp_path / "scored")
     q = (
-        stream_assign_kmeans(stream, cents)
+        assign_2d(read_points_stream(spark, src), cents)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
