@@ -52,28 +52,23 @@ class LshPairs(NamedTuple):
     capped_buckets: DataFrame
 
 
-def exact_dedup_keep_first(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep the lowest-id row per exact content hash (deterministic
+def exact_dedup_keep_first(df: DataFrame) -> DataFrame:
+    """Keep the lowest-``doc_id`` row per exact ``text`` hash (deterministic
     canonical selection; dropDuplicates keeps an arbitrary row)."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(F.md5(text_col)).orderBy(id_col)
+    w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     return df.withColumn("_rn", F.row_number().over(w)).where(
         F.col("_rn") == 1
     ).drop("_rn")
 
 
 def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = hashing.MINHASH_NUM_HASHES,
+    df: DataFrame, num_hashes: int = hashing.MINHASH_NUM_HASHES
 ) -> DataFrame:
-    """Per-doc MinHash signature -> (id, sig: array<bigint>[num_hashes])
-    over word ``MINHASH_SHINGLE_N``-gram shingles, md5 salted with
-    ``MINHASH_SEED`` (``functions/hashing.py``).
+    """Per-doc MinHash signature -> (doc_id, sig: array<bigint>[num_hashes])
+    over word ``MINHASH_SHINGLE_N``-gram shingles of ``text``, md5 salted
+    with ``MINHASH_SEED`` (``functions/hashing.py``).
 
     Explode -> scalar md5 -> groupBy(min x num_hashes): every expression
     is a plain codegen'd scalar (no higher-order lambdas, which evaluate
@@ -97,8 +92,8 @@ def minhash_signatures(
     # the session's cores first.  No-op whenever the source already
     # offers >= defaultParallelism splits (any real corpus).
     ex = spread_scan(df).select(
-        id_col,
-        F.explode(word_shingles(text_col, hashing.MINHASH_SHINGLE_N)).alias("_s"),
+        "doc_id",
+        F.explode(word_shingles("text", hashing.MINHASH_SHINGLE_N)).alias("_s"),
     )
     salt = f"mh{hashing.MINHASH_SEED}:"
     x = F.conv(
@@ -113,16 +108,16 @@ def minhash_signatures(
         for j, (a, b) in enumerate(hashing.minhash_params(num_hashes))
     ]
     return (
-        ex.select(id_col, x.alias("_x"))
-        .groupBy(id_col)
+        ex.select("doc_id", x.alias("_x"))
+        .groupBy("doc_id")
         .agg(*aggs)
         .select(
-            id_col, F.array(*[f"_h{j}" for j in range(num_hashes)]).alias("sig")
+            "doc_id", F.array(*[f"_h{j}" for j in range(num_hashes)]).alias("sig")
         )
     )
 
 
-def _minhash_banded(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _minhash_banded(df: DataFrame) -> DataFrame:
     """(id, sig, bk) per (doc, band): each doc's MinHash signature
     exploded into ``MINHASH_BANDS`` band keys bk = (band, h0..h{r-1}),
     r = MINHASH_NUM_HASHES / MINHASH_BANDS -- the one shuffle key of
@@ -130,7 +125,7 @@ def _minhash_banded(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     num_hashes, bands = hashing.MINHASH_NUM_HASHES, hashing.MINHASH_BANDS
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes)
+    sig = minhash_signatures(df, num_hashes)
     band_structs = F.array(
         *[
             F.struct(
@@ -141,14 +136,12 @@ def _minhash_banded(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         ]
     )
     return sig.select(
-        F.col(id_col).alias("id"), F.col("sig"), F.explode(band_structs).alias("bk")
+        F.col("doc_id").alias("id"), F.col("sig"), F.explode(band_structs).alias("bk")
     )
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket: int | None = MAX_BAND_BUCKET,
 ) -> LshPairs:
     """LSH candidate pairs + signature-estimated Jaccard.
@@ -187,7 +180,7 @@ def minhash_lsh_pairs(
     # grouped pair expansion cannot start before that broadcast -- so
     # the dedicated fill job is a pure extra pass now and is removed
     # (measured r11: ~0.2-0.4 s off every minhash-family key).
-    banded = _minhash_banded(df, text_col, id_col).persist()
+    banded = _minhash_banded(df).persist()
     joinable, capped = cap_hot_keys(banded, "bk", max_bucket, "n_docs")
 
     # Per-bucket pair expansion instead of the banded SELF-JOIN (r11):
@@ -239,8 +232,6 @@ def minhash_lsh_pairs(
 def minhash_cross_pairs(
     new_df: DataFrame,
     ref_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_bucket: int | None = MAX_BAND_BUCKET,
 ) -> LshPairs:
     """Cross-corpus LSH near-dup candidates: every ``new_df`` document
@@ -264,7 +255,7 @@ def minhash_cross_pairs(
     Returns :class:`LshPairs` with ``pairs`` = (new_doc, ref_doc,
     est_jaccard); ``deps`` must be unpersisted after materializing.
     """
-    banded_ref = _minhash_banded(ref_df, text_col, id_col).persist()
+    banded_ref = _minhash_banded(ref_df).persist()
     # No eager fill needed (r11, the minhash_lsh_pairs rationale): the
     # reference side of the pair join is gated on broadcast(capped),
     # whose build runs sizes over the cold cache first -- one pass,
@@ -274,7 +265,7 @@ def minhash_cross_pairs(
     # materializes ``capped_buckets`` runs the ungated sizes branch
     # against the cold cache: a recompute, never a wrong answer).
     # Every current caller passes max_bucket and reads only pairs.
-    banded_new = _minhash_banded(new_df, text_col, id_col)
+    banded_new = _minhash_banded(new_df)
     joinable_ref, capped = cap_hot_keys(banded_ref, "bk", max_bucket, "n_docs")
 
     n, x = banded_new.alias("n"), joinable_ref.alias("x")
@@ -364,8 +355,6 @@ def token_hashes_sql(text_expr: str = "text") -> str:
 
 def simhash_near_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
     max_bucket: int | None = MAX_BAND_BUCKET,
@@ -394,8 +383,8 @@ def simhash_near_pairs(
     width = 16 // bands
     mask = (1 << width) - 1
     sh = df.select(
-        F.col(id_col).alias("id"),
-        simhash16_from_hashes(token_hashes(text_col)).alias("sh"),
+        F.col("doc_id").alias("id"),
+        simhash16_from_hashes(token_hashes("text")).alias("sh"),
     )
     band_structs = F.array(
         *[
@@ -518,13 +507,8 @@ def connected_components_local(pairs) -> dict:
     return {n: find(n) for n in parent}
 
 
-def connected_components(
-    edges: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    max_iter: int = 20,
-) -> "Components":
-    """Resolve near-dup candidate PAIRS into duplicate CLUSTERS:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> "Components":
+    """Resolve near-dup candidate PAIRS (doc_a, doc_b) into duplicate CLUSTERS:
     iterative min-label propagation until fixpoint, returning
     (node, comp) with comp = the smallest node id reachable from node.
 
@@ -605,8 +589,10 @@ def connected_components(
     # discipline rel_pagerank pins with
     # test_pagerank_reuses_persisted_edge_list.
     sym = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .unionAll(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .unionAll(
+            edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+        )
         .repartition("src")
         .persist()
     )
@@ -695,45 +681,32 @@ def connected_components(
     return Components(labels=out, deps=[_CheckpointHandle(labels)])
 
 
-def incremental_dedup_keep_digests(
-    digests: DataFrame,
-    delta: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def incremental_dedup_keep_digests(digests: DataFrame, delta: DataFrame) -> DataFrame:
     """Core of incremental dedup against a pre-hashed digest index:
-    surviving delta (h, id) rows = min id per content hash within the
-    delta, minus hashes present in ``digests`` (a single-column ``h``
-    DataFrame).  Shared by the batch gate query (dedup_incremental)
-    and the streaming foreachBatch ingest sink so their dedup key and
-    tie-break rules cannot drift apart."""
+    surviving delta (h, doc_id) rows = min doc_id per ``text`` hash
+    within the delta, minus hashes present in ``digests`` (a
+    single-column ``h`` DataFrame).  Shared by the batch gate query
+    (dedup_incremental) and the streaming foreachBatch ingest sink so
+    their dedup key and tie-break rules cannot drift apart."""
     keep = (
-        delta.select(F.col(id_col), F.md5(text).alias("h"))
+        delta.select(F.col("doc_id"), F.md5("text").alias("h"))
         .groupBy("h")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
     )
     return keep.join(digests, "h", "left_anti")
 
 
-def incremental_dedup_keep(
-    base: DataFrame, delta: DataFrame, text: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Incremental (delta-vs-corpus) exact dedup: surviving delta ids =
-    min id per content hash within the delta, minus hashes already
-    present in the base corpus.  Only 16-byte digests move; at scale
+def incremental_dedup_keep(base: DataFrame, delta: DataFrame) -> DataFrame:
+    """Incremental (delta-vs-corpus) exact dedup: surviving delta
+    ``doc_id``s = min id per ``text`` hash within the delta, minus hashes
+    already present in the base corpus.  Only 16-byte digests move; at scale
     the base digest index is bucketed by hash so its anti-join side is
     scan-in-place (see the dedup_incremental gate query)."""
-    bh = base.select(F.md5(text).alias("h")).distinct()
-    return incremental_dedup_keep_digests(bh, delta, text, id_col).select(
-        id_col
-    )
+    bh = base.select(F.md5("text").alias("h")).distinct()
+    return incremental_dedup_keep_digests(bh, delta).select("doc_id")
 
 
-def cdc_chunk_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def cdc_chunk_stats(df: DataFrame) -> DataFrame:
     """Passage-level exact dedup via CONTENT-DEFINED chunking (the CCNet/
     rsync idea): a token starts a new chunk when its md5('cdc:' || token)
     bucket ``% 8 == 0``, so chunk boundaries are a function of the
@@ -742,14 +715,14 @@ def cdc_chunk_stats(
     windows where every downstream passage shifts.  Expected chunk
     length = 8 words.
 
-    Returns one row per document: (id, n_chunks, dup_chunks, dup_ratio)
+    Returns one row per document: (doc_id, n_chunks, dup_chunks, dup_ratio)
     where a chunk counts as duplicated when its exact text occurs in at
     least one OTHER document.  ``dup_ratio`` is a single IEEE division
     of two exact bigints (emitted unrounded per the registry float
     policy).
 
     Scale shape (100 TB judgment):
-    - one exchange of the token stream on ``id_col`` for the
+    - one exchange of the token stream on ``doc_id`` for the
       prefix-sum window (same shape as sessionization; AQE splits any
       outsized doc partition),
     - chunk assembly groups (id, chunk_no) WITHIN that partitioning --
@@ -761,7 +734,7 @@ def cdc_chunk_stats(
     from pyspark.sql.window import Window
 
     words = df.select(
-        F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "w")
+        F.col("doc_id"), F.posexplode(tokens("text")).alias("pos", "w")
     )
     bucket = (
         F.conv(
@@ -771,14 +744,14 @@ def cdc_chunk_stats(
     )
     flagged = words.withColumn("b", (bucket == 0).cast("int"))
     run = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     numbered = flagged.select(
-        id_col, "pos", "w", F.sum("b").over(run).alias("chunk_no")
+        "doc_id", "pos", "w", F.sum("b").over(run).alias("chunk_no")
     )
-    chunks = numbered.groupBy(id_col, "chunk_no").agg(
+    chunks = numbered.groupBy("doc_id", "chunk_no").agg(
         F.md5(
             F.array_join(
                 F.transform(
@@ -794,19 +767,19 @@ def cdc_chunk_stats(
     # partition key -- no exchange); the cross-corpus doc count is a
     # WINDOW over chunk_hash, not a self-join: a join of two aggregates
     # over the same lineage would scan + chunk the corpus twice.
-    per_doc_hash = chunks.groupBy("chunk_hash", id_col).agg(
+    per_doc_hash = chunks.groupBy("chunk_hash", "doc_id").agg(
         F.count("*").alias("n_occ")
     )
     joined = per_doc_hash.withColumn(
         "n_docs", F.count("*").over(Window.partitionBy("chunk_hash"))
     )
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.sum("n_occ").alias("n_chunks"),
         F.sum(F.when(F.col("n_docs") > 1, F.col("n_occ")).otherwise(0)).alias(
             "dup_chunks"
         ),
     ).select(
-        id_col,
+        "doc_id",
         "n_chunks",
         "dup_chunks",
         (F.col("dup_chunks").cast("double") / F.col("n_chunks")).alias(

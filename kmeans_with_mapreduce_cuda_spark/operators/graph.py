@@ -60,14 +60,12 @@ class PageRanks(NamedTuple):
 
 def pagerank_int(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iters: int = PAGERANK_ITERS,
 ) -> PageRanks:
     """Fixed-iteration PageRank with exact integer arithmetic.
 
-    ``edges`` is a directed edge list.  Node set = DISTINCT ``src``;
-    every node of interest must therefore have >= 1 out-edge
+    ``edges`` is a directed (src, dst) edge list.  Node set = DISTINCT
+    ``src``; every node of interest must therefore have >= 1 out-edge
     (symmetrize the graph or add self-loops first -- the caller's
     job, and what the gate query does).  Per iteration::
 
@@ -94,7 +92,7 @@ def pagerank_int(
     test mirrors the reference's ITERATIONS=999 contract
     (kmeans_mapreduce_core.cu:237-259, config.cuh:11).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # Pre-attach out-degrees once; every round re-uses this frame.
     ed = e.join(deg, "src").persist()
@@ -151,11 +149,9 @@ def pagerank_int(
 def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node: str = "node",
 ) -> PageRanks:
-    """Bounded-hop BFS: minimum hop count from the ``seeds`` node set,
+    """Bounded-hop BFS over a (src, dst) edge list: minimum hop count
+    from the ``seeds`` node set (column ``node``),
     expanded for exactly ``BFS_ROUNDS`` rounds (nodes further than that
     stay absent -- the frontier semantics a crawl scheduler or
     blast-radius query wants).  Per round one shuffle join (edges x
@@ -167,10 +163,9 @@ def bfs_hops(
     ``PageRanks(ranks=<(node, hops)>, deps=...)`` reusing the release
     contract.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    ed = e.persist()
+    ed = edges.select("src", "dst").persist()
     dist = (
-        seeds.select(F.col(node).alias("node"))
+        seeds.select("node")
         .distinct()
         .withColumn("hops", F.lit(0).cast("bigint"))
         .localCheckpoint(eager=True)

@@ -158,18 +158,16 @@ def _dists_sql_2d(centroids: Centroids2D, x: str, y: str) -> str:
 def assign_2d(
     points: DataFrame,
     centroids: Centroids2D,
-    x: str = "x",
-    y: str = "y",
-    out: str = "cluster_id",
     keep_dist: bool = False,
 ) -> DataFrame:
-    """Assign each point to its nearest centroid (squared Euclidean).
+    """Assign each (x, y) point to its nearest centroid (squared
+    Euclidean) as ``cluster_id``.
 
     The k distances are one literal array expression and the argmin
     ties to the lowest id (_argmin_sql).  Narrow transformation: no
     shuffle.
     """
-    return _assign(points, _dists_sql_2d(centroids, x, y), out, keep_dist)
+    return _assign(points, _dists_sql_2d(centroids, "x", "y"), "cluster_id", keep_dist)
 
 
 def _dists_sql_nd(centroids: CentroidsND, feats: str) -> str:
@@ -212,26 +210,19 @@ def assign_nd(
 # Reduce stage: per-cluster mean (O7 + O8/O9)
 # ---------------------------------------------------------------------------
 
-def update_2d(
-    assigned: DataFrame, x: str = "x", y: str = "y", cluster: str = "cluster_id"
-) -> DataFrame:
-    """groupBy(cluster).agg(avg, count): Spark's partial+final hash
-    aggregation IS the reference's two-level block reduction
-    (kmeans_mapreduce_core.cu:108-139) -- map-side combine shrinks the
-    shuffle to k rows per partition.
+def update_2d(assigned: DataFrame) -> DataFrame:
+    """groupBy(cluster_id).agg(avg(x), avg(y), count): Spark's
+    partial+final hash aggregation IS the reference's two-level block
+    reduction (kmeans_mapreduce_core.cu:108-139) -- map-side combine
+    shrinks the shuffle to k rows per partition.
     """
-    return assigned.groupBy(cluster).agg(
-        F.avg(x).alias("cx"), F.avg(y).alias("cy"), F.count(F.lit(1)).alias("n")
+    return assigned.groupBy("cluster_id").agg(
+        F.avg("x").alias("cx"), F.avg("y").alias("cy"), F.count(F.lit(1)).alias("n")
     )
 
 
-def update_nd(
-    assigned: DataFrame,
-    dim: int,
-    features: str = "embedding",
-    cluster: str = "cluster_id",
-) -> DataFrame:
-    """Per-cluster element-wise mean of an array column.
+def update_nd(assigned: DataFrame, dim: int) -> DataFrame:
+    """Per-``cluster_id`` element-wise mean of the ``embedding`` array.
 
     Projects each dimension to its own column first so the aggregation is
     a plain multi-column avg with map-side combine -- the shuffle carries
@@ -244,15 +235,15 @@ def update_nd(
     plan-build per call at dim=64).
     """
     proj = assigned.selectExpr(
-        f"`{cluster}`", f"CAST(`{features}` AS ARRAY<DOUBLE>) AS _e"
+        "`cluster_id`", "CAST(`embedding` AS ARRAY<DOUBLE>) AS _e"
     ).selectExpr(
-        f"`{cluster}`", *[f"_e[{i}] AS _f{i}" for i in range(dim)]
+        "`cluster_id`", *[f"_e[{i}] AS _f{i}" for i in range(dim)]
     )
-    agged = proj.groupBy(cluster).agg(
+    agged = proj.groupBy("cluster_id").agg(
         {**{f"_f{i}": "avg" for i in range(dim)}, "*": "count"}
     )
     return agged.selectExpr(
-        f"`{cluster}`",
+        "`cluster_id`",
         *[f"`avg(_f{i})` AS c{i}" for i in range(dim)],
         "`count(1)` AS n",
     )
@@ -549,12 +540,10 @@ def lloyd_nd(
     return [list(c) for c in _lloyd(points, init, max_iter, 1e-6, step, (features,))]
 
 
-def sse_2d(
-    points: DataFrame, centroids: Centroids2D, x: str = "x", y: str = "y"
-) -> float:
+def sse_2d(points: DataFrame, centroids: Centroids2D) -> float:
     """Sum of squared distances to assigned centroids (Lloyd's monotone
     objective -- the property tests assert it never increases)."""
-    a = assign_2d(points, centroids, x, y, keep_dist=True)
+    a = assign_2d(points, centroids, keep_dist=True)
     return float(a.agg(F.sum("_mindist")).collect()[0][0])
 
 
@@ -578,27 +567,24 @@ def _forgy(points: DataFrame, k: int, seed: int, key: str, *cols) -> list:
 
 
 def seed_centroids_2d(
-    points: DataFrame, k: int, seed: int = 42, key: str = "id", x: str = "x", y: str = "y"
+    points: DataFrame, k: int, seed: int = 42
 ) -> list[tuple[float, float]]:
-    """Forgy seeding over columns ``x``, ``y`` (see _forgy)."""
+    """Forgy seeding over columns ``x``, ``y`` keyed on ``id`` (see _forgy)."""
     return [
-        (float(r[0]), float(r[1])) for r in _forgy(points, k, seed, key, x, y)
+        (float(r[0]), float(r[1])) for r in _forgy(points, k, seed, "id", "x", "y")
     ]
 
 
 def seed_centroids_farthest(
-    points: DataFrame,
-    k: int,
-    key: str = "id",
-    x: str = "x",
-    y: str = "y",
+    points: DataFrame, k: int
 ) -> list[tuple[float, float]]:
     """Deterministic farthest-point (maxmin) init -- the k-means++ idea
     with the weighted RNG draw replaced by the argmax, so it is exactly
     reproducible and SQL-oracle-checkable (k-means++ picks ~the same
     spread in expectation; MLlib's k-means|| is the sampled scale-out
-    variant).  Start = lowest-key row; each step picks the point
-    farthest from its nearest chosen centroid, ties to the lowest key.
+    variant).  Start = lowest-``id`` row; each step picks the (x, y)
+    point farthest from its nearest chosen centroid, ties to the lowest
+    ``id``.
 
     Cost: k narrow scans, each ending in one max_by aggregate (partial
     agg -> 1 row per partition -> 1 row to the driver).  Nothing but k
@@ -609,17 +595,16 @@ def seed_centroids_farthest(
     per-pass AQE re-planning and Janino compiles are pure overhead.
     """
     with iteration_confs(points.sparkSession):
-        first = points.select(key, x, y).orderBy(key).limit(1).collect()[0]
-        cents: list[tuple[float, float]] = [(float(first[x]), float(first[y]))]
+        first = points.select("id", "x", "y").orderBy("id").limit(1).collect()[0]
+        cents: list[tuple[float, float]] = [(float(first["x"]), float(first["y"]))]
         for _ in range(k - 1):
-            d = points.withColumn("_d", F.expr(_dists_sql_2d(cents, x, y)))
+            d = points.withColumn("_d", F.expr(_dists_sql_2d(cents, "x", "y")))
             best = d.select(
                 F.expr(
-                    f"max_by(struct(`{x}`, `{y}`), "
-                    f"struct(array_min(_d), -`{key}`))"
+                    "max_by(struct(`x`, `y`), struct(array_min(_d), -`id`))"
                 ).alias("s")
             ).collect()[0]["s"]
-            cents.append((float(best[x]), float(best[y])))
+            cents.append((float(best["x"]), float(best["y"])))
     return cents
 
 

@@ -30,18 +30,18 @@ class KMeansResult:
 def fit_kmeans(
     df: DataFrame,
     k: int,
-    features: str = "embedding",
     max_iter: int = 20,
     tol: float = 1e-4,
     seed: int = 42,
 ) -> KMeansResult:
-    """Fit MLlib KMeans (k-means|| init) on an array<float/double> column.
+    """Fit MLlib KMeans (k-means|| init) on the array<float/double>
+    ``embedding`` column.
 
     ``array_to_vector`` is a JVM expression (not a UDF), so the
     array->Vector bridge adds no Python round-trip.
     """
     vecs = df.select(
-        array_to_vector(F.col(features).cast("array<double>")).alias("features")
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
     km = KMeans(
         k=k, maxIter=max_iter, tol=tol, seed=seed, initMode="k-means||",
@@ -57,10 +57,9 @@ def fit_kmeans(
     )
 
 
-def predict_kmeans(
-    model: KMeansModel, df: DataFrame, features: str = "embedding", out: str = "cluster_id"
-) -> DataFrame:
-    """Score ``df`` with a fitted model, appending ``out``.
+def predict_kmeans(model: KMeansModel, df: DataFrame) -> DataFrame:
+    """Score ``df``'s ``embedding`` with a fitted model, appending
+    ``cluster_id``.
 
     Internal columns are __kmrc_-prefixed and passed as transform-time
     param overrides: naming the temp column "features" silently
@@ -69,23 +68,9 @@ def predict_kmeans(
     (code-review r10)."""
     tmp_feat, tmp_pred = "__kmrc_features", "__kmrc_prediction"
     vecs = df.withColumn(
-        tmp_feat, array_to_vector(F.col(features).cast("array<double>"))
+        tmp_feat, array_to_vector(F.col("embedding").cast("array<double>"))
     )
     scored = model.transform(
         vecs, {model.featuresCol: tmp_feat, model.predictionCol: tmp_pred}
     )
-    return scored.withColumnRenamed(tmp_pred, out).drop(tmp_feat)
-
-
-def save_model(model: KMeansModel, path: str) -> None:
-    """Persist the fitted model (centroids + params) as Spark ML
-    metadata+parquet -- the artifact hand-off between the training job
-    and any number of downstream scoring jobs.  The reference's only
-    'model persistence' is the Point-per-line text sink
-    (kmeans_with_mapreduce-cuda.cu:105-121); this is its library-layer
-    equivalent, loadable on any cluster."""
-    model.write().overwrite().save(path)
-
-
-def load_model(path: str) -> KMeansModel:
-    return KMeansModel.load(path)
+    return scored.withColumnRenamed(tmp_pred, "cluster_id").drop(tmp_feat)

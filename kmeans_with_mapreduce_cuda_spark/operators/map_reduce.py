@@ -32,7 +32,6 @@ def map_reduce(
     reducer: ReducerFn,
     pair_schema: StructType | str,
     out_schema: StructType | str,
-    key: str = "key",
 ) -> DataFrame:
     """Run a user (mapper, reducer) pair over a DataFrame.
 
@@ -41,7 +40,7 @@ def map_reduce(
                   NUM_PAIRS fan-out generalized, config.cuh:13).
     ``reducer`` : one key's full batch -> 0..n output rows.
 
-    The shuffle between them is ``groupBy(key)`` -- hash partitioning on
+    The shuffle between them is ``groupBy("key")`` -- hash partitioning on
     the key, the declarative equivalent of the reference's device-wide
     sort (kmeans_mapreduce_core.cu:248) + segment scan (:71-107).
     """
@@ -57,7 +56,7 @@ def map_reduce(
     # callable's arity, so a wrapping lambda would pin the single-arg
     # mode and break the supported (key, pdf) reducer form with a
     # confusing executor-side TypeError (code-review r10)
-    return pairs.groupBy(key).applyInPandas(reducer, schema=out_schema)
+    return pairs.groupBy("key").applyInPandas(reducer, schema=out_schema)
 
 
 def kmeans_step_mapreduce(

@@ -150,9 +150,7 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_images(
-    df: DataFrame, max_side: int = 256, payload_col: str = "payload",
-) -> DataFrame:
+def resize_images(df: DataFrame, max_side: int = 256) -> DataFrame:
     """Resize via mapInPandas.  STUB codec: emits a payload of
     exactly ``greatest(1, floor(n * scale^2))`` bytes (truncated, then
     null-padded -- so an empty/None input still yields the 1 byte the
@@ -164,7 +162,7 @@ def resize_images(
         import pandas as pd
 
         for pdf in it:
-            n = pdf[payload_col].str.len().fillna(0).astype("int64")
+            n = pdf["payload"].str.len().fillna(0).astype("int64")
             w = (n % 640 + 1).astype("int64")
             h = (n % 480 + 1).astype("int64")
             scale = (max_side / pd.concat([w, h], axis=1).max(axis=1)).clip(upper=1.0)
@@ -179,7 +177,7 @@ def resize_images(
                     # computes GREATEST(1, floor(n*scale^2)))
                     "payload": [
                         (b or b"")[:k].ljust(k, b"\x00")
-                        for b, k in zip(pdf[payload_col], keep)
+                        for b, k in zip(pdf["payload"], keep)
                     ],
                     "resize_status": "stub",
                 }
@@ -200,8 +198,7 @@ FRAME_SCHEMA = StructType(
 
 
 def sample_frames(
-    df: DataFrame, every_n_bytes: int = 64, max_frames: int = 8,
-    payload_col: str = "payload",
+    df: DataFrame, every_n_bytes: int = 64, max_frames: int = 8
 ) -> DataFrame:
     """Frame sampling via mapInPandas: one input row (a 'video' payload)
     -> up to max_frames output rows.  STUB codec: deterministic
@@ -215,7 +212,7 @@ def sample_frames(
 
         for pdf in it:
             out_id, out_idx, out_payload = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
                 b = b or b""
                 for i in range(min(max_frames, max(len(b) // every_n_bytes, 0))):
                     out_id.append(doc_id)
@@ -233,9 +230,7 @@ def sample_frames(
     return df.mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
-def decode_and_featurize_arrow(
-    df: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
+def decode_and_featurize_arrow(df: DataFrame) -> DataFrame:
     """Arrow-native twin of :func:`decode_and_featurize` via
     ``mapInArrow``: consumes/produces ``pyarrow.RecordBatch`` directly,
     skipping the Arrow<->pandas conversion entirely.
@@ -260,9 +255,7 @@ def decode_and_featurize_arrow(
             # blob into an individual Python bytes object, exactly the
             # per-blob cost this Arrow path exists to avoid
             # (code-review r10).
-            payload_arr = batch.column(
-                batch.schema.get_field_index(payload_col)
-            )
+            payload_arr = batch.column(batch.schema.get_field_index("payload"))
             n, feats = [], []
             for i in range(batch.num_rows):
                 s = payload_arr[i]

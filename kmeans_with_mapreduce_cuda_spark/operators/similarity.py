@@ -24,20 +24,17 @@ def brute_force_topk(
     queries: DataFrame,
     k: int = 10,
     features: str = "emb",
-    q_features: str = "q_emb",
-    id_col: str = "vec_id",
-    q_id_col: str = "q_id",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query side, JVM-side dot
     products, window top-k with (similarity desc, id) tie order.
 
-    Candidates whose ``id_col`` equals the query's ``q_id_col`` are
+    Candidates whose ``vec_id`` equals the query's ``q_id`` are
     dropped: queries ARE corpus rows (a vector's trivial self-match is
     noise), so the query ids must share the corpus id space."""
-    sim = cosine_similarity(q_features, features)
-    w = Window.partitionBy(q_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
+    sim = cosine_similarity("q_emb", features)
+    w = Window.partitionBy("q_id").orderBy(F.col("_sim").desc(), F.col("vec_id"))
     out = candidates.crossJoin(F.broadcast(queries)).where(
-        F.col(q_id_col) != F.col(id_col)
+        F.col("q_id") != F.col("vec_id")
     )
     return (
         out.withColumn("_sim", sim)
@@ -50,10 +47,6 @@ def brute_force_range(
     candidates: DataFrame,
     queries: DataFrame,
     threshold: float,
-    features: str = "emb",
-    q_features: str = "q_emb",
-    id_col: str = "vec_id",
-    q_id_col: str = "q_id",
 ) -> DataFrame:
     """Exact cosine RANGE search (radius query, FAISS range_search): every
     candidate with cos >= threshold per query, unranked.  Same broadcast
@@ -63,9 +56,9 @@ def brute_force_range(
     parallelizes embarrassingly with zero shuffle (top-k at least heaps
     per partition; range search doesn't even do that).  Self-matches
     are dropped as in :func:`brute_force_topk`."""
-    sim = cosine_similarity(q_features, features)
+    sim = cosine_similarity("q_emb", "emb")
     out = candidates.crossJoin(F.broadcast(queries)).where(
-        F.col(q_id_col) != F.col(id_col)
+        F.col("q_id") != F.col("vec_id")
     )
     return out.withColumn("_sim", sim).where(F.col("_sim") >= threshold)
 
@@ -139,8 +132,6 @@ def lsh_bucket_pairs(
     df: DataFrame,
     *,
     n_planes: int,
-    id_col: str = "vec_id",
-    features: str = "embedding",
     seed: int = 42,
     threshold: float = 0.3,
     max_bucket: int | None = None,
@@ -179,12 +170,10 @@ def lsh_bucket_pairs(
 
     Returns (vec_a, vec_b, bucket, cos_sim), vec_a < vec_b.
     """
-    planes = hyperplanes_pm1(
-        dim=_emb_dim(df, features), n_planes=n_planes, seed=seed
-    )
+    planes = hyperplanes_pm1(dim=_emb_dim(df), n_planes=n_planes, seed=seed)
     e = df.select(
-        F.col(id_col).alias("id"),
-        F.col(features).cast("array<double>").alias("_emb"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("_emb"),
     ).withColumn("bucket", F.expr(lsh_bucket_sql("_emb", planes, one_based=False)))
     e, _ = cap_hot_keys(e, "bucket", max_bucket)
     a, b = e.alias("a"), e.alias("b")
@@ -207,16 +196,14 @@ def within_cell_cosine_pairs(
     dim: int,
     threshold: float,
     *,
-    id_col: str = "vec_id",
-    emb_col: str = "emb",
-    norm_col: str = "nrm",
     cell_col: str = "cell_id",
     max_cell: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Cosine pairs WITHIN blocking cells -- the SemDeDup join stage,
     factored out of the gate query so the skew guard is part of the
-    operator, not prose.  ``assigned`` carries (id, emb array<double>,
-    precomputed l2 norm, cell_id); returns ``(pairs, capped_cells)``.
+    operator, not prose.  ``assigned`` carries (vec_id, emb
+    array<double>, its precomputed l2 norm nrm, ``cell_col``); returns
+    ``(pairs, capped_cells)``.
 
     Scale shape: the equi-join on cell_id shuffles each cell to one
     task, so output (and one task's work) is quadratic in the LARGEST
@@ -267,14 +254,14 @@ def within_cell_cosine_pairs(
     surviving pairs only.
     """
     assigned, capped = cap_hot_keys(assigned, cell_col, max_cell)
-    id_t = assigned.schema[id_col].dataType.simpleString()
+    id_t = assigned.schema["vec_id"].dataType.simpleString()
     # Null semantics of the old join, preserved: a NULL cell never
     # equi-joined (dropped); NULL emb/nrm/id made the join condition
     # NULL -> row dropped.  Filter them out before grouping.
     narrowed = assigned.select(
-        F.col(id_col).alias("_pid"),
-        F.col(emb_col).alias("_pemb"),
-        F.col(norm_col).alias("_pnrm"),
+        F.col("vec_id").alias("_pid"),
+        F.col("emb").alias("_pemb"),
+        F.col("nrm").alias("_pnrm"),
         cell_col,
     ).where(
         F.col(cell_col).isNotNull()
@@ -364,17 +351,17 @@ def _cell_pairs_kernel(threshold: float, block: int):
     return kernel
 
 
-def _emb_dim(df: DataFrame, features: str) -> int:
+def _emb_dim(df: DataFrame) -> int:
     """Embedding dimensionality from the first row (driver-side, 1 row).
 
     Readable failure on an empty table or NULL first embedding -- the
     model-fit contract (pq_codebooks precedent), never a TypeError from
     subscripting None (code-review r10)."""
-    row = df.select(F.size(features).alias("d")).first()
+    row = df.select(F.size("embedding").alias("d")).first()
     if row is None or row["d"] is None or row["d"] < 0:
         raise RuntimeError(
-            f"cannot infer embedding dimensionality: table is empty or the "
-            f"first {features!r} value is NULL"
+            "cannot infer embedding dimensionality: table is empty or the "
+            "first 'embedding' value is NULL"
         )
     return int(row["d"])
 
@@ -382,8 +369,6 @@ def _emb_dim(df: DataFrame, features: str) -> int:
 def build_ivf_index(
     df: DataFrame,
     n_cells: int = 16,
-    features: str = "embedding",
-    id_col: str = "vec_id",
     max_iter: int = 5,
     seed: int = 42,
 ) -> tuple[DataFrame, CentroidsND]:
@@ -391,28 +376,20 @@ def build_ivf_index(
     (df + cell_id column, cell centroids).  At scale you would persist the
     assigned table partitioned/bucketed BY cell_id so probes prune files.
     """
-    init = seed_centroids_nd(df, k=n_cells, seed=seed, key=id_col, features=features)
-    cents = lloyd_nd(df, init, max_iter=max_iter, features=features)
-    indexed = assign_nd(df, cents, features=features, out="cell_id")
+    init = seed_centroids_nd(
+        df, k=n_cells, seed=seed, key="vec_id", features="embedding"
+    )
+    cents = lloyd_nd(df, init, max_iter=max_iter, features="embedding")
+    indexed = assign_nd(df, cents, features="embedding", out="cell_id")
     return indexed, cents
-
-
-def persist_ivf_index(indexed: DataFrame, path: str) -> None:
-    """Persist the IVF-indexed table partitioned BY cell_id: a probe that
-    filters on cell_id then prunes whole directories -- at 100 TB each
-    query touches nprobe/n_cells of the files, nothing else is opened."""
-    from ..sources.writers import write_partitioned_parquet
-
-    write_partitioned_parquet(indexed, path, ["cell_id"])
 
 
 def route_to_cells(
     queries: DataFrame,
     cents: CentroidsND,
     nprobe: int,
-    q_features: str = "q_emb",
 ) -> DataFrame:
-    """Attach a ``cell_id`` per (query, probed cell): each query routes
+    """Attach a ``cell_id`` per (query, probed cell): each ``q_emb`` routes
     to its ``nprobe`` nearest centroids by squared-Euclidean distance,
     ties to the lowest cell id (array_sort on (dist, idx) structs).
     The single source of the probe semantics -- used by ivf_topk and
@@ -422,7 +399,7 @@ def route_to_cells(
         *[
             F.aggregate(
                 F.zip_with(
-                    F.col(q_features).cast("array<double>"),
+                    F.col("q_emb").cast("array<double>"),
                     F.array(*[F.lit(float(v)) for v in c]),
                     lambda a, b: (a - b) * (a - b),
                 ),
@@ -451,28 +428,24 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    features: str = "embedding",
-    id_col: str = "vec_id",
-    q_id_col: str = "q_id",
-    q_features: str = "q_emb",
 ) -> DataFrame:
     """ANN top-k: route each query to its ``nprobe`` nearest cells, then
     brute-force only within those cells (equi-join on cell_id -- the scan
     prunes to nprobe/n_cells of the data instead of a full cross join).
     Self-matches are dropped as in :func:`brute_force_topk`.
     """
-    q = route_to_cells(queries, cents, nprobe, q_features=q_features)
+    q = route_to_cells(queries, cents, nprobe)
 
-    sim = cosine_similarity(q_features, F.col(features).cast("array<double>"))
-    w = Window.partitionBy(q_id_col).orderBy(F.col("_sim").desc(), F.col(id_col))
+    sim = cosine_similarity("q_emb", F.col("embedding").cast("array<double>"))
+    w = Window.partitionBy("q_id").orderBy(F.col("_sim").desc(), F.col("vec_id"))
     joined = indexed.join(F.broadcast(q), "cell_id").where(
-        F.col(q_id_col) != F.col(id_col)
+        F.col("q_id") != F.col("vec_id")
     )
     return (
         joined.withColumn("_sim", sim)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(q_id_col, id_col, F.round("_sim", 6).alias("cos_sim"), "rank")
+        .select("q_id", "vec_id", F.round("_sim", 6).alias("cos_sim"), "rank")
     )
 
 
@@ -541,13 +514,9 @@ PQ_DSUB = 8
 PQ_K = 16
 
 
-def pq_codebooks(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    features: str = "embedding",
-) -> list[list[list[float]]]:
+def pq_codebooks(emb: DataFrame) -> list[list[list[float]]]:
     """Deterministic PQ codebooks: subspace ``s`` of code ``j`` is dims
-    ``[s*PQ_DSUB, (s+1)*PQ_DSUB)`` of the embedding of ``id < PQ_K`` --
+    ``[s*PQ_DSUB, (s+1)*PQ_DSUB)`` of the embedding of ``vec_id < PQ_K`` --
     the same data-derived seeding contract as the K-Means queries (no
     RNG, so a DuckDB oracle can re-derive the identical codebook from
     the table).  Returns ``cb[s][j] == list of PQ_DSUB floats``; the
@@ -556,9 +525,9 @@ def pq_codebooks(
     """
     m, dsub, k = PQ_M, PQ_DSUB, PQ_K
     rows = (
-        emb.where(F.col(id_col) < k)
-        .orderBy(id_col)
-        .select(features)
+        emb.where(F.col("vec_id") < k)
+        .orderBy("vec_id")
+        .select("embedding")
         .collect()
     )
     assert len(rows) == k, f"codebook wants {k} seed vectors, got {len(rows)}"
@@ -612,11 +581,10 @@ def _sq_dist_sql(vec_col: str, offset: int, code: list[float]) -> str:
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
-    features: str = "embedding",
-    code_prefix: str = "code_",
 ) -> DataFrame:
     """Encode vectors to per-subspace nearest-code ids (tie -> lowest
-    code id via array_position-of-min) plus ``code_packed``: all m
+    code id via array_position-of-min) as ``code_0`` .. ``code_{m-1}``,
+    plus ``code_packed``: all m
     codes packed little-endian at 4 bits each (k=16) into ONE bigint --
     the 100 TB serving artifact is this 8-byte column, a 32x scan/
     memory reduction over the 64-dim float vector.  Pure literal-baked
@@ -628,15 +596,15 @@ def pq_encode(
     for s in range(m):
         arr = "array({})".format(
             ", ".join(
-                _sq_dist_sql(features, s * dsub, codebooks[s][j])
+                _sq_dist_sql("embedding", s * dsub, codebooks[s][j])
                 for j in range(k)
             )
         )
-        cols.append(f"{_argmin_sql(arr)} AS {code_prefix}{s}")
+        cols.append(f"{_argmin_sql(arr)} AS code_{s}")
     out = df.selectExpr(*cols)
     packed: Column | None = None
     for s in range(m):
-        t = F.col(f"{code_prefix}{s}").cast("bigint") * F.lit(k ** s)
+        t = F.col(f"code_{s}").cast("bigint") * F.lit(k ** s)
         packed = t if packed is None else packed + t
     out = out.withColumn("code_packed", packed)
     return out
@@ -647,8 +615,6 @@ def pq_adc_topk(
     codebooks: list[list[list[float]]],
     q_vec: list[float],
     k_results: int = 10,
-    id_col: str = "vec_id",
-    code_prefix: str = "code_",
 ) -> DataFrame:
     """Asymmetric-distance top-k: the query stays UNQUANTIZED; each
     subspace's 16 query-to-code distances are precomputed driver-side
@@ -675,13 +641,13 @@ def pq_adc_topk(
     dist: Column | None = None
     for s in range(m):
         lut = F.array(*[F.lit(float(v)) for v in luts[s]])
-        t = F.element_at(lut, F.col(f"{code_prefix}{s}") + 1)
+        t = F.element_at(lut, F.col(f"code_{s}") + 1)
         dist = t if dist is None else dist + t
     return (
         encoded.select(
-            F.col(id_col), F.col("code_packed"), dist.alias("adc_dist")
+            F.col("vec_id"), F.col("code_packed"), dist.alias("adc_dist")
         )
-        .orderBy("adc_dist", id_col)
+        .orderBy("adc_dist", "vec_id")
         .limit(k_results)
     )
 
@@ -699,8 +665,6 @@ def matryoshka_topk(
     coarse_dims: int = MATRYOSHKA_COARSE_DIMS,
     k_coarse: int = MATRYOSHKA_K_COARSE,
     k_final: int = MATRYOSHKA_K_FINAL,
-    id_col: str = "vec_id",
-    features: str = "embedding",
 ) -> DataFrame:
     """Coarse-to-fine two-stage retrieval over prefix-truncatable
     (Matryoshka-style) embeddings: rank by squared distance on the
@@ -727,19 +691,19 @@ def matryoshka_topk(
     engine-portable, which a float-divergent distance would break.
     """
     coarse = F.expr(
-        _sq_dist_sql(features, 0, [float(v) for v in q_vec[:coarse_dims]])
+        _sq_dist_sql("embedding", 0, [float(v) for v in q_vec[:coarse_dims]])
     )
     cand = (
         emb.select(
-            F.col(id_col), F.col(features), coarse.alias("coarse_dist")
+            F.col("vec_id"), F.col("embedding"), coarse.alias("coarse_dist")
         )
-        .orderBy("coarse_dist", id_col)
+        .orderBy("coarse_dist", "vec_id")
         .limit(k_coarse)
     )
-    full = F.expr(_sq_dist_sql(features, 0, [float(v) for v in q_vec]))
+    full = F.expr(_sq_dist_sql("embedding", 0, [float(v) for v in q_vec]))
     return (
-        cand.select(id_col, "coarse_dist", full.alias("full_dist"))
-        .orderBy("full_dist", id_col)
+        cand.select("vec_id", "coarse_dist", full.alias("full_dist"))
+        .orderBy("full_dist", "vec_id")
         .limit(k_final)
     )
 
@@ -747,15 +711,12 @@ def matryoshka_topk(
 def grid_radius_pairs(
     pts: DataFrame,
     r: float,
-    id_col: str = "vec_id",
-    x: str = "x",
-    y: str = "y",
     r_sq: float | None = None,
 ) -> DataFrame:
-    """All point pairs within Euclidean distance ``r``, by exact grid
-    blocking: one cell of width exactly ``r`` per point, the left side
-    exploded to its 3x3 neighborhood, candidates met in a two-column
-    equi hash join, verified by the true squared distance.  Cell width
+    """All (vec_id, x, y) point pairs within Euclidean distance ``r``,
+    by exact grid blocking: one cell of width exactly ``r`` per point,
+    the left side exploded to its 3x3 neighborhood, candidates met in a
+    two-column equi hash join, verified by the true squared distance.  Cell width
     >= r makes the neighborhood a PROOF of recall (a pair within r
     differs by <= 1 cell per axis) -- exact, unlike LSH blocking.
     Returns (id_a, id_b, dist_sq) with id_a < id_b, each pair once
@@ -765,9 +726,9 @@ def grid_radius_pairs(
     band cap does if that ever applies.
     """
     p = pts.select(
-        F.col(id_col).alias("_id"),
-        F.col(x).cast("double").alias("_x"),
-        F.col(y).cast("double").alias("_y"),
+        F.col("vec_id").alias("_id"),
+        F.col("x").cast("double").alias("_x"),
+        F.col("y").cast("double").alias("_y"),
     ).withColumns(
         {
             "_cx": F.floor(F.col("_x") / r).cast("long"),

@@ -81,12 +81,12 @@ def salted_topk(
     k: int,
     salt_on: str,
     n_salt: int = 16,
-    rank_col: str = "rank",
 ) -> DataFrame:
-    """Skew-safe two-phase top-k per ``part_col``: top-k is MERGEABLE
-    (unlike general window functions), so stage 1 takes a local top-k
-    within (key, salt) -- spreading a hot key over ``n_salt`` tasks --
-    and stage 2 re-ranks only the <= k*n_salt survivors per key.  The
+    """Skew-safe two-phase top-k per ``part_col``, ranked in ``rank``:
+    top-k is MERGEABLE (unlike general window functions), so stage 1
+    takes a local top-k within (key, salt) -- spreading a hot key over
+    ``n_salt`` tasks -- and stage 2 re-ranks only the <= k*n_salt
+    survivors per key.  The
     second window's input is bounded regardless of input skew, where a
     plain one-window formulation sorts the hottest key's entire
     partition on one task.
@@ -114,8 +114,8 @@ def salted_topk(
     )
     w2 = Window.partitionBy(part_col).orderBy(*order_cols)
     return local.withColumn(
-        rank_col, F.row_number().over(w2).cast("bigint")
-    ).where(F.col(rank_col) <= k)
+        "rank", F.row_number().over(w2).cast("bigint")
+    ).where(F.col("rank") <= k)
 
 
 def skyline_2d(

@@ -723,8 +723,10 @@ def o02_seed_farthest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already an 8-file parquet, so the persisted copy parallelizes
     # without an extra repartition shuffle
     pts = _points(spark, sf_dir).persist()
-    cents = seed_centroids_farthest(pts, k=_FP_K)
-    pts.unpersist()
+    try:
+        cents = seed_centroids_farthest(pts, k=_FP_K)
+    finally:
+        pts.unpersist()
     return spark.createDataFrame(
         [(i, cx, cy) for i, (cx, cy) in enumerate(cents)],
         "cluster_id int, cx double, cy double",

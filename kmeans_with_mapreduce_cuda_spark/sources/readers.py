@@ -289,8 +289,11 @@ def read_points_text(
 ) -> DataFrame:
     """Whitespace-separated 2-column integer text -> DataFrame[id,x,y].
 
-    Each line is parsed by :func:`_parse_points`: any run of ASCII
-    whitespace (spaces, tabs, a CRLF's CR) separates tokens, leading and
+    Lines end at LF only, as in the stream source and the reference's
+    getline loop: a lone CR is whitespace inside its line, not a line
+    end (Spark's text source otherwise also ends lines at CR).  Each
+    line is parsed by :func:`_parse_points`: any run of ASCII
+    whitespace (spaces, tabs, a CR) separates tokens, leading and
     trailing whitespace is allowed, a third token is ignored, and a line
     whose first two tokens are not both bigint integers is dropped.
     Only the first ``limit`` lines are kept when given (NUM_INPUT
@@ -304,7 +307,7 @@ def read_points_text(
     gets), so they vary with core count / split size -- do not treat
     them as line numbers on the scale path.
     """
-    df = spark.read.text(path)
+    df = spark.read.option("lineSep", "\n").text(path)
     if limit is not None:
         # Strict "first N lines" is a sequential notion; do it on a single
         # partition (parity path -- small files only).  The scale path is

@@ -38,9 +38,9 @@ def format_centroids(
     )
 
 
-def write_centroids_text(df: DataFrame, path: str, x: str = "x", y: str = "y") -> None:
-    """Write k centroid lines as text (k is tiny -> single partition)."""
-    format_centroids(df, x, y).coalesce(1).write.mode("overwrite").text(path)
+def write_centroids_text(df: DataFrame, path: str) -> None:
+    """Write k (x, y) centroid lines as text (k is tiny -> single partition)."""
+    format_centroids(df).coalesce(1).write.mode("overwrite").text(path)
 
 
 def write_partitioned_parquet(

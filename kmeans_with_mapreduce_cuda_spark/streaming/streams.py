@@ -187,23 +187,16 @@ class StreamingKMeans:
     def __init__(
         self,
         init: list[tuple[float, float]],
-        x: str = "x",
-        y: str = "y",
         decay: float = 1.0,
     ) -> None:
         self.centroids = [tuple(map(float, c)) for c in init]
         self.counts = [0.0] * len(init)
-        self.x, self.y = x, y
         self.decay = float(decay)
 
     def update_with_batch(self, batch_df: DataFrame) -> None:
         from ..operators.kmeans import assign_2d, update_2d
 
-        rows = update_2d(
-            assign_2d(batch_df, self.centroids, self.x, self.y),
-            self.x,
-            self.y,
-        ).collect()
+        rows = update_2d(assign_2d(batch_df, self.centroids)).collect()
         # Uniform per-batch decay (MLlib StreamingKMeans semantics): ALL
         # clusters' history is down-weighted once per batch, whether or
         # not they receive points -- decaying only on update would make
@@ -319,7 +312,6 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
 def dedup_stream(
     events: DataFrame,
     keys: list[str] | None = None,
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming exact dedup with bounded state:
     ``dropDuplicatesWithinWatermark`` keeps each key in state only until
@@ -330,7 +322,7 @@ def dedup_stream(
     forever).
     """
     keys = keys or ["event_id"]
-    return events.withWatermark(ts_col, WATERMARK).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
 # --- transformWithStateInPandas: arbitrary typed state ------------------------
@@ -494,16 +486,14 @@ def ingest_dedup_foreach_batch(
     spark: SparkSession,
     index_path: str,
     out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ):
     """foreachBatch sink implementing streaming corpus ingestion with
     exact dedup against everything ingested so far -- the streaming
     twin of the batch ``dedup_incremental`` gate query.
 
-    State is a parquet DIGEST INDEX (one md5 per ingested content),
+    State is a parquet DIGEST INDEX (one md5 per ingested ``text``),
     not the documents: per batch, (1) dedup the batch internally (min
-    id per hash), (2) anti-join its digests against the index, (3)
+    ``doc_id`` per hash), (2) anti-join its digests against the index, (3)
     append survivors to ``out_path`` and their digests to
     ``index_path``.  Only 16-byte digests persist as state, so the
     index stays a tiny fraction of the corpus; at scale it is bucketed
@@ -523,12 +513,10 @@ def ingest_dedup_foreach_batch(
             idx = spark.createDataFrame([], "h string")
         from ..operators.dedup import _release_local_checkpoint
 
-        novel = incremental_dedup_keep_digests(
-            idx, batch_df, text_col, id_col
-        )
+        novel = incremental_dedup_keep_digests(idx, batch_df)
         novel = novel.localCheckpoint(eager=True)  # read idx BEFORE appending
         try:
-            novel.select(id_col).write.mode("append").parquet(out_path)
+            novel.select("doc_id").write.mode("append").parquet(out_path)
             novel.select("h").write.mode("append").parquet(index_path)
         finally:
             # Explicit release, as in upsert_latest_foreach_batch: the
@@ -540,8 +528,8 @@ def ingest_dedup_foreach_batch(
     return fn
 
 
-def upsert_latest(state: DataFrame, batch: DataFrame, key: str = "user_id") -> DataFrame:
-    """SCD1 merge: one surviving row per key -- the one with the highest
+def upsert_latest(state: DataFrame, batch: DataFrame) -> DataFrame:
+    """SCD1 merge: one surviving row per user_id -- the one with the highest
     (ts, event_id) across current state and the new batch.  The
     (ts, event_id) pair is a total order, so the result is independent
     of how rows were split into batches AND of arrival order: a late
@@ -549,7 +537,7 @@ def upsert_latest(state: DataFrame, batch: DataFrame, key: str = "user_id") -> D
     out-of-order safety a naive "last write wins" apply lacks)."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(key).orderBy(
+    w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
     return (
@@ -560,11 +548,9 @@ def upsert_latest(state: DataFrame, batch: DataFrame, key: str = "user_id") -> D
     )
 
 
-def upsert_latest_foreach_batch(
-    spark: SparkSession, state_path: str, key: str = "user_id"
-):
+def upsert_latest_foreach_batch(spark: SparkSession, state_path: str):
     """foreachBatch sink maintaining an SCD1 materialized view: the
-    latest (ts, event_id)-ordered row per key, kept in a parquet state
+    latest (ts, event_id)-ordered row per user_id, kept in a parquet state
     table -- the streaming CDC-apply half of the batch
     ``rel_merge_upsert`` query.
 
@@ -589,11 +575,11 @@ def upsert_latest_foreach_batch(
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        batch_latest = upsert_latest(batch_df.limit(0), batch_df, key)
+        batch_latest = upsert_latest(batch_df.limit(0), batch_df)
         state = _read_state(spark, state_path)
         merged = (
             batch_latest if state is None
-            else upsert_latest(state, batch_latest, key)
+            else upsert_latest(state, batch_latest)
         )
         # committed_write, not in-place overwrite: mode("overwrite")
         # deletes the state dir before writing, so a crash between

@@ -269,18 +269,18 @@ def test_seed_farthest_properties(spark):
 
 
 def test_mllib_model_save_load_roundtrip(spark, tmp_path):
+    from pyspark.ml.clustering import KMeansModel
+
     from kmeans_with_mapreduce_cuda_spark.operators.kmeans_mllib import (
         fit_kmeans,
-        load_model,
         predict_kmeans,
-        save_model,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings").limit(500).cache()
     res = fit_kmeans(emb, k=5, max_iter=5, seed=42)
     path = str(tmp_path / "km_model")
-    save_model(res.model, path)
-    back = load_model(path)
+    res.model.write().overwrite().save(path)
+    back = KMeansModel.load(path)
     assert [list(c) for c in back.clusterCenters()] == res.centroids
     a = predict_kmeans(res.model, emb).select("vec_id", "cluster_id").collect()
     b = predict_kmeans(back, emb).select("vec_id", "cluster_id").collect()
@@ -332,6 +332,24 @@ def test_kmeanspp_acceptance_collect_is_structurally_bounded(spark, monkeypatch)
     monkeypatch.setattr(kq, "_KPP_ACCEPT_CAP", 0)
     with pytest.raises(RuntimeError, match="k-means\\|\\| round"):
         kq.o02_seed_kmeanspp(spark, SF_DIR)
+
+
+def test_seed_farthest_query_releases_cache_on_error(spark, monkeypatch):
+    """o02_seed_farthest persists its points for the k-pass loop and
+    must unpersist them when the seeding fails, not only on success."""
+    from conftest import SF_DIR
+    import kmeans_with_mapreduce_cuda_spark.operators.kmeans as km
+    import kmeans_with_mapreduce_cuda_spark.plans.kmeans_queries as kq
+
+    def fail_after_filling_cache(pts, k):
+        pts.count()
+        raise RuntimeError("seeding failed")
+
+    monkeypatch.setattr(km, "seed_centroids_farthest", fail_after_filling_cache)
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="seeding failed"):
+        kq.o02_seed_farthest(spark, SF_DIR)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
 
 
 def test_iteration_confs_nesting_and_exception_restore(spark):

@@ -96,13 +96,15 @@ def test_ivf_index_persists_and_prunes(spark, tmp_path):
     """Persisted IVF index: reading one cell back prunes partitions."""
     from kmeans_with_mapreduce_cuda_spark.operators.similarity import (
         build_ivf_index,
-        persist_ivf_index,
+    )
+    from kmeans_with_mapreduce_cuda_spark.sources.writers import (
+        write_partitioned_parquet,
     )
 
     e = load_table(spark, SF_DIR, "embeddings")
     indexed, _ = build_ivf_index(e, n_cells=4, max_iter=2, seed=42)
     out = str(tmp_path / "ivf")
-    persist_ivf_index(indexed, out)
+    write_partitioned_parquet(indexed, out, ["cell_id"])
 
     back = spark.read.parquet(out)
     assert back.count() == e.count()

@@ -269,17 +269,17 @@ def test_read_points_text_matches_contract_oracle(spark, tmp_path):
 
 _MIXED_POINTS = (
     "\t5 6\n7 8\n  9\t10\r\n\t 11 12\n1_000 2\n"
-    "99999999999999999999 1\n13 14 15\nbad\n\n"
+    "99999999999999999999 1\n13 14 15\n17 18\r19 20\nbad\n\n"
 )
 
 
 def test_batch_and_stream_readers_parse_alike(spark, tmp_path):
-    """read_points_text and read_points_stream share one parser: on
-    tab-led, CRLF, underscore, overflowing, 3-token and junk lines they
-    return the same points."""
+    """read_points_text and read_points_stream share one parser and one
+    line end (LF): on tab-led, CRLF, lone-CR, underscore, overflowing,
+    3-token and junk lines they return the same points."""
     p = tmp_path / "mixed.txt"
     p.write_text(_MIXED_POINTS)
-    want = {(5, 6), (7, 8), (9, 10), (11, 12), (13, 14)}
+    want = {(5, 6), (7, 8), (9, 10), (11, 12), (13, 14), (17, 18)}
     batch = read_points_text(spark, str(p)).collect()
     assert {(r["x"], r["y"]) for r in batch} == want
 
@@ -296,7 +296,8 @@ def test_batch_and_stream_readers_parse_alike(spark, tmp_path):
     assert {(r["x"], r["y"]) for r in stream} == want
     # line_no is each kept line's start byte offset
     assert {r["line_no"] for r in stream} == {
-        _MIXED_POINTS.index(ln) for ln in ("\t5", "7 8", "  9", "\t 11", "13 ")
+        _MIXED_POINTS.index(ln)
+        for ln in ("\t5", "7 8", "  9", "\t 11", "13 ", "17 ")
     }
 
 

@@ -13,12 +13,8 @@ with a caller counts as set if that caller sets it, and a call through
 ``*args`` or ``**kwargs`` sets every parameter it could reach.
 
 It cannot see a call made through a variable (``fn = funcs[i]; fn(x=1)``),
-so grep a reported name before deleting it.
-
-Unset parameters whose default is a string that is a valid identifier
-(``id_col="doc_id"``, ``x="x"``) are listed apart as column-name
-parameters: they name the operator's input schema rather than tune its
-behaviour.
+so grep a reported name before deleting it.  ``tests/test_unset_params.py``
+keeps both lists empty.
 
 Usage: python tests/unset_params.py [--counts]
 ``--counts`` prints only the totals.
@@ -51,7 +47,7 @@ def _callee_name(node: ast.expr) -> str | None:
     return None
 
 
-class _Calls(ast.NodeVisitor):
+class _Calls:
     """Per callee name: keywords passed, the most positional arguments
     passed, and whether some call passed ``*args`` / ``**kwargs``."""
 
@@ -77,59 +73,48 @@ class _Calls(ast.NodeVisitor):
             else:
                 self.keywords[name].add(kw.arg)
 
-    def visit_Call(self, node: ast.Call):
-        name = _callee_name(node.func)
-        if name is not None:
-            self._record(name, node.args, node.keywords)
-        if name == "partial" and node.args:
-            inner = _callee_name(node.args[0])
-            if inner is not None:
-                self._record(inner, node.args[1:], node.keywords)
-        self.generic_visit(node)
-
-    def visit_Name(self, node: ast.Name):
-        if isinstance(node.ctx, ast.Load):
-            self.refs[node.id] = self.refs.get(node.id, 0) + 1
-
-    def visit_Attribute(self, node: ast.Attribute):
-        if isinstance(node.ctx, ast.Load):
-            self.refs[node.attr] = self.refs.get(node.attr, 0) + 1
-        self.generic_visit(node)
+    def visit(self, tree: ast.AST) -> None:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                name = _callee_name(node.func)
+                if name is not None:
+                    self._record(name, node.args, node.keywords)
+                if name == "partial" and node.args:
+                    inner = _callee_name(node.args[0])
+                    if inner is not None:
+                        self._record(inner, node.args[1:], node.keywords)
+            elif isinstance(node, (ast.Name, ast.Attribute)) and isinstance(
+                node.ctx, ast.Load
+            ):
+                ref = _callee_name(node)
+                self.refs[ref] = self.refs.get(ref, 0) + 1
 
 
 def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
-    """Yield ``(name, positional index or None, is_method, default)`` per
+    """Yield ``(name, positional index or None, is_method)`` per
     defaulted parameter of ``fn``."""
     a = fn.args
     positional = a.posonlyargs + a.args
     is_method = bool(positional) and positional[0].arg in ("self", "cls")
     first = len(positional) - len(a.defaults)
-    for i, (p, d) in enumerate(zip(positional[first:], a.defaults), start=first):
-        yield p.arg, i, is_method, d
+    for i, p in enumerate(positional[first:], start=first):
+        yield p.arg, i, is_method
     for p, d in zip(a.kwonlyargs, a.kw_defaults):
         if d is not None:
-            yield p.arg, None, is_method, d
-
-
-def _is_column_name(default: ast.expr) -> bool:
-    return (
-        isinstance(default, ast.Constant)
-        and isinstance(default.value, str)
-        and default.value.isidentifier()
-    )
+            yield p.arg, None, is_method
 
 
 def scan():
+    trees = {p: ast.parse(p.read_text(), str(p)) for p in _py_files(CALLERS)}
     calls = _Calls()
-    for path in _py_files(CALLERS):
-        calls.visit(ast.parse(path.read_text(), str(path)))
+    for tree in trees.values():
+        calls.visit(tree)
 
     total = 0
     unset = []
-    columns = []
     unreferenced = []
     for path in _py_files([PACKAGE]):
-        tree = ast.parse(path.read_text(), str(path))
+        tree = trees[path]
         rel = path.relative_to(PACKAGE).as_posix()
         for node in tree.body:
             if (
@@ -139,18 +124,18 @@ def scan():
             ):
                 unreferenced.append(f"{rel}:{node.lineno} {node.name}")
         # ``C(x=1)`` sets ``x`` of ``C.__init__``.
-        init_owner = {
-            id(fn): cls.name
-            for cls in ast.walk(tree)
-            if isinstance(cls, ast.ClassDef)
-            for fn in cls.body
-            if isinstance(fn, ast.FunctionDef) and fn.name == "__init__"
-        }
+        init_owner = {}
+        functions = []
         for node in ast.walk(tree):
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
+            if isinstance(node, ast.ClassDef):
+                for fn in node.body:
+                    if isinstance(fn, ast.FunctionDef) and fn.name == "__init__":
+                        init_owner[id(fn)] = node.name
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                functions.append(node)
+        for node in functions:
             owner = init_owner.get(id(node), node.name)
-            for pname, idx, is_method, default in _defaulted(node):
+            for pname, idx, is_method in _defaulted(node):
                 total += 1
                 if owner in calls.star or owner in calls.double_star:
                     continue
@@ -161,24 +146,21 @@ def scan():
                     reach = calls.max_pos.get(owner, 0) + (1 if is_method else 0)
                     if idx < reach:
                         continue
-                site = f"{rel}:{node.lineno} {owner}({pname}=)"
-                (columns if _is_column_name(default) else unset).append(site)
-    return total, unset, columns, unreferenced
+                unset.append(f"{rel}:{node.lineno} {owner}({pname}=)")
+    return total, unset, unreferenced
 
 
 def main() -> None:
-    total, unset, columns, unreferenced = scan()
+    total, unset, unreferenced = scan()
     if "--counts" not in sys.argv[1:]:
         for title, sites in (
             ("defaulted parameters that no call site sets", unset),
-            ("column-name parameters that no call site sets", columns),
             ("top-level functions that nothing references", unreferenced),
         ):
             print(f"# {title}")
             print(*sites, sep="\n")
     print(
         f"defaulted parameters: {total}; unset: {len(unset)}; "
-        f"unset column names: {len(columns)}; "
         f"unreferenced top-level functions: {len(unreferenced)}"
     )
 
