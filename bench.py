@@ -177,7 +177,7 @@ def main() -> None:
         ),
         (
             "kmeans_mllib",
-            lambda: fit_kmeans(emb, k=15, max_iter=10, tol=0.0, seed=42),
+            lambda: fit_kmeans(emb, k=15, max_iter=10, tol=0.0),
             2,
         ),
         (

@@ -299,6 +299,10 @@ def minhash_cross_pairs(
 #: md5 salt of the SimHash token hashes, shared by the Spark and DuckDB
 #: recipes below.
 SIMHASH_SALT = "sh:"
+#: SimHash LSH geometry: 4 bands of 4 bits, pairs within Hamming 3 --
+#: below the band count, so the banding loses no such pair
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = 3
 
 
 def token_hashes(text_col: str = "text") -> Column:
@@ -354,23 +358,21 @@ def token_hashes_sql(text_expr: str = "text") -> str:
 
 
 def simhash_near_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    max_bucket: int | None = MAX_BAND_BUCKET,
+    df: DataFrame, max_bucket: int | None = MAX_BAND_BUCKET
 ) -> LshPairs:
     """SimHash LSH: near-dup candidate pairs by banding the 16-bit
     SimHash -- the scale path the plain per-doc ``text_simhash`` query
     points at.
 
-    The 16 bits split into ``bands`` contiguous slices (16/bands bits
-    each); docs agreeing on ANY slice become candidates, then the exact
-    Hamming distance over the full 16 bits (``bit_count(a XOR b)``)
-    filters to ``<= max_hamming``.  Pigeonhole guarantee: a pair
-    differing in fewer than ``bands`` bits cannot differ in every band,
-    so recall is EXACT (not probabilistic) for
-    ``max_hamming <= bands - 1`` -- the default 3/4 is lossless while
-    joining on 4-bit keys instead of comparing all pairs.
+    The 16 bits split into ``SIMHASH_BANDS`` contiguous slices
+    (16/SIMHASH_BANDS bits each); docs agreeing on ANY slice become
+    candidates, then the exact Hamming distance over the full 16 bits
+    (``bit_count(a XOR b)``) filters to ``<= SIMHASH_MAX_HAMMING``.
+    Pigeonhole guarantee: a pair differing in fewer than
+    ``SIMHASH_BANDS`` bits cannot differ in every band, so recall is
+    EXACT (not probabilistic) for ``SIMHASH_MAX_HAMMING <=
+    SIMHASH_BANDS - 1`` -- 3/4 is lossless while joining on 4-bit keys
+    instead of comparing all pairs.
 
     Same scale shape as :func:`minhash_lsh_pairs`: banded equi-self-join
     (never all-pairs), and the identical hot-bucket cap -- a 16-bit
@@ -379,8 +381,7 @@ def simhash_near_pairs(
     within-bucket blowup (raise it, or widen the simhash, at corpus
     scale).  Caller must unpersist ``deps`` after materializing.
     """
-    assert 16 % bands == 0
-    width = 16 // bands
+    width = 16 // SIMHASH_BANDS
     mask = (1 << width) - 1
     sh = df.select(
         F.col("doc_id").alias("id"),
@@ -394,7 +395,7 @@ def simhash_near_pairs(
                 .bitwiseAND(F.lit(mask))
                 .alias("v"),
             )
-            for b in range(bands)
+            for b in range(SIMHASH_BANDS)
         ]
     )
     banded = sh.select("id", "sh", F.explode(band_structs).alias("bk")).persist()
@@ -407,7 +408,7 @@ def simhash_near_pairs(
     ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
     pairs = (
         a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
-        .where(ham <= max_hamming)
+        .where(ham <= SIMHASH_MAX_HAMMING)
         .select(
             F.col("a.id").alias("doc_a"),
             F.col("b.id").alias("doc_b"),

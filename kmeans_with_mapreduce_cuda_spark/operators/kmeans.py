@@ -197,12 +197,11 @@ def _dists_sql_nd(centroids: CentroidsND, feats: str) -> str:
 def assign_nd(
     points: DataFrame,
     centroids: CentroidsND,
-    features: str = "embedding",
     out: str = "cluster_id",
     keep_dist: bool = False,
 ) -> DataFrame:
-    """n-D variant over an array<float/double> column (embeddings table)."""
-    e = points.withColumn("_e", F.col(features).cast("array<double>"))
+    """n-D variant over the array<float/double> ``embedding`` column."""
+    e = points.withColumn("_e", F.col("embedding").cast("array<double>"))
     return _assign(e, _dists_sql_nd(centroids, "_e"), out, keep_dist).drop("_e")
 
 
@@ -278,11 +277,9 @@ def _step_sql_2d(view: str, centroids: Centroids2D, x: str, y: str) -> str:
     )
 
 
-def _step_sql_nd(
-    view: str, centroids: CentroidsND, dim: int, features: str
-) -> str:
+def _step_sql_nd(view: str, centroids: CentroidsND, dim: int) -> str:
     return _step_sql(
-        f"(SELECT CAST(`{features}` AS ARRAY<DOUBLE>) AS _e FROM {view})",
+        f"(SELECT CAST(`embedding` AS ARRAY<DOUBLE>) AS _e FROM {view})",
         "_e",
         _dists_sql_nd(centroids, "_e"),
         ",".join(f"avg(_e[{i}]) AS c{i}" for i in range(dim)),
@@ -532,12 +529,11 @@ def lloyd_nd(
     points: DataFrame,
     init: CentroidsND,
     max_iter: int = 20,
-    features: str = "embedding",
 ) -> list[list[float]]:
-    """n-D Lloyd loop over an array column (see _lloyd), stopping early
-    once no centroid moves more than 1e-6."""
-    step = partial(_step_sql_nd, dim=len(init[0]), features=features)
-    return [list(c) for c in _lloyd(points, init, max_iter, 1e-6, step, (features,))]
+    """n-D Lloyd loop over the ``embedding`` array column (see _lloyd),
+    stopping early once no centroid moves more than 1e-6."""
+    step = partial(_step_sql_nd, dim=len(init[0]))
+    return [list(c) for c in _lloyd(points, init, max_iter, 1e-6, step, ("embedding",))]
 
 
 def sse_2d(points: DataFrame, centroids: Centroids2D) -> float:
@@ -608,9 +604,8 @@ def seed_centroids_farthest(
     return cents
 
 
-def seed_centroids_nd(
-    points: DataFrame, k: int, seed: int = 42, key: str = "vec_id", features: str = "embedding"
-) -> list[list[float]]:
-    """Forgy seeding over an array column (see _forgy)."""
-    feats = F.col(features).cast("array<double>")
-    return [[float(v) for v in r[0]] for r in _forgy(points, k, seed, key, feats)]
+def seed_centroids_nd(points: DataFrame, k: int) -> list[list[float]]:
+    """Forgy seeding (seed 42) over the ``embedding`` array column,
+    ordered by ``vec_id`` (see _forgy)."""
+    feats = F.col("embedding").cast("array<double>")
+    return [[float(v) for v in r[0]] for r in _forgy(points, k, 42, "vec_id", feats)]

@@ -32,10 +32,9 @@ def fit_kmeans(
     k: int,
     max_iter: int = 20,
     tol: float = 1e-4,
-    seed: int = 42,
 ) -> KMeansResult:
-    """Fit MLlib KMeans (k-means|| init) on the array<float/double>
-    ``embedding`` column.
+    """Fit MLlib KMeans (k-means|| init, seed 42) on the
+    array<float/double> ``embedding`` column.
 
     ``array_to_vector`` is a JVM expression (not a UDF), so the
     array->Vector bridge adds no Python round-trip.
@@ -44,7 +43,7 @@ def fit_kmeans(
         array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
     km = KMeans(
-        k=k, maxIter=max_iter, tol=tol, seed=seed, initMode="k-means||",
+        k=k, maxIter=max_iter, tol=tol, seed=42, initMode="k-means||",
         featuresCol="features",
     )
     model = km.fit(vecs)

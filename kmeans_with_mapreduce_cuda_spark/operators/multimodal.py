@@ -82,12 +82,9 @@ DECODE_SCHEMA = StructType(
 )
 
 
-def decode_and_featurize(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow batches).
+def decode_and_featurize(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Decode + feature-extract the binary ``payload`` column via
+    mapInPandas (Arrow batches).
 
     The decode is a DETERMINISTIC STUB: width/height derived from the
     byte length, features = a rolling-hash byte histogram.  A real codec
@@ -109,7 +106,7 @@ def decode_and_featurize(
         import pandas as pd
 
         for pdf in it:
-            payloads = pdf[payload_col]
+            payloads = pdf["payload"]
             n = payloads.str.len().fillna(0).astype("int64")
             feats = []
             for b in payloads:
@@ -186,6 +183,11 @@ def resize_images(df: DataFrame, max_side: int = 256) -> DataFrame:
     return df.mapInPandas(batches, schema=RESIZE_SCHEMA)
 
 
+#: frame sampling: one frame per FRAME_BYTES payload bytes, at most
+#: MAX_FRAMES per row (sample_frames and the mm_frame_sample oracle)
+FRAME_BYTES = 64
+MAX_FRAMES = 8
+
 #: output schema of the frame-sample stub: one row per sampled frame.
 FRAME_SCHEMA = StructType(
     [
@@ -197,15 +199,13 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    df: DataFrame, every_n_bytes: int = 64, max_frames: int = 8
-) -> DataFrame:
+def sample_frames(df: DataFrame) -> DataFrame:
     """Frame sampling via mapInPandas: one input row (a 'video' payload)
-    -> up to max_frames output rows.  STUB codec: deterministic
-    fixed-stride byte slices stand in for decoded frames.  The
-    multi-emit contract (1 row in, N rows out through Arrow) is the
-    real thing -- the reference mapper's NUM_PAIRS slots (config.cuh:13)
-    generalized to a data-dependent count."""
+    -> up to MAX_FRAMES output rows of FRAME_BYTES bytes each.  STUB
+    codec: deterministic fixed-stride byte slices stand in for decoded
+    frames.  The multi-emit contract (1 row in, N rows out through
+    Arrow) is the real thing -- the reference mapper's NUM_PAIRS slots
+    (config.cuh:13) generalized to a data-dependent count."""
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
@@ -214,10 +214,10 @@ def sample_frames(
             out_id, out_idx, out_payload = [], [], []
             for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
                 b = b or b""
-                for i in range(min(max_frames, max(len(b) // every_n_bytes, 0))):
+                for i in range(min(MAX_FRAMES, len(b) // FRAME_BYTES)):
                     out_id.append(doc_id)
                     out_idx.append(i)
-                    out_payload.append(b[i * every_n_bytes : (i + 1) * every_n_bytes])
+                    out_payload.append(b[i * FRAME_BYTES : (i + 1) * FRAME_BYTES])
             yield pd.DataFrame(
                 {
                     "doc_id": out_id,

@@ -23,15 +23,15 @@ def brute_force_topk(
     candidates: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    features: str = "emb",
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast the (small) query side, JVM-side dot
-    products, window top-k with (similarity desc, id) tie order.
+    """Exact cosine top-k of the ``emb`` candidates against the ``q_emb``
+    queries: broadcast the (small) query side, JVM-side dot products,
+    window top-k with (similarity desc, id) tie order.
 
     Candidates whose ``vec_id`` equals the query's ``q_id`` are
     dropped: queries ARE corpus rows (a vector's trivial self-match is
     noise), so the query ids must share the corpus id space."""
-    sim = cosine_similarity("q_emb", features)
+    sim = cosine_similarity("q_emb", "emb")
     w = Window.partitionBy("q_id").orderBy(F.col("_sim").desc(), F.col("vec_id"))
     out = candidates.crossJoin(F.broadcast(queries)).where(
         F.col("q_id") != F.col("vec_id")
@@ -128,20 +128,24 @@ def n_planes_for(n_vectors: int) -> int:
     return min(31, max(1, math.ceil(math.log2(n_vectors / 256))))
 
 
+#: the least cosine of a pair lsh_bucket_pairs keeps; sim_lsh_pairs'
+#: oracle reads it too
+LSH_COS_THRESHOLD = 0.3
+
+
 def lsh_bucket_pairs(
     df: DataFrame,
     *,
     n_planes: int,
     seed: int = 42,
-    threshold: float = 0.3,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Cosine LSH candidate pairs: bucket vectors by their hyperplane-sign
     signature, self-join WITHIN buckets only, keep pairs with cosine >=
-    threshold.  Near-parallel vectors agree on every sign with high
-    probability, so they collide; the join key is the bucket -- no
-    all-pairs comparison, the same LSH shape as MinHash banding but for
-    the embedding column.  Recall dial: fewer planes = bigger buckets =
+    ``LSH_COS_THRESHOLD``.  Near-parallel vectors agree on every sign
+    with high probability, so they collide; the join key is the bucket
+    -- no all-pairs comparison, the same LSH shape as MinHash banding
+    but for the embedding column.  Recall dial: fewer planes = bigger buckets =
     higher recall and more candidates.
 
     ``n_planes`` is REQUIRED (no default) because the right value is a
@@ -181,7 +185,7 @@ def lsh_bucket_pairs(
     return (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
         .withColumn("_sim", sim)
-        .where(F.col("_sim") >= threshold)
+        .where(F.col("_sim") >= LSH_COS_THRESHOLD)
         .select(
             F.col("a.id").alias("vec_a"),
             F.col("b.id").alias("vec_b"),
@@ -370,17 +374,14 @@ def build_ivf_index(
     df: DataFrame,
     n_cells: int = 16,
     max_iter: int = 5,
-    seed: int = 42,
 ) -> tuple[DataFrame, CentroidsND]:
     """Coarse-quantize: K-Means cells over the embedding column; returns
     (df + cell_id column, cell centroids).  At scale you would persist the
     assigned table partitioned/bucketed BY cell_id so probes prune files.
     """
-    init = seed_centroids_nd(
-        df, k=n_cells, seed=seed, key="vec_id", features="embedding"
-    )
-    cents = lloyd_nd(df, init, max_iter=max_iter, features="embedding")
-    indexed = assign_nd(df, cents, features="embedding", out="cell_id")
+    init = seed_centroids_nd(df, k=n_cells)
+    cents = lloyd_nd(df, init, max_iter=max_iter)
+    indexed = assign_nd(df, cents, out="cell_id")
     return indexed, cents
 
 

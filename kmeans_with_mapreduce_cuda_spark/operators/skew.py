@@ -2,7 +2,7 @@
 
 AQE's skew-join handling covers joins; a groupBy whose key distribution
 is pathological (one key = 50% of 100 TB) still funnels one reducer.
-Salting splits each key into ``n_salts`` sub-keys, partially aggregates,
+Salting splits each key into 16 sub-keys, partially aggregates,
 then combines -- two small shuffles instead of one hot one.  This is the
 Spark-native generalization of the reference's per-cluster grid sizing
 ("Loading Balancing", kmeans_mapreduce_core.cu:195-207 + README.md:55-58):
@@ -30,11 +30,10 @@ def salted_groupby(
     df: DataFrame,
     key: str | list[str],
     aggs: dict[str, tuple[str, str]],
-    n_salts: int = 16,
 ) -> DataFrame:
     """``aggs``: out_name -> (fn, col) with fn in sum/count/min/max/avg.
 
-    Salt is ``floor(rand(42) * n_salts)``, NOT a hash of the row
+    Salt is ``floor(rand(42) * 16)``, NOT a hash of the row
     (code-review r10): a row-hash salt is constant across identical
     duplicate rows, so a hot key made of repeated identical rows -- the
     common pathological shape -- would still funnel ONE reducer while
@@ -68,7 +67,7 @@ def salted_groupby(
             raise ValueError(f"non-algebraic aggregate {fn!r} cannot be salted")
 
     salted = df.withColumn(
-        "__kmrc_salt", F.floor(F.rand(42) * n_salts).cast("int")
+        "__kmrc_salt", F.floor(F.rand(42) * 16).cast("int")
     )
     partial = salted.groupBy(*keys, "__kmrc_salt").agg(*partial_exprs)
     return partial.groupBy(*keys).agg(*combine_exprs)

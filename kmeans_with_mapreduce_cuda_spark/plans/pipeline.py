@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 from ..functions.hashing import md5_long_sql
 from ..functions.text import STOPWORDS, tokens
 from ..operators.dedup import simhash16_sql, token_hashes_sql
+from ..operators.multimodal import FRAME_BYTES, MAX_FRAMES
 from ..operators.skew import cap_hot_keys
 from ..session import pinned_confs
 from ..sources.readers import (
@@ -664,7 +665,7 @@ def kmeans_mllib_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     # max_iter=2: gate-budget instance; convergence quality is asserted
     # by test_kmeans_mllib's SSE parity, not this partition check
-    res = fit_kmeans(e, k=8, max_iter=2, seed=42)
+    res = fit_kmeans(e, k=8, max_iter=2)
     pred = predict_kmeans(res.model, e)
     sizes = pred.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n"))
     # groupBy over predictions only yields non-empty clusters, so
@@ -1160,7 +1161,11 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_oracle_sql() -> str:
-    from ..operators.similarity import hyperplanes_pm1, lsh_bucket_sql
+    from ..operators.similarity import (
+        LSH_COS_THRESHOLD,
+        hyperplanes_pm1,
+        lsh_bucket_sql,
+    )
 
     planes = hyperplanes_pm1(dim=64, n_planes=4, seed=42)
     bucket = lsh_bucket_sql("emb", planes, one_based=True)
@@ -1177,7 +1182,7 @@ def _lsh_oracle_sql() -> str:
     SELECT a.vec_id AS vec_a, b2.vec_id AS vec_b, a.bucket AS bucket,
            round({cos}, 6) AS cos_sim
     FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-    WHERE {cos} >= 0.3
+    WHERE {cos} >= {LSH_COS_THRESHOLD}
     """
 
 
@@ -1196,7 +1201,7 @@ def sim_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_bucket_pairs
 
     e = load_table(spark, sf_dir, "embeddings")
-    return lsh_bucket_pairs(e, n_planes=4, seed=42, threshold=0.3)
+    return lsh_bucket_pairs(e, n_planes=4, seed=42)
 
 
 # --- IVF ANN (rows-only: iterative K-Means inside) ----------------------------
@@ -1234,7 +1239,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round recompiles the 64-dim x k distance expression, and quantizer
     # quality only affects recall -- claimed above, property-tested at
     # full size in tests/test_similarity.py.
-    indexed, cents = build_ivf_index(e, n_cells=4, max_iter=1, seed=42)
+    indexed, cents = build_ivf_index(e, n_cells=4, max_iter=1)
     q = e.where(F.col("vec_id").isin(0, 7, 42)).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").cast("array<double>").alias("q_emb"),
@@ -1244,7 +1249,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("vec_id", F.col("embedding").cast("array<double>").alias("emb")),
         q,
         k=10,
-        features="emb",
     ).select("q_id", "vec_id", F.lit(1).alias("_hit"))
     return (
         ann.join(exact, ["q_id", "vec_id"], "left")
@@ -1474,13 +1478,13 @@ def mm_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_frame_sample",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(UNNEST(range(LEAST(8, octet_length(encode(text)) // 64)))
+           CAST(UNNEST(range(LEAST({MAX_FRAMES}, octet_length(encode(text)) // {FRAME_BYTES})))
                 AS INTEGER) AS frame_idx,
-           CAST(64 AS BIGINT) AS frame_bytes
+           CAST({FRAME_BYTES} AS BIGINT) AS frame_bytes
     FROM documents
-    WHERE octet_length(encode(text)) >= 64
+    WHERE octet_length(encode(text)) >= {FRAME_BYTES}
     """,
     doc="Multimodal frame sampling (one 'video' payload row -> up to 8 "
     "frame rows through Arrow): metadata view of "
@@ -1493,7 +1497,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import documents_as_binary, sample_frames
 
     d = documents_as_binary(load_table(spark, sf_dir, "documents"))
-    return sample_frames(d, every_n_bytes=64, max_frames=8).select(
+    return sample_frames(d).select(
         "doc_id",
         "frame_idx",
         F.octet_length("frame_payload").cast("bigint").alias("frame_bytes"),
@@ -2919,6 +2923,10 @@ def dedup_semantic_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sat idle for _SEMANTIC_MEMO_TTL other queries.  A premature release
 # only costs a rebuild, never correctness.
 _SEMANTIC_SLOT = "semantic_build"
+#: sub-centroids per hot cell in the recursive SemDeDup pass, and the
+#: share a sub-cell may hold (n <= cell_n // _SEMANTIC_SUB_K): stated
+#: once for the build and its oracles
+_SEMANTIC_SUB_K = 4
 #: The chain: the queries that read the build.  Their invocation does
 #: not age the slot, and once all of them have read one build it is
 #: released.
@@ -2992,7 +3000,7 @@ def _semantic_recursive_build(
 
 
 def _semantic_recursive_build_uncached(
-    spark: SparkSession, sf_dir: str, sub_k: int = 4
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[DataFrame], dict | None]:
     """The recursive SemDeDup pass (round-7 verdict item 2): consume
     dedup_semantic_capped's routed cells instead of ending in a TODO.
@@ -3000,17 +3008,18 @@ def _semantic_recursive_build_uncached(
     Stage 1 is exactly the capped query: assign to k=8 cells, cap at
     the uniform share n_total // 8, pair-join only KEPT cells.  Stage 2
     then actually processes every hot cell: re-cluster its members
-    against ``sub_k`` sub-centroids (the cell's lowest-vec_id members
+    against ``_SEMANTIC_SUB_K`` sub-centroids (the cell's lowest-vec_id members
     -- deterministic, oracle-expressible seeding) and pair-join within
     (cell, sub-cell) blocks, with the SAME uniform-share rule one level
-    down (sub-cell n > cell_n // sub_k -> residual, emitted AS DATA).
+    down (sub-cell n > cell_n // _SEMANTIC_SUB_K -> residual, emitted
+    AS DATA).
     This is the closed pipeline a 100 TB SemDeDup runs: the quadratic
     join is bounded at BOTH levels, and what still overflows after a
     re-cluster is, with overwhelming probability, a byte-duplicate pile
     -- exactly what exact/MinHash dedup (dedup_exact_groups,
     dedup_minhash_lsh) is for, so the residual rows are its worklist.
 
-    Scale shape of stage 2: sub-centroids are <= k * sub_k rows BY
+    Scale shape of stage 2: sub-centroids are <= k * _SEMANTIC_SUB_K rows BY
     CONSTRUCTION (collected like every other k-row centroid table),
     so sub-assignment is a centroid-LITERAL projection per hot cell --
     the O4 zero-join, zero-shuffle discipline (operators/kmeans.py:
@@ -3034,10 +3043,10 @@ def _semantic_recursive_build_uncached(
     wseed = Window.partitionBy("cell_id").orderBy("vec_id")
     seed_rows = (
         hot.withColumn("rn", F.row_number().over(wseed))
-        .where(F.col("rn") <= sub_k)
+        .where(F.col("rn") <= _SEMANTIC_SUB_K)
         .select("cell_id", "rn", "emb")
         .collect()
-    )  # <= k * sub_k rows: driver-small by construction
+    )  # <= k * _SEMANTIC_SUB_K rows: driver-small by construction
     if not seed_rows:
         # No hot cells (or empty corpus): stage 2 vanishes; the result
         # is the pair rows alone.  cos_sim must stay NULLABLE (the full
@@ -3069,7 +3078,7 @@ def _semantic_recursive_build_uncached(
         .withColumn("sub_id", F.expr(_argmin_sql("_sd")))
         .drop("_sd")
         .withColumn(
-            "blk", (F.col("cell_id") * sub_k + F.col("sub_id")).cast("int")
+            "blk", (F.col("cell_id") * _SEMANTIC_SUB_K + F.col("sub_id")).cast("int")
         )
         .persist()  # consumed by subcounts + both pair-join sides
     )
@@ -3078,7 +3087,7 @@ def _semantic_recursive_build_uncached(
     )
     # Per-cell uniform-share cap one level down: integer floor division
     # in BOTH engines (the minhash MAX_BAND_BUCKET / capped precedent).
-    # The capped-sub-block list is <= k * sub_k rows BY CONSTRUCTION
+    # The capped-sub-block list is <= k * _SEMANTIC_SUB_K rows BY CONSTRUCTION
     # (one row per sub-cell), so collect it (r11, guide §1.2/§5): this
     # one job replaces the former dedicated eager-fill count() --
     # computing subcounts populates the subassigned cache in a single
@@ -3094,7 +3103,7 @@ def _semantic_recursive_build_uncached(
             F.broadcast(capped.withColumnRenamed("n", "cell_n")), "cell_id"
         )
         .where(
-            (F.col("n") > F.floor(F.col("cell_n") / sub_k))
+            (F.col("n") > F.floor(F.col("cell_n") / _SEMANTIC_SUB_K))
             & F.col("blk").isNotNull()
         )
         .select("blk", "n")
@@ -3169,7 +3178,7 @@ _SEMANTIC_SUB_CTES = f"""cents AS (
                emb AS semb
         FROM hot
         QUALIFY ROW_NUMBER() OVER (PARTITION BY cell_id ORDER BY vec_id)
-                <= 4
+                <= {_SEMANTIC_SUB_K}
     ),
     subassigned AS MATERIALIZED (
         SELECT vec_id, emb, cell_id, cell_n, sub_id FROM (
@@ -3193,7 +3202,7 @@ _SEMANTIC_SUB_CTES = f"""cents AS (
 # survivor chain can consume the edges while the recursive query
 # rounds only at emission).  Consumed by dedup_semantic_recursive and
 # dedup_semantic_survivors.
-_SEMANTIC_PAIR_CTES = """kept AS (
+_SEMANTIC_PAIR_CTES = f"""kept AS (
         SELECT a.vec_id, a.emb, a.cell_id
         FROM assigned a JOIN counts k ON k.cell_id = a.cell_id, cap
         WHERE k.n <= cap.c
@@ -3203,7 +3212,7 @@ _SEMANTIC_PAIR_CTES = """kept AS (
         FROM subassigned sa
         JOIN subcounts sc
           ON sc.cell_id = sa.cell_id AND sc.sub_id = sa.sub_id
-        WHERE sc.n <= sc.cell_n // 4
+        WHERE sc.n <= sc.cell_n // {_SEMANTIC_SUB_K}
     ),
     sem_pairs AS (
         SELECT 'pair' AS kind, a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -3238,9 +3247,9 @@ _SEMANTIC_PAIR_CTES = """kept AS (
     FROM sem_pairs
     UNION ALL
     SELECT 'capped_subcell' AS kind,
-           CAST(sc.cell_id * 4 + sc.sub_id AS BIGINT) AS vec_a,
+           CAST(sc.cell_id * {_SEMANTIC_SUB_K} + sc.sub_id AS BIGINT) AS vec_a,
            sc.n AS vec_b, CAST(NULL AS DOUBLE) AS cos_sim
-    FROM subcounts sc WHERE sc.n > sc.cell_n // 4
+    FROM subcounts sc WHERE sc.n > sc.cell_n // {_SEMANTIC_SUB_K}
     """,
     doc="The recursive sub-clustering pass over dedup_semantic_capped's "
     "routed cells (round-7 verdict item 2) -- the capped query ends "
@@ -3271,13 +3280,13 @@ def dedup_semantic_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-cell uniform share), shared verbatim by the residual-exact and
 # survivors oracles -- same zero-drift discipline as the other two
 # constants.
-_SEMANTIC_RESIDUAL_CTE = """residual AS (
+_SEMANTIC_RESIDUAL_CTE = f"""residual AS (
         SELECT sa.vec_id, sa.emb,
-               CAST(sa.cell_id * 4 + sa.sub_id AS INTEGER) AS blk
+               CAST(sa.cell_id * {_SEMANTIC_SUB_K} + sa.sub_id AS INTEGER) AS blk
         FROM subassigned sa
         JOIN subcounts sc
           ON sc.cell_id = sa.cell_id AND sc.sub_id = sa.sub_id
-        WHERE sc.n > sc.cell_n // 4
+        WHERE sc.n > sc.cell_n // {_SEMANTIC_SUB_K}
     )"""
 
 

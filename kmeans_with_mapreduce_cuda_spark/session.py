@@ -7,7 +7,11 @@ shuffle partitions sized to the parallelism.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
@@ -54,7 +58,7 @@ def get_spark(
         # warehouse is just a directory -- keep it out of the repo tree.
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
+            os.environ.get("SPARK_GRAFT_WAREHOUSE") or _default_warehouse(),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # Whole-stage codegen of large generated expressions (the
@@ -103,6 +107,17 @@ def pinned_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, old)
+
+
+@functools.cache
+def _default_warehouse() -> str:
+    """This process's own warehouse directory under the temp dir, removed
+    at exit.  A path shared by every process would let two concurrent
+    runs of a query that writes the same table name (rel_bucketed_join)
+    delete and overwrite each other's files mid-read."""
+    path = os.path.join(tempfile.gettempdir(), f"spark_graft_warehouse_{os.getpid()}")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 _CODEGEN_JVM_OPTS = "-XX:-DontCompileHugeMethods -XX:ReservedCodeCacheSize=512m"

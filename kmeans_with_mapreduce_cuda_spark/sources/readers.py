@@ -254,6 +254,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
             spark.catalog.dropTempView(t)  # no-op when absent
 
 
+#: the contract as one regex: optional leading whitespace, two signed
+#: decimal tokens separated by whitespace, then whitespace or the end
+_POINT_LINE = r"\A\s*([+-]?[0-9]+)\s+([+-]?[0-9]+)(?:\s|\z)"
+
+
 def _parse_points(lines: DataFrame, *keep) -> DataFrame:
     """The one parser of the point format: each ``value`` line of
     ``lines`` -> bigint ``x``, ``y`` (after the ``keep`` columns).
@@ -265,23 +270,40 @@ def _parse_points(lines: DataFrame, *keep) -> DataFrame:
     in bigint range is dropped -- the reference would read garbage
     coordinates instead.
 
-    The split runs on the untrimmed line, so leading and trailing
-    whitespace leave an empty first and last token; ``array_remove``
-    drops them.  ``F.trim`` strips only spaces (a tab-led line kept its
-    empty token and was dropped).  Each coordinate names the split once:
-    a ``count()`` prunes the ``keep`` columns and pushes the not-null
-    filter into the scan with ``x`` and ``y`` inlined, so an index that
-    skips the empty token (two more splits) read 1.6-1.7 s per 1M lines
-    there against 1.0 s (4-vCPU host).  try_cast + get, not cast +
-    getItem: ANSI mode (Spark 4 default) makes a plain cast throw on a
-    malformed token and getItem throw on a short line.
+    Fast path: the line is exactly ``x SP y`` with both bigints in
+    canonical form, the shape the reference's writer emits.
+    ``substring_index`` cuts the text before the first and after the
+    last space, the two cuts and the space must make the whole line,
+    and each cut must equal its ``try_cast`` written back.  That last
+    test rejects what ``try_cast`` would forgive: it trims every byte up
+    to 0x20 and DEL around a token, so ``"5\\x01"`` would read as 5.
+    Every other line (tabs, runs of spaces, leading or trailing
+    whitespace, CR, signs, leading zeros, 3+ tokens, junk) takes
+    ``regexp_extract`` of ``_POINT_LINE``, whose pattern is compiled
+    once per task (``split(value, '\\s+')`` runs ``String.split``,
+    which compiles its pattern again on every line).
+
+    Only ``x`` is filtered: it is NULL unless both coordinates parse.
+    A ``count()`` prunes the ``keep`` columns and pushes the filter
+    into the scan with ``x`` inlined, and a filter gets no common
+    subexpression elimination, so a filter on ``x`` and ``y`` ran the
+    fast-path test twice per line there.  try_cast, not cast: ANSI mode
+    (Spark 4 default) makes a plain cast throw on a malformed token.
     """
-    tokens = F.array_remove(F.split(F.col("value"), r"\s+"), "")
+    value = F.col("value")
+    a, b = F.substring_index(value, " ", 1), F.substring_index(value, " ", -1)
+    fa, fb = a.try_cast("long"), b.try_cast("long")
+    fast = (
+        (F.octet_length(a) + F.octet_length(b) + 1 == F.octet_length(value))
+        & (fa.cast("string") == a)
+        & (fb.cast("string") == b)
+    )
+    sx, sy = (F.regexp_extract(value, _POINT_LINE, i).try_cast("long") for i in (1, 2))
     return lines.select(
         *keep,
-        F.get(tokens, 0).try_cast("long").alias("x"),
-        F.get(tokens, 1).try_cast("long").alias("y"),
-    ).where(F.col("x").isNotNull() & F.col("y").isNotNull())
+        F.when(fast, fa).when(sy.isNotNull(), sx).alias("x"),
+        F.when(fast, fb).otherwise(sy).alias("y"),
+    ).where(F.col("x").isNotNull())
 
 
 def read_points_text(

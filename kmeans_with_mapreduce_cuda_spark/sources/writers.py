@@ -50,8 +50,29 @@ def write_partitioned_parquet(
     BY cell_id, or assignments BY cluster_id): readers filtering on the
     partition column prune whole directories -- the scan never opens
     non-matching files.  Partition pruning is asserted in
-    tests/test_sources.py."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+    tests/test_sources.py.
+
+    Written without parquet dictionaries.  A partitioned write splits
+    each task's rows across every partition value, so each file holds
+    a few thousand rows (1M points by 15 clusters over 4 tasks: 60 files
+    of ~16.7k rows), and no column chunk reaches parquet's first page
+    boundary (20k rows or 1 MB).  The writer then decides at close
+    whether the dictionary pays; on high-cardinality ids, coordinates
+    and distances it does not, and it writes the chunk PLAIN after
+    building the whole dictionary.  On the 1M-point scoring write
+    (kmbench ``score_write``) that hashing was ~45 % of the task CPU,
+    and the output is 21,085,014 bytes either way.  A column with few
+    distinct values does lose its dictionary: the 3-cluster test frame
+    of ``test_partitioned_sink_prunes`` grows 41,011 -> 48,045 bytes.
+    Turning dictionaries off for double columns only would keep about
+    two thirds of the scoring write's dictionary cost, since three of
+    its four columns are bigints."""
+    (
+        df.write.mode("overwrite")
+        .option("parquet.enable.dictionary", "false")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def write_bucketed_table(

@@ -179,31 +179,18 @@ class StreamingKMeans:
 
     Driver state is k (centroid, count) pairs -- the identical tiny
     boundary as the batch loop; executors never hold state, so the
-    operator scales with the batch, not the history.  An optional decay
-    in [0, 1] down-weights history per batch (decay=1 -> running mean
-    over all data; decay=0 -> forget history, pure per-batch means).
+    operator scales with the batch, not the history: the centroids are
+    the running means over all data so far.
     """
 
-    def __init__(
-        self,
-        init: list[tuple[float, float]],
-        decay: float = 1.0,
-    ) -> None:
+    def __init__(self, init: list[tuple[float, float]]) -> None:
         self.centroids = [tuple(map(float, c)) for c in init]
         self.counts = [0.0] * len(init)
-        self.decay = float(decay)
 
     def update_with_batch(self, batch_df: DataFrame) -> None:
         from ..operators.kmeans import assign_2d, update_2d
 
         rows = update_2d(assign_2d(batch_df, self.centroids)).collect()
-        # Uniform per-batch decay (MLlib StreamingKMeans semantics): ALL
-        # clusters' history is down-weighted once per batch, whether or
-        # not they receive points -- decaying only on update would make
-        # history half-life data-dependent per cluster (a cluster idle
-        # for 10 batches would dominate its next merge at full weight;
-        # code-review r10).  decay=1 is exactly the old behavior.
-        self.counts = [c * self.decay for c in self.counts]
         for r in rows:
             i = int(r["cluster_id"])
             bx, by, bn = float(r["cx"]), float(r["cy"]), float(r["n"])

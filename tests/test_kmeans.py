@@ -140,7 +140,7 @@ def test_seed_deterministic(points):
 
 def test_lloyd_nd_embeddings(spark):
     emb = load_table(spark, SF_DIR, "embeddings").cache()
-    init = seed_centroids_nd(emb, k=4, seed=42)
+    init = seed_centroids_nd(emb, k=4)
     cents = lloyd_nd(emb, init, max_iter=3)
     assert len(cents) == 4
     assert all(len(c) == 64 for c in cents)
@@ -165,14 +165,14 @@ def test_mllib_parity_with_primitive_path(spark):
     n = emb.count()
     k = 8
 
-    res = fit_kmeans(emb, k=k, max_iter=10, seed=42)
+    res = fit_kmeans(emb, k=k, max_iter=10)
     assert len(res.centroids) == k and len(res.centroids[0]) == 64
     assert res.sse > 0 and res.iterations >= 1
 
     pred = predict_kmeans(res.model, emb)
     assert pred.count() == n
 
-    init = seed_centroids_nd(emb, k=k, seed=42)
+    init = seed_centroids_nd(emb, k=k)
     prim = lloyd_nd(emb, init, max_iter=10)
     a = assign_nd(emb, prim, keep_dist=True)
     prim_sse = a.agg(F.sum("_mindist")).collect()[0][0]
@@ -225,7 +225,6 @@ def test_salted_groupby_equals_plain(spark):
                 "mx": ("max", "l_extendedprice"),
                 "a": ("avg", "l_extendedprice"),
             },
-            n_salts=16,
         ).collect()
     }
     assert plain.keys() == salted.keys()
@@ -277,7 +276,7 @@ def test_mllib_model_save_load_roundtrip(spark, tmp_path):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings").limit(500).cache()
-    res = fit_kmeans(emb, k=5, max_iter=5, seed=42)
+    res = fit_kmeans(emb, k=5, max_iter=5)
     path = str(tmp_path / "km_model")
     res.model.write().overwrite().save(path)
     back = KMeansModel.load(path)

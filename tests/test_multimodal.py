@@ -130,28 +130,30 @@ def test_sample_frames_multi_emit(spark):
     from pyspark.sql import functions as F
 
     from kmeans_with_mapreduce_cuda_spark.operators.multimodal import (
+        FRAME_BYTES,
+        MAX_FRAMES,
         documents_as_binary,
         sample_frames,
     )
 
     d = documents_as_binary(load_table(spark, SF_DIR, "documents").limit(100))
-    fr = sample_frames(d, every_n_bytes=64, max_frames=8)
+    fr = sample_frames(d)
     rows = fr.collect()
     assert rows, "expected at least one frame"
     per_doc = fr.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    assert all(1 <= r["n"] <= 8 for r in per_doc)
+    assert all(1 <= r["n"] <= MAX_FRAMES for r in per_doc)
     # expected count is a pure function of payload length
     exp = {
-        r["doc_id"]: min(8, r["n_bytes"] // 64)
+        r["doc_id"]: min(MAX_FRAMES, r["n_bytes"] // FRAME_BYTES)
         for r in d.select(
             "doc_id", F.octet_length("payload").alias("n_bytes")
         ).collect()
-        if r["n_bytes"] >= 64
+        if r["n_bytes"] >= FRAME_BYTES
     }
     got = {r["doc_id"]: r["n"] for r in per_doc}
     assert got == exp
     for r in rows[:5]:
-        assert len(r["frame_payload"]) == 64
+        assert len(r["frame_payload"]) == FRAME_BYTES
 
 
 def test_map_in_arrow_decode_matches_pandas_path(spark):
@@ -228,7 +230,7 @@ def test_binary_file_source_feeds_multimodal_pipeline(spark, tmp_path):
     feats = {
         r["doc_id"]: r
         for r in decode_and_featurize(
-            df.select("name", "payload"), payload_col="payload", id_col="name"
+            df.select("name", "payload"), id_col="name"
         ).collect()
     }
     assert set(feats) == set(blobs)

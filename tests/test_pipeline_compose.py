@@ -591,7 +591,7 @@ def test_semantic_recursive_null_embedding_is_not_a_capped_subcell(
     )
 
     out, deps, parts = pipeline._semantic_recursive_build_uncached(
-        spark, "unused", sub_k=4
+        spark, "unused"
     )
     try:
         capped_sub = [tuple(r) for r in parts["capped_sub"].collect()]

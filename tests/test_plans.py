@@ -536,7 +536,7 @@ def test_lloyd_nd_sql_step_plan_is_narrow(spark):
     e.createOrReplaceTempView("_plan_audit_emb")
     cents = [[float(i * 64 + j) for j in range(64)] for i in range(4)]
     plan = plan_of(
-        spark.sql(_step_sql_nd("_plan_audit_emb", cents, 64, "embedding"))
+        spark.sql(_step_sql_nd("_plan_audit_emb", cents, 64))
     )
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange", plan, re.MULTILINE))
     assert n_exchanges == 1, plan
@@ -663,11 +663,12 @@ def test_semantic_dedup_capped_excludes_hot_cells_via_broadcast_anti(spark):
 
 def test_semantic_recursive_subassign_is_literal_projection(spark):
     """dedup_semantic_recursive's stage-2 shape: sub-centroids are
-    COLLECTED (<= k*sub_k rows by construction) and baked into a CASE
-    of literal distance arrays, so the sub-assignment is a projection
-    -- the final plan must carry NO Window operator (a fan-out join +
-    per-vector argmin window would) and no cartesian anywhere; the two
-    cap exclusions (top cells, sub-cells) are broadcast anti-joins."""
+    COLLECTED (<= k * _SEMANTIC_SUB_K rows by construction) and baked
+    into a CASE of literal distance arrays, so the sub-assignment is a
+    projection -- the final plan must carry NO Window operator (a
+    fan-out join + per-vector argmin window would) and no cartesian
+    anywhere; the two cap exclusions (top cells, sub-cells) are
+    broadcast anti-joins."""
     from kmeans_with_mapreduce_cuda_spark.plans.pipeline import (
         _semantic_recursive_build_uncached,
     )

@@ -1,7 +1,13 @@
 """session.pinned_confs: the one save/set/restore path for temporary
-session confs."""
+session confs; the per-process default warehouse."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import tempfile
+from pathlib import Path
 
 import pytest
 
@@ -64,3 +70,23 @@ def test_pinned_confs_restores_on_exception(spark, clean_keys):
                 raise RuntimeError("boom")
     assert spark.conf.get(A) == "before"
     assert spark.conf.get(B, None) is None
+
+
+def test_default_warehouse_is_per_process():
+    """Two processes get different default warehouse directories, each
+    under the temp dir, so their saveAsTable files never collide."""
+    code = (
+        "from kmeans_with_mapreduce_cuda_spark.session import _default_warehouse; "
+        "print(_default_warehouse())"
+    )
+    root = Path(__file__).resolve().parent.parent
+    paths = [
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=root, capture_output=True,
+            text=True, check=True,
+        ).stdout.strip()
+        for _ in range(2)
+    ]
+    assert paths[0] != paths[1], paths
+    for p in paths:
+        assert os.path.dirname(p) == tempfile.gettempdir(), p

@@ -34,7 +34,7 @@ def test_ivf_recall_vs_bruteforce(spark):
     cand = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    exact = brute_force_topk(cand, q, k=K, features="emb")
+    exact = brute_force_topk(cand, q, k=K)
     exact_sets = {
         r["q_id"]: set()
         for r in exact.select("q_id").distinct().collect()
@@ -42,7 +42,7 @@ def test_ivf_recall_vs_bruteforce(spark):
     for r in exact.select("q_id", "vec_id").collect():
         exact_sets[r["q_id"]].add(r["vec_id"])
 
-    indexed, cents = build_ivf_index(e, n_cells=8, max_iter=3, seed=42)
+    indexed, cents = build_ivf_index(e, n_cells=8, max_iter=3)
     approx = ivf_topk(indexed, cents, q, k=K, nprobe=3)
     approx_sets: dict[int, set] = {}
     for r in approx.select("q_id", "vec_id").collect():
@@ -59,7 +59,7 @@ def test_ivf_probes_subset_of_data(spark):
     """ANN must examine strictly fewer candidates than brute force."""
     e = load_table(spark, SF_DIR, "embeddings").cache()
     n = e.count()
-    indexed, cents = build_ivf_index(e, n_cells=8, max_iter=3, seed=42)
+    indexed, cents = build_ivf_index(e, n_cells=8, max_iter=3)
     q = _queries(e)
     probed = ivf_topk(indexed, cents, q, k=n, nprobe=3)  # k=n: keep all probed
     per_q = probed.groupBy("q_id").count().collect()
@@ -102,7 +102,7 @@ def test_ivf_index_persists_and_prunes(spark, tmp_path):
     )
 
     e = load_table(spark, SF_DIR, "embeddings")
-    indexed, _ = build_ivf_index(e, n_cells=4, max_iter=2, seed=42)
+    indexed, _ = build_ivf_index(e, n_cells=4, max_iter=2)
     out = str(tmp_path / "ivf")
     write_partitioned_parquet(indexed, out, ["cell_id"])
 
@@ -118,6 +118,7 @@ def test_ivf_index_persists_and_prunes(spark, tmp_path):
 
 def test_lsh_pairs_bucket_and_threshold_contract(spark):
     from kmeans_with_mapreduce_cuda_spark.operators.similarity import (
+        LSH_COS_THRESHOLD,
         hyperplanes_pm1,
         lsh_bucket_pairs,
     )
@@ -130,26 +131,29 @@ def test_lsh_pairs_bucket_and_threshold_contract(spark):
     assert p1 != hyperplanes_pm1(dim=8, n_planes=3, seed=8)
 
     e = load_table(spark, SF_DIR, "embeddings")
-    pairs = lsh_bucket_pairs(e, n_planes=4, seed=42, threshold=0.3).collect()
+    pairs = lsh_bucket_pairs(e, n_planes=4, seed=42).collect()
     for r in pairs:
         assert r["vec_a"] < r["vec_b"]
-        assert r["cos_sim"] >= 0.3
+        assert r["cos_sim"] >= LSH_COS_THRESHOLD
         assert 0 <= r["bucket"] < 16
 
 
 def test_simhash_near_pairs_exact_recall_vs_bruteforce(spark):
-    """simhash_near_pairs with max_hamming <= bands-1 has a pigeonhole
-    recall GUARANTEE: its pair set must exactly equal the brute-force
-    all-pairs Hamming filter (uncapped; the cap is exercised by the
-    skew tests' pattern)."""
+    """simhash_near_pairs with SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1
+    has a pigeonhole recall GUARANTEE: its pair set must exactly equal
+    the brute-force all-pairs Hamming filter (uncapped; the cap is
+    exercised by the skew tests' pattern)."""
     from kmeans_with_mapreduce_cuda_spark.operators.dedup import (
+        SIMHASH_BANDS,
+        SIMHASH_MAX_HAMMING,
         simhash16_from_hashes,
         simhash_near_pairs,
         token_hashes,
     )
 
+    assert SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1
     d = load_table(spark, SF_DIR, "documents").limit(300)
-    res = simhash_near_pairs(d, max_hamming=3, bands=4, max_bucket=None)
+    res = simhash_near_pairs(d, max_bucket=None)
     try:
         got = {
             (r["doc_a"], r["doc_b"], r["hamming"])
@@ -168,7 +172,7 @@ def test_simhash_near_pairs_exact_recall_vs_bruteforce(spark):
     want = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in a.join(b, F.col("a.id") < F.col("b.id"))
-        .where(ham <= 3)
+        .where(ham <= SIMHASH_MAX_HAMMING)
         .select(
             F.col("a.id").alias("doc_a"),
             F.col("b.id").alias("doc_b"),

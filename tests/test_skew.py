@@ -183,16 +183,12 @@ def test_cross_corpus_cap_agrees_with_mirrored_oracle_when_firing(spark):
     ]
     e = spark.createDataFrame(hot + other, "vec_id bigint, embedding array<double>")
 
-    capped = lsh_bucket_pairs(
-        e, n_planes=3, seed=7, threshold=0.3, max_bucket=10
-    ).collect()
+    capped = lsh_bucket_pairs(e, n_planes=3, seed=7, max_bucket=10).collect()
     got = {(r["vec_a"], r["vec_b"]) for r in capped}
     assert not any(a < 40 and b < 40 for a, b in got), sorted(got)[:5]
     assert (500, 501) in got
 
-    uncapped = lsh_bucket_pairs(
-        e, n_planes=3, seed=7, threshold=0.3, max_bucket=None
-    ).count()
+    uncapped = lsh_bucket_pairs(e, n_planes=3, seed=7, max_bucket=None).count()
     assert uncapped >= 40 * 39 // 2
 
 

@@ -136,6 +136,39 @@ def test_partitioned_sink_prunes(spark, tmp_path):
     assert pf and "cluster_id" in pf[0], plan
 
 
+def test_partitioned_sink_writes_no_dictionary(spark, tmp_path):
+    """write_partitioned_parquet builds no parquet dictionary: every
+    column chunk is PLAIN, even a 3-value column that a dictionary
+    would otherwise encode."""
+    import pyarrow.parquet as pq
+
+    from kmeans_with_mapreduce_cuda_spark.sources.writers import (
+        write_partitioned_parquet,
+    )
+
+    df = spark.range(3000).select(
+        "id",
+        (F.col("id") % 3).alias("v"),
+        (F.col("id") * 0.5).alias("d"),
+        (F.col("id") % 2).alias("cluster_id"),
+    )
+    out = str(tmp_path / "by_cluster")
+    write_partitioned_parquet(df, out, ["cluster_id"])
+
+    files = glob.glob(os.path.join(out, "cluster_id=*", "*.parquet"))
+    assert files
+    chunks = [
+        md.row_group(g).column(c)
+        for md in (pq.ParquetFile(f).metadata for f in files)
+        for g in range(md.num_row_groups)
+        for c in range(md.num_columns)
+    ]
+    assert {c.path_in_schema for c in chunks} == {"id", "v", "d"}
+    for c in chunks:
+        assert not c.has_dictionary_page, (c.path_in_schema, c.encodings)
+        assert not any("DICTIONARY" in e for e in c.encodings), c.encodings
+
+
 def test_pandas_udfs_match_expressions(spark):
     """The vectorized UDF escape hatch must agree with the expression twins."""
     from kmeans_with_mapreduce_cuda_spark.functions.text import (
@@ -230,7 +263,14 @@ _token = st.one_of(
     st.integers(10**18, 10**19 - 1).map(str),
     st.integers(-(10**19) + 1, -(10**18)).map(str),
     st.integers(10**19, 10**20 - 1).map(str),
+    st.integers(0, 999).map(lambda v: f"00{v}"),
     st.sampled_from(["1_000", "bad", "1.5", "0x10", "-", "+"]),
+)
+#: control bytes that are not ASCII whitespace, and DEL: try_cast trims
+#: them around a token, the contract does not
+_ctrl = st.text(
+    alphabet=[chr(c) for c in (*range(0x00, 0x09), *range(0x0E, 0x20), 0x7F)],
+    max_size=1,
 )
 _blank = st.text(alphabet=" \t", max_size=3)
 _gap = st.text(alphabet=" \t", min_size=1, max_size=3)
@@ -238,7 +278,10 @@ _gap = st.text(alphabet=" \t", min_size=1, max_size=3)
 
 @st.composite
 def _point_line(draw) -> str:
-    toks = draw(st.lists(_token, max_size=3))
+    toks = [
+        draw(_ctrl) + tok + draw(_ctrl)
+        for tok in draw(st.lists(_token, max_size=3))
+    ]
     seps = ["", *(draw(_gap) for _ in toks[1:])]
     body = "".join(sep + tok for sep, tok in zip(seps, toks))
     end = draw(st.sampled_from(["\n", "\r\n"]))
@@ -247,9 +290,10 @@ def _point_line(draw) -> str:
 
 def test_read_points_text_matches_contract_oracle(spark, tmp_path):
     """Property test of the one point parser: on lines with runs of
-    spaces and tabs anywhere, CRLF endings, signs, 19- and 20-digit
-    tokens, underscores, 3 tokens, blank and junk lines,
-    read_points_text's (x, y) multiset equals the contract oracle."""
+    spaces and tabs anywhere, CRLF endings, signs, leading zeros, 19-
+    and 20-digit tokens, underscores, control bytes next to tokens, 3
+    tokens, blank and junk lines, read_points_text's (x, y) multiset
+    equals the contract oracle."""
     paths = (str(tmp_path / f"pts_{i}.txt") for i in itertools.count())
 
     @settings(max_examples=25, deadline=None)
@@ -267,16 +311,44 @@ def test_read_points_text_matches_contract_oracle(spark, tmp_path):
     check()
 
 
+def test_read_points_text_lines_off_the_fast_path(spark, tmp_path):
+    """Lines that are not two canonical bigints around one space leave
+    the fast path for the regex and parse as the contract says; a
+    control byte or DEL next to a token, which try_cast would trim,
+    drops the line on either path."""
+    want = {
+        "5 6 7": (5, 6),
+        "9\t10 11": (9, 10),
+        " 12 13": (12, 13),
+        "+14 15": (14, 15),
+        "007 8": (7, 8),
+        "16 17\r": (16, 17),
+        "-0 18": (0, 18),
+        "19 -20": (19, -20),
+        "21\x01 22": None,
+        "\x0023 24": None,
+        "25 26\x1f": None,
+        "27\x7f 28": None,
+        "29 \x1e30 31": None,
+    }
+    p = tmp_path / "off_fast_path.txt"
+    p.write_bytes("".join(f"{ln}\n" for ln in want).encode())
+    got = sorted((r["x"], r["y"]) for r in read_points_text(spark, str(p)).collect())
+    assert got == sorted(xy for xy in want.values() if xy is not None)
+    assert got == _contract_points(p.read_bytes())
+
+
 _MIXED_POINTS = (
     "\t5 6\n7 8\n  9\t10\r\n\t 11 12\n1_000 2\n"
     "99999999999999999999 1\n13 14 15\n17 18\r19 20\nbad\n\n"
+    "21\x01 22\n\x0023 24\n"
 )
 
 
 def test_batch_and_stream_readers_parse_alike(spark, tmp_path):
     """read_points_text and read_points_stream share one parser and one
     line end (LF): on tab-led, CRLF, lone-CR, underscore, overflowing,
-    3-token and junk lines they return the same points."""
+    3-token, control-byte and junk lines they return the same points."""
     p = tmp_path / "mixed.txt"
     p.write_text(_MIXED_POINTS)
     want = {(5, 6), (7, 8), (9, 10), (11, 12), (13, 14), (17, 18)}

@@ -156,8 +156,8 @@ def test_sessionize_stream_handles_out_of_order_chunks(spark, tmp_path):
 
 def test_streaming_kmeans_foreachbatch(spark):
     """Incremental K-Means: driving the whole events stream through
-    foreachBatch with decay=1 must equal ONE batch K-Means step (count-
-    weighted running means over all data == global per-cluster means)."""
+    foreachBatch must equal ONE batch K-Means step (count-weighted
+    running means over all data == global per-cluster means)."""
     from kmeans_with_mapreduce_cuda_spark.operators.kmeans import (
         assign_2d,
         update_2d,
@@ -172,7 +172,7 @@ def test_streaming_kmeans_foreachbatch(spark):
             F.col("value").alias("y"),
         )
 
-    sk = StreamingKMeans(cents, decay=1.0)
+    sk = StreamingKMeans(cents)
     q = (
         as_points(read_events_stream(spark, SF_DIR))
         .writeStream.foreachBatch(sk.foreach_batch())

@@ -10,7 +10,9 @@ the package, ``tests/``, ``kmbench/``, ``bench.py`` and
 (``f(...)``, ``obj.f(...)``, ``partial(f, ...)``), so it is conservative
 in one direction only: a parameter of any function that shares its name
 with a caller counts as set if that caller sets it, and a call through
-``*args`` or ``**kwargs`` sets every parameter it could reach.
+``*args`` or ``**kwargs`` sets every parameter it could reach.  A
+keyword whose value is the default's own literal (``f(seed=42)`` for
+``seed=42``) sets nothing: that caller gets the default too.
 
 It cannot see a call made through a variable (``fn = funcs[i]; fn(x=1)``),
 so grep a reported name before deleting it.  ``tests/test_unset_params.py``
@@ -47,19 +49,35 @@ def _callee_name(node: ast.expr) -> str | None:
     return None
 
 
+#: what ``_literal`` returns for an argument that is not a literal
+NOT_LITERAL = object()
+
+
+def _literal(node: ast.expr):
+    """The ``repr`` of a literal argument or default (``"x"``, ``-1``,
+    ``None``, ``[1, 2]``), else ``NOT_LITERAL``.  The ``repr`` keeps
+    ``True``, ``1`` and ``1.0`` apart."""
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError):
+        return NOT_LITERAL
+
+
 class _Calls:
-    """Per callee name: keywords passed, the most positional arguments
-    passed, and whether some call passed ``*args`` / ``**kwargs``."""
+    """Per callee name: the keywords passed with the literal each was
+    given (``NOT_LITERAL`` for any other value), the most positional
+    arguments passed, and whether some call passed ``*args`` /
+    ``**kwargs``."""
 
     def __init__(self):
-        self.keywords: dict[str, set[str]] = {}
+        self.keywords: dict[str, dict[str, set]] = {}
         self.max_pos: dict[str, int] = {}
         self.star: set[str] = set()
         self.double_star: set[str] = set()
         self.refs: dict[str, int] = {}
 
     def _record(self, name, args, keywords):
-        self.keywords.setdefault(name, set())
+        passed = self.keywords.setdefault(name, {})
         n = 0
         for a in args:
             if isinstance(a, ast.Starred):
@@ -71,7 +89,13 @@ class _Calls:
             if kw.arg is None:
                 self.double_star.add(name)
             else:
-                self.keywords[name].add(kw.arg)
+                passed.setdefault(kw.arg, set()).add(_literal(kw.value))
+
+    def sets_keyword(self, name: str, param: str, default: ast.expr) -> bool:
+        """Whether some call of ``name`` passes ``param=`` a value other
+        than ``default``'s own literal (any non-literal value counts)."""
+        passed = self.keywords.get(name, {}).get(param, set())
+        return bool(passed - {_literal(default)}) or NOT_LITERAL in passed
 
     def visit(self, tree: ast.AST) -> None:
         for node in ast.walk(tree):
@@ -91,17 +115,17 @@ class _Calls:
 
 
 def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
-    """Yield ``(name, positional index or None, is_method)`` per
+    """Yield ``(name, default, positional index or None, is_method)`` per
     defaulted parameter of ``fn``."""
     a = fn.args
     positional = a.posonlyargs + a.args
     is_method = bool(positional) and positional[0].arg in ("self", "cls")
     first = len(positional) - len(a.defaults)
-    for i, p in enumerate(positional[first:], start=first):
-        yield p.arg, i, is_method
+    for i, (p, d) in enumerate(zip(positional[first:], a.defaults), start=first):
+        yield p.arg, d, i, is_method
     for p, d in zip(a.kwonlyargs, a.kw_defaults):
         if d is not None:
-            yield p.arg, None, is_method
+            yield p.arg, d, None, is_method
 
 
 def scan():
@@ -135,11 +159,11 @@ def scan():
                 functions.append(node)
         for node in functions:
             owner = init_owner.get(id(node), node.name)
-            for pname, idx, is_method in _defaulted(node):
+            for pname, default, idx, is_method in _defaulted(node):
                 total += 1
                 if owner in calls.star or owner in calls.double_star:
                     continue
-                if pname in calls.keywords.get(owner, ()):
+                if calls.sets_keyword(owner, pname, default):
                     continue
                 if idx is not None:
                     # ``obj.m(x)`` passes x as positional 1 of ``m(self, x)``.
