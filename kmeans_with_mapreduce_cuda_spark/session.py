@@ -114,8 +114,10 @@ def _default_warehouse() -> str:
     """This process's own warehouse directory under the temp dir, removed
     at exit.  A path shared by every process would let two concurrent
     runs of a query that writes the same table name (rel_bucketed_join)
-    delete and overwrite each other's files mid-read."""
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_warehouse_{os.getpid()}")
+    delete and overwrite each other's files mid-read.  ``mkdtemp`` makes
+    a new directory even when the OS reuses a PID.  A killed process
+    runs no exit hook and leaves its directory behind."""
+    path = tempfile.mkdtemp(prefix="spark_graft_warehouse_")
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
 

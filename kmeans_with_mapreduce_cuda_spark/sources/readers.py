@@ -281,14 +281,21 @@ def _parse_points(lines: DataFrame, *keep) -> DataFrame:
     whitespace, CR, signs, leading zeros, 3+ tokens, junk) takes
     ``regexp_extract`` of ``_POINT_LINE``, whose pattern is compiled
     once per task (``split(value, '\\s+')`` runs ``String.split``,
-    which compiles its pattern again on every line).
+    which compiles its pattern again on every line).  The regex alone
+    is no faster than that split on canonical lines, and a line that
+    takes it is dearer than with the split: a projection of ``x`` and
+    ``y`` runs it three times, as case branches get no common
+    subexpression elimination.
 
     Only ``x`` is filtered: it is NULL unless both coordinates parse.
     A ``count()`` prunes the ``keep`` columns and pushes the filter
     into the scan with ``x`` inlined, and a filter gets no common
     subexpression elimination, so a filter on ``x`` and ``y`` ran the
-    fast-path test twice per line there.  try_cast, not cast: ANSI mode
-    (Spark 4 default) makes a plain cast throw on a malformed token.
+    fast-path test twice per line there.  ``y`` is wrapped in a
+    ``coalesce`` with 0 that no kept row reaches (a NULL ``y`` means a
+    NULL ``x``) so that both columns stay non-nullable, as a filter on
+    each made them.  try_cast, not cast: ANSI mode (Spark 4 default)
+    makes a plain cast throw on a malformed token.
     """
     value = F.col("value")
     a, b = F.substring_index(value, " ", 1), F.substring_index(value, " ", -1)
@@ -302,7 +309,7 @@ def _parse_points(lines: DataFrame, *keep) -> DataFrame:
     return lines.select(
         *keep,
         F.when(fast, fa).when(sy.isNotNull(), sx).alias("x"),
-        F.when(fast, fb).otherwise(sy).alias("y"),
+        F.coalesce(F.when(fast, fb).otherwise(sy), F.lit(0)).alias("y"),
     ).where(F.col("x").isNotNull())
 
 

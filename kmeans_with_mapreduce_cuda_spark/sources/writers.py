@@ -43,6 +43,11 @@ def write_centroids_text(df: DataFrame, path: str) -> None:
     format_centroids(df).coalesce(1).write.mode("overwrite").text(path)
 
 
+#: the largest parquet dictionary a column chunk of
+#: :func:`write_partitioned_parquet` builds before it falls back to PLAIN
+DICTIONARY_BYTES = 16 * 1024
+
+
 def write_partitioned_parquet(
     df: DataFrame, path: str, partition_cols: list[str]
 ) -> None:
@@ -52,24 +57,27 @@ def write_partitioned_parquet(
     non-matching files.  Partition pruning is asserted in
     tests/test_sources.py.
 
-    Written without parquet dictionaries.  A partitioned write splits
-    each task's rows across every partition value, so each file holds
-    a few thousand rows (1M points by 15 clusters over 4 tasks: 60 files
-    of ~16.7k rows), and no column chunk reaches parquet's first page
-    boundary (20k rows or 1 MB).  The writer then decides at close
-    whether the dictionary pays; on high-cardinality ids, coordinates
-    and distances it does not, and it writes the chunk PLAIN after
-    building the whole dictionary.  On the 1M-point scoring write
-    (kmbench ``score_write``) that hashing was ~45 % of the task CPU,
-    and the output is 21,085,014 bytes either way.  A column with few
-    distinct values does lose its dictionary: the 3-cluster test frame
-    of ``test_partitioned_sink_prunes`` grows 41,011 -> 48,045 bytes.
-    Turning dictionaries off for double columns only would keep about
-    two thirds of the scoring write's dictionary cost, since three of
-    its four columns are bigints."""
+    A column chunk keeps its parquet dictionary only while the
+    dictionary stays within ``DICTIONARY_BYTES``; past that the writer
+    falls back to PLAIN at once.  A partitioned write splits each
+    task's rows across every partition value, so each file holds a few
+    thousand rows (1M points by 15 clusters over 4 tasks: 60 files of
+    ~16.7k rows), and no column chunk reaches parquet's first page
+    boundary (20k rows or 1 MB), where the writer would otherwise test
+    whether the dictionary pays.  With parquet's default 1 MB bound it
+    hashed every value of a high-cardinality chunk (ids, coordinates,
+    distances) and then wrote it PLAIN at close: on the 1M-point scoring
+    write (kmbench ``score_write``) that was ~45 % of the task CPU.  A
+    low-cardinality column (a label, a cluster's quantities) stays far
+    below the bound and keeps its dictionary: the frames of both in-repo
+    callers are byte-identical to the default.  A column chunk with more
+    than 2,048 distinct 8-byte values is written PLAIN even where a
+    dictionary would have paid.  No column type has a certain fallback (a 3-value
+    bigint and a unique bigint id share one type), so the bound is on
+    size, not type."""
     (
         df.write.mode("overwrite")
-        .option("parquet.enable.dictionary", "false")
+        .option("parquet.dictionary.page.size", str(DICTIONARY_BYTES))
         .partitionBy(*partition_cols)
         .parquet(path)
     )

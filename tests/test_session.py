@@ -74,7 +74,8 @@ def test_pinned_confs_restores_on_exception(spark, clean_keys):
 
 def test_default_warehouse_is_per_process():
     """Two processes get different default warehouse directories, each
-    under the temp dir, so their saveAsTable files never collide."""
+    under the temp dir and removed when the process exits, so their
+    saveAsTable files never collide."""
     code = (
         "from kmeans_with_mapreduce_cuda_spark.session import _default_warehouse; "
         "print(_default_warehouse())"
@@ -90,3 +91,4 @@ def test_default_warehouse_is_per_process():
     assert paths[0] != paths[1], paths
     for p in paths:
         assert os.path.dirname(p) == tempfile.gettempdir(), p
+        assert not os.path.exists(p), p  # removed at exit

@@ -136,37 +136,49 @@ def test_partitioned_sink_prunes(spark, tmp_path):
     assert pf and "cluster_id" in pf[0], plan
 
 
-def test_partitioned_sink_writes_no_dictionary(spark, tmp_path):
-    """write_partitioned_parquet builds no parquet dictionary: every
-    column chunk is PLAIN, even a 3-value column that a dictionary
-    would otherwise encode."""
+def test_partitioned_sink_bounds_dictionaries(spark, tmp_path):
+    """write_partitioned_parquet keeps a column chunk's parquet
+    dictionary only while it holds at most DICTIONARY_BYTES: 2,048
+    distinct bigints keep theirs, 3,000 (a dictionary parquet's default
+    bound would keep) and a unique id or double are written PLAIN, and
+    a 3-value column keeps its dictionary."""
     import pyarrow.parquet as pq
 
     from kmeans_with_mapreduce_cuda_spark.sources.writers import (
+        DICTIONARY_BYTES,
         write_partitioned_parquet,
     )
 
-    df = spark.range(3000).select(
+    assert DICTIONARY_BYTES == 2048 * 8
+    # one task and 10,000 consecutive ids per partition value: one file
+    # per partition, one row group, below parquet's first page boundary
+    df = spark.range(20_000, numPartitions=1).select(
         "id",
-        (F.col("id") % 3).alias("v"),
+        (F.col("id") % 3).alias("few"),
+        (F.col("id") % 2048).alias("at_bound"),
+        (F.col("id") % 3000).alias("past_bound"),
         (F.col("id") * 0.5).alias("d"),
-        (F.col("id") % 2).alias("cluster_id"),
+        F.floor(F.col("id") / 10_000).alias("cluster_id"),
     )
     out = str(tmp_path / "by_cluster")
     write_partitioned_parquet(df, out, ["cluster_id"])
 
     files = glob.glob(os.path.join(out, "cluster_id=*", "*.parquet"))
-    assert files
-    chunks = [
-        md.row_group(g).column(c)
-        for md in (pq.ParquetFile(f).metadata for f in files)
-        for g in range(md.num_row_groups)
-        for c in range(md.num_columns)
-    ]
-    assert {c.path_in_schema for c in chunks} == {"id", "v", "d"}
-    for c in chunks:
-        assert not c.has_dictionary_page, (c.path_in_schema, c.encodings)
-        assert not any("DICTIONARY" in e for e in c.encodings), c.encodings
+    assert len(files) == 2, files
+    has_dict = {}
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        assert md.num_row_groups == 1 and md.num_rows == 10_000
+        for c in range(md.num_columns):
+            col = md.row_group(0).column(c)
+            has_dict.setdefault(col.path_in_schema, set()).add(col.has_dictionary_page)
+    assert has_dict == {
+        "id": {False},
+        "few": {True},
+        "at_bound": {True},
+        "past_bound": {False},
+        "d": {False},
+    }
 
 
 def test_pandas_udfs_match_expressions(spark):
@@ -371,6 +383,17 @@ def test_batch_and_stream_readers_parse_alike(spark, tmp_path):
         _MIXED_POINTS.index(ln)
         for ln in ("\t5", "7 8", "  9", "\t 11", "13 ", "17 ")
     }
+
+
+def test_read_points_text_coordinates_are_not_nullable(spark, tmp_path):
+    """The executed plan, whose output schema a cache of the points
+    stores, gives non-nullable ``x`` and ``y``, as a filter on each of
+    them did."""
+    p = tmp_path / "mixed.txt"
+    p.write_text(_MIXED_POINTS)
+    out = read_points_text(spark, str(p))._jdf.queryExecution().executedPlan().output()
+    nullable = {out.apply(i).name(): out.apply(i).nullable() for i in range(out.size())}
+    assert nullable == {"id": False, "x": False, "y": False}
 
 
 def test_load_table_memo_invalidates_on_mtime(spark, tmp_path):
