@@ -5,8 +5,6 @@ from .distance import (  # noqa: F401
 )
 from .hashing import md5_long, stable_sample_key  # noqa: F401
 from .text import (  # noqa: F401
-    punct_ratio,
-    stopword_ratio,
     token_count,
     tokens,
     word_shingles,
@@ -14,5 +12,4 @@ from .text import (  # noqa: F401
 from .layout import (  # noqa: F401
     write_zorder_clustered,
     zorder_key,
-    zorder_key_2d,
 )

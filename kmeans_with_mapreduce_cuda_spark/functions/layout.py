@@ -1,15 +1,15 @@
 """Data-layout keys: Z-order (Morton) interleaving as a pure Column
 expression.
 
-Range-clustering one column (sources.writers.write_range_clustered)
-gives perfect pruning on THAT column and none on any other.  A Z-order
-key interleaves the bits of n normalized columns round-robin, so
-sorting by it tiles the n-dimensional space into locality cells: every
-output file then has a NARROW min/max range on ALL clustered columns,
-and parquet footer statistics prune scans filtered on any of them.
-This is how
-lakehouse engines implement multi-dimensional clustering; here it is
-~20 JVM bit-ops per row at WRITE time only, no UDFs.
+Range-clustering one column (``repartitionByRange`` +
+``sortWithinPartitions``) gives perfect pruning on THAT column and none
+on any other.  A Z-order key interleaves the bits of n normalized
+columns round-robin, so sorting by it tiles the n-dimensional space
+into locality cells: every output file then has a NARROW min/max range
+on ALL clustered columns, and parquet footer statistics prune scans
+filtered on any of them.  This is how lakehouse engines implement
+multi-dimensional clustering; here it is ~20 JVM bit-ops per row at
+WRITE time only, no UDFs.
 """
 
 from __future__ import annotations
@@ -69,18 +69,6 @@ def zorder_key(
                 F.shiftleft(col.bitwiseAND(F.lit(1 << i)), i * (n - 1) + j)
             )
     return key
-
-
-def zorder_key_2d(
-    col_a: Column | str,
-    col_b: Column | str,
-    a_range: tuple[float, float],
-    b_range: tuple[float, float],
-    bits: int = 8,
-) -> Column:
-    """Morton key for two columns (a's bit i lands at 2i, b's at 2i+1):
-    the n=2 case of :func:`zorder_key`."""
-    return zorder_key([col_a, col_b], [a_range, b_range], bits)
 
 
 def write_zorder_clustered(

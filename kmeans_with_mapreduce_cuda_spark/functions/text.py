@@ -56,21 +56,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return F.regexp_extract_all(norm, F.lit(pat), 1)
 
 
-def punct_ratio(text: Column | str) -> Column:
-    """Fraction of characters that are punctuation."""
-    t = _c(text)
-    stripped = F.regexp_replace(t, r"[^\w\s]", "")
-    return (F.length(t) - F.length(stripped)) / F.greatest(F.length(t), F.lit(1))
-
-
-def stopword_ratio(text: Column | str) -> Column:
-    """Fraction of tokens that are English stopwords."""
-    toks = tokens(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
 #: Seeded integer weight table (milli-units) for the 16 hash buckets of
 #: the hashed linear quality classifier -- a stand-in for trained
 #: fastText-style weights; integer so the per-doc sum is exact and

@@ -96,7 +96,7 @@ class GapSessionsUDTF:
     running state across rows instead of per-row arguments.
 
     Counts 30-min-gap sessions per user in one ordered pass (the gap
-    rule of streaming.sessionize_stream / rel_sessionize_batch): a row
+    rule of rel_sessionize_batch): a row
     strictly more than 30 minutes after its predecessor starts a new
     session.  State is O(1) per partition -- no row buffering -- so one
     user's history never accumulates in worker memory.  Key changes are

@@ -299,10 +299,6 @@ def minhash_cross_pairs(
 #: md5 salt of the SimHash token hashes, shared by the Spark and DuckDB
 #: recipes below.
 SIMHASH_SALT = "sh:"
-#: SimHash LSH geometry: 4 bands of 4 bits, pairs within Hamming 3 --
-#: below the band count, so the banding loses no such pair
-SIMHASH_BANDS = 4
-SIMHASH_MAX_HAMMING = 3
 
 
 def token_hashes(text_col: str = "text") -> Column:
@@ -355,68 +351,6 @@ def token_hashes_sql(text_expr: str = "text") -> str:
     toks = f"regexp_split_to_array(trim(lower({text_expr})), '\\s+')"
     h = f"CAST(('0x' || substr(md5('{SIMHASH_SALT}' || t), 1, 8)) AS BIGINT)"
     return f"[ {h} FOR t IN {toks} ]"
-
-
-def simhash_near_pairs(
-    df: DataFrame, max_bucket: int | None = MAX_BAND_BUCKET
-) -> LshPairs:
-    """SimHash LSH: near-dup candidate pairs by banding the 16-bit
-    SimHash -- the scale path the plain per-doc ``text_simhash`` query
-    points at.
-
-    The 16 bits split into ``SIMHASH_BANDS`` contiguous slices
-    (16/SIMHASH_BANDS bits each); docs agreeing on ANY slice become
-    candidates, then the exact Hamming distance over the full 16 bits
-    (``bit_count(a XOR b)``) filters to ``<= SIMHASH_MAX_HAMMING``.
-    Pigeonhole guarantee: a pair differing in fewer than
-    ``SIMHASH_BANDS`` bits cannot differ in every band, so recall is
-    EXACT (not probabilistic) for ``SIMHASH_MAX_HAMMING <=
-    SIMHASH_BANDS - 1`` -- 3/4 is lossless while joining on 4-bit keys
-    instead of comparing all pairs.
-
-    Same scale shape as :func:`minhash_lsh_pairs`: banded equi-self-join
-    (never all-pairs), and the identical hot-bucket cap -- a 16-bit
-    simhash has only 2^4 values per 4-bit band, so on a large corpus
-    every band key is hot and the cap is what bounds the quadratic
-    within-bucket blowup (raise it, or widen the simhash, at corpus
-    scale).  Caller must unpersist ``deps`` after materializing.
-    """
-    width = 16 // SIMHASH_BANDS
-    mask = (1 << width) - 1
-    sh = df.select(
-        F.col("doc_id").alias("id"),
-        simhash16_from_hashes(token_hashes("text")).alias("sh"),
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright("sh", b * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("v"),
-            )
-            for b in range(SIMHASH_BANDS)
-        ]
-    )
-    banded = sh.select("id", "sh", F.explode(band_structs).alias("bk")).persist()
-    # eager cache fill before the multi-branch consumer (see
-    # minhash_lsh_pairs; r10)
-    banded.count()
-
-    joinable, capped = cap_hot_keys(banded, "bk", max_bucket, "n_docs")
-    a, b = joinable.alias("a"), joinable.alias("b")
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    pairs = (
-        a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
-        .where(ham <= SIMHASH_MAX_HAMMING)
-        .select(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    return LshPairs(pairs=pairs, deps=[banded], capped_buckets=capped)
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:

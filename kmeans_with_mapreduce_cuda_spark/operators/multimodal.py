@@ -228,67 +228,3 @@ def sample_frames(df: DataFrame) -> DataFrame:
             )
 
     return df.mapInPandas(batches, schema=FRAME_SCHEMA)
-
-
-def decode_and_featurize_arrow(df: DataFrame) -> DataFrame:
-    """Arrow-native twin of :func:`decode_and_featurize` via
-    ``mapInArrow``: consumes/produces ``pyarrow.RecordBatch`` directly,
-    skipping the Arrow<->pandas conversion entirely.
-
-    This is the right surface when the hot column is large ``binary``
-    payloads: the pandas bridge materializes every blob as a Python
-    ``bytes`` object in an object-dtype Series (one copy + one PyObject
-    per blob per batch), while RecordBatches keep the payload buffer as
-    a single contiguous Arrow allocation.  Output is bit-identical to
-    the pandas path (asserted in tests/test_multimodal.py); the same
-    deterministic stub codec applies.
-    """
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in it:
-            # Zero-copy access: per-row Buffer slices view the batch's
-            # contiguous binary buffer directly (np.frombuffer reads the
-            # buffer protocol) -- batch.to_pydict() here would copy every
-            # blob into an individual Python bytes object, exactly the
-            # per-blob cost this Arrow path exists to avoid
-            # (code-review r10).
-            payload_arr = batch.column(batch.schema.get_field_index("payload"))
-            n, feats = [], []
-            for i in range(batch.num_rows):
-                s = payload_arr[i]
-                buf = s.as_buffer() if s.is_valid else None
-                ln = len(buf) if buf is not None else 0
-                n.append(ln)
-                head = buf.slice(0, min(ln, 4096)) if ln else b""
-                arr = np.frombuffer(head, dtype=np.uint8).astype(np.int64)
-                idx = (arr + np.arange(arr.size)) % FEATURE_DIM
-                counts = np.bincount(idx, minlength=FEATURE_DIM).astype(
-                    np.float32
-                )
-                total = counts.sum() or 1.0
-                feats.append((counts / total).tolist())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(batch.schema.get_field_index("doc_id")).cast(
-                        pa.int64()
-                    ),
-                    pa.array([v % 640 + 1 for v in n], pa.int32()),
-                    pa.array([v % 480 + 1 for v in n], pa.int32()),
-                    pa.array([3] * len(n), pa.int32()),
-                    pa.array(feats, pa.list_(pa.float32())),
-                    pa.array(["stub"] * len(n), pa.string()),
-                ],
-                names=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "features",
-                    "decode_status",
-                ],
-            )
-
-    return df.mapInArrow(batches, schema=DECODE_SCHEMA)

@@ -108,26 +108,6 @@ def lsh_bucket_sql(
     return "CAST(" + " + ".join(terms) + " AS INTEGER)"
 
 
-def n_planes_for(n_vectors: int) -> int:
-    """Plane count sized to the corpus: 2^planes buckets put an EXPECTED
-    256 vectors in each, so within-bucket join output stays
-    ~n_vectors * target_bucket regardless of corpus size.  A FIXED plane
-    count is quadratic ruin at scale (4 planes = 16 buckets over 20M
-    vectors -> ~1.25e6 per bucket -> ~1.25e13 candidate pairs); planes
-    must grow with log2(N).
-
-    Capped at 31: the bucket id is an INT32 with 2^j weight terms, so
-    32+ planes would wrap (lsh_bucket_sql asserts the same bound).  The
-    cap binds only above ~5.5e11 vectors x 256/bucket; past it, buckets
-    grow instead of planes.
-    """
-    import math
-
-    if n_vectors <= 256:
-        return 1
-    return min(31, max(1, math.ceil(math.log2(n_vectors / 256))))
-
-
 #: the least cosine of a pair lsh_bucket_pairs keeps; sim_lsh_pairs'
 #: oracle reads it too
 LSH_COS_THRESHOLD = 0.3
@@ -151,10 +131,11 @@ def lsh_bucket_pairs(
     ``n_planes`` is REQUIRED (no default) because the right value is a
     function of corpus size, not a constant: expected bucket occupancy
     is N / 2^planes, so candidate-pair volume is ~N^2 / 2^planes --
-    a fixed plane count silently goes quadratic as N grows.  Size it
-    with ``n_planes_for(N)`` (keeps expected occupancy ~256); the gate
-    query pins 4 only because its 2k-vector fixture needs populated
-    buckets for an oracle-checkable result.
+    a fixed plane count silently goes quadratic as N grows.  Size it so
+    each bucket expects ~256 vectors, 2^planes ~= N / 256, capped at 31
+    (the INT32 bucket id, see :func:`lsh_bucket_sql`); the gate query
+    pins 4 only because its 2k-vector fixture needs populated buckets
+    for an oracle-checkable result.
 
     Skew guard (same rationale as ``dedup.minhash_lsh_pairs``): a
     degenerate sign bucket -- e.g. a corpus dominated by one embedding

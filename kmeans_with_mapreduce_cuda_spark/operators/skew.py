@@ -1,76 +1,19 @@
-"""Skew-resilient aggregation: salted two-stage groupBy.
+"""Skew-resilient operators: salted two-stage top-k, a 2-D skyline and a
+hot-key cap.
 
-AQE's skew-join handling covers joins; a groupBy whose key distribution
-is pathological (one key = 50% of 100 TB) still funnels one reducer.
-Salting splits each key into 16 sub-keys, partially aggregates,
-then combines -- two small shuffles instead of one hot one.  This is the
+AQE's skew-join handling covers joins; a per-key operator whose key
+distribution is pathological (one key = 50% of 100 TB) still funnels
+one task.  Salting splits each key into sub-keys, works on each, then
+combines -- two small shuffles instead of one hot one.  This is the
 Spark-native generalization of the reference's per-cluster grid sizing
 ("Loading Balancing", kmeans_mapreduce_core.cu:195-207 + README.md:55-58):
-give heavy keys proportionally more reducers.
-
-Only algebraic aggregates (sum/count/min/max, avg via sum+count) can be
-re-combined; the API takes them by name to keep misuse impossible.
+give heavy keys proportionally more tasks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: (partial expr builder, final combine builder) per supported aggregate.
-_ALGEBRAIC = {
-    "sum": (lambda c: F.sum(c), lambda p: F.sum(p)),
-    "count": (lambda c: F.count(c), lambda p: F.sum(p)),
-    "min": (lambda c: F.min(c), lambda p: F.min(p)),
-    "max": (lambda c: F.max(c), lambda p: F.max(p)),
-}
-
-
-def salted_groupby(
-    df: DataFrame,
-    key: str | list[str],
-    aggs: dict[str, tuple[str, str]],
-) -> DataFrame:
-    """``aggs``: out_name -> (fn, col) with fn in sum/count/min/max/avg.
-
-    Salt is ``floor(rand(42) * 16)``, NOT a hash of the row
-    (code-review r10): a row-hash salt is constant across identical
-    duplicate rows, so a hot key made of repeated identical rows -- the
-    common pathological shape -- would still funnel ONE reducer while
-    paying two shuffles, and hashing every column fails outright on
-    unhashable types (MapType).  rand() spreads every copy uniformly.
-    The FINAL result is salt-invariant for algebraic aggregates (the
-    partials merge exactly whatever the split), so the no-RNG-in-
-    checked-queries policy is honored in effect: rand() never reaches
-    the output, only the intermediate grouping.
-
-    avg decomposes into sum+count and recombines exactly.  Partial
-    columns are positionally named (``__p{i}``...) so no pair of output
-    names can collide -- the previous out-name-derived scheme let
-    ``{'x': ('avg', v), 'x_sum': ('sum', w)}`` silently overwrite one
-    partial and return a wrong average (code-review r10).
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    partial_exprs = []
-    combine_exprs = []
-    for i, (out, (fn, col)) in enumerate(aggs.items()):
-        if fn == "avg":
-            partial_exprs.append(F.sum(col).alias(f"__p{i}_s"))
-            partial_exprs.append(F.count(col).alias(f"__p{i}_c"))
-            combine_exprs.append(
-                (F.sum(f"__p{i}_s") / F.sum(f"__p{i}_c")).alias(out)
-            )
-        elif fn in _ALGEBRAIC:
-            partial_exprs.append(_ALGEBRAIC[fn][0](F.col(col)).alias(f"__p{i}"))
-            combine_exprs.append(_ALGEBRAIC[fn][1](F.col(f"__p{i}")).alias(out))
-        else:
-            raise ValueError(f"non-algebraic aggregate {fn!r} cannot be salted")
-
-    salted = df.withColumn(
-        "__kmrc_salt", F.floor(F.rand(42) * 16).cast("int")
-    )
-    partial = salted.groupBy(*keys, "__kmrc_salt").agg(*partial_exprs)
-    return partial.groupBy(*keys).agg(*combine_exprs)
 
 
 def salted_topk(

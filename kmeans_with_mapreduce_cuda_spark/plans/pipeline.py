@@ -524,7 +524,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw_hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
     return d.select(
         "doc_id",
-        (F.lit(1.0) - ln_clean / ln).alias("punct_ratio"),
+        (F.lit(1.0) - F.try_divide(ln_clean, ln)).alias("punct_ratio"),
         (
             sw_hits.cast("double") / F.greatest(F.size(toks), F.lit(1))
         ).alias("stopword_ratio"),
@@ -6205,8 +6205,8 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Hamming distance <= 3 over 4 bands leaves at least one band "
     "untouched, so banded recall is EXACT -- which the oracle proves "
     "by deriving the pairs with a band-free quadratic join on the "
-    "key-bounded slice.  This is simhash_near_pairs' machinery "
-    "(text) applied to the multimodal payload column: only 8-byte "
+    "key-bounded slice.  This is minhash_lsh_pairs' banding "
+    "applied to the multimodal payload column: only 8-byte "
     "hashes shuffle, never blobs; xor/bit_count verified "
     "bit-identical across engines.  Fixture payloads are exact "
     "replicas, so observed pairs sit at hamming 0 -- the banding, "

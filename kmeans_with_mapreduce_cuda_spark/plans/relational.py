@@ -856,7 +856,7 @@ def rel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Batch sessionization (SQL twin of streaming.sessionize_stream) -------------
+# --- Batch sessionization ---------------------------------------------------
 
 @query(
     "rel_sessionize_batch",
@@ -885,8 +885,8 @@ def rel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, sid
     """,
     doc="Sessionization as a batch query: 30-min-gap breaks via lag, "
-    "session ids via running sum, one group-by -- the SQL-checkable twin "
-    "of streaming.sessionize_stream (same gap rule, same sessions).",
+    "session ids via running sum, one group-by -- the same gap rule as "
+    "the gap_sessions UDTF.",
 )
 def rel_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")  # naive-ts parity
@@ -4310,13 +4310,6 @@ def rel_dpp_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dpp_prune_plan(spark: SparkSession, sf_dir: str) -> str:
-    """Executed-plan text of the DPP join (test_plans.py asserts the
-    DynamicPruningExpression / SubqueryAdaptiveBroadcast markers)."""
-    df = rel_dpp_prune_join(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @query(
     "rel_dpp_semijoin_filter",
     oracle="""
@@ -4367,14 +4360,6 @@ def rel_dpp_semijoin_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY c_mktsegment
         """
     )
-
-
-def dpp_semijoin_plan(spark: SparkSession, sf_dir: str) -> str:
-    """Executed-plan text of the semi-join DPP filter (test_plans.py
-    asserts LeftSemi + dynamicpruning markers)."""
-    df = rel_dpp_semijoin_filter(spark, sf_dir)
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 # --- Calendar-interval arithmetic: month clamping & friends -----------------

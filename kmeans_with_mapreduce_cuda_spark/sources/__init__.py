@@ -11,6 +11,5 @@ from .readers import (  # noqa: F401
 from .writers import (  # noqa: F401
     format_centroids,
     write_bucketed_table,
-    write_centroids_text,
     write_partitioned_parquet,
 )

@@ -38,11 +38,6 @@ def format_centroids(
     )
 
 
-def write_centroids_text(df: DataFrame, path: str) -> None:
-    """Write k (x, y) centroid lines as text (k is tiny -> single partition)."""
-    format_centroids(df).coalesce(1).write.mode("overwrite").text(path)
-
-
 #: the largest parquet dictionary a column chunk of
 #: :func:`write_partitioned_parquet` builds before it falls back to PLAIN
 DICTIONARY_BYTES = 16 * 1024
@@ -102,35 +97,6 @@ def write_bucketed_table(
     # set of bucket files and the bucket-side sort degrades to per-file
     w = df.repartition(num_buckets, F.col(key)).write.mode("overwrite")
     w.bucketBy(num_buckets, key).sortBy(key).format("parquet").saveAsTable(table)
-
-
-def write_range_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    num_files: int = 8,
-) -> None:
-    """Range-cluster rows on ``cluster_cols`` before writing parquet:
-    ``repartitionByRange`` gives each output file a disjoint key range
-    and ``sortWithinPartitions`` orders rows inside it, so every file's
-    (and row group's) min/max statistics are TIGHT for those columns.
-
-    Why this matters at 100 TB: parquet readers skip whole row groups
-    whose [min, max] cannot satisfy a pushed predicate.  Unclustered
-    data has every file spanning the full key range -- statistics prune
-    nothing and a selective filter still reads everything.  Clustered,
-    a point/range predicate touches only the files whose range overlaps
-    it (tests/test_layout.py asserts the actual footer statistics and
-    the pruned scan).  This is the single-column analog of Z-ordering;
-    for multi-column cluster keys, list the highest-selectivity column
-    first (range partitioning is lexicographic).
-    """
-    (
-        df.repartitionByRange(num_files, *cluster_cols)
-        .sortWithinPartitions(*cluster_cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def overwrite_partitions_dynamic(

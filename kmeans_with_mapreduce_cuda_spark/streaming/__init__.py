@@ -1,5 +1,4 @@
 from .streams import (  # noqa: F401
-    StreamingKMeans,
     dedup_stream,
     enriched_counts_stream,
     hourly_counts_stream,
@@ -7,9 +6,7 @@ from .streams import (  # noqa: F401
     hourly_quantile_stream,
     read_events_stream,
     rocksdb_state_confs,
-    running_user_totals,
     session_window_stream,
-    sessionize_stream,
     sliding_counts_stream,
     view_purchase_attribution_stream,
 )

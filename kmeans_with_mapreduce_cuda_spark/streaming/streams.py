@@ -6,9 +6,10 @@ kept symmetrical with the batch queries so results are cross-checkable:
 
 - ``hourly_counts_stream``  : watermarked event-time window agg -- the
   streaming twin of the batch ``rel_date_funcs`` query.
-- ``sessionize_stream``     : custom stateful operator via
-  ``applyInPandasWithState`` -- per-user session windows with a 30 min
-  inactivity gap (the kind of operator Spark has no built-in for).
+- ``session_window_stream`` : per-user session windows with a 30 min
+  inactivity gap, the streaming twin of ``rel_session_window``.
+- ``upsert_latest_foreach_batch`` : a foreachBatch sink keeping the
+  latest row per user in parquet state.
 
 Tests drive these with ``trigger(availableNow=True)`` + memory sink and
 assert equality with the batch equivalents.
@@ -16,18 +17,8 @@ assert equality with the batch equivalents.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 #: event-time watermark of every windowed/deduplicating events stream
 #: here (the stream-stream join keeps views longer, see
@@ -169,133 +160,6 @@ def view_purchase_attribution_stream(events: DataFrame) -> DataFrame:
     )
 
 
-class StreamingKMeans:
-    """Incremental (mini-batch) K-Means over a point stream via
-    foreachBatch: each micro-batch is assigned with the CURRENT centroids
-    (the same literal-argmin projection as batch), its per-cluster
-    means/counts are merged into the running state with count weighting:
-
-        c_new = (n_old * c_old + n_batch * mean_batch) / (n_old + n_batch)
-
-    Driver state is k (centroid, count) pairs -- the identical tiny
-    boundary as the batch loop; executors never hold state, so the
-    operator scales with the batch, not the history: the centroids are
-    the running means over all data so far.
-    """
-
-    def __init__(self, init: list[tuple[float, float]]) -> None:
-        self.centroids = [tuple(map(float, c)) for c in init]
-        self.counts = [0.0] * len(init)
-
-    def update_with_batch(self, batch_df: DataFrame) -> None:
-        from ..operators.kmeans import assign_2d, update_2d
-
-        rows = update_2d(assign_2d(batch_df, self.centroids)).collect()
-        for r in rows:
-            i = int(r["cluster_id"])
-            bx, by, bn = float(r["cx"]), float(r["cy"]), float(r["n"])
-            n_old = self.counts[i]
-            tot = n_old + bn
-            cx, cy = self.centroids[i]
-            self.centroids[i] = (
-                (n_old * cx + bn * bx) / tot,
-                (n_old * cy + bn * by) / tot,
-            )
-            self.counts[i] = tot
-
-    def foreach_batch(self):
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            self.update_with_batch(batch_df)
-
-        return fn
-
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-
-GAP_US = 30 * 60 * 1_000_000  # 30 min inactivity closes a session
-
-
-def _sessionize_group(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Stateful flatMap: accumulate per-user event times, emit a session
-    row whenever a gap > 30 min splits them.  State = (start, last, n) of
-    the open session."""
-    (user_id,) = key
-    if state.exists:
-        start_us, last_us, n = state.get
-    else:
-        start_us = last_us = -1
-        n = 0
-
-    # Arrow hands a group over as MULTIPLE pandas chunks (default
-    # maxRecordsPerBatch=10k) with no cross-chunk time ordering --
-    # sorting each chunk independently would let a chunk-2 timestamp
-    # earlier than chunk-1's last event regress last_us below start_us
-    # and split a real session (code-review r10).  Concatenate the whole
-    # group, then sort ONCE.
-    chunks = [pd.to_datetime(pdf["ts"]).astype("int64") // 1000 for pdf in pdfs]
-    ts_us = pd.concat(chunks).sort_values() if chunks else pd.Series([], dtype="int64")
-    out = []
-    for t in ts_us:
-        t = int(t)
-        if start_us < 0:
-            start_us, last_us, n = t, t, 1
-        elif t - last_us > GAP_US:
-            out.append((user_id, start_us, last_us, n))
-            start_us, last_us, n = t, t, 1
-        else:
-            # max(): a late cross-micro-batch event (t < last_us, which
-            # the within-batch sort can't order) joins the open session
-            # without regressing its end.
-            last_us = max(last_us, t)
-            n += 1
-    state.update((start_us, last_us, n))
-    if out:
-        df = pd.DataFrame(
-            out, columns=["user_id", "session_start", "session_end", "n_events"]
-        )
-        df["session_start"] = pd.to_datetime(df["session_start"], unit="us")
-        df["session_end"] = pd.to_datetime(df["session_end"], unit="us")
-        yield df
-
-
-def sessionize_stream(events: DataFrame) -> DataFrame:
-    """Custom stateful operator: per-user 30-min-gap sessionization via
-    applyInPandasWithState.  Emits CLOSED sessions; the open tail stays
-    in state (bounded: one tuple per user)."""
-    return (
-        events.select("user_id", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_group,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def dedup_stream(
     events: DataFrame,
     keys: list[str] | None = None,
@@ -313,59 +177,6 @@ def dedup_stream(
 
 
 # --- transformWithStateInPandas: arbitrary typed state ------------------------
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Continuously-maintained per-user totals over the event stream
-    (the profile/counter pattern of a training-data ingest pipeline).
-
-    Uses ``transformWithStateInPandas`` with a ValueState cell per user.
-    State is per-key and store-backed (RocksDB provider required --
-    set ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
-    provider before starting), so cardinality is bounded by distinct
-    users, not events: the formulation that survives an unbounded
-    stream.
-
-    Runtime deps: the worker protocol needs ``google.protobuf``
-    (ships with real Spark clusters; absent in minimal containers --
-    the test skips, ``sessionize_stream`` covers stateful streaming
-    there).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, sum_value DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, s = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            if self._totals.exists():
-                prev_n, prev_s = self._totals.get()
-                n += int(prev_n)
-                s += float(prev_s)
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n": [n], "sum_value": [round(s, 4)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=Proc(),
-        outputStructType="user_id BIGINT, n BIGINT, sum_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )
-
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -416,12 +227,8 @@ def session_window_stream(events: DataFrame) -> DataFrame:
     """Native streaming session windows: a 30-minute
     ``session_window`` merges a user's events into dynamic gap-closed
     windows with state the engine evicts once the watermark passes a
-    session's end -- the built-in path for the operator
-    ``sessionize_stream`` implements by hand with
-    applyInPandasWithState.  Prefer THIS at scale (JVM state,
-    no Python workers, watermark-driven eviction for free); the custom
-    one exists for semantics the built-in can't express (e.g.
-    data-dependent gaps).  tests/test_streaming.py asserts it matches
+    session's end (JVM state, no Python workers, watermark-driven
+    eviction for free).  tests/test_streaming.py asserts it matches
     the batch rel_session_window gap-merge exactly.
     """
     return (
@@ -467,52 +274,6 @@ def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
     if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
         return None
     return spark.read.parquet(path)
-
-
-def ingest_dedup_foreach_batch(
-    spark: SparkSession,
-    index_path: str,
-    out_path: str,
-):
-    """foreachBatch sink implementing streaming corpus ingestion with
-    exact dedup against everything ingested so far -- the streaming
-    twin of the batch ``dedup_incremental`` gate query.
-
-    State is a parquet DIGEST INDEX (one md5 per ingested ``text``),
-    not the documents: per batch, (1) dedup the batch internally (min
-    ``doc_id`` per hash), (2) anti-join its digests against the index, (3)
-    append survivors to ``out_path`` and their digests to
-    ``index_path``.  Only 16-byte digests persist as state, so the
-    index stays a tiny fraction of the corpus; at scale it is bucketed
-    by hash so the per-batch anti-join is scan-in-place on the index
-    side.  foreachBatch gives exactly-once appends under Spark's
-    checkpointing when the writes are idempotent per batch_id (parquet
-    append here is at-least-once on retry -- production uses a
-    transactional sink; the semantics under test are the dedup ones).
-    """
-    from ..operators.dedup import incremental_dedup_keep_digests
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        idx = _read_state(spark, index_path)
-        if idx is None:
-            idx = spark.createDataFrame([], "h string")
-        from ..operators.dedup import _release_local_checkpoint
-
-        novel = incremental_dedup_keep_digests(idx, batch_df)
-        novel = novel.localCheckpoint(eager=True)  # read idx BEFORE appending
-        try:
-            novel.select("doc_id").write.mode("append").parquet(out_path)
-            novel.select("h").write.mode("append").parquet(index_path)
-        finally:
-            # Explicit release, as in upsert_latest_foreach_batch: the
-            # per-batch checkpoint blocks are NOT freed by scope exit
-            # (see dedup._release_local_checkpoint) and would pile up
-            # across an unbounded stream (code-review r10).
-            _release_local_checkpoint(novel)
-
-    return fn
 
 
 def upsert_latest(state: DataFrame, batch: DataFrame) -> DataFrame:

@@ -134,27 +134,29 @@ def test_simhash_edge_cases(spark):
     assert a == b
 
 
-def test_quality_metrics_edge_cases(spark):
-    """punct_ratio/stopword_ratio never divide by zero and stay in
-    [0, 1] on empty/weird inputs."""
-    from kmeans_with_mapreduce_cuda_spark.functions.text import (
-        punct_ratio,
-        stopword_ratio,
-    )
+def test_quality_metrics_edge_cases(spark, tmp_path):
+    """text_quality_score agrees with its DuckDB oracle on empty and
+    whitespace-only documents: the punctuation ratio of an empty text is
+    NULL in both engines, never a DIVIDE_BY_ZERO under ANSI mode."""
+    import duckdb as ddb
 
-    rows = (
-        _df(spark)
-        .select(
-            "doc_id",
-            punct_ratio("text").alias("pr"),
-            stopword_ratio("text").alias("sr"),
-        )
-        .collect()
+    from kmeans_with_mapreduce_cuda_spark.plans import REGISTRY
+
+    df = spark.createDataFrame(
+        [(i, t, "en", "web", len(t)) for i, t in CASES],
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
     )
-    for r in rows:
-        if r["pr"] is not None:
-            assert 0.0 <= r["pr"] <= 1.0, r
-        assert r["sr"] is not None and 0.0 <= r["sr"] <= 1.0, r
+    d = str(tmp_path / "adv")
+    df.coalesce(1).write.parquet(d + "/documents.parquet")
+    q = REGISTRY["text_quality_score"]
+    got = sorted(tuple(r) for r in q.fn(spark, d).collect())
+    con = ddb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet/*.parquet'"
+    )
+    exp = sorted(tuple(r) for r in con.execute(q.oracle).fetchall())
+    assert len(got) == len(CASES)
+    assert got == exp, (got, exp)
 
 
 def test_ngram_lang_id_on_real_sentences(spark):

@@ -137,22 +137,6 @@ def test_query_on_empty_tables(spark, empty_sf_dir, name):
     assert df.schema == REGISTRY[name].fn(spark, SF_DIR).schema
 
 
-def test_simhash_near_pairs_empty_input(spark):
-    from kmeans_with_mapreduce_cuda_spark.operators.dedup import (
-        simhash_near_pairs,
-    )
-
-    d = spark.createDataFrame([], "doc_id bigint, text string")
-    res = simhash_near_pairs(d)
-    try:
-        assert res.pairs.count() == 0
-        assert res.pairs.columns == ["doc_a", "doc_b", "hamming"]
-        assert res.capped_buckets.count() == 0
-    finally:
-        for dep in res.deps:
-            dep.unpersist()
-
-
 def test_int8_quantization_empty_and_zero_vectors(spark):
     from kmeans_with_mapreduce_cuda_spark.operators.similarity import (
         quantize_embeddings_int8,
@@ -236,17 +220,12 @@ def test_lsh_bucket_pairs_empty_input_raises_readably(spark):
 def test_lsh_bucket_sql_rejects_int32_overflow_plane_counts(spark):
     """The bucket id is CAST AS INTEGER with 2^j weights: n_planes >= 32
     would silently wrap in Spark and error in DuckDB.  The operator must
-    refuse loudly, and n_planes_for must never produce such a count
-    (code-review r10)."""
+    refuse loudly (code-review r10)."""
     from kmeans_with_mapreduce_cuda_spark.operators.similarity import (
         hyperplanes_pm1,
         lsh_bucket_sql,
-        n_planes_for,
     )
 
     planes = hyperplanes_pm1(dim=4, n_planes=32)
     with pytest.raises(AssertionError, match="31"):
         lsh_bucket_sql("emb", planes, one_based=False)
-    # 1.2e12 vectors / 256 per bucket needs ceil(log2(...)) = 33 planes
-    # unbounded; the cap keeps the int32 bucket id valid.
-    assert n_planes_for(1_200_000_000_000) == 31

@@ -195,47 +195,6 @@ def test_lloyd_zero_iterations_returns_init(points):
     assert lloyd_2d(points, INIT4, max_iter=0) == [tuple(c) for c in INIT4]
 
 
-def test_salted_groupby_equals_plain(spark):
-    """Skew-salted two-stage aggregation must reproduce the plain groupBy
-    exactly for algebraic aggregates (sum/count/min/max/avg)."""
-    from kmeans_with_mapreduce_cuda_spark.operators.skew import salted_groupby
-
-    li = load_table(spark, SF_DIR, "lineitem")
-    plain = {
-        r["l_returnflag"]: (r["s"], r["c"], r["mn"], r["mx"], r["a"])
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.sum("l_extendedprice").alias("s"),
-            F.count("l_extendedprice").alias("c"),
-            F.min("l_extendedprice").alias("mn"),
-            F.max("l_extendedprice").alias("mx"),
-            F.avg("l_extendedprice").alias("a"),
-        )
-        .collect()
-    }
-    salted = {
-        r["l_returnflag"]: (r["s"], r["c"], r["mn"], r["mx"], r["a"])
-        for r in salted_groupby(
-            li,
-            "l_returnflag",
-            {
-                "s": ("sum", "l_extendedprice"),
-                "c": ("count", "l_extendedprice"),
-                "mn": ("min", "l_extendedprice"),
-                "mx": ("max", "l_extendedprice"),
-                "a": ("avg", "l_extendedprice"),
-            },
-        ).collect()
-    }
-    assert plain.keys() == salted.keys()
-    for k in plain:
-        ps, pc, pmn, pmx, pa = plain[k]
-        ss, sc, smn, smx, sa = salted[k]
-        assert pc == sc and pmn == smn and pmx == smx
-        assert abs(ps - ss) < 1e-6 * abs(ps)
-        assert abs(pa - sa) < 1e-9 * abs(pa)
-
-
 def test_seed_farthest_properties(spark):
     """Farthest-point seeds: deterministic, distinct, inside the bbox,
     and better-spread than the md5-sample seeding (that's the point)."""

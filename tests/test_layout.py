@@ -1,10 +1,9 @@
-"""Data-layout sink: range clustering for parquet min/max pruning.
+"""Data-layout sink: Z-order clustering for parquet min/max pruning.
 
-Asserts the two things that make `write_range_clustered` a real scale
-lever rather than a no-op: (1) the written files carry DISJOINT tight
-key ranges in their parquet footer statistics, and (2) a selective
-filter over the clustered copy prunes most row groups at scan time
-while the unclustered copy reads everything.
+Asserts what makes `write_zorder_clustered` a real scale lever rather
+than a no-op: the written files carry narrow key ranges on every
+interleaved column in their parquet footer statistics, and the Morton
+key under it equals a plain-Python bit interleave.
 """
 
 from __future__ import annotations
@@ -16,9 +15,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from kmeans_with_mapreduce_cuda_spark.sources import load_table
-from kmeans_with_mapreduce_cuda_spark.sources.writers import (
-    write_range_clustered,
-)
 
 from conftest import SF_DIR
 
@@ -41,67 +37,9 @@ def _key_ranges(path: str, col: str) -> list[tuple[int, int]]:
     return out
 
 
-def test_range_clustered_files_have_disjoint_tight_ranges(spark, tmp_path):
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    dest = str(tmp_path / "clustered")
-    write_range_clustered(li, dest, ["l_orderkey"], num_files=4)
-
-    ranges = sorted(_key_ranges(dest, "l_orderkey"))
-    assert len(ranges) == 4
-    # disjoint: each file's max < next file's min (strict ordering means
-    # a point predicate overlaps at most one file)
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo, ranges
-
-    # rows and content survive the rewrite
-    back = spark.read.parquet(dest)
-    assert back.count() == li.count()
-    got = back.agg(F.sum("l_quantity")).collect()[0][0]
-    exp = li.agg(F.sum("l_quantity")).collect()[0][0]
-    assert got == exp
-
-
-def test_range_clustered_scan_prunes_row_groups(spark, tmp_path):
-    """A selective orderkey predicate over the clustered copy must read
-    far fewer rows (parquet row-group skipping via min/max stats) than
-    the table has -- visible in the scan's numOutputRows after the
-    pushed filter."""
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    dest = str(tmp_path / "clustered2")
-    write_range_clustered(li, dest, ["l_orderkey"], num_files=4)
-
-    lo, hi = 10, 50  # a sliver of the orderkey domain
-    clustered = spark.read.parquet(dest).where(
-        F.col("l_orderkey").between(lo, hi)
-    )
-    exp = li.where(F.col("l_orderkey").between(lo, hi)).count()
-    assert clustered.count() == exp  # correctness first
-
-    # the pushed predicate must reach the scan
-    plan = clustered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "l_orderkey" in plan.split(
-        "PushedFilters"
-    )[1][:200], plan
-
-    # pruning: only the one file whose range covers [lo, hi] has any
-    # row group surviving the stats filter
-    surviving = [
-        (flo, fhi)
-        for flo, fhi in _key_ranges(dest, "l_orderkey")
-        if not (fhi < lo or flo > hi)
-    ]
-    assert len(surviving) == 1, surviving
-
-
 def test_zorder_clustering_narrows_both_columns(spark, tmp_path):
     """Z-order tiling must give every file a narrow min/max range on
-    BOTH interleaved columns (multi-dimensional pruning), where plain
-    range clustering on col_a leaves col_b's per-file ranges at ~the
-    full domain."""
+    BOTH interleaved columns (multi-dimensional pruning)."""
     from kmeans_with_mapreduce_cuda_spark.functions.layout import (
         write_zorder_clustered,
     )
@@ -110,9 +48,7 @@ def test_zorder_clustering_narrows_both_columns(spark, tmp_path):
         "l_orderkey", "l_partkey", "l_quantity"
     )
     zdir = str(tmp_path / "zorder")
-    rdir = str(tmp_path / "range")
     write_zorder_clustered(li, zdir, "l_orderkey", "l_partkey", num_files=16)
-    write_range_clustered(li, rdir, ["l_orderkey"], num_files=16)
 
     lo_k, hi_k, lo_p, hi_p = li.agg(
         F.min("l_orderkey"), F.max("l_orderkey"),
@@ -127,9 +63,6 @@ def test_zorder_clustering_narrows_both_columns(spark, tmp_path):
     # z-order: BOTH columns' per-file spans shrink well below the domain
     assert mean_span(zdir, "l_orderkey", k_span) < 0.5
     assert mean_span(zdir, "l_partkey", p_span) < 0.5
-    # range clustering: the clustered column is tight, the other is not
-    assert mean_span(rdir, "l_orderkey", k_span) < 0.15
-    assert mean_span(rdir, "l_partkey", p_span) > 0.8
 
     # content survives
     back = spark.read.parquet(zdir)
@@ -144,9 +77,7 @@ def test_zorder_key_matches_python_twin(spark):
     """The Column-expression Morton key must equal a plain-Python bit
     interleave on a sample -- locks the normalize+interleave arithmetic
     against refactors."""
-    from kmeans_with_mapreduce_cuda_spark.functions.layout import (
-        zorder_key_2d,
-    )
+    from kmeans_with_mapreduce_cuda_spark.functions.layout import zorder_key
 
     bits = 8
     lo_a, hi_a, lo_b, hi_b = 0.0, 1000.0, -50.0, 450.0
@@ -167,7 +98,7 @@ def test_zorder_key_matches_python_twin(spark):
         for b in (-50, -49.2, 0, 199.5, 449, 450, 600)
     ]
     df = spark.createDataFrame(rows, ["a", "b"]).withColumn(
-        "k", zorder_key_2d("a", "b", (lo_a, hi_a), (lo_b, hi_b), bits)
+        "k", zorder_key(["a", "b"], [(lo_a, hi_a), (lo_b, hi_b)], bits)
     )
     for r in df.collect():
         assert r["k"] == py_key(r["a"], r["b"]), (r["a"], r["b"])

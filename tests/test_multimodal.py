@@ -156,35 +156,6 @@ def test_sample_frames_multi_emit(spark):
         assert len(r["frame_payload"]) == FRAME_BYTES
 
 
-def test_map_in_arrow_decode_matches_pandas_path(spark):
-    """The mapInArrow twin (raw RecordBatches, no pandas bridge -- the
-    preferred surface for large binary payloads) must produce exactly
-    the mapInPandas path's rows."""
-    from kmeans_with_mapreduce_cuda_spark.operators.multimodal import (
-        decode_and_featurize,
-        decode_and_featurize_arrow,
-        documents_as_binary,
-    )
-
-    d = documents_as_binary(
-        load_table(spark, SF_DIR, "documents").limit(200)
-    )
-
-    def canon(rows):
-        return sorted(
-            (
-                r["doc_id"], r["width"], r["height"], r["channels"],
-                tuple(r["features"]), r["decode_status"],
-            )
-            for r in rows
-        )
-
-    got = canon(decode_and_featurize_arrow(d).collect())
-    exp = canon(decode_and_featurize(d).collect())
-    assert got == exp
-    assert len(got) == 200
-
-
 def test_binary_file_source_feeds_multimodal_pipeline(spark, tmp_path):
     """How payloads actually arrive at a pipeline: raw files on object
     storage read via the built-in binaryFile source (path, length,

@@ -1240,9 +1240,8 @@ def test_dpp_join_prunes_partitions(spark):
     subquery on the fact's partition column (the scan-eliminator the
     query exists to demonstrate) that reuses the dim broadcast rather
     than running a separate filtering job."""
-    from kmeans_with_mapreduce_cuda_spark.plans.relational import dpp_prune_plan
-
-    plan = dpp_prune_plan(spark, SF_DIR)
+    df = REGISTRY["rel_dpp_prune_join"].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan
     # the pruning subquery must ride the broadcast exchange (zero extra
     # jobs), not the fallback standalone-subquery path
@@ -1255,11 +1254,9 @@ def test_dpp_semijoin_filter_prunes_partitions(spark):
     broadcast join whose dynamic-pruning subquery rides the dim
     broadcast and reaches the fact scan's PartitionFilters -- the
     filter-shaped twin of test_dpp_join_prunes_partitions."""
-    from kmeans_with_mapreduce_cuda_spark.plans.relational import (
-        dpp_semijoin_plan,
-    )
-
-    plan = dpp_semijoin_plan(spark, SF_DIR)
+    df = REGISTRY["rel_dpp_semijoin_filter"].fn(spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan, plan
     assert "dynamicpruning" in plan.lower(), plan
     assert "SubqueryAdaptiveBroadcast" in plan or "SubqueryBroadcast" in plan, plan

@@ -138,73 +138,6 @@ def test_lsh_pairs_bucket_and_threshold_contract(spark):
         assert 0 <= r["bucket"] < 16
 
 
-def test_simhash_near_pairs_exact_recall_vs_bruteforce(spark):
-    """simhash_near_pairs with SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1
-    has a pigeonhole recall GUARANTEE: its pair set must exactly equal
-    the brute-force all-pairs Hamming filter (uncapped; the cap is
-    exercised by the skew tests' pattern)."""
-    from kmeans_with_mapreduce_cuda_spark.operators.dedup import (
-        SIMHASH_BANDS,
-        SIMHASH_MAX_HAMMING,
-        simhash16_from_hashes,
-        simhash_near_pairs,
-        token_hashes,
-    )
-
-    assert SIMHASH_MAX_HAMMING <= SIMHASH_BANDS - 1
-    d = load_table(spark, SF_DIR, "documents").limit(300)
-    res = simhash_near_pairs(d, max_bucket=None)
-    try:
-        got = {
-            (r["doc_a"], r["doc_b"], r["hamming"])
-            for r in res.pairs.collect()
-        }
-    finally:
-        for dep in res.deps:
-            dep.unpersist()
-
-    sh = d.select(
-        F.col("doc_id").alias("id"),
-        simhash16_from_hashes(token_hashes("text")).alias("sh"),
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    ham = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
-    want = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in a.join(b, F.col("a.id") < F.col("b.id"))
-        .where(ham <= SIMHASH_MAX_HAMMING)
-        .select(
-            F.col("a.id").alias("doc_a"),
-            F.col("b.id").alias("doc_b"),
-            ham.cast("int").alias("hamming"),
-        )
-        .collect()
-    }
-    assert got == want
-    assert got  # fixture contains at least one near-dup pair
-
-
-def test_simhash_near_pairs_plan_is_banded_equi_join(spark):
-    """The candidate join must be an equi-join on the band key -- never
-    a cartesian/BNL all-pairs comparison."""
-    from kmeans_with_mapreduce_cuda_spark.operators.dedup import (
-        simhash_near_pairs,
-    )
-
-    d = load_table(spark, SF_DIR, "documents")
-    res = simhash_near_pairs(d)
-    try:
-        plan = res.pairs._sc._jvm.PythonSQLUtils.explainString(
-            res.pairs._jdf.queryExecution(), "formatted"
-        )
-        assert "CartesianProduct" not in plan, plan
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-        assert "LeftAnti" in plan, plan  # the hot-bucket cap is present
-    finally:
-        for dep in res.deps:
-            dep.unpersist()
-
-
 def test_int8_quantization_roundtrip_and_recall(spark):
     """Int8 embedding quantization (the 4x memory/IO lever for vector
     search at corpus scale): codes must stay in [-127, 127] with at
@@ -449,32 +382,6 @@ def test_lsh_bucket_count_grows_with_planes(spark):
         e.unpersist()
     assert counts == sorted(counts), counts
     assert counts[-1] > counts[0], counts  # genuinely refines on real data
-
-
-def test_n_planes_for_scales_logarithmically():
-    """The sizing helper keeps expected bucket occupancy ~target: planes
-    grow with log2(N), monotonically, and candidate volume N*target is
-    linear in N for the recommended setting."""
-    from kmeans_with_mapreduce_cuda_spark.operators.similarity import (
-        n_planes_for,
-    )
-
-    assert n_planes_for(100) == 1  # degenerate corpora never go negative
-    assert n_planes_for(256) == 1
-    assert n_planes_for(512) == 1
-    assert n_planes_for(2**20) == 12  # 2^20 / 2^12 = 256 per bucket
-    assert n_planes_for(2**30) == 22
-    prev = 0
-    for exp in range(8, 40):
-        cur = n_planes_for(2**exp)
-        assert cur >= prev
-        prev = cur
-        # expected occupancy within (target/2, target] once N > target
-        # (at N == target the single-plane floor halves it to exactly 128)
-        occ = 2**exp / 2**cur
-        assert occ <= 256
-        if 2**exp > 256:
-            assert occ > 128
 
 
 def test_within_cell_pairs_cap_returns_capped_cells_as_data(spark):

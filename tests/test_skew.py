@@ -2,8 +2,8 @@
 (its "Loading Balancing", kmeans_mapreduce_core.cu:195-207 /
 README.md:55-58).  Spark's analog is AQE skew-join splitting --
 oversized shuffle partitions split into parallel subtasks at runtime --
-asserted here end-to-end (salted_groupby, the explicit two-stage
-aggregation for hot keys, is equality-tested in test_map_reduce.py).
+asserted here end-to-end, next to salted_topk, the explicit salted
+two-stage top-k for hot keys.
 """
 
 from __future__ import annotations
@@ -190,49 +190,6 @@ def test_cross_corpus_cap_agrees_with_mirrored_oracle_when_firing(spark):
 
     uncapped = lsh_bucket_pairs(e, n_planes=3, seed=7, max_bucket=None).count()
     assert uncapped >= 40 * 39 // 2
-
-
-def test_simhash_near_pairs_bucket_cap_bounds_hot_band(spark):
-    """Same hot-band contract for the SimHash LSH path: 60 identical
-    boilerplate docs share all 4 band values; with max_bucket=20 they
-    contribute no pairs and every capped key reports its cardinality,
-    while a small-bucket near-dup pair still surfaces."""
-    from kmeans_with_mapreduce_cuda_spark.operators.dedup import (
-        simhash_near_pairs,
-    )
-
-    boiler = [(i, "all rights reserved footer text common to every page")
-              for i in range(60)]
-    near = [
-        (1000, "the quick brown fox jumps over the lazy dog tonight"),
-        (1001, "the quick brown fox jumps over the lazy dog today"),
-    ]
-    d = spark.createDataFrame(boiler + near, "doc_id bigint, text string")
-
-    res = simhash_near_pairs(d, max_bucket=20)
-    try:
-        pairs = res.pairs.collect()
-        capped = res.capped_buckets.collect()
-    finally:
-        for dep in res.deps:
-            dep.unpersist()
-
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs}
-    assert not any(a < 60 and b < 60 for a, b in got), sorted(got)[:5]
-    # near-dup pair: one word differs -> tiny Hamming distance, its band
-    # buckets are size <= 2 + however many boilerplate hashes collide --
-    # the docs are a single-token edit so their simhashes are close
-    assert (1000, 1001) in got
-    assert capped and all(r["n_docs"] == 60 for r in capped)
-
-    res2 = simhash_near_pairs(d, max_bucket=None)
-    try:
-        n_uncapped = res2.pairs.count()
-        assert res2.capped_buckets.count() == 0
-    finally:
-        for dep in res2.deps:
-            dep.unpersist()
-    assert n_uncapped >= 1770  # identical docs: hamming 0, all pair
 
 
 def test_salted_topk_equals_plain_window_on_pathological_skew(spark):

@@ -16,7 +16,6 @@ from kmeans_with_mapreduce_cuda_spark.streaming import (
     hourly_counts_stream,
     read_events_stream,
     rocksdb_state_confs,
-    sessionize_stream,
 )
 
 from conftest import SF_DIR
@@ -84,118 +83,6 @@ def test_stream_kmeans_assignment_matches_batch(spark):
     assert (g["cluster_id"].to_numpy() == e["cluster_id"].to_numpy()).all()
 
 
-def test_sessionize_stream_runs_and_is_sane(spark):
-    ev = read_events_stream(spark, SF_DIR)
-    got = _run_to_memory(
-        sessionize_stream(ev), "t_sessions", spark, output_mode="append"
-    ).toPandas()
-    # closed sessions only; the open tail per user stays in state
-    assert len(got) > 0
-    assert (got["session_end"] >= got["session_start"]).all()
-    assert (got["n_events"] >= 1).all()
-
-    # cross-check session count against a batch window computation:
-    # sessions = gaps > 30 min between consecutive events per user.
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, SF_DIR, "events")
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gaps = e.select(
-        "user_id",
-        (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w)) > 30 * 60 * 1_000_000
-        ).cast("int").alias("new_session"),
-    )
-    # total sessions = users + gap-splits; closed sessions = total - open (1/user)
-    n_users = e.select("user_id").distinct().count()
-    splits = gaps.agg(F.sum("new_session")).collect()[0][0] or 0
-    total_sessions = n_users + splits
-    assert len(got) == total_sessions - n_users, (
-        f"closed sessions {len(got)} != total {total_sessions} - open {n_users}"
-    )
-
-
-def test_sessionize_stream_handles_out_of_order_chunks(spark, tmp_path):
-    """Arrow hands a large group to applyInPandasWithState as MULTIPLE
-    pandas chunks with no cross-chunk time ordering.  Feed one user's
-    events in fully DESCENDING ts order with maxRecordsPerBatch=5 so the
-    group spans 4 chunks: per-chunk sorting (the old code) would see
-    every event as a same-session continuation (t - last_us < 0) and
-    emit ZERO closed sessions; the whole-group sort must recover all
-    n-1 singleton sessions (each consecutive gap is 31 min > the 30 min
-    GAP)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    base = 1_700_000_000_000_000
-    n = 20
-    ts = [base + (n - 1 - i) * 31 * 60 * 1_000_000 for i in range(n)]
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array(range(n), pa.int64()),
-                "user_id": pa.array([7] * n, pa.int64()),
-                "ts": pa.array(ts, pa.timestamp("us")),
-            }
-        ),
-        os.path.join(str(tmp_path), "events.parquet"),
-    )
-    with pinned_confs(
-        spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "5"}
-    ):
-        ev = read_events_stream(spark, str(tmp_path))
-        got = _run_to_memory(
-            sessionize_stream(ev), "t_sessions_ooo", spark
-        ).toPandas()
-    assert len(got) == n - 1, f"expected {n - 1} closed sessions, got {len(got)}"
-    assert (got["n_events"] == 1).all()
-    assert (got["session_end"] >= got["session_start"]).all()
-
-
-def test_streaming_kmeans_foreachbatch(spark):
-    """Incremental K-Means: driving the whole events stream through
-    foreachBatch must equal ONE batch K-Means step (count-weighted
-    running means over all data == global per-cluster means)."""
-    from kmeans_with_mapreduce_cuda_spark.operators.kmeans import (
-        assign_2d,
-        update_2d,
-    )
-    from kmeans_with_mapreduce_cuda_spark.streaming import StreamingKMeans
-
-    cents = [(3.0, 50.0), (11.0, 400.0)]
-
-    def as_points(df):
-        return df.select(
-            F.col("user_id").cast("double").alias("x"),
-            F.col("value").alias("y"),
-        )
-
-    sk = StreamingKMeans(cents)
-    q = (
-        as_points(read_events_stream(spark, SF_DIR))
-        .writeStream.foreachBatch(sk.foreach_batch())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    batch = as_points(load_table(spark, SF_DIR, "events"))
-    exp = {
-        int(r["cluster_id"]): (r["cx"], r["cy"], r["n"])
-        for r in update_2d(assign_2d(batch, cents)).collect()
-    }
-    n_total = batch.count()
-    assert abs(sum(sk.counts) - n_total) < 1e-9
-    for i, (cx, cy) in enumerate(sk.centroids):
-        if i in exp:
-            ex, ey, en = exp[i]
-            # single availableNow batch -> exact equality with one step
-            assert abs(cx - ex) < 1e-9 and abs(cy - ey) < 1e-9, (i, (cx, cy), exp[i])
-            assert abs(sk.counts[i] - en) < 1e-9
-
-
 def test_dedup_stream_drops_duplicates(spark):
     from kmeans_with_mapreduce_cuda_spark.streaming import dedup_stream
 
@@ -208,39 +95,6 @@ def test_dedup_stream_drops_duplicates(spark):
     n_events = load_table(spark, SF_DIR, "events").count()
     assert got.count() == n_events  # 2N in, N out
     assert got.select("event_id").distinct().count() == n_events
-
-
-def test_running_user_totals_matches_batch(spark):
-    import pytest
-
-    # the transformWithState worker protocol needs protobuf
-    pytest.importorskip("google.protobuf.descriptor")
-    from kmeans_with_mapreduce_cuda_spark.streaming import running_user_totals
-
-    with pinned_confs(spark, rocksdb_state_confs()):
-        ev = read_events_stream(spark, SF_DIR)
-        got = _run_to_memory(
-            running_user_totals(ev), "t_totals", spark, output_mode="update"
-        ).toPandas()
-    # update mode re-emits per batch; keep the final row per user
-    got = got.groupby("user_id").last().reset_index()
-    exp = (
-        load_table(spark, SF_DIR, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .toPandas()
-    )
-    g = got.sort_values("user_id").reset_index(drop=True)
-    e = exp.sort_values("user_id").reset_index(drop=True)
-    assert len(g) == len(e)
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(
-        g[["user_id", "n", "sum_value"]],
-        e[["user_id", "n", "sum_value"]],
-        check_dtype=False,
-        atol=1e-6,
-    )
 
 
 def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
@@ -492,63 +346,6 @@ def test_dedup_stream_eviction_readmits_after_watermark(spark, tmp_path):
     got = _run_to_memory(stream, "t_dedup_evict", spark).toPandas()
     counts = got.groupby("k").size().to_dict()
     assert counts == {"a": 2, "w": 1}, counts
-
-
-def test_streaming_ingest_dedup_matches_batch_incremental(spark, tmp_path):
-    """foreachBatch digest-index ingestion must reproduce batch
-    first-occurrence dedup over the concatenated batches: a doc
-    repeating EARLIER-batch content is dropped, an intra-batch dup
-    keeps the min id, novel content always lands.  The index is named by
-    a ``file:`` URI, which the sink must still find after the first
-    batch; an existing but empty index directory raises instead of
-    reading as a first batch (either would re-ingest duplicates)."""
-    import pandas as pd
-
-    from kmeans_with_mapreduce_cuda_spark.streaming.streams import (
-        ingest_dedup_foreach_batch,
-    )
-
-    src = tmp_path / "docs_src"
-    src.mkdir()
-    batches = [
-        [(1, "alpha"), (2, "beta")],
-        [(10, "alpha"), (11, "gamma"), (12, "gamma")],  # 10 dup, 12 intra-dup
-        [(20, "beta"), (21, "delta")],                   # 20 dup of batch 1
-    ]
-    import os
-    for i, rows in enumerate(batches):
-        f = src / f"b{i}.parquet"
-        pd.DataFrame(
-            {"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]}
-        ).to_parquet(f)
-        os.utime(f, (1_000_000 + i, 1_000_000 + i))
-
-    out, idx = str(tmp_path / "out"), (tmp_path / "idx").as_uri()
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            ingest_dedup_foreach_batch(spark, idx, out)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-
-    got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
-    assert got == [1, 2, 11, 21]
-    # index holds exactly one digest per distinct content
-    assert spark.read.parquet(idx).distinct().count() == 4
-
-    empty = tmp_path / "empty_idx"
-    empty.mkdir()
-    batch = spark.createDataFrame([(30, "omega")], "doc_id bigint, text string")
-    with pytest.raises(AnalysisException):
-        ingest_dedup_foreach_batch(spark, str(empty), out)(batch, 0)
 
 
 def test_upsert_latest_multi_batch_out_of_order(spark, tmp_path):

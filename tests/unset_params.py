@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Report the package's defaulted parameters that no caller sets, and its
-top-level functions that nothing references.
+top-level defs and classes that no entry point reaches.
 
 A defaulted parameter that no call site sets is a constant written as an
 option: every caller gets the same value, yet a reader has to check each
@@ -14,9 +14,21 @@ with a caller counts as set if that caller sets it, and a call through
 keyword whose value is the default's own literal (``f(seed=42)`` for
 ``seed=42``) sets nothing: that caller gets the default too.
 
-It cannot see a call made through a variable (``fn = funcs[i]; fn(x=1)``),
-so grep a reported name before deleting it.  ``tests/test_unset_params.py``
-keeps both lists empty.
+A top-level def or class is reachable when a walk over last names
+(``f`` of ``f(...)``, ``g`` of ``a.g``) gets to it from an entry point:
+every ``@query`` def, every package module's module-level statements
+other than its defs and classes (its imports count for nothing, so an
+``__init__.py`` re-export roots nothing), and all of ``bench.py``,
+``__spark_entry__.py`` and ``kmbench/`` except its test.  A reached name
+reaches every top-level def or class of that name, and a reached def or
+class its whole body.  Names inside strings and docstrings count for
+nothing, and so does any use from ``tests/``: a def only tests call is
+library surface the engine does not run.
+
+It cannot see a call made through a variable (``fn = funcs[i]; fn(x=1)``)
+or a name built at run time (``getattr(m, "f")``), so grep a reported
+name before deleting it.  ``tests/test_unset_params.py`` fails on any
+entry outside its reasoned allow-lists.
 
 Usage: python tests/unset_params.py [--counts]
 ``--counts`` prints only the totals.
@@ -29,8 +41,7 @@ import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-PACKAGE = ROOT / "kmeans_with_mapreduce_cuda_spark"
-CALLERS = [PACKAGE, ROOT / "tests", ROOT / "kmbench", ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+PACKAGE = "kmeans_with_mapreduce_cuda_spark"
 
 
 def _py_files(paths):
@@ -74,7 +85,6 @@ class _Calls:
         self.max_pos: dict[str, int] = {}
         self.star: set[str] = set()
         self.double_star: set[str] = set()
-        self.refs: dict[str, int] = {}
 
     def _record(self, name, args, keywords):
         passed = self.keywords.setdefault(name, {})
@@ -107,11 +117,6 @@ class _Calls:
                     inner = _callee_name(node.args[0])
                     if inner is not None:
                         self._record(inner, node.args[1:], node.keywords)
-            elif isinstance(node, (ast.Name, ast.Attribute)) and isinstance(
-                node.ctx, ast.Load
-            ):
-                ref = _callee_name(node)
-                self.refs[ref] = self.refs.get(ref, 0) + 1
 
 
 def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
@@ -128,25 +133,78 @@ def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef):
             yield p.arg, d, None, is_method
 
 
-def scan():
-    trees = {p: ast.parse(p.read_text(), str(p)) for p in _py_files(CALLERS)}
+def _loaded_names(nodes) -> set[str]:
+    """The last names that ``nodes`` load; an import loads none."""
+    names = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, (ast.Name, ast.Attribute)) and isinstance(
+                node.ctx, ast.Load
+            ):
+                names.add(_callee_name(node))
+    return names
+
+
+def _is_query(node: ast.stmt) -> bool:
+    return any(
+        _callee_name(d.func if isinstance(d, ast.Call) else d) == "query"
+        for d in node.decorator_list
+    )
+
+
+DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _unreachable(
+    package: dict[str, ast.Module], entries: list[ast.Module]
+) -> list[str]:
+    """``"path:line name"`` of each top-level def or class in ``package``
+    (``{relative path: tree}``) that no entry point reaches."""
+    defs: dict[str, list[ast.stmt]] = {}
+    roots = list(entries)
+    todo = set()
+    for tree in package.values():
+        for node in tree.body:
+            if isinstance(node, DEFS):
+                defs.setdefault(node.name, []).append(node)
+                if _is_query(node):
+                    todo.add(node.name)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                roots.append(node)
+    todo |= _loaded_names(roots)
+    reached = set()
+    while todo:
+        name = todo.pop()
+        reached.add(name)
+        todo |= _loaded_names(defs.get(name, ())) - reached
+    return [
+        f"{rel}:{node.lineno} {node.name}"
+        for rel, tree in package.items()
+        for node in tree.body
+        if isinstance(node, DEFS) and node.name not in reached
+    ]
+
+
+def scan(root: Path):
+    package = root / PACKAGE
+    entries = [root / "bench.py", root / "__spark_entry__.py", root / "kmbench"]
+    trees = {
+        p: ast.parse(p.read_text(), str(p))
+        for p in _py_files([package, root / "tests", *entries])
+    }
     calls = _Calls()
     for tree in trees.values():
         calls.visit(tree)
+    unreachable = _unreachable(
+        {p.relative_to(package).as_posix(): trees[p] for p in _py_files([package])},
+        [trees[p] for p in _py_files(entries) if p.name != "test_kmbench.py"],
+    )
 
     total = 0
     unset = []
-    unreferenced = []
-    for path in _py_files([PACKAGE]):
+    for path in _py_files([package]):
         tree = trees[path]
-        rel = path.relative_to(PACKAGE).as_posix()
-        for node in tree.body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                and not node.decorator_list
-                and not calls.refs.get(node.name)
-            ):
-                unreferenced.append(f"{rel}:{node.lineno} {node.name}")
+        rel = path.relative_to(package).as_posix()
         # ``C(x=1)`` sets ``x`` of ``C.__init__``.
         init_owner = {}
         functions = []
@@ -171,21 +229,21 @@ def scan():
                     if idx < reach:
                         continue
                 unset.append(f"{rel}:{node.lineno} {owner}({pname}=)")
-    return total, unset, unreferenced
+    return total, unset, unreachable
 
 
 def main() -> None:
-    total, unset, unreferenced = scan()
+    total, unset, unreachable = scan(ROOT)
     if "--counts" not in sys.argv[1:]:
         for title, sites in (
             ("defaulted parameters that no call site sets", unset),
-            ("top-level functions that nothing references", unreferenced),
+            ("top-level defs and classes that no entry point reaches", unreachable),
         ):
             print(f"# {title}")
             print(*sites, sep="\n")
     print(
         f"defaulted parameters: {total}; unset: {len(unset)}; "
-        f"unreferenced top-level functions: {len(unreferenced)}"
+        f"unreachable top-level defs and classes: {len(unreachable)}"
     )
 
 
